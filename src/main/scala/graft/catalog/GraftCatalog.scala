@@ -56,11 +56,11 @@ import graft.operators.{FactVersioned, Versioned}
   * touched partitions — and a union'd [[Versioned.commit]] for
   * dimensions) via the DSv2→V1 whole-frame bridge, so the claim/marker
   * protocol, conflict detection, and retention all apply unchanged.
-  * INSERT into a pinned `VERSION AS OF` resolution, INSERT OVERWRITE,
-  * and destructive DDL (bare drop of committed tables, table renames)
-  * are rejected — partition replacement keeps its explicit operator
-  * surface, and table destruction requires the explicit
-  * `DROP TABLE ... PURGE` opt-in ([[purgeTable]], claim-serialized).
+  * INSERT into a pinned `VERSION AS OF` resolution and bare DROP of a
+  * committed table are rejected — table destruction requires the
+  * explicit `DROP TABLE ... PURGE` opt-in ([[purgeTable]],
+  * claim-serialized). `ALTER TABLE ... RENAME TO` swaps a name record
+  * ([[renameTable]]); table directories never move.
   * `TRUNCATE TABLE` is supported as VERSIONED emptying (an
   * empty-head commit; history time-travels until retention — nothing
   * destroyed). Schema evolution IS SQL-first: ALTER TABLE
@@ -146,30 +146,25 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   /** Path of `ident` under the warehouse root. TABLE NAMES are
     * validated like namespace segments — a name like `..` or one
-    * containing '/' would otherwise resolve (and RENAME TO could MOVE
-    * a table tree) outside the root; on the resolution path an unsafe
-    * name is simply "no such table". POINTER-AWARE (r17): an
-    * [[TablePointers.At]] entry redirects the name to its physical
-    * dir (the table was pointer-renamed TO this name — the tree never
-    * moved); a [[TablePointers.Renamed]] entry fails loudly with
-    * re-target guidance, so no DDL/DML can reach the NEW table's data
-    * through the OLD name. */
+    * containing '/' would otherwise resolve (or RENAME TO could name a
+    * path) outside the root; on the resolution path an unsafe name is
+    * simply "no such table". POINTER-AWARE through
+    * [[TablePointers.resolve]], the resolution the maintenance commands
+    * and table functions share: an [[TablePointers.At]] entry redirects the name to its physical dir (the table was
+    * renamed TO this name — the tree never moved); a
+    * [[TablePointers.Renamed]] entry fails loudly with re-target
+    * guidance, so no DDL/DML can reach the NEW table's data through
+    * the OLD name; and a name with no entry whose default dir is
+    * another table's physical home resolves to no table. */
   private def tablePath(ident: Identifier): String = {
     if (!safeSegment(ident.name) ||
         !ident.namespace.forall(safeSegment))
       throw new NoSuchTableException(ident)
     if (ident.namespace.nonEmpty && !namespaceExists(ident.namespace))
       throw new NoSuchTableException(ident)
-    val key = TablePointers.keyOf(ident.namespace, ident.name)
-    TablePointers.read(spark, root).get(key) match {
-      case Some(TablePointers.At(dir)) => s"$root/$dir"
-      case Some(TablePointers.Renamed(to)) =>
-        throw new IllegalArgumentException(
-          s"GraftCatalog: table '${ident.name}' was RENAMED to " +
-            s"'${to.split('/').last}' ($root/$to) — query it under its " +
-            "new name")
-      case None => s"$root/$key"
-    }
+    TablePointers.resolve(spark, root,
+      TablePointers.keyOf(ident.namespace, ident.name))
+      .getOrElse(throw new NoSuchTableException(ident))
   }
 
   /** The pointer entry of `ident`, if any (None for unsafe names). */
@@ -199,13 +194,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val map = TablePointers.read(spark, root)
     val prefix =
       if (namespace.isEmpty) "" else namespace.mkString("/") + "/"
-    val aliasTargets = map.values
-      .collect { case TablePointers.At(d) => d }.toSet
-    val renamedKeys =
-      map.collect { case (k, _: TablePointers.Renamed) => k }.toSet
     val dirNames = tablesUnder(nsPath(namespace))
-      .filterNot(n => aliasTargets.contains(prefix + n) ||
-        renamedKeys.contains(prefix + n))
+      .filterNot(n => map.contains(prefix + n) ||
+        TablePointers.isTarget(map, prefix + n))
     val aliasNames = map.collect {
       case (k, _: TablePointers.At)
           if k.startsWith(prefix) &&
@@ -233,12 +224,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // such a name errored with a confusing 'no such table')
     if (!safeSegment(ident.name) || !ident.namespace.forall(safeSegment))
       return false
-    // a pointer-renamed-away name is simply absent (its default dir
-    // may still hold the RENAMED table's data — never report that as
-    // this name existing)
-    if (pointerEntry(ident).exists(_.isInstanceOf[TablePointers.Renamed]))
-      return false
-    val path = tablePath(ident)
+    // a renamed-away name is simply absent (its default dir may still
+    // hold the RENAMED table's data — never report that as this name
+    // existing)
+    val path =
+      try tablePath(ident)
+      catch {
+        case _: NoSuchTableException | _: IllegalArgumentException =>
+          return false
+      }
     FactVersioned.generations(spark, path).nonEmpty ||
       Versioned.generations(spark, path).nonEmpty || isPending(path)
   }
@@ -324,12 +318,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       throw new IllegalStateException(
         s"GraftCatalog: ${ident.name} is a pending CREATE TABLE with no " +
           "committed data yet — a CTAS writes it, or DROP the husk")
-    } else Versioned.renamedTo(spark, path) match {
-      case Some(to) => throw new IllegalArgumentException(
-        s"GraftCatalog: table '${ident.name}' was RENAMED to " +
-          s"'${to.split('/').last}' ($to) — query it under its new name")
-      case None => throw new NoSuchTableException(ident)
-    }
+    } else throw new NoSuchTableException(ident)
   }
 
   // ---- namespaces: the flat (empty) namespace plus marker-dir
@@ -447,39 +436,45 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   /** `DROP NAMESPACE` — only when EMPTY; CASCADE is rejected with
     * guidance (it would silently destroy versioned tables — the same
-    * safety posture as bare DROP TABLE). */
+    * safety posture as bare DROP TABLE). Empty means STRICTLY empty on
+    * both layers: the directory holds nothing but the namespace's own
+    * metadata (committed tables, pending CTAS husks — including the
+    * physical home of a table renamed elsewhere — child namespaces and
+    * foreign files are all protected from the recursive delete), and
+    * no table NAME lives under it through the pointer record (a table
+    * renamed INTO the namespace keeps its directory elsewhere; dropping
+    * the namespace would leave it unreachable under any name). Both
+    * checks and the delete run under the pointer lock, so a concurrent
+    * rename into the namespace either lands first and blocks the drop,
+    * or finds the namespace gone. Guidance entries of names renamed
+    * away FROM the namespace go with it. */
   override def dropNamespace(
       namespace: Array[String], cascade: Boolean): Boolean = {
     if (!namespaceExists(namespace))
       throw new NoSuchNamespaceException(namespace)
-    // STRICTLY empty: nothing but the marker may remain — committed
-    // tables, pending CTAS husks, child namespaces and foreign files
-    // are all protected (the recursive delete below must never destroy
-    // any of them). The one exemption: a renamed-away guidance
-    // tombstone husk (a dir holding ONLY `_graft_renamed_to`) is pure
-    // redirect metadata — dropping the namespace drops the redirect.
-    val fs0 = hadoopFs(nsPath(namespace))
-    val extras = fs0.listStatus(nsPath(namespace))
-      .filterNot(_.getPath.getName == NsMarker)
-      // the namespace's own metadata: the properties record and any
-      // crashed rewrite's tmp debris (atomicWriteFile tmp naming)
-      .filterNot(st => st.getPath.getName == NsPropsFile ||
-        st.getPath.getName.startsWith("." + NsPropsFile + ".tmp"))
-      .filterNot { st =>
-        st.isDirectory && {
-          val entries = fs0.listStatus(st.getPath)
-          entries.nonEmpty && entries.forall(e => !e.isDirectory &&
-            e.getPath.getName == Versioned.RenamedToMarker)
-        }
-      }
-      .map(_.getPath.getName)
-    require(extras.isEmpty,
-      s"GraftCatalog: namespace ${namespace.mkString(".")} is not " +
-        s"empty (${extras.sorted.mkString(", ")}) — DROP TABLE ... " +
-        "PURGE each table, drop child namespaces, and clear foreign " +
-        "entries first (CASCADE would silently destroy versioned " +
-        "history)")
-    hadoopFs(nsPath(namespace)).delete(nsPath(namespace), true)
+    val dir = nsPath(namespace)
+    val fs = hadoopFs(dir)
+    val prefix = namespace.mkString("/") + "/"
+    var dropped = false
+    TablePointers.mutate(spark, root) { m =>
+      val under = m.filter(_._1.startsWith(prefix))
+      val extras = fs.listStatus(dir).map(_.getPath.getName)
+        // the namespace's own metadata: the marker, the properties
+        // record and any crashed rewrite's tmp debris (atomicWriteFile
+        // tmp naming)
+        .filterNot(n => n == NsMarker || n == NsPropsFile ||
+          n.startsWith("." + NsPropsFile + ".tmp")) ++
+        under.collect { case (k, _: TablePointers.At) => k.stripPrefix(prefix) }
+      require(extras.isEmpty,
+        s"GraftCatalog: namespace ${namespace.mkString(".")} is not " +
+          s"empty (${extras.sorted.mkString(", ")}) — DROP TABLE ... " +
+          "PURGE each table, drop child namespaces, and clear foreign " +
+          "entries first (CASCADE would silently destroy versioned " +
+          "history)")
+      dropped = fs.delete(dir, true)
+      m -- under.keys
+    }
+    dropped
   }
 
   // ---- CTAS: CREATE TABLE ... AS SELECT creates a versioned table
@@ -553,9 +548,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
             // dangling alias (interrupted purge/drop): heal it
           case None => ()
         }
-        val targets =
-          m.values.collect { case TablePointers.At(d) => d }.toSet
-        if (targets.contains(key)) {
+        if (TablePointers.isTarget(m, key)) {
           physKey = key + "__p" +
             java.util.UUID.randomUUID().toString.take(8)
           (m - key) + (key -> TablePointers.At(physKey))
@@ -588,23 +581,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     graft.operators.CommitLock.requireAtomicCommitContract(
       fs, root, "GraftCatalog.createTable")
     if (fs.exists(root)) {
-      // a rename guidance tombstone (marker-only dir) is superseded by
-      // an explicit CREATE of the old name; anything else foreign
-      // stays protected
-      val renamedHusk = Versioned.renamedTo(spark, path).nonEmpty &&
-        fs.listStatus(root).forall(st => !st.isDirectory &&
-          st.getPath.getName == Versioned.RenamedToMarker)
-      require(isPending(path) || renamedHusk,
+      require(isPending(path),
         s"GraftCatalog: $path exists but is not a graft table — refusing " +
           "to create over foreign data")
-      fs.delete(root, true) // crashed-CTAS or renamed-away husk
-    }
-    // an explicit CREATE at a renamed-away name supersedes BOTH
-    // guidance forms: the husk (deleted above) and a lingering
-    // parent-dir rename-intent marker (a rename that crashed in its
-    // move→marker window leaves only the intent)
-    Versioned.intentPath(path).foreach { ip =>
-      if (fs.exists(ip)) fs.delete(ip, false)
+      fs.delete(root, true) // crashed-CTAS husk
     }
     fs.mkdirs(root)
     // the transform spec lands BEFORE the pending marker: a table that
@@ -615,14 +595,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       if (pcols.nonEmpty) s"fact\t${pcols.mkString(",")}" else "dim")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    // check-AFTER-write half of the rename-window protocol (see
-    // Versioned.writeRenamedMarker): a rename completing concurrently
-    // may have dropped its guidance tombstone here before our pending
-    // marker became visible — the explicit CREATE supersedes it
-    val tomb = new Path(path, Versioned.RenamedToMarker)
-    if (fs.exists(tomb))
-      try fs.delete(tomb, false)
-      catch { case _: java.io.IOException => () }
     new PendingGraftTable(s"$catalogName.${ident.name}", path, schema,
       pcols, () => retainFor(path))
   }
@@ -1077,86 +1049,34 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     ok
   }
 
-  /** `ALTER TABLE ... RENAME TO` — TWO physical strategies behind one
-    * statement, routed by the store's contract (r17 — VERDICT r16
-    * Next #2):
-    *
-    *  - **tree move** (rename-atomic stores: POSIX, HDFS, ABFS, or the
-    *    [[graft.operators.CommitLock.AssumeAtomicKey]] vouch): ONE
-    *    claim-serialized directory rename
-    *    ([[FactVersioned.renameTable]] / [[Versioned.renameTable]]);
-    *    every sidecar, colmap, tombstone and recorded merge keys ride
-    *    along; O(1) at any table size; the old name keeps a guidance
-    *    tombstone.
-    *  - **pointer swap** (everything else — S3-class stores where a
-    *    tree move is per-object copy+delete): the tree NEVER moves;
-    *    one [[TablePointers]] record mutation under the warehouse
-    *    pointer lock re-targets the name (`new → at old-dir`,
-    *    `old → renamed new`). In-flight writers holding the physical
-    *    path are unaffected; resolution of the old name fails loudly
-    *    with re-target guidance; an explicit CREATE of the old name
-    *    supersedes the guidance entry.
-    *
-    * `spark.sql.catalog.<name>.renameMode` = `auto` (default — route
-    * by contract) | `move` | `pointer` forces a strategy; `pointer` on
-    * a rename-atomic store is legitimate when O(1)-regardless-of-
-    * metadata-size swaps are preferred over tree moves. */
+  /** `ALTER TABLE ... RENAME TO` — ONE record mutation in the warehouse
+    * [[TablePointers]] file under the pointer lock, on every store and
+    * for fact and dimension tables alike: `new → at old-dir`,
+    * `old → renamed new`. A table's physical directory is its
+    * permanent identity and never moves, so a rename costs one lock
+    * acquisition and one small-file rewrite at any table size, and
+    * in-flight writers holding the physical path are unaffected.
+    * Existence probes, name-free checks, chain re-targeting (`x
+    * renamed old` entries follow to the new name) and the swap itself
+    * all run with the lock held, race-free against other pointer
+    * mutations and [[dropNamespace]]. Resolution of the old name fails
+    * loudly with re-target guidance (inside
+    * [[graft.operators.RetryContract]]); an explicit CREATE of the old
+    * name supersedes the guidance. Physical directory names need not
+    * match logical names: after `a → b`, table `b` lives in `<root>/a`. */
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
-    val mode = spark.conf
-      .getOption(s"spark.sql.catalog.$catalogName.renameMode")
-      .getOrElse("auto")
-    val usePointer = mode match {
-      case "pointer" => true
-      case "move" => false
-      case "auto" =>
-        !graft.operators.CommitLock.treeRenameAtomic(
-          hadoopFs(new Path(root)))
-      case other => throw new IllegalArgumentException(
-        s"GraftCatalog: renameMode must be auto|move|pointer, got " +
-          s"'$other'")
-    }
-    if (usePointer) { pointerRename(oldIdent, newIdent); return }
-    val oldPath = tablePath(oldIdent)
-    val newPath = tablePath(newIdent)
-    if (tableExists(newIdent))
-      throw new org.apache.spark.sql.catalyst.analysis
-        .TableAlreadyExistsException(newIdent)
-    require(!pointerEntry(oldIdent).exists(
-        _.isInstanceOf[TablePointers.At]) &&
-        pointerEntry(newIdent).isEmpty,
-      s"GraftCatalog: ${oldIdent.name} or ${newIdent.name} is in the " +
-        "pointer record — a tree move would strand the pointer; use " +
-        "renameMode=pointer for this rename")
-    if (FactVersioned.generations(spark, oldPath).nonEmpty)
-      FactVersioned.renameTable(spark, oldPath, newPath)
-    else if (Versioned.generations(spark, oldPath).nonEmpty)
-      Versioned.renameTable(spark, oldPath, newPath)
-    else if (isPending(oldPath))
-      throw new IllegalStateException(
-        s"GraftCatalog: ${oldIdent.name} is a pending CREATE TABLE with " +
-          "no committed data — write it first or DROP the husk")
-    else throw new NoSuchTableException(oldIdent)
-  }
-
-  /** Pointer-swap rename: ONE record mutation under the warehouse
-    * pointer lock — existence probes, name-free checks, chain
-    * re-targeting (`x renamed old` entries follow to the new name) and
-    * the swap itself are all race-free against other pointer
-    * mutations. The data tree never moves. */
-  private def pointerRename(
-      oldIdent: Identifier, newIdent: Identifier): Unit = {
     if (!safeSegment(oldIdent.name) ||
         !oldIdent.namespace.forall(safeSegment))
       throw new NoSuchTableException(oldIdent)
     validateSegment(newIdent.name)
-    if (newIdent.namespace.nonEmpty &&
-        !namespaceExists(newIdent.namespace))
-      throw new NoSuchNamespaceException(newIdent.namespace)
+    newIdent.namespace.foreach(validateSegment)
     val oldKey = TablePointers.keyOf(oldIdent.namespace, oldIdent.name)
     val newKey = TablePointers.keyOf(newIdent.namespace, newIdent.name)
     require(oldKey != newKey,
       s"GraftCatalog: RENAME TO the same name '${oldIdent.name}'")
     TablePointers.mutate(spark, root) { m =>
+      if (!namespaceExists(newIdent.namespace))
+        throw new NoSuchNamespaceException(newIdent.namespace)
       val oldDir = m.get(oldKey) match {
         case Some(TablePointers.At(d)) => d
         case Some(TablePointers.Renamed(to)) =>
@@ -1164,6 +1084,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
             s"GraftCatalog: table '${oldIdent.name}' was RENAMED to " +
               s"'${to.split('/').last}' ($root/$to) — rename it under " +
               "its new name")
+        // a name with no entry whose default dir is another table's
+        // physical home holds no table — renaming it would alias that
+        // table's tree under a second name
+        case None if TablePointers.isTarget(m, oldKey) =>
+          throw new NoSuchTableException(oldIdent)
         case None => oldKey
       }
       val oldPath = s"$root/$oldDir"
@@ -1176,14 +1101,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
             "with no committed data — write it first or DROP the husk")
         throw new NoSuchTableException(oldIdent)
       }
-      if (m.get(newKey).exists(_.isInstanceOf[TablePointers.At]))
-        throw new org.apache.spark.sql.catalyst.analysis
-          .TableAlreadyExistsException(newIdent)
+      // the new name is taken iff it resolves to a table: an alias
+      // entry, or (no entry) a default dir holding a table that is not
+      // another table's physical home. A renamed-away name is free —
+      // its default dir may hold some other table's data, which the
+      // alias written below never touches.
       val newDefault = s"$root/$newKey"
-      if (newDefault != oldPath &&
-          (FactVersioned.generations(spark, newDefault).nonEmpty ||
-            Versioned.generations(spark, newDefault).nonEmpty ||
-            isPending(newDefault)))
+      val taken = m.get(newKey) match {
+        case Some(_: TablePointers.At) => true
+        case Some(_: TablePointers.Renamed) => false
+        case None =>
+          newDefault != oldPath && !TablePointers.isTarget(m, newKey) &&
+            (FactVersioned.generations(spark, newDefault).nonEmpty ||
+              Versioned.generations(spark, newDefault).nonEmpty ||
+              isPending(newDefault))
+      }
+      if (taken)
         throw new org.apache.spark.sql.catalyst.analysis
           .TableAlreadyExistsException(newIdent)
       // chain re-target: names renamed to OLD now point at NEW, so
@@ -1205,11 +1138,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 object GraftCatalog {
   /** Marker file of a table created but not yet written (the window
     * inside a CTAS between createTable and the data landing, or the
-    * husk a crashed CTAS leaves). Content: `fact\t<pcol>` or `dim`.
-    * The NAME is owned by [[graft.operators.Versioned]] so the rename
-    * protocol can probe it without a reverse package dependency. */
-  val PendingMarkerName: String =
-    graft.operators.Versioned.CtasPendingMarker
+    * husk a crashed CTAS leaves). Content: `fact\t<pcol>` or `dim`. */
+  val PendingMarkerName = "_graft_ctas_pending"
 
   /** DIMENSION table properties record (table-root `key\tvalue` file,
     * atomically rewritten): the full-copy store has no per-generation

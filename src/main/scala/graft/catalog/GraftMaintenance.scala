@@ -186,15 +186,19 @@ object GraftMaintenance {
     val root = spark.conf.getOption(s"spark.sql.catalog.$cat.root")
       .getOrElse(throw new IllegalArgumentException(
         s"$stmt: set spark.sql.catalog.$cat.root"))
-    val path = s"$root/$tbl"
+    def noTable = new org.apache.spark.sql.catalyst.analysis
+      .NoSuchTableException(
+        org.apache.spark.sql.connector.catalog.Identifier
+          .of(Array.empty[String], tbl))
+    // the catalog's own pointer-aware resolution: a renamed table is
+    // reached under its new name, never under its old one
+    val path = TablePointers.resolve(spark, root, tbl)
+      .getOrElse(throw noTable)
     if (FactVersioned.generations(spark, path).nonEmpty)
       Resolved(path, isFact = true, cat)
     else if (Versioned.generations(spark, path).nonEmpty)
       Resolved(path, isFact = false, cat)
-    else throw new org.apache.spark.sql.catalyst.analysis
-      .NoSuchTableException(
-        org.apache.spark.sql.connector.catalog.Identifier
-          .of(Array.empty[String], tbl))
+    else throw noTable
   }
 
   /** Retention for maintenance commits — the same conf-or-preserve

@@ -5,11 +5,14 @@ import org.apache.spark.sql.SparkSession
 
 import graft.operators.{CommitLock, Versioned}
 
-/** Warehouse-level name→directory indirection (r17 — VERDICT r16 Next
-  * #2): the record that makes `ALTER TABLE ... RENAME TO` a ONE-POINTER
-  * SWAP on stores without an atomic directory rename (S3-class object
-  * stores, where a tree move is per-object copy+delete and a crash
-  * mid-move splits the table across two prefixes).
+/** Warehouse-level name→directory indirection: the record that makes
+  * `ALTER TABLE ... RENAME TO` a ONE-POINTER SWAP on every store — the
+  * only rename there is ([[GraftCatalog.renameTable]]). A table's
+  * physical directory is its permanent identity and never moves; only
+  * this name layer changes. So physical directory names need not match
+  * logical names: after `a → b`, table `b` lives in `<root>/a`, and a
+  * later CREATE of `a` gets a fresh directory (`a__p<uuid>`) registered
+  * as an alias.
   *
   * The record is one small file at the warehouse root
   * ([[RecordFile]]), sorted `key\tkind\ttarget` lines:
@@ -17,8 +20,12 @@ import graft.operators.{CommitLock, Versioned}
   *  - `a\tat\tdir` — logical table `a` (slash-joined namespace path)
   *    lives at `<root>/dir`, not at its default `<root>/a`;
   *  - `a\trenamed\tb` — `a` was renamed to `b`: resolution of the old
-  *    name fails loudly with re-target guidance (the pointer twin of
-  *    [[Versioned.renamedTo]]'s tombstone).
+  *    name fails loudly with re-target guidance (retryable under
+  *    [[graft.operators.RetryContract]]).
+  *
+  * A name with no entry resolves to its default `<root>/a` — unless that
+  * directory is another entry's `at` target, in which case the name
+  * holds no table.
   *
   * Every MUTATION runs under the warehouse's pointer commit lock
   * ([[CommitLock.withLocks]] on `<root>/_graft_names.lock` — the
@@ -38,9 +45,9 @@ import graft.operators.{CommitLock, Versioned}
   * At 100 TB the point is what this record makes UNNECESSARY: the
   * table tree (manifests, generations, sidecar indexes, terabytes of
   * parquet) never moves — a rename costs one lock acquisition and one
-  * small-file rewrite regardless of table size, and in-flight writers
-  * holding the physical path are entirely unaffected (the physical
-  * dir IS the table identity; only the name layer changes). */
+  * small-file rewrite regardless of table size, on POSIX, HDFS and
+  * conditional-PUT object stores alike, and in-flight writers holding
+  * the physical path are entirely unaffected. */
 object TablePointers {
 
   val RecordFile = "_graft_names"
@@ -140,6 +147,33 @@ object TablePointers {
           java.nio.charset.StandardCharsets.UTF_8)
       } finally in.close()
     } catch { case _: java.io.FileNotFoundException => "" }
+
+  /** Physical path of logical `key` under `root` — the one name
+    * resolution every name-based door shares (the catalog's loads and
+    * DDL, the maintenance commands, the `graft_*` table functions): an
+    * `at` entry redirects to its dir; a `renamed` entry fails loudly
+    * with re-target guidance ("RENAMED", retryable under
+    * [[graft.operators.RetryContract]]), so nothing reaches the renamed
+    * table's tree through its old name; a name with no entry resolves
+    * to its default `<root>/<key>`, or to None (no table) when that
+    * dir is another table's physical home. */
+  def resolve(spark: SparkSession, root: String, key: String): Option[String] = {
+    val map = read(spark, root)
+    map.get(key) match {
+      case Some(At(dir)) => Some(s"$root/$dir")
+      case Some(Renamed(to)) =>
+        throw new IllegalArgumentException(
+          s"GraftCatalog: table '${key.split('/').last}' was RENAMED to " +
+            s"'${to.split('/').last}' ($root/$to) — query it under its " +
+            "new name")
+      case None if isTarget(map, key) => None
+      case None => Some(s"$root/$key")
+    }
+  }
+
+  /** True iff `<root>/<dir>` is the physical home of some `at` entry. */
+  def isTarget(map: Map[String, Entry], dir: String): Boolean =
+    map.values.exists(_ == At(dir))
 
   /** Root-relative slash-joined key of an identifier. */
   def keyOf(namespace: Array[String], name: String): String =

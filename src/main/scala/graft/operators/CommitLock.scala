@@ -92,8 +92,9 @@ object CommitLock {
     * per-object-atomic small-file writes (markers/rotations appear
     * whole because an object PUT is atomic; write-tmp-then-rename
     * degrades to copy+delete with the same absent-or-complete
-    * visibility). Whole-DIRECTORY moves are NOT covered — see
-    * [[requireAtomicRenameContract]]. */
+    * visibility). Table renames never move a directory (they swap a
+    * name record — [[graft.catalog.TablePointers]]), so this CAS is
+    * the whole contract. */
   val ConditionalCreateCapability =
     org.apache.hadoop.fs.Options.CreateFileOptionKeys
       .FS_OPTION_CREATE_CONDITIONAL_OVERWRITE
@@ -106,7 +107,7 @@ object CommitLock {
     * (VERDICT r14 Next #4). Every committer assumes two atomic
     * primitives: exclusive CREATE (`gen=<n>/_graft_claim` — the CAS
     * that serializes writers onto distinct generation numbers, and the
-    * bakery lock's claim files) and RENAME (the tombstone/keys-record
+    * bakery lock's claim files) and RENAME (the small-record
     * rotations' write-tmp-then-rename). On S3-class object stores a
     * plain `create(overwrite=false)` is CHECK-THEN-ACT and `rename`
     * is COPY+DELETE, so claims and record rotations silently lose
@@ -138,43 +139,6 @@ object CommitLock {
         s"($ConditionalCreateCapability — S3A on Hadoop 3.4.2+), or " +
         "— if this store does provide the primitives in some other " +
         s"way — opt in with spark.hadoop.$AssumeAtomicKey=true")
-  }
-
-  /** True iff the store provides an ATOMIC whole-directory rename
-    * (the move-path contract below, as a probe instead of a throw) —
-    * the catalog's rename router picks the one-tree-move fast path on
-    * these stores and the pointer-swap path elsewhere (r17). */
-  def treeRenameAtomic(fs: FileSystem): Boolean = {
-    val scheme = Option(fs.getUri.getScheme)
-      .map(_.toLowerCase).getOrElse("file")
-    AtomicSchemes(scheme) ||
-      Option(fs.getConf).exists(_.getBoolean(AssumeAtomicKey, false))
-  }
-
-  /** Whole-DIRECTORY move contract (`ALTER TABLE ... RENAME TO`): the
-    * one-`fs.rename`-of-the-tree design needs a TRUE atomic rename
-    * (POSIX rename(2), HDFS namenode, ABFS hierarchical namespace).
-    * Conditional-PUT acceptance does NOT extend here — an object
-    * store renames by per-object copy+delete, so a crashed or racing
-    * move would leave the tree split across two prefixes. Rename on
-    * such stores is refused with guidance rather than corrupting
-    * quietly; the [[AssumeAtomicKey]] vouch still overrides for
-    * deployments fronting a real rename (e.g. a metadata layer). */
-  def requireAtomicRenameContract(
-      fs: FileSystem, path: Path, who: String): Unit = {
-    val scheme = Option(fs.getUri.getScheme)
-      .map(_.toLowerCase).getOrElse("file")
-    if (AtomicSchemes(scheme)) return
-    if (Option(fs.getConf).exists(_.getBoolean(AssumeAtomicKey, false)))
-      return
-    throw new UnsupportedOperationException(
-      s"$who: TABLE RENAME moves the whole table tree in ONE atomic " +
-        s"directory rename; scheme '$scheme' ($path) renames by " +
-        "copy+delete (conditional-PUT creates cover commit " +
-        "arbitration, not directory moves) — copy the table to the " +
-        "new path explicitly (CTAS) and drop the old one, or opt in " +
-        s"with spark.hadoop.$AssumeAtomicKey=true if this store " +
-        "fronts a real atomic rename")
   }
 
   /** Exclusive-create CAS, atomic on BOTH HDFS-like stores and the

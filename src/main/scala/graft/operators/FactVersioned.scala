@@ -66,15 +66,7 @@ object FactVersioned {
 
   final case class Commit(gen: Long, rewrittenDirs: Seq[String])
 
-  /** Roll back an unpublished claim: its metadata dir and staged data.
-    * Then opportunistically remove the gens/data PARENT dirs when (and
-    * only when) empty: a writer whose claim raced a TABLE RENAME's
-    * move re-creates them at the old path before its publish guard
-    * throws the guidance — without the tidy, the renamed-away path
-    * would keep empty husk dirs next to its tombstone forever. The
-    * non-recursive delete is the safety: it cannot remove a dir a
-    * concurrent writer has (re)populated, and a racer observing the
-    * brief absence re-creates it or fails retryably. */
+  /** Roll back an unpublished claim: its metadata dir and staged data. */
   private def abortClaim(
       fs: org.apache.hadoop.fs.FileSystem,
       tablePath: String,
@@ -83,48 +75,6 @@ object FactVersioned {
     if (fs.exists(genData)) fs.delete(genData, true)
     val meta = genMeta(tablePath, g)
     if (fs.exists(meta)) fs.delete(meta, true)
-    // only on a renamed-away path: a LIVE table's empty dataRoot (e.g.
-    // right after retention) must stay — scans root partition discovery
-    // there
-    val renamedAway =
-      fs.exists(new Path(tablePath, Versioned.RenamedToMarker)) ||
-        Versioned.intentPath(tablePath).exists(ip =>
-          try fs.exists(ip)
-          catch { case _: java.io.IOException => false })
-    if (renamedAway) {
-      // A claim CREATED inside the rename's late-list→move window RODE
-      // the tree move: its marker (and any staged data) now sit under
-      // the NEW path, where the old-path deletes above cannot see them
-      // — left there, every later committer at the new home waits out
-      // ResolveTimeoutMs per attempt until the stale-claim lease
-      // expires (the wedge the r18 storm campaign caught as a 5-minute
-      // round timeout). The generation number is exclusively THIS
-      // writer's — the ridden marker dir keeps claimNext at the new
-      // path from ever re-issuing it — and this writer never
-      // published, so deleting the ridden debris removes only its own.
-      // Data dir first, THEN the meta dir: the instant the meta dir
-      // goes, the number becomes claimable again, and a fresh claimer
-      // must never find this delete racing its staging.
-      Versioned.readSmall(fs, new Path(tablePath, Versioned.RenamedToMarker))
-        .orElse(Versioned.intentPath(tablePath)
-          .flatMap(Versioned.readSmall(fs, _)))
-        .map(_.trim).filter(_.nonEmpty)
-        .foreach { np =>
-          try {
-            val m = genMeta(np, g)
-            if (fs.exists(new Path(m, Versioned.ClaimMarker)) &&
-                !fs.exists(new Path(m, Versioned.CommitMarker))) {
-              val d = new Path(dataRoot(np), s"$VGenCol=$g")
-              if (fs.exists(d)) fs.delete(d, true)
-              fs.delete(m, true)
-            }
-          } catch { case _: java.io.IOException => () }
-        }
-      Seq(gensRoot(tablePath), dataRoot(tablePath)).foreach { p =>
-        try fs.delete(p, false)
-        catch { case _: java.io.IOException => () }
-      }
-    }
   }
 
   private def gensRoot(t: String) = new Path(t, GensDir)
@@ -309,10 +259,6 @@ object FactVersioned {
       fs: org.apache.hadoop.fs.FileSystem,
       tablePath: String,
       who: String): Long = {
-    // a renamed-away path keeps a guidance tombstone: committing here
-    // would silently re-create a DIVERGENT fresh table under the old
-    // name (one fs.exists on the commit path — metadata-scale)
-    Versioned.requireNotRenamedAway(fs, tablePath, who)
     val gRoot = gensRoot(tablePath)
     val present = fs.listStatus(gRoot).filter(_.isDirectory)
       .map(_.getPath.getName)
@@ -393,7 +339,7 @@ object FactVersioned {
   private def resolveGen(
       spark: SparkSession, tablePath: String, gen: Option[Long]): Long = {
     val gens = generations(spark, tablePath)
-    Versioned.requireGens(spark, tablePath, gens, "FactVersioned")
+    require(gens.nonEmpty, s"no committed generations at $tablePath")
     val g = gen.getOrElse(gens.max)
     require(gens.contains(g),
       s"generation $g is not committed at $tablePath " +
@@ -1045,9 +991,6 @@ object FactVersioned {
     val fs = fsOf(spark, tablePath)
     val gRoot = gensRoot(tablePath)
     if (!fs.exists(gRoot)) {
-      // a renamed-away path must not be re-husked by the mkdirs below
-      // (claimNext re-checks, but only after the dir exists)
-      Versioned.requireNotRenamedAway(fs, tablePath, "FactVersioned")
       // first commit = table creation: enforce the filesystem contract
       // ONCE, loudly (atomic exclusive-create + rename — see
       // CommitLock.requireAtomicCommitContract); existing tables are
@@ -1307,13 +1250,6 @@ object FactVersioned {
     // non-overlapping concurrent writers all land (each rebases its
     // carried rows over the real new head); overlapping ones abort
     awaitLowerClaims(fs, tablePath, next, "FactVersioned")
-
-    // TABLE-MOVE GUARD at the linearization point: a rename that
-    // listed in-flight claims and moved the tree while this commit was
-    // STAGING would otherwise be silently diverged by this publish
-    // re-creating the old path (the claimNext entry check ran before
-    // the guidance marker landed). One fs.exists per commit.
-    Versioned.requireNotRenamedAway(fs, tablePath, "FactVersioned")
 
     val head = generations(spark, tablePath).lastOption
     val parentGen = basisGen.orElse(parentAtClaim).getOrElse(-1L)
@@ -2270,34 +2206,6 @@ object FactVersioned {
     // rename-to-existing fails (returns false) on Hadoop filesystems —
     // the loser just cleans its tmp up
     if (!fs.rename(tmp, p)) fs.delete(tmp, false)
-    withdrawIfRenamedAway(fs, tablePath)
-  }
-
-  /** Post-commit record writes run OUTSIDE the claim protocol, so one
-    * can race a TABLE RENAME's move: the committer's `exists` probe
-    * runs after the tree moved (record gone), and its `fs.create`
-    * silently RE-CREATES `_graft_gens` at the renamed-away path — a
-    * husk next to the guidance tombstone forever (caught by the r18
-    * storm campaign, seeds 47527/197988). Symmetric check-AFTER-write,
-    * like [[Versioned.writeRenamedMarker]]: the rename writes intent
-    * before the move and the marker before deleting the intent, so a
-    * record written post-move always sees one of the two here and
-    * withdraws itself (the moved tree carries the real record). A
-    * record written pre-intent rides the move like any table file. */
-  private def withdrawIfRenamedAway(
-      fs: org.apache.hadoop.fs.FileSystem, tablePath: String): Unit = {
-    val renamedAway =
-      Versioned.intentPath(tablePath).exists(ip =>
-        try fs.exists(ip) catch { case _: java.io.IOException => false }) ||
-        (try fs.exists(new Path(tablePath, Versioned.RenamedToMarker))
-         catch { case _: java.io.IOException => false })
-    if (renamedAway) {
-      try fs.delete(defaultKeysPath(tablePath), false)
-      catch { case _: java.io.IOException => () }
-      // drop the re-created parent husk (non-recursive: only if empty)
-      try fs.delete(gensRoot(tablePath), false)
-      catch { case _: java.io.IOException => () }
-    }
   }
 
   /** Rewrite (or drop) the default-keys record after a DDL: `f` maps
@@ -2315,8 +2223,6 @@ object FactVersioned {
           try out.write(nu.map(_.toLowerCase).mkString("\n")
             .getBytes(StandardCharsets.UTF_8))
           finally out.close()
-          // same post-commit rename-race exposure as recordMergeKeys
-          withdrawIfRenamedAway(fs, tablePath)
       }
     }
   }
@@ -3445,10 +3351,6 @@ object FactVersioned {
     val next = claimNext(fs, tablePath, "FactVersioned.restore")
     try {
       awaitLowerClaims(fs, tablePath, next, "FactVersioned.restore")
-      // table-move guard at the linearization point (see
-      // publishClaimed): a rename racing this restore aborts it loudly
-      Versioned.requireNotRenamedAway(fs, tablePath,
-        "FactVersioned.restore")
       // a restore redefines every dir of (pre-restore head ∪ gen): any
       // commit landing after our basis conflicts
       val headNow = generations(spark, tablePath).max
@@ -3539,119 +3441,6 @@ object FactVersioned {
         throw e
     }
     fs.delete(new Path(tablePath), true)
-  }
-
-  /** `ALTER TABLE ... RENAME TO` — move the WHOLE table tree to
-    * `newPath` in one filesystem rename, serialized through the claim
-    * protocol like [[destroy]]: claim the next generation, await every
-    * lower in-flight claim, then move. Everything the table owns —
-    * generations, manifests, column maps, tombstones, ANN/BM25
-    * sidecars, recorded default merge keys — lives INSIDE the tree and
-    * rides the one move; no per-file work, so the rename is O(1) at
-    * any table size. After the move the rename's own claim is released
-    * inside the new tree and a guidance tombstone
-    * ([[Versioned.RenamedToMarker]]) lands at the old path:
-    * [[claimNext]] rejects commits against the old name loudly
-    * (naming the new path) instead of silently re-creating a divergent
-    * fresh table. In-flight HIGHER claims — writers that claimed after
-    * the rename's claim — abort the rename retryably: they hold
-    * absolute old-path staging paths and would re-create the old tree
-    * after the move. A crash between the move and the claim release
-    * degrades to one stale-claim wait for the next committer, never a
-    * torn table (the move itself is atomic on the contracted
-    * filesystems — see [[CommitLock.atomicCreate]]'s notes).
-    *
-    * READER retry contract: a scan in flight over the old path when
-    * the tree moves fails with Spark's standard FAILED_READ_FILE
-    * (FileNotFoundException cause) — the same shape every snapshot
-    * store shows a reader racing a move/vacuum; the reader re-resolves
-    * (the old path's tombstone names the new location) and retries.
-    * Writers get the retryable ConcurrentModificationException (claim
-    * races) or the loud renamed-away guidance (post-move commits). */
-  def renameTable(
-      spark: SparkSession, oldPath: String, newPath: String): Unit = {
-    val fs = fsOf(spark, oldPath)
-    // the one-move design needs a TRUE atomic directory rename —
-    // conditional-PUT stores refuse here with guidance
-    CommitLock.requireAtomicRenameContract(fs, new Path(oldPath),
-      "FactVersioned.renameTable")
-    require(fs.exists(gensRoot(oldPath)),
-      s"FactVersioned.renameTable: no versioned table at $oldPath")
-    require(generations(spark, oldPath).nonEmpty,
-      s"FactVersioned.renameTable: no committed generations at $oldPath")
-    val dst = new Path(newPath)
-    require(!fs.exists(dst),
-      s"FactVersioned.renameTable: destination $newPath already exists")
-    val next = claimNext(fs, oldPath, "FactVersioned.renameTable")
-    def inFlight(g: Long): Boolean = {
-      val dir = genMeta(oldPath, g)
-      fs.exists(new Path(dir, Versioned.ClaimMarker)) &&
-        !fs.exists(new Path(dir, Versioned.CommitMarker)) &&
-        System.currentTimeMillis() -
-          fs.getFileStatus(new Path(dir, Versioned.ClaimMarker))
-            .getModificationTime < Versioned.StaleClaimMs
-    }
-    try {
-      awaitLowerClaims(fs, oldPath, next, "FactVersioned.renameTable")
-      val higher = fs.listStatus(gensRoot(oldPath)).filter(_.isDirectory)
-        .flatMap(_.getPath.getName.stripPrefix("gen=").toLongOption)
-        .filter(g => g > next && inFlight(g))
-      if (higher.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"FactVersioned.renameTable: generation(s) " +
-            s"${higher.mkString(",")} claimed after the rename at " +
-            s"$oldPath — retry the rename")
-      // rename INTENT lands in the PARENT dir BEFORE the move (VERDICT
-      // r15 Next #2, ADVICE r15 #3): from here, claims and publishes at
-      // the old path throw the loud RENAMED guidance, and resolution in
-      // the move→marker window re-targets through the intent instead of
-      // dying on "no committed generations"
-      Versioned.intentPath(oldPath).foreach(ip =>
-        Versioned.atomicWriteFile(fs, ip, newPath))
-      try {
-        // close the listing→intent gap: a claim that raced in before
-        // the intent became visible aborts the rename retryably
-        val late = fs.listStatus(gensRoot(oldPath)).filter(_.isDirectory)
-          .flatMap(_.getPath.getName.stripPrefix("gen=").toLongOption)
-          .filter(g => g != next && inFlight(g))
-        if (late.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"FactVersioned.renameTable: generation(s) " +
-              s"${late.mkString(",")} claimed while the rename intent " +
-              s"landed at $oldPath — retry the rename")
-        val parent = dst.getParent
-        if (parent != null && !fs.exists(parent)) fs.mkdirs(parent)
-        require(fs.rename(new Path(oldPath), dst),
-          s"FactVersioned.renameTable: filesystem move $oldPath -> " +
-            s"$newPath failed")
-      } catch {
-        case e: Throwable =>
-          // failed move: withdraw the intent so old-path writers resume
-          Versioned.intentPath(oldPath).foreach(ip =>
-            try fs.delete(ip, false)
-            catch { case _: java.io.IOException => () })
-          throw e
-      }
-    } catch {
-      case e: Throwable =>
-        // a failed rename (conflict OR failed move) must also abort its
-        // claim — left behind, every later committer waits out the
-        // stale-claim lease (ADVICE r15 #4)
-        abortClaim(fs, oldPath, next,
-          new Path(dataRoot(oldPath), s"$VGenCol=$next"))
-        throw e
-    }
-    // the move landed — finish: release the rename's own claim inside
-    // the MOVED tree so the first post-rename committer doesn't wait
-    // out the stale-claim lease, write the guidance tombstone at the
-    // old path (atomic), withdraw the intent. A crash anywhere in here
-    // degrades to one stale-claim wait and/or intent-based guidance,
-    // never a torn table.
-    fs.delete(genMeta(newPath, next), true)
-    Versioned.writeRenamedMarker(fs, oldPath, newPath)
-    Versioned.intentPath(oldPath).foreach(ip =>
-      try fs.delete(ip, false)
-      catch { case _: java.io.IOException => () })
   }
 
   /** Expire old generations' metadata, then GC data files no retained

@@ -10,8 +10,8 @@ package graft.operators
   * Retryable shapes, and where each comes from:
   *
   *  - `ConcurrentModificationException` — every claim/lock conflict the
-  *    committers throw (basis drift, in-flight lower claims, rename
-  *    races, lock acquisition timeouts). Retry against the new head.
+  *    committers throw (basis drift, in-flight lower claims, lock
+  *    acquisition timeouts). Retry against the new head.
   *  - `AnalysisException` carrying a RESOLUTION-DRIFT error condition
   *    (`TABLE_OR_VIEW_NOT_FOUND`, the `UNRESOLVED_COLUMN`/`_FIELD`
   *    families, `FIELD_NOT_FOUND`/`COLUMN_NOT_FOUND`,
@@ -27,18 +27,22 @@ package graft.operators
   *    `FAILED_READ_FILE` in ANY flavor (Spark wraps a scan's failure
   *    as `SparkException[FAILED_READ_FILE.*]`; the FILE_NOT_EXIST
   *    flavor carries an FNF cause, but a file vanishing MID-read —
-  *    open succeeded, the tree moved under it — surfaces as NO_HINT
-  *    with a generic IO cause) — an in-flight scan raced a tree move,
-  *    a vacuum, or a compaction swap; the standard snapshot-store
-  *    reader shape. Re-resolve and retry (a genuinely corrupt file
-  *    keeps failing and exhausts the caller's bounded retries).
+  *    open succeeded, the file was deleted under it — surfaces as
+  *    NO_HINT with a generic IO cause) — an in-flight scan raced a
+  *    PURGE, a vacuum, or a compaction swap; the standard
+  *    snapshot-store reader shape. Re-resolve and retry (a genuinely
+  *    corrupt file keeps failing and exhausts the caller's bounded
+  *    retries).
   *  - loud GUIDANCE `IllegalArgumentException`s whose message names
-  *    what happened — "RENAMED" (re-target through
-  *    [[Versioned.renamedTo]]), "no committed generations" /
-  *    "no versioned table" (the table vanished at resolve: a purge, or
-  *    the instants around a move — re-resolve; a caller that KNOWS the
-  *    table should exist bounds its retries), "is not committed" (the
-  *    basis generation expired under a retention sweep mid-plan).
+  *    what happened — "RENAMED" (the catalog's pointer record names
+  *    the table's new name: re-target, [[graft.catalog.TablePointers]]),
+  *    "no committed generations" / "no versioned table" (the table
+  *    vanished at resolve: a PURGE — re-resolve; a caller that KNOWS
+  *    the table should exist bounds its retries), "is not committed"
+  *    (the basis generation expired under a retention sweep
+  *    mid-plan), and Spark's "Option 'basePath' not found" (a PURGE
+  *    deleted the tree between a scan's file listing and its
+  *    partition discovery).
   *
   * Anything else — "previously DROPPED", "not compatible", raw
   * field-missing — is a REAL error: retrying cannot succeed, and a
@@ -58,10 +62,10 @@ object RetryContract {
     // Spark's PartitioningAwareFileIndex swallows the FileNotFound
     // from `option("basePath", ...)` resolution and rethrows a bare
     // IllegalArgumentException with exactly this spelling — the shape
-    // a scan shows when the table tree MOVED between path resolution
-    // and file-index construction (every store read passes basePath =
-    // <table>/_graft_vdata). Same drift semantics as PATH_NOT_FOUND;
-    // caught live by the r18 rename-storm campaign (seed 23770).
+    // a scan shows when a PURGE deletes the table tree after the scan
+    // listed its files but before partition discovery (every store
+    // read passes basePath = <table>/_graft_vdata). Same drift
+    // semantics as PATH_NOT_FOUND.
     "Option 'basePath' not found")
 
   /** Error conditions (SQLSTATE-backed class names, prefix-matched so

@@ -58,54 +58,10 @@ object Versioned {
     * older ones are crashed-writer debris and reclaimed. */
   val StaleClaimMs: Long = 60L * 60L * 1000L
 
-  /** Guidance tombstone a table RENAME leaves at the old path (content:
-    * the new path). Commits and reads against the old path fail loudly
-    * naming the new one instead of silently re-creating a divergent
-    * fresh table; an explicit CREATE TABLE at the old name supersedes
-    * it (the catalog deletes the marker-only husk). Shared by both
-    * stores so the guidance cannot drift between them. Written
-    * ATOMICALLY (tmp + rename — VERDICT r15 Next #1): a create-then-
-    * write marker had a torn-read window where a racing reader saw an
-    * existing EMPTY marker and resolved the table path to "". */
-  val RenamedToMarker = "_graft_renamed_to"
-
-  /** Rename-INTENT marker a table RENAME writes in the table's PARENT
-    * directory BEFORE the tree moves (content: the new path) — it
-    * cannot live inside the table (the move would carry it along), and
-    * it closes two races the post-move guidance marker alone cannot
-    * (VERDICT r15 Next #2, ADVICE r15 #3):
-    *  - a writer claiming at the old path AFTER the rename's claim
-    *    listings but BEFORE the move would publish a stranded commit;
-    *    with the intent visible first, its claim/publish guards throw
-    *    the loud RENAMED guidance instead;
-    *  - in the window between the move and the guidance marker, the
-    *    old path holds NOTHING — resolution falls back to the intent,
-    *    so readers get the re-targetable guidance, not a bare
-    *    "no committed generations".
-    * Freshness contract: with the old tree still present (rename in
-    * flight, or a crash BEFORE the move), the intent blocks old-path
-    * commits only while younger than [[StaleClaimMs]] — the same lease
-    * the rename's own claim ages out under — and stale pre-move debris
-    * is GC'd on sight. With the old tree GONE (move happened), the
-    * intent is authoritative guidance at any age: a crash between the
-    * move and the guidance marker leaves it as the ONLY pointer to the
-    * table's new home. */
-  val RenameIntentPrefix = "_graft_rename_intent."
-
-  /** The parent-dir rename-intent marker path for `tablePath`, or None
-    * for a filesystem-root table (no parent to host it — such tables
-    * fall back to the post-move guidance marker alone). Exposed to the
-    * catalog: an explicit CREATE TABLE at a renamed-away name
-    * supersedes the guidance, intent included. */
-  private[graft] def intentPath(tablePath: String): Option[Path] = {
-    val t = new Path(tablePath)
-    Option(t.getParent).map(p => new Path(p, RenameIntentPrefix + t.getName))
-  }
-
-  /** Contents of a small marker file; None when it is absent (or
-    * vanishes mid-probe — markers are GC'd and completed concurrently,
-    * so the exists→open gap MUST tolerate a concurrent delete). Shared
-    * by every small-record reader so the FNF guard cannot drift. */
+  /** Contents of a small record file; None when it is absent (or
+    * vanishes mid-probe — records are rewritten and deleted
+    * concurrently, so the exists→open gap MUST tolerate a concurrent
+    * delete). */
   private[graft] def readSmall(
       fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[String] =
     try {
@@ -188,115 +144,12 @@ object Versioned {
     }
   }
 
-  /** The new path recorded by a rename's guidance marker at `path`, if
-    * one is present. Blank content is treated as marker-ABSENT (a torn
-    * or foreign file must never resolve the table path to ""). When the
-    * old path is entirely gone, the parent-dir rename INTENT is the
-    * guidance — the move→marker window and crashes inside it re-target
-    * instead of failing resolution. */
-  def renamedTo(spark: SparkSession, path: String): Option[String] = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def marker: Option[String] =
-      readSmall(fs, new Path(path, RenamedToMarker))
-        .map(_.trim).filter(_.nonEmpty)
-    marker.orElse {
-      if (fs.exists(new Path(path))) None // table (or husk) still here
-      else intentPath(path)
-        .flatMap(readSmall(fs, _)).map(_.trim).filter(_.nonEmpty)
-        // the completing rename writes the marker BEFORE deleting the
-        // intent — a miss on both can only mean the marker landed
-        // between the two probes; one re-probe closes the interleave
-        .orElse(marker)
-    }
-  }
-
-  /** The catalog's pending-CTAS marker name (the file lives in the
-    * table dir; defined here so the rename protocol below can probe it
-    * without a reverse package dependency). */
-  private[graft] val CtasPendingMarker = "_graft_ctas_pending"
-
-  private[operators] def writeRenamedMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      oldPath: String, newPath: String): Unit = {
-    // an explicit CREATE TABLE that landed at the old name inside the
-    // move→marker window supersedes the guidance (it already deleted
-    // the rename intent): writing the tombstone now would brick the
-    // brand-new table. Symmetric check-AFTER-write on both sides
-    // closes every interleave: this side skips when the pending marker
-    // is visible, re-probes after writing and withdraws; the create
-    // side re-probes the tombstone after writing its pending marker
-    // and deletes it. If both complete, either this side's re-probe
-    // sees the pending (marker withdrawn) or the pending became
-    // visible only after it — which orders the create's re-probe after
-    // the marker write, so the create's delete wins.
-    val pending = new Path(oldPath, CtasPendingMarker)
-    if (fs.exists(pending)) return
-    fs.mkdirs(new Path(oldPath))
-    atomicWriteFile(fs, new Path(oldPath, RenamedToMarker), newPath)
-    if (fs.exists(pending))
-      try fs.delete(new Path(oldPath, RenamedToMarker), false)
-      catch { case _: java.io.IOException => () }
-  }
-
-  private def renamedAwayError(
-      who: String, tablePath: String, to: String) =
-    new IllegalArgumentException(
-      s"$who: the table at $tablePath was RENAMED to '$to' — commit " +
-        "there, or delete the marker-only directory to reuse the path")
-
-  private[operators] def requireNotRenamedAway(
-      fs: org.apache.hadoop.fs.FileSystem,
-      tablePath: String, who: String): Unit = {
-    // probe INTENT FIRST, marker second — the completing rename writes
-    // the guidance marker BEFORE deleting the intent, so this order
-    // leaves no blind interleave: a caller that misses the intent
-    // (already deleted) necessarily probes the marker after it landed.
-    // The reverse order had a window (marker probed pre-write, intent
-    // probed post-delete) where a writer saw NEITHER and re-created
-    // empty table dirs at the renamed-away path.
-    intentPath(tablePath).foreach { ip =>
-      readSmall(fs, ip).map(_.trim).filter(_.nonEmpty).foreach { to =>
-        val fresh =
-          try System.currentTimeMillis() -
-            fs.getFileStatus(ip).getModificationTime < StaleClaimMs
-          catch { case _: java.io.FileNotFoundException => false }
-        if (fresh || !fs.exists(new Path(tablePath)))
-          throw renamedAwayError(who, tablePath, to)
-        // stale intent with the old tree still present = a rename that
-        // crashed BEFORE its move; the table never left — GC the debris
-        else try fs.delete(ip, false)
-        catch { case _: java.io.IOException => () }
-      }
-    }
-    readSmall(fs, new Path(tablePath, RenamedToMarker))
-      .map(_.trim).filter(_.nonEmpty) // blank = torn/foreign, not guidance
-      .foreach(to => throw renamedAwayError(who, tablePath, to))
-  }
-
   final case class Commit(gen: Long, path: String)
-
-  /** Shared empty-table guard for resolution paths: a renamed-away
-    * table resolves to the loud RENAMED guidance (re-target and retry —
-    * the move→marker window and post-move reads both land here), a
-    * genuinely absent one to the plain requirement failure. */
-  private[operators] def requireGens(
-      spark: SparkSession, tablePath: String, gens: Seq[Long],
-      who: String): Unit =
-    if (gens.isEmpty) {
-      renamedTo(spark, tablePath).foreach { to =>
-        throw new IllegalArgumentException(
-          s"$who: the table at $tablePath was RENAMED to '$to' — " +
-            "query it there")
-      }
-      require(gens.nonEmpty, s"no committed generations at $tablePath")
-    }
 
   private def genDir(root: Path, g: Long) = new Path(root, s"gen=$g")
 
   /** CAS-claim the next free generation number under `root` — the one
-    * claim loop [[commit]]/[[destroy]]/[[renameTable]] share (r16
-    * refactor of three near-identical blocks): start past every dir
+    * claim loop [[commit]] and [[destroy]] share: start past every dir
     * present (committed or not), then exclusively create the claim
     * marker; a loser takes the next number. */
   private def claimNextGen(
@@ -328,17 +181,17 @@ object Versioned {
   private def inFlightClaim(
       fs: org.apache.hadoop.fs.FileSystem, root: Path, g: Long): Boolean = {
     val dir = genDir(root, g)
-    fs.exists(new Path(dir, ClaimMarker)) &&
-      !fs.exists(new Path(dir, CommitMarker)) &&
+    !fs.exists(new Path(dir, CommitMarker)) &&
+      fs.exists(new Path(dir, ClaimMarker)) &&
       System.currentTimeMillis() -
         fs.getFileStatus(new Path(dir, ClaimMarker))
           .getModificationTime < StaleClaimMs
   }
 
   /** Wait (up to 60 s) for every claim BELOW `next` to resolve —
-    * publish, vanish, or go stale — the linearization step [[destroy]]
-    * and [[renameTable]] share; throws the retryable conflict on
-    * timeout (callers roll their own claim back). */
+    * publish, vanish, or go stale — the linearization step of
+    * [[destroy]]; throws the retryable conflict on timeout (the caller
+    * rolls its own claim back). */
   private def awaitLowerResolved(
       fs: org.apache.hadoop.fs.FileSystem, root: Path, next: Long,
       who: String): Unit = {
@@ -379,7 +232,6 @@ object Versioned {
     val spark = df.sparkSession
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNotRenamedAway(fs, tablePath, "Versioned.commit")
     if (!fs.exists(root)) {
       // first commit = table creation: enforce the filesystem contract
       // ONCE, loudly (see CommitLock.requireAtomicCommitContract)
@@ -394,10 +246,6 @@ object Versioned {
     // already exists and is exclusively ours; overwrite would delete
     // the claim and reopen the race window
     df.write.mode("append").parquet(dir.toString)
-    // table-move guard at the publication point: a rename landing
-    // between the entry check and here must not be diverged by this
-    // commit re-creating the old path (one fs.exists per commit)
-    requireNotRenamedAway(fs, tablePath, "Versioned.commit")
     fs.create(new Path(dir, CommitMarker), true).close()
     // retention: committed gens beyond the window, and uncommitted
     // debris older than the retention floor — but NEVER an in-flight
@@ -437,85 +285,6 @@ object Versioned {
     fs.delete(root, true)
   }
 
-  /** `ALTER TABLE ... RENAME TO` for the full-copy store: ONE
-    * directory move, serialized through the claim protocol exactly
-    * like [[destroy]] (claim → await lower claims → move). After the
-    * move the rename's own claim is released inside the new tree and a
-    * guidance marker ([[RenamedToMarker]]) lands at the old path, so a
-    * late committer against the old name fails loudly naming the new
-    * one instead of silently re-creating a divergent table. In-flight
-    * HIGHER claims (writers that claimed after the rename) abort the
-    * rename retryably — they would keep writing into the old path
-    * after the move. */
-  def renameTable(
-      spark: SparkSession, oldPath: String, newPath: String): Unit = {
-    val root = new Path(oldPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the one-move design needs a TRUE atomic directory rename —
-    // conditional-PUT stores refuse here with guidance
-    CommitLock.requireAtomicRenameContract(fs, root, "Versioned.renameTable")
-    require(generations(spark, oldPath).nonEmpty,
-      s"Versioned.renameTable: no committed table at $oldPath")
-    val dst = new Path(newPath)
-    require(!fs.exists(dst),
-      s"Versioned.renameTable: destination $newPath already exists")
-    val next = claimNextGen(fs, root, "Versioned.renameTable")
-    def inFlight(g: Long): Boolean = inFlightClaim(fs, root, g)
-    try {
-      awaitLowerResolved(fs, root, next, "Versioned.renameTable")
-      val higher = fs.listStatus(root).filter(_.isDirectory)
-        .flatMap(_.getPath.getName.stripPrefix("gen=").toLongOption)
-        .filter(g => g > next && inFlight(g))
-      if (higher.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"Versioned.renameTable: generation(s) ${higher.mkString(",")} " +
-            s"claimed after the rename at $oldPath — retry")
-      // rename INTENT lands BEFORE the move: from this instant, claims
-      // and publishes at the old path fail with the loud RENAMED
-      // guidance (requireNotRenamedAway honors fresh intents), so no
-      // post-listing claim can strand a commit in the moved-away tree
-      intentPath(oldPath).foreach(ip => atomicWriteFile(fs, ip, newPath))
-      try {
-        // close the listing→intent gap: any claim that raced in before
-        // the intent became visible aborts the rename retryably
-        val late = fs.listStatus(root).filter(_.isDirectory)
-          .flatMap(_.getPath.getName.stripPrefix("gen=").toLongOption)
-          .filter(g => g != next && inFlight(g))
-        if (late.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"Versioned.renameTable: generation(s) ${late.mkString(",")} " +
-              s"claimed while the rename intent landed at $oldPath — retry")
-        val parent = dst.getParent
-        if (parent != null && !fs.exists(parent)) fs.mkdirs(parent)
-        require(fs.rename(root, dst),
-          s"Versioned.renameTable: filesystem move $oldPath -> $newPath " +
-            "failed")
-      } catch {
-        case e: Throwable =>
-          // failed move: withdraw the intent so old-path writers resume
-          intentPath(oldPath).foreach(ip =>
-            try fs.delete(ip, false)
-            catch { case _: java.io.IOException => () })
-          throw e
-      }
-    } catch {
-      case e: Throwable =>
-        // abort the rename's claim too (ADVICE r15 #4: a claim left
-        // behind makes every later committer wait out the stale lease)
-        fs.delete(genDir(root, next), true)
-        throw e
-    }
-    // the move landed — finish: release the rename's own claim inside
-    // the MOVED tree, write the guidance tombstone at the old path,
-    // withdraw the intent. A crash anywhere in here degrades to one
-    // stale-claim wait and/or intent-based guidance, never a torn table.
-    fs.delete(genDir(dst, next), true)
-    writeRenamedMarker(fs, oldPath, newPath)
-    intentPath(oldPath).foreach(ip =>
-      try fs.delete(ip, false)
-      catch { case _: java.io.IOException => () })
-  }
-
   /** Delete every `gen=` dir below `floor` except in-flight claims. */
   private def sweepBelow(
       fs: org.apache.hadoop.fs.FileSystem, root: Path, floor: Long): Unit =
@@ -523,14 +292,7 @@ object Versioned {
       .filter(_.getName.startsWith("gen=")) // NEVER delete foreign dirs
       .foreach { p =>
         p.getName.stripPrefix("gen=").toLongOption.foreach { g =>
-          if (g < floor) {
-            val claim = new Path(p, ClaimMarker)
-            val inFlight = !fs.exists(new Path(p, CommitMarker)) &&
-              fs.exists(claim) &&
-              System.currentTimeMillis() -
-                fs.getFileStatus(claim).getModificationTime < StaleClaimMs
-            if (!inFlight) fs.delete(p, true)
-          }
+          if (g < floor && !inFlightClaim(fs, root, g)) fs.delete(p, true)
         }
       }
 
@@ -575,7 +337,7 @@ object Versioned {
       tablePath: String,
       gen: Option[Long] = None): String = {
     val gens = generations(spark, tablePath)
-    requireGens(spark, tablePath, gens, "Versioned.generationPath")
+    require(gens.nonEmpty, s"no committed generations at $tablePath")
     val g = gen.getOrElse(gens.max)
     require(gens.contains(g),
       s"generation $g is not committed at $tablePath (have ${gens.mkString(",")})")
@@ -601,7 +363,7 @@ object Versioned {
       tablePath: String,
       gen: Option[Long] = None): DataFrame = {
     val gens = generations(spark, tablePath)
-    requireGens(spark, tablePath, gens, "Versioned.read")
+    require(gens.nonEmpty, s"no committed generations at $tablePath")
     val g = gen.getOrElse(gens.max)
     require(gens.contains(g),
       s"generation $g is not committed at $tablePath (have ${gens.mkString(",")})")

@@ -2131,9 +2131,9 @@ object ScaleQueries extends QueryPack {
       } finally s.conf.unset("spark.sql.catalog.graft.retain")
     }),
 
-    // Pointer-based TABLE RENAME (VERDICT r16 Next #2 — the
-    // object-store endgame): with renameMode=pointer the statement is
-    // ONE record swap in the warehouse _graft_names file — FS-asserted:
+    // Pointer-based TABLE RENAME (the object-store endgame, now the
+    // only rename): the statement is ONE record swap in the warehouse
+    // _graft_names file — FS-asserted:
     // the table tree NEVER moves (the physical dir keeps its
     // _graft_gens; no tree appears at the new default path), the new
     // name resolves and accepts writes into the SAME physical dir, the
@@ -2154,7 +2154,6 @@ object ScaleQueries extends QueryPack {
         classOf[graft.catalog.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.graft.root", wh)
       s.conf.set("spark.sql.catalog.graft.retain", "10")
-      s.conf.set("spark.sql.catalog.graft.renameMode", "pointer")
       try {
         val fs = new org.apache.hadoop.fs.Path(wh)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -2197,10 +2196,7 @@ object ScaleQueries extends QueryPack {
             |FROM graft.orders_pr2""".stripMargin).localCheckpoint()
         fs.delete(new org.apache.hadoop.fs.Path(wh), true)
         out
-      } finally {
-        s.conf.unset("spark.sql.catalog.graft.retain")
-        s.conf.unset("spark.sql.catalog.graft.renameMode")
-      }
+      } finally s.conf.unset("spark.sql.catalog.graft.retain")
     }),
 
     "q175_sql_tblproperties" -> ((s0, dir) => {
@@ -2685,15 +2681,14 @@ object ScaleQueries extends QueryPack {
       } finally s.conf.unset("spark.sql.catalog.graft.retain")
     }),
 
-    // TABLE rename (`ALTER TABLE ... RENAME TO`, VERDICT r14 Next #3):
-    // ONE claim-serialized directory move — O(1) at any table size,
-    // because everything the table owns (generations, manifests,
-    // colmaps, tombstones, sidecars, default merge keys) lives inside
-    // the tree and rides the move. In-gate asserts: the old path holds
-    // ONLY the guidance tombstone after the move, the move adds no
-    // generation and stages no data, the old name fails loudly naming
-    // the new one, full DML (MERGE with its write-amp contract) and
-    // time travel continue under the new name. Output value-gated
+    // TABLE rename (`ALTER TABLE ... RENAME TO`): ONE pointer swap in
+    // the warehouse name record — O(1) at any table size, because the
+    // tree (generations, manifests, colmaps, tombstones, sidecars,
+    // default merge keys) never moves. In-gate asserts: the tree stays
+    // put, no directory appears at the new default path, the rename
+    // adds no generation and stages no data, the old name fails loudly
+    // naming the new one, full DML (MERGE with its write-amp contract)
+    // and time travel continue under the new name. Output value-gated
     // against the DuckDB from-scratch recomputation.
     "q169_sql_table_rename" -> ((s0, dir) => {
       val wh = Files.createTempDirectory("graft_q169_").toString
@@ -2713,13 +2708,12 @@ object ScaleQueries extends QueryPack {
         val fs = new org.apache.hadoop.fs.Path(wh)
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         s.sql("ALTER TABLE graft.orders_tr RENAME TO orders_moved")
-        val moved = s"$wh/orders_moved"
-        require(fs.listStatus(new org.apache.hadoop.fs.Path(path))
-            .map(_.getPath.getName).toSeq ==
-            Seq(Versioned.RenamedToMarker),
-          "q169: the old path must hold only the guidance tombstone")
-        require(FactVersioned.generations(s, moved) == Seq(0L),
-          "q169: the move must add no generation and stage no data")
+        require(fs.exists(new org.apache.hadoop.fs.Path(
+            s"$path/${FactVersioned.GensDir}")) &&
+            !fs.exists(new org.apache.hadoop.fs.Path(s"$wh/orders_moved")),
+          "q169: the rename must not move the tree")
+        require(FactVersioned.generations(s, path) == Seq(0L),
+          "q169: the rename must add no generation and stage no data")
         val old = try {
           s.sql("SELECT * FROM graft.orders_tr").collect(); None
         } catch { case t: Throwable => Some(t) }
@@ -2729,8 +2723,8 @@ object ScaleQueries extends QueryPack {
           s"q169: the old name must fail naming the new table, got " +
             s"${old.map(causeMessages)}")
         // full DML under the new name: MERGE doubles 1995 evens, and
-        // its write-amp contract holds across the move (only the
-        // scoped partition stages)
+        // its write-amp contract holds across the rename (only the
+        // scoped partition stages, in the table's own tree)
         s.sql(
           """CREATE OR REPLACE TEMPORARY VIEW q169_src AS
             |SELECT o_orderkey, y, 'U' AS o_orderstatus,
@@ -2744,16 +2738,16 @@ object ScaleQueries extends QueryPack {
             |  o_orderstatus = s.o_orderstatus,
             |  o_totalprice = s.o_totalprice""".stripMargin)
         val staged = fs.listStatus(new org.apache.hadoop.fs.Path(
-            s"$moved/${FactVersioned.DataDir}/${FactVersioned.VGenCol}=1"))
+            s"$path/${FactVersioned.DataDir}/${FactVersioned.VGenCol}=1"))
           .filter(_.isDirectory).map(_.getPath.getName).toSet
         require(staged == Set("y=1995"),
-          s"q169: MERGE after the move must stage only the scoped " +
+          s"q169: MERGE after the rename must stage only the scoped " +
             s"partition, got $staged")
-        // time travel crossed the move intact
+        // time travel crossed the rename intact
         require(s.sql(
             "SELECT count(*) FROM graft.orders_moved VERSION AS OF 0")
           .head.getLong(0) == o.count(),
-          "q169: VERSION AS OF 0 must read the pre-move content")
+          "q169: VERSION AS OF 0 must read the pre-rename content")
         val out = s.sql(
           """SELECT o_orderkey, o_orderstatus, o_totalprice, y
             |FROM graft.orders_moved""".stripMargin).localCheckpoint()

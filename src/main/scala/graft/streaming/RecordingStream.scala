@@ -67,12 +67,17 @@ object RecordingStream {
     (files, dead)
   }
 
-  /** R1 selection + S10 path templating over flattened file rows. */
+  /** R1 selection + S10 path templating over flattened file rows. Ties
+    * within a preference rank go to the NEWEST event (`event_ts`), then
+    * to the later position in `recording_files` (`arrival`), then to
+    * the file `id`: two events for one meeting in one micro-batch share
+    * their `arrival` positions, so without `event_ts` the winner would
+    * depend on row order. */
   def selectPreferred(spark: SparkSession, files: DataFrame): DataFrame = {
     val prio = PrioritySelect.priorityTable(spark, preferenceLists)
     PrioritySelect
       .top1ByPriority(files, prio, "file_type", Seq("meeting_uuid"),
-        Seq(col("arrival").desc))
+        Seq(col("event_ts").desc, col("arrival").desc, col("id")))
       .withColumn("s3_key", concat_ws("/", lit("recordings"),
         col("host_email"), col("topic"),
         date_format(col("recording_start"), "yyyyMMdd'T'HHmmss"),

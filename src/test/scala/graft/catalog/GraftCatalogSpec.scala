@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{FactVersioned, Upsert, Versioned}
+import graft.operators.{FactVersioned, RetryContract, Upsert, Versioned}
 
 /** [[GraftCatalog]]: named-table SQL must resolve to EXACTLY the same
   * rows as the path-based generation reads (latest and VERSION AS OF),
@@ -567,29 +567,32 @@ class GraftCatalogSpec extends SparkSpec {
     intercept[Exception] {
       spark.sql("CREATE TABLE graftt.nope.t AS SELECT 1 AS a")
     }
-    // RENAME TO moves across namespaces (one directory move)
+    // RENAME TO moves the NAME across namespaces (one pointer swap —
+    // the tree stays in raw/ev)
     spark.sql("ALTER TABLE graftt.raw.ev RENAME TO curated.ev")
     assert(spark.sql("SELECT v FROM graftt.curated.ev")
       .as[Long].head() == 10L)
     intercept[Exception] {
       spark.sql("SELECT * FROM graftt.raw.ev").collect()
     }
-    // non-empty namespace drop is rejected with guidance; CASCADE too
-    val e = intercept[Exception] {
-      spark.sql("DROP NAMESPACE graftt.curated")
+    // neither namespace is empty (curated holds the name, raw the
+    // tree): the drop is rejected with guidance; CASCADE too
+    Seq("curated", "raw").foreach { ns =>
+      val e = intercept[Exception] {
+        spark.sql(s"DROP NAMESPACE graftt.$ns")
+      }
+      assert(e.getMessage.contains("PURGE") ||
+        Option(e.getCause).exists(_.getMessage.contains("PURGE")),
+        e.getMessage)
+      intercept[Exception] {
+        spark.sql(s"DROP NAMESPACE graftt.$ns CASCADE")
+      }
     }
-    assert(e.getMessage.contains("PURGE") ||
-      Option(e.getCause).exists(_.getMessage.contains("PURGE")),
-      e.getMessage)
-    intercept[Exception] {
-      spark.sql("DROP NAMESPACE graftt.curated CASCADE")
-    }
-    // empty namespaces drop cleanly
+    // PURGE the table, then both namespaces drop cleanly
+    spark.sql("DROP TABLE graftt.curated.ev PURGE")
     spark.sql("DROP NAMESPACE graftt.raw")
     assert(spark.sql("SHOW NAMESPACES IN graftt")
       .select("namespace").as[String].collect().toSet == Set("curated"))
-    // PURGE the table, then the namespace drops
-    spark.sql("DROP TABLE graftt.curated.ev PURGE")
     spark.sql("DROP NAMESPACE graftt.curated")
     assert(spark.sql("SHOW NAMESPACES IN graftt").count() == 0L)
     // a PENDING CTAS husk also blocks the drop — the emptiness check
@@ -612,6 +615,47 @@ class GraftCatalogSpec extends SparkSpec {
       spark.sql("ALTER TABLE graftt.safe RENAME TO `../escaped`")
     }
     assert(FactVersioned.generations(spark, s"$root/safe").nonEmpty)
+  }
+
+  test("DROP NAMESPACE sees the pointer record: a namespace holding a " +
+      "renamed table's NAME or its TREE refuses the drop, a namespace " +
+      "holding only stale guidance drops with it, and no drop ever " +
+      "deletes the renamed table's data") {
+    val root = Files.createTempDirectory("graft_nsptr_").toString
+    register(root)
+    Seq("x", "y", "z").foreach(ns => spark.sql(s"CREATE NAMESPACE graftt.$ns"))
+    val tree = s"$root/x/t"
+    FactVersioned.upsert(spark, tree,
+      (1 to 9).map(i => (i.toLong, i % 3, i * 1.0)).toDF("k", "p", "x"),
+      Seq("k"), "p")
+    def intact(name: String): Unit = {
+      assert(FactVersioned.read(spark, tree).count() == 9L,
+        "a drop touched the table's data")
+      assert(spark.sql(s"SELECT count(*) FROM graftt.$name")
+        .as[Long].head() == 9L)
+    }
+    def refused(ns: String): Unit = {
+      val e = intercept[Exception] { spark.sql(s"DROP NAMESPACE graftt.$ns") }
+      assert(RetryContract.messages(e).exists(_.contains("not empty")),
+        RetryContract.messages(e))
+    }
+    spark.sql("ALTER TABLE graftt.x.t RENAME TO y.t")
+    refused("y") // holds the name; the tree lives in x
+    refused("x") // physically hosts the renamed table's tree
+    intact("y.t")
+    // y keeps only the stale guidance once the name moves on to z
+    spark.sql("ALTER TABLE graftt.y.t RENAME TO z.t")
+    spark.sql("DROP NAMESPACE graftt.y")
+    assert(!TablePointers.read(spark, root).keys.exists(_.startsWith("y/")))
+    intact("z.t")
+    refused("z")
+    refused("x")
+    intact("z.t")
+    // a rename into the dropped namespace fails; the name stays put
+    intercept[Exception] {
+      spark.sql("ALTER TABLE graftt.z.t RENAME TO y.t")
+    }
+    intact("z.t")
   }
 
   test("namespace properties: CREATE ... WITH PROPERTIES persists, " +
@@ -705,8 +749,9 @@ class GraftCatalogSpec extends SparkSpec {
       .get("comment").contains("the fact table"))
     // properties ride a TABLE RENAME (the record lives inside the tree)
     spark.sql("ALTER TABLE grafttp.ft RENAME TO ft2")
-    assert(FactVersioned.tableProperties(spark, s"$root/ft2")
-      .get("pipeline").contains("ingest-v2"))
+    assert(spark.sql("SHOW TBLPROPERTIES grafttp.ft2").collect()
+      .exists(r => r.getString(0) == "pipeline" &&
+        r.getString(1) == "ingest-v2"))
     // dims: table-root record
     val dpath = s"$root/dt"
     Versioned.commit(

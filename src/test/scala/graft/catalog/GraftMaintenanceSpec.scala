@@ -397,4 +397,47 @@ class GraftMaintenanceSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("matched no partitions"), e.getMessage)
   }
+
+  test("after a table rename the maintenance commands and graft_* " +
+      "table functions reach the unmoved tree under the NEW name and " +
+      "refuse the OLD name with RENAMED guidance") {
+    val (s, wh, path) = factTable()
+    s.conf.set("spark.sql.catalog.g.retain", "10")
+    graft.GraftFunctions.register(s)
+    val gen0 = FactVersioned.read(s, path, Some(0L))
+      .select("k", "p", "v").as[(Long, Int, Long)].collect().toSet
+    val changes01 = s.sql(
+      s"SELECT op, k, v FROM graft_table_changes('$path', 'k', 0, 1)")
+      .collect().toSet
+    s.sql("ALTER TABLE g.t RENAME TO t2")
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .flatMap(x => Option(x.getMessage)).toSeq
+    Seq("OPTIMIZE g.t", "VACUUM g.t RETAIN 1 GENERATIONS",
+      "RESTORE TABLE g.t TO VERSION AS OF 0", "DESCRIBE HISTORY g.t",
+      "DESCRIBE DETAIL g.t",
+      "SELECT * FROM graft_table_changes('g.t', 'k', 0, 1)").foreach { q =>
+      val e = intercept[Throwable](s.sql(q).collect())
+      assert(messages(e).exists(m => m.contains("RENAMED") &&
+        m.contains("t2")), s"$q: ${messages(e)}")
+    }
+    assert(FactVersioned.generations(s, path) == Seq(0L, 1L, 2L),
+      "nothing under the old name may touch the renamed table's tree")
+    // the new name reaches the same tree; nothing appears at <wh>/t2
+    assert(s.sql(
+      "SELECT op, k, v FROM graft_table_changes('g.t2', 'k', 0, 1)")
+      .collect().toSet == changes01)
+    assert(s.sql("DESCRIBE HISTORY g.t2").collect().map(_.getLong(0))
+      .toSeq == Seq(2L, 1L, 0L))
+    assert(s.sql("DESCRIBE DETAIL g.t2").collect().head.getString(1)
+      == path)
+    s.sql("OPTIMIZE g.t2")
+    assert(FactVersioned.generations(s, path) == Seq(0L, 1L, 2L, 3L))
+    s.sql("RESTORE TABLE g.t2 TO VERSION AS OF 0")
+    s.sql("VACUUM g.t2 RETAIN 1 GENERATIONS")
+    assert(FactVersioned.generations(s, path) == Seq(4L))
+    assert(s.sql("SELECT k, p, v FROM g.t2").as[(Long, Int, Long)]
+      .collect().toSet == gen0)
+    assert(!new java.io.File(s"$wh/t2").exists())
+  }
 }

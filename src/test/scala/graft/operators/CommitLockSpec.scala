@@ -171,10 +171,10 @@ class CommitLockSpec extends SparkSpec {
     assert(FactVersioned.read(spark, s"$local/t").count() == 1)
   }
 
-  test("conditional-PUT stores (VERDICT r15 Next #3): the capability " +
-      "probe accepts table creation without the manual vouch, the " +
-      "claim CAS wins/loses arbitration through the conditional " +
-      "create, and TABLE RENAME still refuses (no atomic dir move)") {
+  test("conditional-PUT stores: the capability probe accepts table " +
+      "creation without the manual vouch, the claim CAS wins/loses " +
+      "arbitration through the conditional create, and TABLE RENAME " +
+      "succeeds as a pointer swap (the tree never moves)") {
     import org.apache.spark.sql.functions.col
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.mockcps3.impl",
@@ -219,12 +219,17 @@ class CommitLockSpec extends SparkSpec {
         Seq("k"), "p", retain = 10)
     }
     assert(FactVersioned.read(spark, s"$root/t").count() == 3)
-    // TABLE RENAME refuses: conditional creates don't give atomic moves
-    val e = intercept[UnsupportedOperationException] {
-      FactVersioned.renameTable(spark, s"$root/t", s"$root/t2")
-    }
-    assert(e.getMessage.contains("atomic") &&
-      e.getMessage.contains("mockcps3"), e.getMessage)
+    // TABLE RENAME needs no atomic directory move: it swaps the
+    // catalog's name record, and the tree stays where it is
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.gcps",
+      classOf[graft.catalog.GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.gcps.root", root)
+    s.sql("ALTER TABLE gcps.t RENAME TO t2")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(
+      s"$root/t/${FactVersioned.GensDir}")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/t2")))
+    assert(s.sql("SELECT count(*) FROM gcps.t2").head.getLong(0) == 3L)
   }
 }
 

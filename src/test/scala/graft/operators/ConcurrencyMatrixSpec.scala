@@ -25,7 +25,7 @@ import graft.SparkSpec
   *  - `ConcurrentModificationException` — transient conflict, retry
   *    against the new head;
   *  - `AnalysisException` — the schema moved mid-read, re-resolve;
-  *  - loud GUIDANCE errors (renamed-away path, destroyed table) whose
+  *  - loud GUIDANCE errors (renamed-away name, destroyed table) whose
   *    message names what happened — re-target and retry.
   * Any other IllegalArgumentException ("previously DROPPED",
   * "not compatible", raw field-missing) is a misclassified race and
@@ -51,9 +51,14 @@ class ConcurrencyMatrixSpec extends SparkSpec {
 
   private def messages(t: Throwable): Seq[String] = RetryContract.messages(t)
 
-  /** Current path: follows at most one rename-away tombstone. */
-  private def pathOf(a: String): String =
-    Versioned.renamedTo(spark, a).getOrElse(a)
+  /** A session whose catalog `gcm` is rooted at `root`. */
+  private def catalogOn(root: String) = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.gcm",
+      classOf[graft.catalog.GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.gcm.root", root)
+    s
+  }
 
   /** One row matching the CURRENT head schema: key/partition filled,
     * the value column (v or amount) = key*100, everything else null —
@@ -78,18 +83,16 @@ class ConcurrencyMatrixSpec extends SparkSpec {
   // classified by the harness) ----------------------------------------
 
   private val dmls: Seq[(String, String => Unit)] = Seq(
-    "upsert" -> { a: String =>
-      val p = pathOf(a)
+    "upsert" -> { p: String =>
       val (row, pcol) = rowFor(p, 101L)
       FactVersioned.upsert(spark, p, row, Seq("k"), pcol, retain = 50)
     },
-    "merge" -> { a: String =>
+    "merge" -> { p: String =>
       // the MERGE shape without the SQL door (the same committer SQL
       // MERGE lands on): read the scoped partition at a basis, apply
       // update + delete, replacePartitions against that basis — the
       // read-modify-write path the claim-time drift classification
       // exists for
-      val p = pathOf(a)
       val gens = FactVersioned.generations(spark, p)
       if (gens.nonEmpty) {
         val basis = gens.max
@@ -106,8 +109,7 @@ class ConcurrencyMatrixSpec extends SparkSpec {
       }
       ()
     },
-    "optimize" -> { a: String =>
-      val p = pathOf(a)
+    "optimize" -> { p: String =>
       val dirs = FactVersioned.partitionDirs(spark, p).take(1)
       if (dirs.nonEmpty) {
         val pcol = FactVersioned.logicalPartitionColumns(spark, p).head
@@ -116,7 +118,7 @@ class ConcurrencyMatrixSpec extends SparkSpec {
       }
     },
     "vacuum" -> { a: String =>
-      FactVersioned.vacuum(spark, pathOf(a), retain = 3)
+      FactVersioned.vacuum(spark, a, retain = 3)
       ()
     })
 
@@ -125,14 +127,13 @@ class ConcurrencyMatrixSpec extends SparkSpec {
 
   private val ddls: Seq[(String, String => Unit)] = Seq(
     "rename_column" -> { a: String =>
-      FactVersioned.renameColumns(spark, pathOf(a), Map("v" -> "amount"),
+      FactVersioned.renameColumns(spark, a, Map("v" -> "amount"),
         retain = 50)
     },
     // composite DDL retried as a WHOLE must be IDEMPOTENT — the real
     // retry contract ("retry against the new head") means re-checking
     // whether each step is still needed, not blindly re-issuing it
-    "nested_add_drop" -> { a: String =>
-      val p = pathOf(a)
+    "nested_add_drop" -> { p: String =>
       def meta = FactVersioned.read(spark, p).schema("meta")
         .dataType.asInstanceOf[StructType].fieldNames.toSet
       if (!meta.contains("lang"))
@@ -143,8 +144,7 @@ class ConcurrencyMatrixSpec extends SparkSpec {
           retain = 50)
       ()
     },
-    "nested_rename" -> { a: String =>
-      val p = pathOf(a)
+    "nested_rename" -> { p: String =>
       val meta = FactVersioned.read(spark, p).schema("meta")
         .dataType.asInstanceOf[StructType].fieldNames.toSet
       if (meta.contains("score"))
@@ -153,11 +153,10 @@ class ConcurrencyMatrixSpec extends SparkSpec {
       ()
     },
     "partition_rename" -> { a: String =>
-      FactVersioned.renameColumns(spark, pathOf(a), Map("p" -> "pp"),
+      FactVersioned.renameColumns(spark, a, Map("p" -> "pp"),
         retain = 50)
     },
-    "truncate" -> { a: String =>
-      val p = pathOf(a)
+    "truncate" -> { p: String =>
       val head = FactVersioned.read(spark, p)
       val pcols = FactVersioned.logicalPartitionColumns(spark, p)
       val touched = head.select(pcols.map(col): _*).distinct().collect()
@@ -170,15 +169,17 @@ class ConcurrencyMatrixSpec extends SparkSpec {
       ()
     },
     "purge" -> { a: String =>
-      FactVersioned.destroy(spark, pathOf(a))
+      FactVersioned.destroy(spark, a)
     },
-    // TABLE RENAME as a first-class matrix door (r16): the storm spec
-    // covers rename × upsert; the matrix adds rename × merge/optimize/
-    // vacuum under the same one-normative-contract harness. Retried as
-    // a whole, so idempotent: once the move landed, pathOf re-targets
-    // and the door is done.
+    // TABLE RENAME as a first-class matrix door: a catalog pointer swap
+    // racing each DML on the physical path, which never moves. Retried
+    // as a whole, so idempotent: once the swap landed the record holds
+    // the old name's guidance and the door is done.
     "table_rename" -> { a: String =>
-      if (pathOf(a) == a) FactVersioned.renameTable(spark, a, a + "_mv")
+      val root = new Path(a).getParent.toString
+      if (!graft.catalog.TablePointers.read(spark, root).contains("t"))
+        catalogOn(root).sql("ALTER TABLE gcm.t RENAME TO t_mv")
+      ()
     })
 
   private def runCase(
@@ -208,10 +209,9 @@ class ConcurrencyMatrixSpec extends SparkSpec {
               s"${Option(t.getMessage).getOrElse("").take(160)}")
             last = t; Thread.sleep(20)
           case t: Throwable =>
-            val p = pathOf(a)
-            val gens = FactVersioned.generations(spark, p)
+            val gens = FactVersioned.generations(spark, a)
             val shapes = gens.map(g => s"g$g=${FactVersioned
-              .read(spark, p, Some(g)).schema.simpleString.take(120)}")
+              .read(spark, a, Some(g)).schema.simpleString.take(120)}")
             fail(s"[$ddlName x $dmlName] $who hit a NON-retryable " +
               s"${t.getClass.getSimpleName}: " +
               s"${messages(t).mkString(" | ")}\n  gens=$gens\n  " +
@@ -231,11 +231,10 @@ class ConcurrencyMatrixSpec extends SparkSpec {
       val fDdl = Future { retried("ddl", d2, ddl) }
       Await.result(Future.sequence(Seq(fDml, fDdl)), 4.minutes)
     } finally pool.shutdown()
-    // never torn: the surviving table (old or renamed-away path — the
-    // purge case may leave none) still resolves and reads cleanly
-    val p = pathOf(a)
-    if (FactVersioned.generations(spark, p).nonEmpty) {
-      val head = FactVersioned.read(spark, p)
+    // never torn: the surviving table (the purge case may leave none)
+    // still resolves and reads cleanly
+    if (FactVersioned.generations(spark, a).nonEmpty) {
+      val head = FactVersioned.read(spark, a)
       head.count() // full scan must not throw
       // the DDL's effect is never silently lost (purge may be followed
       // by a re-creating upsert — then the fresh table is post-DDL-free
@@ -247,7 +246,7 @@ class ConcurrencyMatrixSpec extends SparkSpec {
             s"[$ddlName x $dmlName] rename lost: $colsNow")
         case "partition_rename" =>
           assert(
-            FactVersioned.logicalPartitionColumns(spark, p) == Seq("pp"),
+            FactVersioned.logicalPartitionColumns(spark, a) == Seq("pp"),
             s"[$ddlName x $dmlName] partition rename lost")
         case "nested_add_drop" =>
           val meta = head.schema("meta").dataType.asInstanceOf[StructType]
@@ -262,16 +261,22 @@ class ConcurrencyMatrixSpec extends SparkSpec {
             s"[$ddlName x $dmlName] nested rename lost: " +
               meta.fieldNames.toSeq)
         case "table_rename" =>
-          assert(p == a + "_mv",
-            s"[$ddlName x $dmlName] table rename lost: resolved $p")
-          // the old path holds nothing but the guidance tombstone —
-          // no stranded commit, no husk dirs (the r16 storm-campaign
-          // invariant, now enforced across every DML pairing)
+          // the new name reads the physical tree, no directory appeared
+          // at its default path, and the old name gives guidance
+          val root = new Path(a).getParent.toString
+          val s = catalogOn(root)
+          assert(s.sql("SELECT count(*) FROM gcm.t_mv").head.getLong(0) ==
+            head.count(), s"[$ddlName x $dmlName] table rename lost")
           val fs = new Path(a).getFileSystem(
             spark.sparkContext.hadoopConfiguration)
-          assert(fs.listStatus(new Path(a)).map(_.getPath.getName)
-              .toSeq == Seq(Versioned.RenamedToMarker),
-            s"[$ddlName x $dmlName] old path not a clean tombstone")
+          assert(!fs.exists(new Path(s"$root/t_mv")),
+            s"[$ddlName x $dmlName] a directory appeared at the new name")
+          val e = intercept[Exception] {
+            s.sql("SELECT * FROM gcm.t").collect()
+          }
+          assert(messages(e).exists(m =>
+            m.contains("RENAMED") && m.contains("t_mv")),
+            s"[$ddlName x $dmlName] old name: ${messages(e)}")
         case _ => ()
       }
     }

@@ -3,15 +3,17 @@ package graft.operators
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.catalog.{GraftCatalog, GraftDml}
 
-/** `ALTER TABLE ... RENAME TO` at the store level
-  * ([[FactVersioned.renameTable]] / [[Versioned.renameTable]]): one
-  * claim-serialized directory move — everything the table owns rides
-  * along, the old path keeps a loud guidance tombstone, and racing
-  * committers serialize through the claim protocol. */
+/** `ALTER TABLE ... RENAME TO` over both stores: ONE pointer swap in the
+  * warehouse name record ([[graft.catalog.TablePointers]]). The table's
+  * physical directory never moves, everything it owns resolves under
+  * the new name, the old name fails loudly with re-target guidance, and
+  * name-based writers racing the swap never lose a commit. */
 class TableRenameSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,12 +26,23 @@ class TableRenameSpec extends SparkSpec {
   private def base(n: Int) =
     (1 to n).map(i => (i.toLong, i % 3, i * 10L)).toDF("k", "p", "v")
 
-  test("fact rename moves the WHOLE tree in one O(1) move: reads, time " +
-      "travel, colmap, tombstones and default keys all follow; the old " +
-      "path rejects commits with guidance") {
+  /** A DML-enabled session with catalog `cat` rooted at `root`. */
+  private def catalog(cat: String, root: String): SparkSession = {
+    val s = GraftDml.enable(spark)
+    s.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    s.conf.set(s"spark.sql.catalog.$cat.root", root)
+    s.conf.set(s"spark.sql.catalog.$cat.retain", "50")
+    s
+  }
+
+  private def guidance(t: Throwable): Boolean =
+    RetryContract.messages(t).exists(_.contains("RENAMED"))
+
+  test("fact rename is one pointer swap: the tree stays put; rows, time " +
+      "travel, colmap, tombstones and default keys resolve under the new " +
+      "name; the old name rejects writes with guidance") {
     val root = tmp()
     val a = s"$root/ta"
-    val b = s"$root/tb"
     FactVersioned.upsert(spark, a, base(30), Seq("k"), "p", retain = 10)
     // give the table history worth carrying: a column rename (colmap +
     // tombstone) and a second data generation
@@ -41,172 +54,175 @@ class TableRenameSpec extends SparkSpec {
       .select(col("k"), col("p"), col("amount"))
       .as[(Long, Int, Long)].collect().toSet
     val gensBefore = FactVersioned.generations(spark, a)
+    val s = catalog("gtrf", root)
 
-    FactVersioned.renameTable(spark, a, b)
+    s.sql("ALTER TABLE gtrf.ta RENAME TO tb")
 
-    // identical table under the new path: rows, generations, colmap
-    assert(FactVersioned.read(spark, b)
-      .select(col("k"), col("p"), col("amount"))
-      .as[(Long, Int, Long)].collect().toSet == before)
-    assert(FactVersioned.generations(spark, b) == gensBefore)
-    assert(FactVersioned.read(spark, b, Some(0L)).columns.contains("v"),
-      "time travel must keep the pre-column-rename era")
-    // tombstones moved too: re-adding the renamed-away name still fails
-    val e = intercept[IllegalArgumentException] {
-      FactVersioned.addColumns(spark, b,
-        Seq(org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType)), retain = 10)
-    }
-    assert(e.getMessage.contains("DROPPED"), e.getMessage)
-    // recorded default merge keys followed (keyless upsert still works)
-    assert(FactVersioned.recordedMergeKeys(spark, b).contains(Seq("k")))
-    // the old path keeps ONLY the guidance tombstone
+    // the tree did not move and the swap committed no generation
     val fs = fsOf(a)
-    assert(fs.listStatus(new Path(a)).map(_.getPath.getName).toSeq ==
-      Seq(Versioned.RenamedToMarker))
-    assert(Versioned.renamedTo(spark, a).contains(b))
-    // commits against the old path fail LOUDLY naming the new one —
-    // never a silent fresh-table re-create
-    val old = intercept[IllegalArgumentException] {
-      FactVersioned.upsert(spark, a,
-        Seq((1L, 0, 5L)).toDF("k", "p", "amount"), Seq("k"), "p")
+    assert(fs.exists(new Path(a, FactVersioned.GensDir)))
+    assert(!fs.exists(new Path(s"$root/tb")),
+      "no directory may appear at the new default path")
+    assert(FactVersioned.generations(spark, a) == gensBefore)
+    // identical table under the new name: rows and time travel
+    assert(s.sql("SELECT k, p, amount FROM gtrf.tb")
+      .as[(Long, Int, Long)].collect().toSet == before)
+    assert(s.sql("SELECT * FROM gtrf.tb VERSION AS OF 0").columns
+      .contains("v"), "time travel must keep the pre-column-rename era")
+    // tombstones: re-adding the renamed-away column still fails
+    val e = intercept[Exception] {
+      s.sql("ALTER TABLE gtrf.tb ADD COLUMN v BIGINT")
     }
-    assert(old.getMessage.contains("RENAMED") && old.getMessage.contains(b),
-      old.getMessage)
-    // the new table commits normally
-    FactVersioned.upsert(spark, b,
-      Seq((4L, 1, 444L)).toDF("k", "p", "amount"), Seq("k"), "p",
-      retain = 10)
-    assert(FactVersioned.read(spark, b).where(col("k") === 4L)
-      .select(col("amount")).as[Long].head() == 444L)
-    // destination-exists and missing-source rejections
-    intercept[IllegalArgumentException] {
-      FactVersioned.renameTable(spark, b, b)
+    assert(RetryContract.messages(e).exists(_.contains("DROPPED")),
+      RetryContract.messages(e))
+    // recorded default merge keys stay with the tree
+    assert(FactVersioned.recordedMergeKeys(spark, a).contains(Seq("k")))
+    // writes through the old name fail LOUDLY naming the new one
+    val old = intercept[Exception] {
+      s.sql("INSERT INTO gtrf.ta BY NAME SELECT 1L AS k, 0 AS p, " +
+        "5L AS amount, CAST(NULL AS BIGINT) AS vgen")
     }
-    intercept[IllegalArgumentException] {
-      FactVersioned.renameTable(spark, s"$root/nope", s"$root/x")
-    }
+    assert(RetryContract.messages(old).exists(m =>
+      m.contains("RENAMED") && m.contains("tb")), RetryContract.messages(old))
+    assert(RetryContract.retryable(old), "guidance must be retryable")
+    // the new name commits into the same physical tree
+    s.sql("INSERT INTO gtrf.tb BY NAME SELECT 100L AS k, 1 AS p, " +
+      "444L AS amount, CAST(NULL AS BIGINT) AS vgen")
+    assert(FactVersioned.read(spark, a).where(col("k") === 100L)
+      .select(col("amount")).as[Long].collect().toSeq == Seq(444L))
+    // same-name and missing-source renames are rejected
+    intercept[Exception] { s.sql("ALTER TABLE gtrf.tb RENAME TO tb") }
+    intercept[Exception] { s.sql("ALTER TABLE gtrf.nope RENAME TO x") }
   }
 
   test("dimension rename: the full-copy store moves the same way") {
     val root = tmp()
     val a = s"$root/da"
-    val b = s"$root/db"
     Versioned.commit(base(8), a, retain = 5)
     Versioned.commit(base(8).withColumn("v", col("v") + 1), a, retain = 5)
     val before = Versioned.read(spark, a)
       .as[(Long, Int, Long)].collect().toSet
-    Versioned.renameTable(spark, a, b)
-    assert(Versioned.read(spark, b)
+    val s = catalog("gtrd", root)
+    s.sql("ALTER TABLE gtrd.da RENAME TO db")
+    assert(s.sql("SELECT k, p, v FROM gtrd.db")
       .as[(Long, Int, Long)].collect().toSet == before)
-    assert(Versioned.generations(spark, b) == Seq(0L, 1L))
-    assert(Versioned.renamedTo(spark, a).contains(b))
-    val e = intercept[IllegalArgumentException] {
-      Versioned.commit(base(2), a)
+    assert(s.sql("SELECT count(*) FROM gtrd.db VERSION AS OF 0")
+      .as[Long].head() == 8L)
+    assert(Versioned.generations(spark, a) == Seq(0L, 1L))
+    assert(!fsOf(a).exists(new Path(s"$root/db")))
+    val e = intercept[Exception] {
+      s.sql("INSERT INTO gtrd.da SELECT 9L AS k, 0 AS p, 90L AS v")
     }
-    assert(e.getMessage.contains("RENAMED"), e.getMessage)
+    assert(guidance(e), RetryContract.messages(e))
   }
 
-  /** One seeded storm round: 2 writer threads × 6 upserts racing one
-    * TABLE RENAME. EVERY thrown error must be inside the ONE normative
-    * [[RetryContract]] (shared with ConcurrencyMatrixSpec — the two
-    * specs can no longer encode different contracts, VERDICT r15 Next
-    * #2); anything outside it fails the round with the full cause
-    * chain. */
+  /** One seeded storm round: two writer threads upserting new keys
+    * through name-based SQL `MERGE` and one rewriting existing keys
+    * through `MERGE ... UPDATE`, racing a chain of two catalog renames
+    * (`ta → tb → tc`). A writer resolves the name it last knew and,
+    * on RENAMED guidance, re-targets to the name the guidance gives.
+    * EVERY thrown error must be inside the ONE normative
+    * [[RetryContract]] (shared with ConcurrencyMatrixSpec); anything
+    * outside it fails the round with the full cause chain. */
   private def stormRound(seed: Long): Unit = {
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     val root = tmp()
     val a = s"$root/ta"
-    val b = s"$root/tb"
-    FactVersioned.upsert(spark, a, base(30), Seq("k"), "p")
+    FactVersioned.upsert(spark, a, base(30), Seq("k"), "p", retain = 50)
+    val s = catalog("gts", root)
     val rnd = new scala.util.Random(seed)
-    val renameDelay = rnd.nextInt(400)
-    val pool = Executors.newFixedThreadPool(3)
+    val delays = Seq.fill(2)(rnd.nextInt(400))
+    val pool = Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val landed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    def currentPath(): String =
-      Versioned.renamedTo(spark, a).getOrElse(a)
-    def upsertRetry(key: Long): Unit = {
+    val Guided = """RENAMED to '(\w+)'""".r.unanchored
+    def retried(what: String)(op: String => Unit): Unit = {
+      var name = "ta"
       var attempts = 0
       var done = false
       while (!done && attempts < 60) {
         attempts += 1
-        try {
-          FactVersioned.upsert(spark, currentPath(),
-            Seq((key, 0, key * 100L)).toDF("k", "p", "v"),
-            Seq("k"), "p", retain = 50)
-          landed.add(key); done = true
-        } catch {
+        try { op(name); done = true }
+        catch {
           case t: Throwable if RetryContract.retryable(t) =>
-            Thread.sleep(10) // re-resolve (currentPath) and retry
+            RetryContract.messages(t).collectFirst {
+              case Guided(to) => to
+            }.foreach(name = _)
+            Thread.sleep(10)
           case t: Throwable =>
-            fail(s"[seed=$seed] upsert $key hit a NON-retryable " +
+            fail(s"[seed=$seed] $what hit a NON-retryable " +
               s"${t.getClass.getName}: " +
               RetryContract.messages(t).mkString(" | "))
         }
       }
-      assert(done, s"[seed=$seed] upsert $key starved after $attempts " +
-        "attempts")
+      assert(done, s"[seed=$seed] $what starved after $attempts attempts")
     }
-    def renameRetry(): Unit = {
-      var attempts = 0
-      var done = false
-      while (!done && attempts < 60) {
-        attempts += 1
-        try {
-          FactVersioned.renameTable(spark, a, b)
-          done = true
-        } catch {
-          case _: java.util.ConcurrentModificationException =>
-            Thread.sleep(50 + rnd.nextInt(100)) // in-flight writer — retry
-        }
+    def upsert(key: Long): Unit = retried(s"upsert $key") { name =>
+      s.sql(
+        s"""MERGE INTO gts.$name t USING (SELECT ${key}L AS k, 0 AS p,
+           |  ${key * 100}L AS v, CAST(NULL AS BIGINT) AS vgen) src
+           |ON t.k = src.k
+           |WHEN MATCHED THEN UPDATE SET *
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      landed.add(key)
+    }
+    def update(key: Long): Unit = retried(s"merge $key") { name =>
+      s.sql(
+        s"""MERGE INTO gts.$name t USING (SELECT ${key}L AS k) src
+           |ON t.k = src.k
+           |WHEN MATCHED THEN UPDATE SET v = ${key * 1000}L""".stripMargin)
+    }
+    def rename(from: String, to: String): Unit =
+      retried(s"rename $from") { _ =>
+        s.sql(s"ALTER TABLE gts.$from RENAME TO $to")
       }
-      assert(done, s"[seed=$seed] rename starved after $attempts attempts")
-    }
     try {
-      val fa = Future { (101L to 106L).foreach(upsertRetry) }
-      val fb = Future { (201L to 206L).foreach(upsertRetry) }
-      val fr = Future { Thread.sleep(renameDelay); renameRetry() }
-      Await.result(Future.sequence(Seq(fa, fb, fr)), 5.minutes)
+      val fa = Future { (101L to 106L).foreach(upsert) }
+      val fb = Future { (201L to 206L).foreach(upsert) }
+      val fm = Future { (1L to 6L).foreach(update) }
+      val fr = Future {
+        Thread.sleep(delays(0)); rename("ta", "tb")
+        Thread.sleep(delays(1)); rename("tb", "tc")
+      }
+      Await.result(Future.sequence(Seq(fa, fb, fm, fr)), 5.minutes)
     } finally pool.shutdown()
-    // the rename must have won: the table lives at b, a is a tombstone
-    assert(Versioned.renamedTo(spark, a).contains(b))
-    assert(FactVersioned.generations(spark, b).nonEmpty)
-    // every upsert that reported success is visible at the final path
-    val now = FactVersioned.read(spark, b)
-      .select(col("k"), col("v")).as[(Long, Long)].collect().toMap
-    landed.forEach { k =>
-      assert(now.get(k).contains(k * 100L), s"[seed=$seed] upsert $k lost")
-    }
+    // every write that reported success is visible exactly once under
+    // the final name, and the final name reads the physical tree
+    val now = s.sql("SELECT k, v FROM gts.tc").as[(Long, Long)].collect()
+    assert(now.map(_._1).distinct.length == now.length,
+      s"[seed=$seed] duplicate keys under the final name")
+    val byKey = now.toMap
     assert(landed.size == 12,
       s"[seed=$seed] only ${landed.size}/12 upserts landed")
-    // no stranded debris: the old path holds ONLY the guidance marker
-    // (a commit published into the moved-away tree would appear here),
-    // and no rename-intent marker lingers once the rename completed
+    landed.forEach { k =>
+      assert(byKey.get(k).contains(k * 100L), s"[seed=$seed] upsert $k lost")
+    }
+    (1L to 6L).foreach { k =>
+      assert(byKey.get(k).contains(k * 1000L), s"[seed=$seed] merge $k lost")
+    }
+    assert(FactVersioned.read(spark, a).count() == now.length)
+    // the tree never moved; no directory appeared under either new name
     val fs = fsOf(a)
-    def tree(p: Path, indent: String = ""): String =
-      fs.listStatus(p).map { st =>
-        val self = s"$indent${st.getPath.getName}" +
-          (if (st.isDirectory) "/" else s" (${st.getLen}b)")
-        if (st.isDirectory) self + "\n" + tree(st.getPath, indent + "  ")
-        else self
-      }.mkString("\n")
-    assert(fs.listStatus(new Path(a)).map(_.getPath.getName).toSeq ==
-      Seq(Versioned.RenamedToMarker),
-      s"[seed=$seed] old path holds more than the guidance tombstone:\n" +
-        tree(new Path(a)))
-    assert(!fs.exists(new Path(root,
-        Versioned.RenameIntentPrefix + "ta")),
-      s"[seed=$seed] rename intent marker leaked")
+    assert(fs.exists(new Path(a, FactVersioned.GensDir)))
+    Seq("tb", "tc").foreach { n =>
+      assert(!fs.exists(new Path(s"$root/$n")),
+        s"[seed=$seed] a directory appeared at the default path of $n")
+    }
+    // both old names re-target to the final one in one hop
+    Seq("ta", "tb").foreach { n =>
+      val e = intercept[Exception] { s.sql(s"SELECT * FROM gts.$n").collect() }
+      assert(RetryContract.messages(e).exists(m =>
+        m.contains("RENAMED") && m.contains("'tc'")),
+        s"[seed=$seed] $n: ${RetryContract.messages(e)}")
+    }
   }
 
   // seeded repeats: `GRAFT_STORM_REPEATS=N` (env — sbt forks test JVMs,
   // so a -D on the sbt command line would not arrive) scales the
-  // campaign (the round ledger runs 50+ on quiet AND loaded machines);
-  // the default keeps the suite fast while still exercising three
-  // distinct interleaves
+  // campaign; the default keeps the suite fast while still exercising
+  // three distinct interleaves
   private val stormRepeats =
     sys.env.get("GRAFT_STORM_REPEATS")
       .orElse(sys.props.get("graft.storm.repeats"))
@@ -217,78 +233,5 @@ class TableRenameSpec extends SparkSpec {
       "path, old-path writers fail only inside the shared retry " +
       s"contract ($stormRepeats seeded rounds)") {
     (1 to stormRepeats).foreach(i => stormRound(i * 7919L + 13L))
-  }
-
-  test("torn/blank guidance markers never resolve: blank content is " +
-      "marker-absent, a fresh rename INTENT blocks old-path commits " +
-      "loudly, a stale pre-move intent is debris and is GC'd") {
-    val root = tmp()
-    val a = s"$root/ta"
-    FactVersioned.upsert(spark, a, base(5), Seq("k"), "p")
-    val fs = fsOf(a)
-    // blank guidance marker (the r15 torn-read shape, now impossible to
-    // WRITE but still hardened against): resolution treats it as absent
-    fs.create(new Path(a, Versioned.RenamedToMarker), true).close()
-    assert(Versioned.renamedTo(spark, a).isEmpty,
-      "a blank marker must never resolve (was Some(\"\") in r15)")
-    FactVersioned.upsert(spark, a, // commits still pass the guard
-      Seq((9L, 0, 90L)).toDF("k", "p", "v"), Seq("k"), "p")
-    fs.delete(new Path(a, Versioned.RenamedToMarker), false)
-    // fresh rename intent in the parent: old-path commits fail with the
-    // loud RENAMED guidance naming the target (the pre-move window)
-    val intent = new Path(root, Versioned.RenameIntentPrefix + "ta")
-    val out = fs.create(intent, true)
-    out.write(s"$root/tb".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    val e = intercept[IllegalArgumentException] {
-      FactVersioned.upsert(spark, a,
-        Seq((1L, 0, 5L)).toDF("k", "p", "v"), Seq("k"), "p")
-    }
-    assert(e.getMessage.contains("RENAMED") &&
-      e.getMessage.contains(s"$root/tb"), e.getMessage)
-    assert(RetryContract.retryable(e), "guidance must be retryable")
-    // pre-move the table itself still READS (it has not moved): the 5
-    // base rows plus the key-9 row the blank-marker phase upserted
-    assert(FactVersioned.read(spark, a).count() == 6)
-    // stale intent + live table = crashed-before-move debris: commits
-    // resume and the debris is GC'd
-    val old = System.currentTimeMillis() - Versioned.StaleClaimMs - 60000L
-    new java.io.File(intent.toUri.getPath).setLastModified(old)
-    FactVersioned.upsert(spark, a,
-      Seq((2L, 0, 20L)).toDF("k", "p", "v"), Seq("k"), "p")
-    assert(!fs.exists(intent), "stale pre-move intent debris must be GC'd")
-  }
-
-  test("move→marker window: with the old tree gone, the parent intent " +
-      "IS the guidance — reads and commits re-target instead of dying " +
-      "on 'no committed generations'") {
-    val root = tmp()
-    val a = s"$root/ta"
-    val b = s"$root/tb"
-    FactVersioned.upsert(spark, a, base(5), Seq("k"), "p")
-    val fs = fsOf(a)
-    // simulate a crash INSIDE renameTable's move→marker window: tree
-    // moved, intent present, guidance marker never written
-    val intent = new Path(root, Versioned.RenameIntentPrefix + "ta")
-    val out = fs.create(intent, true)
-    out.write(b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    require(fs.rename(new Path(a), new Path(b)))
-    // resolution follows the intent (renamedTo), reads give guidance
-    assert(Versioned.renamedTo(spark, a).contains(b))
-    val eRead = intercept[IllegalArgumentException] {
-      FactVersioned.read(spark, a)
-    }
-    assert(eRead.getMessage.contains("RENAMED") &&
-      eRead.getMessage.contains(b), eRead.getMessage)
-    assert(RetryContract.retryable(eRead))
-    val eWrite = intercept[IllegalArgumentException] {
-      FactVersioned.upsert(spark, a,
-        Seq((1L, 0, 5L)).toDF("k", "p", "v"), Seq("k"), "p")
-    }
-    assert(eWrite.getMessage.contains("RENAMED") &&
-      eWrite.getMessage.contains(b), eWrite.getMessage)
-    // the new home reads fine
-    assert(FactVersioned.read(spark, b).count() == 5)
   }
 }

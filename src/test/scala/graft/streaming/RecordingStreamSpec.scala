@@ -15,8 +15,9 @@ class RecordingStreamSpec extends SparkSpec {
   private def writeEvent(dir: String, name: String, json: String): Unit =
     Files.write(JPaths.get(dir, name), json.getBytes("UTF-8"))
 
-  private def event(uuid: String, topic: String, files: String): String =
-    s"""{"event":"recording.completed","event_ts":1626230691572,
+  private def event(uuid: String, topic: String, files: String,
+      eventTs: Long = 1626230691572L): String =
+    s"""{"event":"recording.completed","event_ts":$eventTs,
        |"payload":{"account_id":"AAA","object":{
        |"id":98765,"uuid":"$uuid","host_id":"h1","topic":"$topic",
        |"type":4,"start_time":"2021-07-13T21:44:51Z",
@@ -87,6 +88,27 @@ class RecordingStreamSpec extends SparkSpec {
     RecordingStream.promote(spark, staging, meetingsAll, main)
     assert(spark.read.parquet(main).count() === 4) // no duplicate fB1
     assert(spark.read.parquet(staging).count() === 0)
+  }
+
+  test("two events for one meeting in one micro-batch: the newer " +
+      "event's file wins in either input order") {
+    val older = event("mA", "Sync",
+      file("fOld", "shared_screen_with_speaker_view"), eventTs = 1000L)
+    val newer = event("mA", "Sync",
+      file("fNew", "shared_screen_with_speaker_view"), eventTs = 2000L)
+    Seq("older first" -> Seq(older, newer),
+        "newer first" -> Seq(newer, older)).foreach { case (order, lines) =>
+      val root = Files.createTempDirectory("graft_streamtie").toString
+      val in = s"$root/in"; Files.createDirectories(JPaths.get(in))
+      // one file = one micro-batch holding both events
+      writeEvent(in, "e.json", lines.mkString("\n"))
+      val q = RecordingStream.start(spark, in, s"$root/staging",
+        s"$root/ckpt")
+      q.processAllAvailable(); q.stop()
+      assert(spark.read.parquet(s"$root/staging").select("id")
+        .as[String].collect().toSeq == Seq("fNew"),
+        s"$order: the newer event's file must win")
+    }
   }
 
   test("partitioned mode: date-scoped staging commits, null start date " +
