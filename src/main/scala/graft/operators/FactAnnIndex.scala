@@ -19,14 +19,17 @@ import org.apache.spark.sql.types.StructType
   *  - `rows/vgen=<g>/part=<dir>/` — index rows (file, id, cell, u, q,
   *    q_min, q_scale, q_sum, pq) for the data files generation `g`
   *    WROTE (`vgen=g/<dir>/...` manifest paths), sub-partitioned by
-  *    source partition dir. Refresh after a commit indexes exactly one
-  *    new `vgen=` subtree — cost ∝ the commit's touched partitions,
-  *    never the table. `pq` is the m-byte product-quantized code
-  *    ([[topKPq]]'s 8×-smaller candidate tier); `codebooks/` persists
-  *    the sub-centroids like the plain sidecar's.
+  *    source partition dir. A refresh indexes every un-indexed `vgen=`
+  *    subtree — however many generations committed since the last one
+  *    — with one scan and one write, so its cost is ∝ those commits'
+  *    touched partitions, never the table, and its job count does not
+  *    grow with the number of generations. `pq` is the m-byte
+  *    product-quantized code ([[topKPq]]'s 8×-smaller candidate tier);
+  *    `codebooks/` persists the sub-centroids like the plain sidecar's.
   *  - `files/vgen=<g>/` — the indexed file names (metadata-scale),
-  *    written only AFTER the matching rows land, so coverage checks and
-  *    crash recovery never trust half-built rows.
+  *    published only AFTER every generation's rows of the same refresh
+  *    landed, so coverage checks and crash recovery never trust
+  *    half-built rows.
   *  - `centroids/`, `meta/` — as [[AnnIndex]]: IVF centroids trained
   *    once (head generation at [[writeIndex]] time); refresh assigns
   *    new files against the EXISTING centroids (standard IVF posture —
@@ -65,6 +68,12 @@ object FactAnnIndex {
   val DirPrefix = "_graft_fann__"
   private val TmpDirPrefix = "_graft_fann_tmp__"
 
+  /** Under the index dir: one private dir per in-flight refresh, which
+    * stages its rows and file lists before the publish renames them. */
+  private val StagingDir = "_staging"
+
+  private val CallSiteShort = "callSite.short"
+
   def indexDir(tablePath: String, vecCol: String): String =
     s"$tablePath/$DirPrefix$vecCol"
 
@@ -81,6 +90,31 @@ object FactAnnIndex {
   private def fsOf(spark: SparkSession, tablePath: String) =
     new Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Spark's own short call-site form, `<method> at <file>:<line>`, of
+    * the entry point that calls this. */
+  private def callerSite(): String = {
+    val f = new Throwable().getStackTrace()(1)
+    s"${f.getMethodName} at ${f.getFileName}:${f.getLineNumber}"
+  }
+
+  /** Run `body` with `site` as the call site of every Spark job it
+    * issues — AQE stage jobs inherit the local property — and restore
+    * the caller's value after. */
+  private def withCallSite[T](spark: SparkSession, site: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(CallSiteShort)
+    sc.setLocalProperty(CallSiteShort, site)
+    try body finally sc.setLocalProperty(CallSiteShort, prev)
+  }
+
+  /** `body` as an [[Overlap]] future under the submitting thread's call
+    * site: pooled threads do not inherit local properties. */
+  private def overlapped[T](spark: SparkSession)(body: => T)
+      : scala.concurrent.Future[T] = {
+    val site = spark.sparkContext.getLocalProperty(CallSiteShort)
+    scala.concurrent.Future(withCallSite(spark, site)(body))(Overlap.ec)
+  }
 
   /** Manifest-relative file paths (`vgen=<g>/<dir>/<file>`) of a
     * committed generation, via the public [[FactVersioned]] handle. */
@@ -134,15 +168,17 @@ object FactAnnIndex {
     segs.drop(i).mkString("/")
   }
 
-  /** (file, id, cell, u, q, q_min, q_scale, q_sum) index rows for one
-    * owning generation's file set: read ONLY (idCol, vecCol) of the
-    * given files under the head's pinned types (additive evolution
-    * keeps shared column types stable; files predating an added vecCol
-    * null-fill and drop out), derive the manifest-relative path from
-    * `_metadata.file_path` by NAME (last three components — the
-    * `vgen=g/dir/file` layout — so scheme/authority renderings can
-    * never break the match), assign cells against the given centroids
-    * and quantize with the SAME kernels the query path uses. */
+  /** (vgen, part, file, id, cell, u, q, q_min, q_scale, q_sum, pq)
+    * index rows for a file set of any mix of owning generations: read
+    * ONLY (idCol, vecCol) of the given files under the head's pinned
+    * types (additive evolution keeps shared column types stable; files
+    * predating an added vecCol null-fill and drop out), derive the
+    * manifest-relative path and its owning `vgen` from
+    * `_metadata.file_path` by NAME (anchored on the `vgen=` segment,
+    * so scheme/authority renderings can never break the match), assign
+    * cells against the given centroids and quantize with the SAME
+    * kernels the query path uses. The future yields one (vgen, id)
+    * pair that repeats within its generation's content, if any. */
   private def indexRowsFor(
       spark: SparkSession,
       dataRoot: String,
@@ -152,10 +188,13 @@ object FactAnnIndex {
       vecCol: String,
       centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]],
-      literalCellThreshold: Int): (DataFrame, scala.concurrent.Future[Long]) = {
+      literalCellThreshold: Int)
+      : (DataFrame, scala.concurrent.Future[Option[(Long, Long)]]) = {
     import spark.implicits._
+    val VGen = FactVersioned.VGenCol
     val bcBooks = spark.sparkContext.broadcast(codebooks)
     val narrow = StructType(Seq(pinned(idCol), pinned(vecCol)))
+    val vgenOfUri = udf((uri: String) => vgenOf(relOfUri(uri)))
     val base = spark.read.schema(narrow)
       .parquet(rels.map(r => s"$dataRoot/$r"): _*)
       .select(
@@ -163,42 +202,97 @@ object FactAnnIndex {
         col(idCol).cast("long").as("id"),
         Similarity.normalized(col(vecCol)).as("u"))
       .where(col("u").isNotNull)
+      .withColumn(VGen, vgenOfUri(col("file_uri")))
     // ids are unique within one commit's content (see class doc) —
     // consumers key candidate re-attach and self-exclusion on id, so
-    // verify loudly. The probe job runs CONCURRENT with the rows write
-    // (guide §2.6): [[writeGenRows]] awaits it before publishing the
-    // file-list coverage, so a duplicate-id build still never becomes
-    // queryable (rows without file-list entries are discardable
-    // orphans by the crash contract).
-    val dupF = scala.concurrent.Future {
-      base.groupBy("id").count()
-        .where(col("count") > 1).limit(1).count()
-    }(Overlap.ec)
-    val rows = Similarity.withCell(base, centroids, literalCellThreshold)
-      .select(col("file_uri"), col("id"), col("cell"), col("u"))
-      .as[(String, Long, Int, Seq[Double])]
+    // verify loudly, per owning generation (the same id legitimately
+    // recurs across generations). The probe job runs CONCURRENT with
+    // the rows write (guide §2.6): [[stageIndex]] awaits it before
+    // staging any file list, so a duplicate-id build never becomes
+    // queryable.
+    val dupF = overlapped(spark) {
+      base.groupBy(VGen, "id").count()
+        .where(col("count") > 1)
+        .select(col(VGen), col("id"))
+        .orderBy(VGen, "id").limit(1)
+        .as[(Long, Long)].collect().headOption
+    }
+    val rows = Similarity.withCell(base, centroids, literalCellThreshold,
+        rowKey = Seq(VGen, "id"))
+      .select(col("file_uri"), col(VGen), col("id"), col("cell"), col("u"))
+      .as[(String, Long, Long, Int, Seq[Double])]
       .mapPartitions { it =>
         val books = bcBooks.value
         val bounds =
           Similarity.pqBounds(books.map(_.head.length).sum, books.length)
-        it.map { case (uri, id, cell, u) =>
+        it.map { case (uri, g, id, cell, u) =>
           val ua = u.toArray
           val (q, mn, sc, s) = Similarity.quantizeSq8(ua)
           val rel = relOfUri(uri)
-          (dirOf(rel), rel, id, cell, u, q, mn, sc, s,
+          (g, dirOf(rel), rel, id, cell, u, q, mn, sc, s,
             Similarity.pqEncode(ua, books, bounds))
         }
       }
-      .toDF("part", "file", "id", "cell", "u", "q", "q_min", "q_scale",
-        "q_sum", "pq")
+      .toDF(VGen, "part", "file", "id", "cell", "u", "q", "q_min",
+        "q_scale", "q_sum", "pq")
     (rows, dupF)
+  }
+
+  /** Index `rels` — the files of any mix of owning generations — in
+    * ONE pass into `stage`, in the live layout: rows under
+    * `stage/rows/vgen=<g>/part=<dir>/` (a `vgen=<g>` dir for every
+    * generation, empty when none of its vectors is usable) and each
+    * generation's file list under `stage/files/vgen=<g>/`. One scan,
+    * one duplicate-id probe keyed by (vgen, id) and one rows write,
+    * however many generations `rels` spans. Fails before staging any
+    * file list when a generation's content repeats an id. Returns each
+    * staged generation with its files. */
+  private def stageIndex(
+      spark: SparkSession,
+      stage: Path,
+      rels: Seq[String],
+      dataRoot: String,
+      pinned: StructType,
+      idCol: String,
+      vecCol: String,
+      centroids: Array[Array[Double]],
+      codebooks: Array[Array[Array[Double]]],
+      literalCellThreshold: Int): Seq[(Long, Seq[String])] = {
+    val (rows, dupF) = indexRowsFor(spark, dataRoot, rels, pinned, idCol,
+      vecCol, centroids, codebooks, literalCellThreshold)
+    // no job may outlive this call even when the write fails (a retry
+    // could rebuild the dir under the straggler) — resolve the probe
+    // before any rethrow
+    try rows.write.partitionBy(FactVersioned.VGenCol, "part")
+      .parquet(new Path(stage, "rows").toString)
+    finally scala.concurrent.Await.ready(dupF, Overlap.AwaitTimeout)
+    scala.concurrent.Await.result(dupF, Overlap.AwaitTimeout)
+      .foreach { case (g, id) =>
+        throw new IllegalArgumentException(
+          s"FactAnnIndex: $idCol must be unique within a generation's " +
+            s"content (generation $g repeats $idCol=$id)")
+      }
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    import spark.implicits._
+    rels.groupBy(vgenOf).toSeq.sortBy(_._1).map { case (g, rs) =>
+      val sorted = rs.sorted
+      fs.mkdirs(new Path(stage, s"rows/${FactVersioned.VGenCol}=$g"))
+      val files = new Path(stage, s"files/${FactVersioned.VGenCol}=$g")
+      // metadata-scale: one driver-written file, no Spark job; an
+      // oversized list takes the distributed write
+      if (!DriverParquet.writeStringColumn(fs, conf, files, "file", sorted))
+        sorted.toDF("file").coalesce(1).write.parquet(files.toString)
+      (g, sorted)
+    }
   }
 
   /** Build and publish the index: centroids trained on the HEAD
     * generation (deterministic lowest-hash sample, driver Lloyd's —
     * the [[Similarity.ivfTopK]] recipe), then index rows for EVERY
-    * file any committed generation references, grouped by owning
-    * `vgen`. Staged under a tmp dir and swapped in whole.
+    * file any committed generation references, in the one pass
+    * [[refreshIndex]] uses. Staged under a tmp dir and swapped in
+    * whole.
     *
     * @param nLists 0 ⇒ auto-size to max(16, ⌈√n⌉) of the head count. */
   def writeIndex(
@@ -211,7 +305,7 @@ object FactAnnIndex {
       trainCap: Int = 25000,
       literalCellThreshold: Int = 4096,
       pqM: Int = 8,
-      pqKsub: Int = 256): Unit = {
+      pqKsub: Int = 256): Unit = withCallSite(spark, callerSite()) {
     require(pqKsub >= 1 && pqKsub <= 256,
       s"FactAnnIndex.writeIndex: pqKsub must fit one byte (1..256), got $pqKsub")
     val gens = FactVersioned.generations(spark, tablePath)
@@ -258,86 +352,47 @@ object FactAnnIndex {
 
       val tmp = new Path(tablePath, TmpDirPrefix + vecCol)
       if (fs.exists(tmp)) fs.delete(tmp, true)
-      val byGen: Map[Long, Seq[String]] = gens
-        .flatMap(g => relFiles(spark, tablePath, g)).distinct
-        .groupBy(vgenOf)
-      // per-generation row/file stages are independent of each other
-      // and of the three tiny metadata writes — overlap them (guide
-      // §2.6) instead of paying one stage barrier each, sequentially.
-      // The rows-before-files order WITHIN a generation is preserved
-      // inside writeGenRows; publish still renames only after every
-      // write completed.
-      import scala.concurrent.Future
-      import Overlap.ec
+      val rels = gens.flatMap(g => relFiles(spark, tablePath, g))
+        .distinct.sorted
+      // the three tiny metadata writes are independent of the rows
+      // pass — overlap them with it (guide §2.6) instead of paying one
+      // stage barrier each, sequentially; publish still renames only
+      // after every write completed
       import spark.implicits._
-      val writes =
-        byGen.toSeq.sortBy(_._1).map { case (g, rels) => Future {
-          writeGenRows(spark, tmp, g, rels, dataRoot, pinned, idCol,
-            vecCol, centroids, codebooks, literalCellThreshold)
-        } } ++ Seq(
-          Future {
-            centroids.zipWithIndex.toIndexedSeq
-              .map { case (c, i) => (i, c.toSeq) }
-              .toDF("cell", "centroid")
-              .coalesce(1).write
-              .parquet(new Path(tmp, "centroids").toString)
-          },
-          Future {
-            codebooks.zipWithIndex.toIndexedSeq
-              .flatMap { case (cb, sub) =>
-                cb.zipWithIndex.map { case (c, i) => (sub, i, c.toSeq) } }
-              .toDF("subspace", "code", "centroid")
-              .coalesce(1).write
-              .parquet(new Path(tmp, "codebooks").toString)
-          },
-          Future {
-            Seq((sample.head.length, lists, seed, trainCap, pqM, pqKsub))
-              .toDF("dim", "n_lists", "seed", "train_cap", "pq_m", "pq_ksub")
-              .coalesce(1).write.parquet(new Path(tmp, "meta").toString)
-          })
+      val metaWrites = Seq(
+        overlapped(spark) {
+          centroids.zipWithIndex.toIndexedSeq
+            .map { case (c, i) => (i, c.toSeq) }
+            .toDF("cell", "centroid")
+            .coalesce(1).write
+            .parquet(new Path(tmp, "centroids").toString)
+        },
+        overlapped(spark) {
+          codebooks.zipWithIndex.toIndexedSeq
+            .flatMap { case (cb, sub) =>
+              cb.zipWithIndex.map { case (c, i) => (sub, i, c.toSeq) } }
+            .toDF("subspace", "code", "centroid")
+            .coalesce(1).write
+            .parquet(new Path(tmp, "codebooks").toString)
+        },
+        overlapped(spark) {
+          Seq((sample.head.length, lists, seed, trainCap, pqM, pqKsub))
+            .toDF("dim", "n_lists", "seed", "train_cap", "pq_m", "pq_ksub")
+            .coalesce(1).write.parquet(new Path(tmp, "meta").toString)
+        })
       // resolve ALL before any rethrow — no straggler may outlive this
       // call and race a retry's tmp rebuild
-      Overlap.awaitAll(writes)
+      try stageIndex(spark, tmp, rels, dataRoot, pinned, idCol, vecCol,
+        centroids, codebooks, literalCellThreshold)
+      finally metaWrites.foreach(
+        scala.concurrent.Await.ready(_, Overlap.AwaitTimeout))
+      Overlap.awaitAll(metaWrites)
 
       val live = new Path(indexDir(tablePath, vecCol))
       if (fs.exists(live)) fs.delete(live, true)
       require(fs.rename(tmp, live),
         s"FactAnnIndex.writeIndex: publish rename failed for $live")
     } finally headVecs.unpersist(blocking = false)
-  }
-
-  /** Stage rows + file list for one owning generation under `root`
-    * (rows first, file list second — see crash contract in class doc). */
-  private def writeGenRows(
-      spark: SparkSession,
-      root: Path,
-      g: Long,
-      rels: Seq[String],
-      dataRoot: String,
-      pinned: StructType,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]],
-      literalCellThreshold: Int): Unit = {
-    import spark.implicits._
-    val (rows, dupF) = indexRowsFor(spark, dataRoot, rels, pinned, idCol,
-      vecCol, centroids, codebooks, literalCellThreshold)
-    // no job may outlive this call even when the write fails (a retry
-    // could rebuild the dir under the straggler) — resolve the probe
-    // before any rethrow
-    try rows.write.partitionBy("part").parquet(
-      new Path(root, s"rows/${FactVersioned.VGenCol}=$g").toString)
-    finally scala.concurrent.Await.ready(dupF, Overlap.AwaitTimeout)
-    // the uniqueness require must fail BEFORE the file list publishes
-    // coverage: rows staged above without file-list entries are
-    // discardable orphans (crash contract), never queryable
-    val dup = scala.concurrent.Await.result(dupF, Overlap.AwaitTimeout)
-    require(dup == 0,
-      s"FactAnnIndex: $idCol must be unique within a generation's " +
-        s"content (duplicate found indexing ${rels.headOption.getOrElse("")}...)")
-    rels.toDF("file").coalesce(1).write.parquet(
-      new Path(root, s"files/${FactVersioned.VGenCol}=$g").toString)
   }
 
   /** The indexed file set — reading the metadata-scale `files/`
@@ -357,19 +412,27 @@ object FactAnnIndex {
         .select("file").collect().map(_.getString(0)).toSet)
   }
 
+  /** IVF centroids of the live index, read on the driver (zero Spark
+    * jobs — refresh and every query need them); an oversized or odd
+    * sidecar falls back to the Spark read. */
   private def readCentroids(
       spark: SparkSession,
       tablePath: String,
       vecCol: String): Array[Array[Double]] = {
     require(hasIndex(spark, tablePath, vecCol),
       s"FactAnnIndex: no index for $vecCol at $tablePath — writeIndex first")
-    spark.read.parquet(s"${indexDir(tablePath, vecCol)}/centroids")
-      .orderBy("cell").select("centroid").collect()
-      .map(_.getSeq[Double](0).toArray)
+    val dir = new Path(indexDir(tablePath, vecCol), "centroids")
+    DriverParquet.readIntKeyedDoubles(fsOf(spark, tablePath),
+        spark.sparkContext.hadoopConfiguration, dir, Seq("cell"), "centroid")
+      .map(_.sortBy(_._1.head).map(_._2).toArray)
+      .getOrElse(spark.read.parquet(dir.toString)
+        .orderBy("cell").select("centroid").collect()
+        .map(_.getSeq[Double](0).toArray))
   }
 
-  /** PQ codebooks of the live index (m × ksub sub-centroids). An
-    * index written before the PQ tier landed has no `codebooks/`
+  /** PQ codebooks of the live index (m × ksub sub-centroids), read on
+    * the driver like [[readCentroids]]. An index written before the PQ
+    * tier landed has no `codebooks/`
     * sidecar (and its `rows/` carry no `pq` column) — detected here so
     * every consumer (refresh, including [[graft.streaming.FactStreamSink]]'s
     * per-batch maintenance loop, and the pq query paths) fails with
@@ -385,26 +448,42 @@ object FactAnnIndex {
       s"FactAnnIndex: the index for $vecCol at $tablePath predates the " +
         "PQ tier (no codebooks/ sidecar) — re-run writeIndex to rebuild " +
         "it with PQ codes")
-    spark.read.parquet(s"${indexDir(tablePath, vecCol)}/codebooks")
-      .orderBy("subspace", "code")
-      .select("subspace", "centroid").collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.map(_.getSeq[Double](1).toArray))
-      .toArray
+    val bySubspace: Seq[(Int, Seq[Array[Double]])] =
+      DriverParquet.readIntKeyedDoubles(fsOf(spark, tablePath),
+          spark.sparkContext.hadoopConfiguration, cb,
+          Seq("subspace", "code"), "centroid")
+        .map(_.groupBy(_._1.head).toSeq.map { case (sub, rows) =>
+          (sub, rows.sortBy(_._1(1)).map(_._2)) })
+        .getOrElse(spark.read.parquet(cb.toString)
+          .orderBy("subspace", "code")
+          .select("subspace", "centroid").collect().toSeq
+          .groupBy(_.getInt(0)).toSeq
+          .map { case (sub, rows) =>
+            (sub, rows.map(_.getSeq[Double](1).toArray)) })
+    bySubspace.sortBy(_._1).map(_._2.toArray).toArray
   }
 
-  /** Index every referenced-but-unindexed file — after a commit, that
-    * is exactly the new generation's `vgen=<g>/` subtree, so cost is
-    * ∝ the commit's touched partitions. New files are assigned against
-    * the EXISTING centroids. An orphaned `rows/vgen=` subtree (a crash
-    * between the rows landing and the file list landing) is detected
-    * by its missing file-list entries, discarded, and rebuilt. */
+  /** Index every referenced-but-unindexed file — the `vgen=<g>/`
+    * subtrees of every generation committed since the last refresh —
+    * with ONE scan, one duplicate-id probe and one rows write however
+    * many generations that is, so cost is ∝ those commits' touched
+    * partitions and the job count is constant. New files are assigned
+    * against the EXISTING centroids. The pass stages into a private
+    * dir; the publish then runs under the index's [[CommitLock]]: it
+    * moves each generation's rows into `rows/` with one rename, and
+    * only then its file list into `files/`, so a duplicate id in any
+    * generation publishes nothing, and a crash leaves at most rows
+    * without a file list. Such an orphaned `rows/vgen=` subtree is
+    * detected by its missing file list, discarded, and rebuilt. A
+    * generation that a concurrent refresh published meanwhile is
+    * left as that refresh wrote it. */
   def refreshIndex(
       spark: SparkSession,
       tablePath: String,
       idCol: String,
       vecCol: String,
-      literalCellThreshold: Int = 4096): Unit = {
+      literalCellThreshold: Int = 4096): Unit =
+    withCallSite(spark, callerSite()) {
     require(hasIndex(spark, tablePath, vecCol),
       s"FactAnnIndex: no index for $vecCol at $tablePath — writeIndex first")
     val gens = FactVersioned.generations(spark, tablePath)
@@ -415,26 +494,46 @@ object FactAnnIndex {
       FactVersioned.generationHandle(spark, tablePath, Some(head))
     val referenced = gens.flatMap(g => relFiles(spark, tablePath, g)).distinct
     val fresh = referenced.toSet -- indexedFiles(spark, tablePath, vecCol)
-    if (fresh.isEmpty) return
     // centroid/codebook reads only when there is something to index —
     // this runs after EVERY streaming micro-batch (the self-healing
     // maintenance loop), where the common case is already-caught-up
-    // and previously still paid both collect jobs
-    val centroids = readCentroids(spark, tablePath, vecCol)
-    val codebooks = readCodebooks(spark, tablePath, vecCol)
-    val fs = fsOf(spark, tablePath)
-    val live = new Path(indexDir(tablePath, vecCol))
-    fresh.groupBy(vgenOf).toSeq.sortBy(_._1).foreach { case (g, rels) =>
-      val genRows =
-        new Path(rowsRoot(tablePath, vecCol), s"${FactVersioned.VGenCol}=$g")
-      // rows present without file-list entries ⇒ orphan of a crashed
-      // refresh — coverage never trusted it, safe to rebuild
-      if (fs.exists(genRows)) fs.delete(genRows, true)
-      val genFiles =
-        new Path(filesRoot(tablePath, vecCol), s"${FactVersioned.VGenCol}=$g")
-      if (fs.exists(genFiles)) fs.delete(genFiles, true)
-      writeGenRows(spark, live, g, rels.toSeq.sorted, dataRoot, pinned,
-        idCol, vecCol, centroids, codebooks, literalCellThreshold)
+    if (fresh.nonEmpty) {
+      val centroids = readCentroids(spark, tablePath, vecCol)
+      val codebooks = readCodebooks(spark, tablePath, vecCol)
+      val fs = fsOf(spark, tablePath)
+      val live = new Path(indexDir(tablePath, vecCol))
+      val (rowsLive, filesLive) =
+        (rowsRoot(tablePath, vecCol), filesRoot(tablePath, vecCol))
+      val stage = new Path(live, s"$StagingDir/${java.util.UUID.randomUUID()}")
+      val vg = FactVersioned.VGenCol
+      try {
+        val staged = stageIndex(spark, stage, fresh.toSeq.sorted, dataRoot,
+          pinned, idCol, vecCol, centroids, codebooks, literalCellThreshold)
+        // deleting an orphan is safe only while no other refresh sits
+        // between its renames and its file lists — that window reads
+        // exactly like an orphan — hence the lock
+        CommitLock.withLocks(spark, Seq(live.toString)) {
+          val covered = indexedFiles(spark, tablePath, vecCol)
+          val todo = staged.filterNot(_._2.forall(covered)).map(_._1)
+          fs.mkdirs(rowsLive)
+          fs.mkdirs(filesLive)
+          todo.foreach { g =>
+            val rows = new Path(rowsLive, s"$vg=$g")
+            // rows (or a stale list) without full coverage: never
+            // trusted by coverage, safe to rebuild
+            fs.delete(rows, true)
+            fs.delete(new Path(filesLive, s"$vg=$g"), true)
+            require(fs.rename(new Path(stage, s"rows/$vg=$g"), rows),
+              s"FactAnnIndex.refreshIndex: could not publish $rows")
+          }
+          // coverage last, once every generation's rows are in place
+          todo.foreach { g =>
+            val files = new Path(filesLive, s"$vg=$g")
+            require(fs.rename(new Path(stage, s"files/$vg=$g"), files),
+              s"FactAnnIndex.refreshIndex: could not publish $files")
+          }
+        }
+      } finally fs.delete(stage, true)
     }
   }
 
@@ -547,7 +646,7 @@ object FactAnnIndex {
       literalCellThreshold: Int,
       queries: Option[DataFrame],
       allowed: Option[DataFrame] = None,
-      pq: Boolean = false): DataFrame = {
+      pq: Boolean = false): DataFrame = withCallSite(spark, callerSite()) {
     val gens = FactVersioned.generations(spark, tablePath)
     require(gens.nonEmpty, s"no committed generations at $tablePath")
     val g = gen.getOrElse(gens.max)
@@ -575,20 +674,22 @@ object FactAnnIndex {
       .map { case (g, d) => rowsChild(rr, g, d) }
       .filter(fs.exists).map(_.toString)
     if (children.isEmpty)
-      return spark.createDataFrame(
+      spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
           "query_id BIGINT, neighbor_id BIGINT, rank INT, sim DOUBLE"))
-    val restricted = spark.read
-      .option("basePath", rr.toString)
-      .parquet(children: _*)
-    if (pq)
-      AnnIndex.ivfPqCore(restricted, centroids,
-        readCodebooks(spark, tablePath, vecCol), k, nProbe, overFetch,
-        roundSim, literalCellThreshold, queries, allowed)
-    else
-      AnnIndex.ivfSq8Core(restricted, centroids, k, nProbe, overFetch,
-        roundSim, literalCellThreshold, queries, allowed)
+    else {
+      val restricted = spark.read
+        .option("basePath", rr.toString)
+        .parquet(children: _*)
+      if (pq)
+        AnnIndex.ivfPqCore(restricted, centroids,
+          readCodebooks(spark, tablePath, vecCol), k, nProbe, overFetch,
+          roundSim, literalCellThreshold, queries, allowed)
+      else
+        AnnIndex.ivfSq8Core(restricted, centroids, k, nProbe, overFetch,
+          roundSim, literalCellThreshold, queries, allowed)
+    }
   }
 
   /** Drop index subtrees whose owning generation's files are ALL
@@ -597,11 +698,20 @@ object FactAnnIndex {
     * subtree survives while ANY retained manifest still references one
     * of its files (partially-dead subtrees keep their dead rows, which
     * the manifest restriction filters out of every query — space traded
-    * for never rewriting shared index files). */
+    * for never rewriting shared index files). Also drops the staging
+    * dirs crashed refreshes left behind, once older than the claim
+    * lease. */
   def gcIndex(
       spark: SparkSession, tablePath: String, vecCol: String): Unit = {
     if (!hasIndex(spark, tablePath, vecCol)) return
     val fs = fsOf(spark, tablePath)
+    // a crashed refresh's staging dir: past the claim lease no live
+    // refresh can still own it
+    val staging = new Path(indexDir(tablePath, vecCol), StagingDir)
+    if (fs.exists(staging)) fs.listStatus(staging)
+      .filter(st => System.currentTimeMillis() - st.getModificationTime >
+        Versioned.StaleClaimMs)
+      .foreach(st => fs.delete(st.getPath, true))
     val gens = FactVersioned.generations(spark, tablePath)
     val referencedVgens: Set[Long] = gens
       .flatMap(g => relFiles(spark, tablePath, g)).distinct

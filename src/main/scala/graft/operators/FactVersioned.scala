@@ -1499,10 +1499,8 @@ object FactVersioned {
       fresh: Seq[(String, String, Long)],
       outDir: Path): Option[IndexedSeq[(String, String)]] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.parquet.example.data.Group
     import org.apache.parquet.example.data.simple.SimpleGroup
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+    import org.apache.parquet.hadoop.example.GroupReadSupport
     import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1516,16 +1514,12 @@ object FactVersioned {
             return None
           fl.sortBy(_.getPath.getName)
       }
-      def footerSchema(f: org.apache.hadoop.fs.FileStatus): MessageType = {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          HadoopInputFile.fromStatus(f, conf))
-        try r.getFooter.getFileMetaData.getSchema finally r.close()
-      }
       val parentType: Option[MessageType] = parentFiles.headOption.map { f0 =>
-        val mt = footerSchema(f0)
+        val mt = DriverParquet.footerSchema(conf, f0)
         // every other part-file must agree exactly (coalesce(1) writes
         // one; be robust to more, bail on disagreement)
-        if (parentFiles.tail.exists(f => footerSchema(f) != mt)) return None
+        if (parentFiles.tail.exists(f =>
+            DriverParquet.footerSchema(conf, f) != mt)) return None
         mt
       }
       // copyable = flat optional/required primitives we have typed
@@ -1560,17 +1554,8 @@ object FactVersioned {
       val fileIdx = outType.getFieldIndex("file")
       val bytesIdx = outType.getFieldIndex("bytes")
 
-      fs.mkdirs(outDir)
-      val outPath = new Path(outDir,
-        s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet")
       val rows = IndexedSeq.newBuilder[(String, String)]
-      val writer = ExampleParquetWriter
-        .builder(HadoopOutputFile.fromPath(outPath, conf))
-        .withConf(conf)
-        .withType(outType)
-        .withCompressionCodec(
-          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-        .build()
+      val writer = DriverParquet.partFileWriter(fs, conf, outDir, outType)
       try {
         parentType.foreach { pt =>
           val pDirIdx = pt.getFieldIndex("dir")

@@ -295,13 +295,16 @@ object Similarity {
     * the same struct-argmax projection narrowly over the same `u`; the
     * broadcast path ranks the same crossJoin with the same
     * (cscore desc, cell asc) per-id window. The broadcast path assumes
-    * unique `id`s — the same contract the replaced join's consumers
-    * already require (both builders fail a duplicate-id build before
-    * publishing). */
+    * `rowKey` identifies a row — the same contract the replaced join's
+    * consumers already require (AnnIndex and FactAnnIndex refuse a
+    * duplicate-id build before publishing); an index pass over several
+    * generations, where one id recurs once per rewrite, keys by
+    * (vgen, id). */
   private[operators] def withCell(
       df: DataFrame, // carries (id, u); extra columns ride along
       centroids: Array[Array[Double]],
-      literalCellThreshold: Int): DataFrame = {
+      literalCellThreshold: Int,
+      rowKey: Seq[String] = Seq("id")): DataFrame = {
     val dim = centroids.head.length
     if (centroids.length * dim <= literalCellThreshold) {
       df.withColumn("cell",
@@ -312,7 +315,7 @@ object Similarity {
       val centroidDf = centroids.zipWithIndex.toIndexedSeq
         .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum / 2.0) }
         .toDF("cell", "centroid", "half_sq_norm")
-      val probeW = Window.partitionBy(col("id"))
+      val probeW = Window.partitionBy(rowKey.map(col): _*)
         .orderBy(col("cscore").desc, col("cell").asc)
       df.crossJoin(broadcast(centroidDf))
         .withColumn("cscore",

@@ -128,7 +128,11 @@ object FactStreamSink {
     *   skip also skipped maintenance, that generation would stay
     *   un-indexed forever. `refreshIndex` is idempotent and costs ∝
     *   un-indexed files (a metadata listing when there are none), so
-    *   the already-refreshed case is effectively free. The index must
+    *   the already-refreshed case is effectively free; when several
+    *   generations await it (a batch's commit plus DML or compaction
+    *   commits since the last batch), it catches all of them up with
+    *   one scan and one write, so its job count stays that of a
+    *   single generation. The index must
     *   have been built (`FactAnnIndex.writeIndex`) before the stream
     *   starts — the live maintenance loop never trains, matching the
     *   bloom/stats refresh posture. */

@@ -417,4 +417,223 @@ class FactAnnIndexSpec extends SparkSpec {
     assert(resultSet(out) == before,
       "a case-mismatched rename must still carry the sidecar")
   }
+
+  private def fsOf(path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** `rows/vgen=<g>/part=<dir>` children of the index, as names. */
+  private def rowsChildren(path: String): Set[String] = {
+    val fs = fsOf(path)
+    val rr = new Path(s"${FactAnnIndex.indexDir(path, "vec")}/rows")
+    fs.listStatus(rr).filter(_.isDirectory).flatMap { v =>
+      fs.listStatus(v.getPath).filter(_.isDirectory)
+        .map(c => s"${v.getPath.getName}/${c.getPath.getName}")
+    }.toSet
+  }
+
+  /** Per owning vgen, the file list the index published. */
+  private def fileLists(path: String): Map[String, Set[String]] = {
+    val fs = fsOf(path)
+    val fr = new Path(s"${FactAnnIndex.indexDir(path, "vec")}/files")
+    fs.listStatus(fr).filter(_.isDirectory).map { v =>
+      v.getPath.getName -> spark.read.parquet(v.getPath.toString)
+        .as[String].collect().toSet
+    }.toMap
+  }
+
+  /** Per owning vgen, the files some retained generation references. */
+  private def referencedByVgen(path: String): Map[String, Set[String]] =
+    FactVersioned.generations(spark, path).flatMap { g =>
+      val (abs, _, root) =
+        FactVersioned.generationHandle(spark, path, Some(g))
+      abs.map(_.stripPrefix(root + "/"))
+    }.toSet.groupBy((r: String) => r.takeWhile(_ != '/'))
+
+  /** Index rows per vgen without the (table-specific) file name. */
+  private def rowsByVgen(path: String): Set[(Int, String, Long, Int, Seq[Byte])] =
+    spark.read.parquet(s"${FactAnnIndex.indexDir(path, "vec")}/rows")
+      .select(col("vgen").cast("int"), col("part"), col("id"), col("cell"),
+        col("q"))
+      .as[(Int, String, Long, Int, Array[Byte])].collect()
+      .map { case (g, p, id, c, q) => (g, p, id, c, q.toSeq) }.toSet
+
+  /** Spark jobs `body` starts, counted by a listener; a marker job
+    * afterwards flushes the listener bus (events arrive in order). */
+  private def jobsOf(body: => Unit): Int = {
+    val starts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == "jobsOf-marker"))
+          marker.countDown()
+        else if (marker.getCount > 0) starts.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      spark.sparkContext.setJobDescription("jobsOf-marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      starts.get
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Commits after the index build, each adding fresh files except the
+    * whole-partition delete: five fresh generations in all. */
+  private def lifecycle(path: String): Seq[() => Unit] = Seq(
+    () => FactVersioned.upsert(spark, path,
+      corpus(150, shift = 5).where(col("p") === 0), Seq("id"), "p",
+      retain = 10),
+    () => FactVersioned.compactPartitions(spark, path,
+      Seq(Upsert.partitionDirName("p", 1)), "p", retain = 10),
+    () => FactVersioned.replacePartitions(spark, path,
+      corpus(150).where(lit(false)), "p", Seq(2), retain = 10),
+    () => FactVersioned.upsert(spark, path,
+      corpus(150, shift = 9).where(col("id") === 3L), Seq("id"), "p",
+      retain = 10),
+    () => FactVersioned.upsert(spark, path,
+      corpus(150, shift = 2).where(col("p") === 2), Seq("id"), "p",
+      retain = 10),
+    () => FactVersioned.upsert(spark, path,
+      corpus(150, shift = 7).where(col("p") === 1), Seq("id"), "p",
+      retain = 10))
+
+  test("ONE refresh over several generations equals refreshing after " +
+      "each commit; its job count does not grow with the generations " +
+      "it catches up") {
+    val each = tmp() + "/t"
+    val once = tmp() + "/t"
+    Seq(each, once).foreach { path =>
+      FactVersioned.replacePartitions(spark, path, corpus(150), "p",
+        Seq(0, 1, 2), retain = 10)
+      FactAnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
+    }
+    lifecycle(each).foreach { commit =>
+      commit()
+      FactAnnIndex.refreshIndex(spark, each, "id", "vec")
+    }
+    lifecycle(once).foreach(_())
+    // the per-row window path of cell assignment (literalCellThreshold
+    // 0) must also key rows by (vgen, id): ids recur across generations
+    val catchUpJobs = jobsOf(FactAnnIndex.refreshIndex(spark, once, "id",
+      "vec", literalCellThreshold = 0))
+
+    val gens = FactVersioned.generations(spark, once)
+    assert(gens == FactVersioned.generations(spark, each) && gens.size == 7)
+    gens.foreach { g =>
+      assert(resultSet(fannTopK(once, Some(g))) == truth(once, g),
+        s"generation $g diverged from per-call truth")
+    }
+    assert(rowsChildren(once) == rowsChildren(each))
+    assert(rowsByVgen(once) == rowsByVgen(each))
+    // file names differ between the two tables; each list must be
+    // exactly its vgen's referenced files, and the vgens must agree
+    assert(fileLists(once) == referencedByVgen(once))
+    assert(fileLists(each) == referencedByVgen(each))
+    assert(fileLists(once).keySet == fileLists(each).keySet &&
+      fileLists(once).keySet.size == 6)
+
+    val one = tmp() + "/t"
+    FactVersioned.replacePartitions(spark, one, corpus(150), "p",
+      Seq(0, 1, 2), retain = 10)
+    FactAnnIndex.writeIndex(spark, one, "id", "vec", nLists = 4)
+    lifecycle(one).head()
+    val oneGenJobs = jobsOf(FactAnnIndex.refreshIndex(spark, one, "id",
+      "vec", literalCellThreshold = 0))
+    assert(oneGenJobs > 0 && catchUpJobs == oneGenJobs,
+      s"1-generation refresh ran $oneGenJobs jobs, 5-generation $catchUpJobs")
+  }
+
+  test("a duplicate id in one of several fresh generations fails the " +
+      "refresh naming that generation and id; none of them publishes a " +
+      "file list; older generations still answer") {
+    val path = tmp() + "/t"
+    FactVersioned.replacePartitions(spark, path, corpus(120), "p",
+      Seq(0, 1, 2), retain = 10)
+    FactAnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
+    val gen0 = resultSet(fannTopK(path, Some(0)))
+    FactVersioned.upsert(spark, path,
+      corpus(120, shift = 5).where(col("p") === 0), Seq("id"), "p",
+      retain = 10)
+    val twice = corpus(120).where(col("id") === 7L)
+      .withColumn("id", lit(500L))
+    FactVersioned.append(spark, path, twice.union(twice), "p", retain = 10)
+    FactVersioned.upsert(spark, path,
+      corpus(120, shift = 3).where(col("p") === 2), Seq("id"), "p",
+      retain = 10)
+    val ex = intercept[IllegalArgumentException](
+      FactAnnIndex.refreshIndex(spark, path, "id", "vec"))
+    assert(ex.getMessage.contains("generation 2 repeats id=500"),
+      ex.getMessage)
+    val fs = fsOf(path)
+    val idx = FactAnnIndex.indexDir(path, "vec")
+    Seq(1, 2, 3).foreach { g =>
+      assert(!fs.exists(new Path(s"$idx/files/vgen=$g")), s"vgen=$g")
+    }
+    assert(fs.listStatus(new Path(s"$idx/_staging")).isEmpty)
+    assert(resultSet(fannTopK(path, Some(0))) == gen0)
+    val stale = intercept[IllegalArgumentException](fannTopK(path, Some(1)))
+    assert(stale.getMessage.contains("refreshIndex"))
+  }
+
+  test("a crash after a multi-generation refresh's renames (rows landed " +
+      "for two generations, both file lists lost) is rebuilt for both") {
+    val path = tmp() + "/t"
+    val full = corpus(120)
+    FactVersioned.replacePartitions(spark, path,
+      full.where(col("p") =!= 2), "p", Seq(0, 1))
+    FactAnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
+    FactVersioned.upsert(spark, path,
+      corpus(120, shift = 4).where(col("p") === 0), Seq("id"), "p")
+    FactVersioned.upsert(spark, path,
+      full.where(col("p") === 2), Seq("id"), "p")
+    FactAnnIndex.refreshIndex(spark, path, "id", "vec")
+    val fs = fsOf(path)
+    val idx = FactAnnIndex.indexDir(path, "vec")
+    Seq(1, 2).foreach(g => fs.delete(new Path(s"$idx/files/vgen=$g"), true))
+    Seq(1L, 2L).foreach { g =>
+      val ex = intercept[IllegalArgumentException](fannTopK(path, Some(g)))
+      assert(ex.getMessage.contains("refreshIndex"))
+    }
+    FactAnnIndex.refreshIndex(spark, path, "id", "vec")
+    assert(fileLists(path) == referencedByVgen(path))
+    Seq(0L, 1L, 2L).foreach { g =>
+      assert(resultSet(fannTopK(path, Some(g))) == truth(path, g), s"gen $g")
+    }
+    // a crash mid-stage leaves a staging dir: gcIndex drops it once
+    // older than the claim lease, never a live refresh's
+    val (old, live) = (new Path(s"$idx/_staging/old"),
+      new Path(s"$idx/_staging/live"))
+    Seq(old, live).foreach(fs.mkdirs)
+    fs.setTimes(old,
+      System.currentTimeMillis() - Versioned.StaleClaimMs - 60000L, -1L)
+    FactAnnIndex.gcIndex(spark, path, "vec")
+    assert(!fs.exists(old) && fs.exists(live))
+  }
+
+  test("two racing refreshes of one table both return and leave the " +
+      "index exact") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val path = tmp() + "/t"
+    FactVersioned.replacePartitions(spark, path, corpus(150), "p",
+      Seq(0, 1, 2), retain = 10)
+    FactAnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
+    lifecycle(path).grouped(2).foreach { commits =>
+      commits.foreach(_())
+      val racers = Seq.fill(2)(Future(
+        FactAnnIndex.refreshIndex(spark, path, "id", "vec")))
+      racers.foreach(Await.result(_, 5.minutes))
+      assert(fileLists(path) == referencedByVgen(path))
+      val gens = FactVersioned.generations(spark, path)
+      gens.foreach { g =>
+        assert(resultSet(fannTopK(path, Some(g))) == truth(path, g),
+          s"generation $g diverged from per-call truth")
+      }
+    }
+  }
 }
