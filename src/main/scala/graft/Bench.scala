@@ -67,8 +67,8 @@ object Bench {
     // release left async block-removal racing the next timed run on
     // the same executor threads, inflating sub-second queries up to
     // 1.9× (the q25–q27 drift, VERDICT r5 #4 — reproduced and isolated
-    // by graft.BenchProbe: releaseAll+gc 0.40 s vs 0.25 s blocking+
-    // settle for q25, zero codegen recompiles either way).
+    // by a since-removed probe main: releaseAll+gc 0.40 s vs 0.25 s
+    // blocking+settle for q25, zero codegen recompiles either way).
     def releaseAll(): Unit = {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values
@@ -90,7 +90,8 @@ object Bench {
           // (they're GC-triggered; a 24g heap GCs too rarely on its
           // own, and accumulated state bleeds into later timings),
           // then give the cleaner's async deletions a beat to drain so
-          // they don't compete with the timed run (BenchProbe proto D)
+          // they don't compete with the timed run (measured by the same
+          // since-removed probe main)
           System.gc()
           Thread.sleep(100)
           val t0 = System.nanoTime()

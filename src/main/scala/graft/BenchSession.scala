@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one SparkSession config used by every measurement surface (Bench,
-  * QueryTime) — a single builder so tuning runs measure exactly the
-  * engine the benchmark reports. */
+/** The one SparkSession config used by every measurement surface — a
+  * single builder so tuning runs measure exactly the engine the
+  * benchmark reports. */
 object BenchSession {
   def build(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

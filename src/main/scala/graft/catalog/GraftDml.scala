@@ -10,17 +10,18 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, NumericType, TimestampNTZType, TimestampType}
 
-import graft.operators.{FactVersioned, Versioned}
+import graft.operators.FactVersioned
 
 /** SQL DML — `MERGE INTO` / `DELETE FROM` — over [[GraftCatalog]]
   * tables, routed THROUGH the stores' own committers. The reference's
   * load lifecycle is MERGE semantics end to end
   * (`src/db/load.py:77-92,203-228`: staging upsert, promote, semi-join
   * delete), and its analytic users speak SQL (`README.md:12`) — this
-  * completes that surface on the versioned stores: the committers
-  * ([[FactVersioned.upsert]]/[[FactVersioned.replacePartitions]],
-  * [[Versioned.commit]]) already implement the semantics with commit
-  * cost ∝ touched partitions; only statement ROUTING was missing.
+  * completes that surface on the versioned store: its committers
+  * ([[FactVersioned.upsert]]/[[FactVersioned.replacePartitionsBy]])
+  * already implement the semantics with commit cost ∝ touched
+  * partitions (an unpartitioned table's one partition is its root);
+  * only statement ROUTING was missing.
   *
   * Spark's native MERGE/DELETE planning requires
   * `SupportsRowLevelOperations` — a distributed per-task write
@@ -70,15 +71,15 @@ import graft.operators.{FactVersioned, Versioned}
   *    stays tombstone-rejected) before this rule plans the merge.
   *  - `WHEN NOT MATCHED BY SOURCE THEN DELETE` / `THEN UPDATE SET ...`
   *    — the full-sync shapes, accepted with a PARTITION-SCOPING
-  *    condition on fact tables (`AND t.p = <literal> [AND ...]`):
+  *    condition on partitioned tables (`AND t.p = <literal> [AND ...]`):
   *    scoped target rows whose key the source never names are deleted
   *    (or rewritten in place through target-side assignments — the
   *    flag-stale-rows shape; key/partition-column assignments
   *    rejected), and the rewrite stays ∝ the scoped partitions that
-  *    actually hold sync rows. The unscoped fact-table shape stays
-  *    rejected (whole-table rewrite; operator API covers it);
-  *    dimension tables (full-copy commits anyway) accept any
-  *    target-only condition or none.
+  *    actually hold sync rows. The unscoped partitioned-table shape
+  *    stays rejected (whole-table rewrite; operator API covers it);
+  *    unpartitioned tables (one partition — every data commit
+  *    rewrites it) accept any target-only condition or none.
   *  - `DELETE FROM g.t WHERE <any predicate, subqueries included>` —
   *    deleted rows' partitions are rewritten without them; a partition
   *    deleted empty is dropped (the J2 semi-join delete at partition
@@ -211,14 +212,10 @@ object GraftDml {
   private[catalog] def enforceChecks(
       spark: SparkSession,
       path: String,
-      basisGen: Option[Long], // Some(gen) = fact; None = dim
+      basisGen: Long,
       rows: Option[DataFrame],
       op: String): Unit = {
-    val props = basisGen match {
-      case Some(g) =>
-        graft.operators.FactVersioned.tableProperties(spark, path, Some(g))
-      case None => GraftCatalog.readDimProps(spark, path)
-    }
+    val props = FactVersioned.tableProperties(spark, path, Some(basisGen))
     val checks = GraftCatalog.decodeConstraints(props).toSeq.collect {
       case c: org.apache.spark.sql.connector.catalog.constraints.Check
           if c.enforced() => c
@@ -260,13 +257,14 @@ object GraftDml {
       case _ => None
     }
 
-  /** The commit basis a DML command over `table` must declare:
-    * Some(resolution-pinned head) for fact tables, None for dims. */
-  private[catalog] def basisGenOf(table: GraftWritableTable): Option[Long] =
-    table match {
-      case f: WritableFactTable => Some(f.resolvedGen)
-      case _ => None
-    }
+  /** The distinct partition tuples `rows` holds (in `pcols` order, at
+    * most 10000 — `stmt` names the statement in the cap error); empty
+    * when `rows` is. An unpartitioned table's one tuple is the empty
+    * one, touched exactly when `rows` holds a row. */
+  private[catalog] def touchedRowsOf(
+      rows: DataFrame, pcols: Seq[String], stmt: String): IndexedSeq[Seq[Any]] =
+    if (pcols.isEmpty && rows.isEmpty) IndexedSeq.empty
+    else FactVersioned.touchedTuples(rows, pcols, 10000, s"GraftDml: $stmt")
 
   private[catalog] def unsupported(msg: String): Nothing =
     throw new UnsupportedOperationException(s"GraftDml: $msg")
@@ -373,8 +371,8 @@ object GraftDml {
     *    references are rejected with guidance; unassigned columns
     *    insert NULL (the Delta posture).
     *  - NOT MATCHED BY SOURCE accepts exactly one DELETE clause;
-    *    fact tables require a partition-scoping condition (rewrite ∝
-    *    scoped partitions), dimensions (full-copy commits) accept any
+    *    partitioned tables require a partition-scoping condition
+    *    (rewrite ∝ scoped partitions), unpartitioned ones accept any
     *    target-only condition or none. */
   private[catalog] def mergeProgram(
       m: MergeIntoTable,
@@ -594,15 +592,15 @@ object GraftDml {
       }
       r
     }
-    /** The scoped target-only BY SOURCE condition: fact tables demand
-      * a partition-scoping conjunction (rewrite ∝ scoped partitions),
-      * dimensions (full-copy commits) accept any target-only condition
-      * or none. */
+    /** The scoped target-only BY SOURCE condition: partitioned tables
+      * demand a partition-scoping conjunction (rewrite ∝ scoped
+      * partitions), unpartitioned ones accept any target-only
+      * condition or none. */
     def bySourceScope(cond: Option[Expression], verb: String): Expression =
       if (pcols.isEmpty) cond.map(bySourceCond).getOrElse(Literal.TrueLiteral)
       else {
         val c = cond.getOrElse(unsupported(
-          s"WHEN NOT MATCHED BY SOURCE THEN $verb on a fact table " +
+          s"WHEN NOT MATCHED BY SOURCE THEN $verb on a partitioned table " +
             "needs a partition-scoping condition (AND t.<pcol> = " +
             "<literal> [AND ...]) — the unscoped clause rewrites the " +
             "whole table; scope it, or use " +
@@ -622,8 +620,8 @@ object GraftDml {
               if target.outputSet.contains(a) &&
                 pcols.exists(_.equalsIgnoreCase(a.name)) => bySourceCond(n)
           case other => unsupported(
-            "WHEN NOT MATCHED BY SOURCE conditions on a fact table must " +
-              "be conjunctions of <target partition column> = <literal> " +
+            "WHEN NOT MATCHED BY SOURCE conditions on a partitioned table " +
+              "must be conjunctions of <target partition column> = <literal> " +
               s"or <target partition column> IS NULL (the rewrite " +
               s"scope); got: ${other.sql}")
         }.reduce(And)
@@ -685,15 +683,17 @@ object GraftDml {
     * partition — each column's test therefore adds an explicit
     * `IS NULL` arm when null is among its touched values. `touchedRows`
     * carry the tuples in `pcols` order with `tupSchema` (≤ 10000 rows
-    * by the caller's cap). */
+    * by the caller's cap). An unpartitioned table's scope is all of
+    * `t`. */
   private[catalog] def scopedTo(
       spark: SparkSession,
       t: DataFrame,
       pcols: Seq[String],
-      touchedRows: Array[Row],
+      touchedRows: Seq[Seq[Any]],
       tupSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    if (pcols.isEmpty) return t
     val perCol = pcols.zipWithIndex.map { case (p, i) =>
-      val vals = touchedRows.map(_.get(i)).distinct.toIndexedSeq
+      val vals = touchedRows.map(_(i)).distinct
       val nonNull = vals.filter(_ != null)
       val base =
         if (nonNull.nonEmpty) col(p).isin(nonNull: _*) else lit(false)
@@ -702,7 +702,7 @@ object GraftDml {
     if (pcols.length == 1) t.where(perCol)
     else {
       val tupDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(touchedRows.toIndexedSeq, 1),
+          spark.sparkContext.parallelize(touchedRows.map(Row.fromSeq), 1),
           tupSchema)
         .select(pcols.zipWithIndex.map { case (p, i) =>
           col(p).as(s"__graft_pv$i") }: _*)
@@ -745,7 +745,8 @@ final class MergeProgram(
   extends Serializable
 
 /** One WHEN NOT MATCHED BY SOURCE clause: `cond` is the target-only
-  * (fact: partition-scoping) condition selecting the sync scope;
+  * (partition-scoping on a partitioned table) condition selecting the
+  * sync scope;
   * `assigns` is None for THEN DELETE (scoped rows whose key the source
   * never names are dropped) or the full per-column projection for THEN
   * UPDATE (the flag-stale-rows shape: same scoped rows are rewritten
@@ -800,10 +801,11 @@ case class GraftInsertWiden(child: LogicalPlan)
       newChild: LogicalPlan): GraftInsertWiden = copy(child = newChild)
 }
 
-/** Resolution-time source widening: a MERGE into a graft FACT table
-  * gets a NULL [[FactVersioned.VGenCol]] appended to its source when
-  * the source lacks one — the reserved provenance column is
-  * commit-assigned (its input values are ignored), so star expansion
+/** Resolution-time source widening: a MERGE into a graft table that
+  * shows [[FactVersioned.VGenCol]] (a partitioned one) gets a NULL
+  * `vgen` appended to its source when the source lacks one — the
+  * reserved provenance column is commit-assigned (its input values
+  * are ignored), so star expansion
   * must not force users to hand-write `CAST(NULL AS BIGINT) AS vgen`
   * into every MERGE source. The [[VgenWiden]] marker (parse-time)
   * holds expansion off until this rule runs; the widening Project goes
@@ -825,8 +827,8 @@ case class GraftMergeVgenRule(session: SparkSession) extends Rule[LogicalPlan] {
     plan.transformDown {
       case m @ MergeIntoTable(t, w: VgenWiden, _, _, _, _, _)
           if t.resolved && w.child.resolved =>
-        val needs = GraftDml.graftTarget(t)
-          .exists(_._2.isInstanceOf[WritableFactTable]) &&
+        val needs = GraftDml.graftTarget(t).nonEmpty &&
+          t.output.exists(_.name.equalsIgnoreCase(FactVersioned.VGenCol)) &&
           !w.child.output.exists(
             _.name.equalsIgnoreCase(FactVersioned.VGenCol))
         m.copy(sourceTable = if (needs) widen(w.child) else w.child)
@@ -882,10 +884,9 @@ case class GraftInsertEvolveRule(session: SparkSession)
             }
             if (extra.isEmpty && nested.isEmpty) unwrapped
             else {
-              // route through the catalog's own ALTER path — facts get
-              // the metadata-only addColumns commit (tombstones
-              // enforced), dims a widened full-copy generation; both
-              // honor the catalog's retention conf
+              // route through the catalog's own ALTER path — the
+              // metadata-only addColumns commit (tombstones enforced),
+              // under the catalog's retention conf
               val cat = rel.catalog.map(_.asInstanceOf[
                   org.apache.spark.sql.connector.catalog.TableCatalog])
                 .getOrElse(GraftDml.unsupported(
@@ -925,17 +926,14 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
           case Some((_, table)) =>
             GraftDeleteCommand(t, new AnalyzedCondition(cond),
               table.graftTablePath,
-              basisGenOf(table), table.retentionForDml)
+              table.resolvedGen, table.retentionForDml)
           case None => d
         }
       case u @ UpdateTable(t, assignments, cond) if u.resolved =>
         graftTarget(t) match {
           case Some((rel, table)) =>
-            val pcols =
-              if (table.isInstanceOf[WritableFactTable])
-                FactVersioned.logicalPartitionColumns(
-                  session, table.graftTablePath)
-              else Nil
+            val pcols = FactVersioned.logicalPartitionColumns(
+              session, table.graftTablePath)
             assignments.foreach { asg =>
               val name = asg.key match {
                 case a: AttributeReference => a.name
@@ -951,9 +949,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
               // transform tables: the SOURCE column determines the
               // generated partition column — assigning it either moves
               // the row (unsupported above) or desyncs the derivation
-              if (table.isInstanceOf[WritableFactTable] &&
-                  PartitionTransforms.read(session, table.graftTablePath)
-                    .exists(_.source.equalsIgnoreCase(name)))
+              if (table.transformSpec.exists(_.source.equalsIgnoreCase(name)))
                 unsupported(s"UPDATE of '$name' — the source of this " +
                   "table's partition transform — would move rows " +
                   "between generated partitions; DELETE and re-INSERT " +
@@ -968,7 +964,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
               new AnalyzedCondition(cond.getOrElse(
                 org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral)),
               table.graftTablePath,
-              basisGenOf(table), table.retentionForDml)
+              table.resolvedGen, table.retentionForDml)
           case None => u
         }
       // dynamic INSERT OVERWRITE (r17): Spark has NO V1-write exec for
@@ -1000,15 +996,12 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
                   "'__graft_' prefix — rename it"))
             val keys = keysOf(m.mergeCondition, rel, m.sourceTable)
             require(keys.nonEmpty, "GraftDml: MERGE ON yielded no keys")
-            val pcols =
-              if (table.isInstanceOf[WritableFactTable])
-                FactVersioned.logicalPartitionColumns(
-                  session, table.graftTablePath)
-              else Nil
+            val pcols = FactVersioned.logicalPartitionColumns(
+              session, table.graftTablePath)
             val program = mergeProgram(m, rel, m.sourceTable, keys, pcols)
             GraftMergeCommand(m.sourceTable, program, keys,
               table.graftTablePath,
-              basisGenOf(table), table.retentionForDml)
+              table.resolvedGen, table.retentionForDml)
           case None => m
         }
     }
@@ -1033,7 +1026,8 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
   *     probe-carried target values; DELETE records the key), unmatched
   *     rows walk the WHEN NOT MATCHED inserts; rows matching no clause
   *     are no-ops (their target rows carry over verbatim);
-  *  3. a WHEN NOT MATCHED BY SOURCE clause (fact: partition-scoped)
+  *  3. a WHEN NOT MATCHED BY SOURCE clause (partition-scoped on a
+  *     partitioned table)
   *     deletes — or, THEN UPDATE, rewrites in place through
   *     target-side assignments — scoped target rows whose key the
   *     source never names; cost ∝ scoped partitions that actually
@@ -1042,7 +1036,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
   *     rows minus updated/deleted keys, plus the projected updates and
   *     inserts. Deleted rows' partitions come from the TARGET's
   *     partition value (authoritative — a delete needs no source
-  *     pcol); fact commits pin the resolution-time basis so foreign
+  *     pcol); the commit pins the resolution-time basis so foreign
   *     commits conflict instead of silently losing.
   *
   * Two SQL-MERGE invariants are enforced before anything commits:
@@ -1057,11 +1051,9 @@ case class GraftMergeCommand(
     program: MergeProgram,
     keys: Seq[(String, String)], // target key column -> source column
     path: String,
-    basisGen: Option[Long], // Some(resolved head) = fact; None = dim
+    basisGen: Long, // the resolution-pinned head
     retain: Int) extends LeafRunnableCommand {
   import GraftDml.{MatchFlag, antiNullSafe, carriedName, tpName}
-
-  private def isFact: Boolean = basisGen.isDefined
 
   /** Target-side / source-side key column names. The two sides may be
     * named differently (`ON t.id = s.customer_id`): the probe joins
@@ -1083,7 +1075,7 @@ case class GraftMergeCommand(
     * through the program: (update/insert frames, delete rows with
     * their target partition tuple). First-match-wins with SQL 3VL (a
     * NULL condition routes past the clause). `onUpdateHit` sees each
-    * UPDATE clause's routed rows BEFORE projection (the fact path's
+    * UPDATE clause's routed rows BEFORE projection (the
     * partition-stability check). Delete frames carry the keys under
     * their TARGET names (selected from the source-side columns — for
     * a matched row they are equal by the ON condition). */
@@ -1132,7 +1124,7 @@ case class GraftMergeCommand(
     // every exit, including the nothing-routed early return, awaits it
     // before finishing, so a duplicate-keyed source still ALWAYS fails
     // with the cardinality error and never commits (the await sits
-    // before the publish call in runFact/runDim).
+    // before the publish call in runRouted).
     // Error-ordering note: with the probe concurrent, a duplicate-keyed
     // source may surface a ROUTING error (computed over dup-inflated
     // rows) before the cardinality error — both are non-retryable
@@ -1148,10 +1140,8 @@ case class GraftMergeCommand(
     }
     def awaitUnique(): Unit = Await.result(dupF, Overlap.AwaitTimeout)
     var bodyFailed = false
-    try {
-      if (isFact) runFact(spark, src, awaitUnique)
-      else { awaitUnique(); runDim(spark, src) }
-    } catch { case t: Throwable => bodyFailed = true; throw t
+    try runProbed(spark, src, awaitUnique)
+    catch { case t: Throwable => bodyFailed = true; throw t
     } finally {
       // a routing error must not leak the probe (resolve it before the
       // body's failure propagates); when the body SUCCEEDED, a failed
@@ -1184,7 +1174,7 @@ case class GraftMergeCommand(
     src.join(mk, cond, "left").drop(kTmp: _*)
   }
 
-  private def runFact(
+  private def runProbed(
       spark: SparkSession, src: DataFrame,
       awaitUnique: () => Unit): Unit = {
     val pcols = FactVersioned.logicalPartitionColumns(spark, path)
@@ -1199,7 +1189,7 @@ case class GraftMergeCommand(
     // size-estimate cap (GraftDml.maybeBroadcast) — a small CDC batch
     // takes the fast broadcast path, a huge one joins plain and AQE
     // picks the strategy at runtime (Delta's probe posture)
-    val matchedKeys = FactVersioned.read(spark, path, basisGen)
+    val matchedKeys = FactVersioned.read(spark, path, Some(basisGen))
       .select(probeCols: _*)
       .join(GraftDml.maybeBroadcast(spark, srcProbe), kTmp, "left_semi")
       .withColumn(MatchFlag, lit(1))
@@ -1218,12 +1208,12 @@ case class GraftMergeCommand(
     // on executor loss the statement fails and retries instead of
     // recomputing lineage — the store's existing retry contract.
     val enriched = enrichedOf(spark, src, matchedKeys).localCheckpoint(true)
-    try runFactRouted(spark, enriched, srcKeysAsTarget(src), pcols,
+    try runRouted(spark, enriched, srcKeysAsTarget(src), pcols,
       tpNames, awaitUnique)
     finally GraftDml.releaseCheckpoint(enriched)
   }
 
-  private def runFactRouted(
+  private def runRouted(
       spark: SparkSession,
       enriched: DataFrame,
       srcKeysT: DataFrame,
@@ -1275,7 +1265,10 @@ case class GraftMergeCommand(
             "current partition first, then MERGE (or rewrite both " +
             "partitions with FactVersioned.replacePartitions).")
       }
-    val (updates0, inserts0, deletes) = route(enriched, tpNames, moveCheck)
+    // an unpartitioned table's rows have no partition to move between
+    val (updates0, inserts0, deletes) =
+      if (pcols.isEmpty) route(enriched, tpNames)
+      else route(enriched, tpNames, moveCheck)
     // transform-partitioned target (r17): EVERY new-or-modified row
     // gets the generated partition column RE-DERIVED from the source
     // column (clause values for it are ignored — commit-assigned), so
@@ -1316,41 +1309,37 @@ case class GraftMergeCommand(
     // partitions (partition-pruned read); only leaves actually
     // holding sync rows enter the touched set.
     val bySrcRows: Option[DataFrame] = program.bySource.map { bs =>
-      FactVersioned.read(spark, path, basisGen)
+      FactVersioned.read(spark, path, Some(basisGen))
         .where(GraftColumnBridge.column(bs.cond))
         .join(srcKeysT, tNames, "left_anti")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     try {
       val newRows = (updates ++ inserts).reduceOption(_ unionByName _)
-      val touchedRows = (newRows.map(_.select(pcols.map(col): _*)).toSeq ++
+      val touched = (newRows.map(_.select(pcols.map(col): _*)).toSeq ++
           deletes.map(_.select(tpNames.zip(pcols).map {
             case (tp, p) => col(tp).as(p) }: _*)).toSeq ++
           bySrcRows.map(_.select(pcols.map(col): _*)).toSeq)
         .reduceOption(_ unionByName _)
-        .map(_.distinct().limit(10001).collect())
-        .getOrElse(Array.empty[Row])
+        .map(GraftDml.touchedRowsOf(_, pcols, "MERGE"))
+        .getOrElse(IndexedSeq.empty)
       // surface the overlapped partition-stability probes in CLAUSE
       // order — the same error precedence as the sequential checks
       // they replace, and always before anything can commit
       movedProbes.result().foreach(f =>
         requireUnmoved(Await.result(f, Overlap.AwaitTimeout)))
-      require(touchedRows.length <= 10000,
-        "GraftDml: MERGE touches more than 10000 partitions — " +
-          "this is a rewrite, not an incremental commit")
       // the cardinality contract holds on EVERY path out of the MERGE:
       // surface a duplicate-keyed source here whether or not anything
       // was routed, and always before the commit below can land
       awaitUnique()
-      if (touchedRows.isEmpty) return // nothing routed: no commit
-      val touched: Seq[Seq[Any]] = touchedRows.toIndexedSeq
-        .map(r => pcols.indices.map(r.get))
+      if (touched.isEmpty) return // nothing routed: no commit
       // one metadata read, hoisted out of the per-partition loop
       val physPcols =
         FactVersioned.physicalPartitionColumns(spark, path, pcols)
       val touchedDirs =
         touched.map(v => FactVersioned.partitionDirPath(physPcols, v))
-      val current = FactVersioned.readDirs(spark, path, basisGen, touchedDirs)
+      val current =
+        FactVersioned.readDirs(spark, path, Some(basisGen), touchedDirs)
       // reduceOption: an insert-only MERGE (the insert-if-absent idiom)
       // has no UPDATE and no DELETE clause — nothing to anti-join away
       val changedKeys = (updates.map(_.select(tNames.map(col): _*)) ++
@@ -1379,7 +1368,7 @@ case class GraftMergeCommand(
         (newRows.toSeq ++ bySrcNew.toSeq).reduceOption(_ unionByName _),
         "MERGE")
       FactVersioned.replacePartitionsBy(spark, path, content, pcols, touched,
-        retain = retain, basisGen = basisGen,
+        retain = retain, basisGen = Some(basisGen),
         properties = Map("operation" -> "MERGE"))
       // a CTAS'd table whose first keyed write is a MERGE records its
       // default keys here (upsert-door tables record at first upsert)
@@ -1396,73 +1385,8 @@ case class GraftMergeCommand(
       bySrcRows.foreach(_.unpersist(blocking = false))
     }
   }
-
-  private def runDim(spark: SparkSession, src: DataFrame): Unit = {
-    val current = Versioned.read(spark, path)
-    val srcProbe = src.select(keys.zip(kTmp).map { case ((_, s), kn) =>
-      col(s).as(kn) }: _*).distinct()
-    val probeCols = keys.zip(kTmp).map { case ((t, _), kn) =>
-      col(t).as(kn) } ++
-      program.carried.map(c => col(c).as(carriedName(c)))
-    // size-adaptive, like the fact probe: hint only under the cap
-    val matchedKeys = current.select(probeCols: _*)
-      .join(GraftDml.maybeBroadcast(spark, srcProbe), kTmp, "left_semi")
-      .withColumn(MatchFlag, lit(1))
-    val enriched = enrichedOf(spark, src, matchedKeys)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try runDimRouted(spark, enriched, srcKeysAsTarget(src), current)
-    finally enriched.unpersist(blocking = false)
-  }
-
-  private def runDimRouted(
-      spark: SparkSession,
-      enriched: DataFrame,
-      srcKeysT: DataFrame,
-      current: DataFrame): Unit = {
-    // dims have no partitions: no target-partition columns to ride
-    val (updates, inserts, deletes) = route(enriched, Nil)
-    val changed = (updates.map(_.select(tNames.map(col): _*)) ++
-        deletes.map(_.select(tNames.map(col): _*)).toSeq)
-      .reduceOption(_ unionByName _).map(_.distinct())
-    val newRows = (updates ++ inserts)
-      .reduceOption(_ unionByName _)
-    val bySrcRows = program.bySource.map { bs =>
-      current.where(GraftColumnBridge.column(bs.cond))
-        .join(srcKeysT, tNames, "left_anti")
-    }
-    // ONE no-op probe job over the union of every effect frame (the
-    // naive per-frame isEmpty chain costs up to three jobs before
-    // deciding to skip) — bounded by dim scale either way, but free
-    val effects = (updates ++ inserts).map(_.select(lit(1).as("one"))) ++
-      deletes.map(_.select(lit(1).as("one"))).toSeq ++
-      bySrcRows.map(_.select(lit(1).as("one"))).toSeq
-    if (effects.reduceOption(_ unionByName _).forall(_.isEmpty))
-      return // nothing routed: no commit
-    var kept = changed.fold(current)(c => current.join(c, tNames, "left_anti"))
-    bySrcRows.foreach { d =>
-      kept = GraftDml.antiNullSafe(kept, d.select(tNames.map(col): _*), tNames)
-    }
-    val bySrcNew = program.bySource.flatMap(bs =>
-      bs.assigns.map(a => project(bySrcRows.get, a)))
-    GraftDml.enforceChecks(spark, path, None,
-      (newRows.toSeq ++ bySrcNew.toSeq).reduceOption(_ unionByName _),
-      "MERGE")
-    Versioned.commit(
-      (Seq(kept) ++ newRows.toSeq ++ bySrcNew.toSeq).reduce(_ unionByName _),
-      path, retain = retain)
-    ()
-  }
 }
 
-/** `UPDATE ... SET ... WHERE cond` as a partition rewrite: only
-  * partitions holding matching rows are read and rewritten, with the
-  * assignments applied to matching rows and every other row carried
-  * verbatim (`CASE WHEN cond THEN expr ELSE col END` per assigned
-  * column — rows where `cond` is NULL are NOT updated, SQL
-  * three-valued logic). Partition-column and `vgen` assignments were
-  * rejected at resolution (a partition-moving update has no
-  * single-partition rewrite shape). Dimension tables commit the
-  * updated content as a fresh full-copy generation. */
 /** `INSERT OVERWRITE` under `partitionOverwriteMode=dynamic`, routed
   * at analysis (see [[GraftDmlRule]]): one whole-frame call into the
   * table's dynamic-overwrite committer — the data-derived touched set,
@@ -1477,14 +1401,22 @@ case class GraftDynamicOverwriteCommand(
   }
 }
 
+/** `UPDATE ... SET ... WHERE cond` as a partition rewrite: only
+  * partitions holding matching rows are read and rewritten, with the
+  * assignments applied to matching rows and every other row carried
+  * verbatim (`CASE WHEN cond THEN expr ELSE col END` per assigned
+  * column — rows where `cond` is NULL are NOT updated, SQL
+  * three-valued logic). Partition-column and `vgen` assignments were
+  * rejected at resolution (a partition-moving update has no
+  * single-partition rewrite shape). An unpartitioned table rewrites
+  * its one root partition. */
 case class GraftUpdateCommand(
     relation: LogicalPlan,
     assignments: AnalyzedColumns,
     cond: AnalyzedCondition,
     path: String,
-    basisGen: Option[Long], // Some(resolved head) = fact; None = dim
+    basisGen: Long, // the resolution-pinned head
     retain: Int) extends LeafRunnableCommand {
-  private def isFact: Boolean = basisGen.isDefined
 
   override def run(spark: SparkSession): Seq[Row] = {
     val t = GraftColumnBridge.ofRows(spark, relation)
@@ -1498,35 +1430,23 @@ case class GraftUpdateCommand(
         case None => col(n)
       }
     }
-    if (isFact) {
-      val pcols = FactVersioned.logicalPartitionColumns(spark, path)
-      val sel = t.where(c).select(pcols.map(col): _*)
-      val touchedRows = sel.distinct().limit(10001).collect()
-      require(touchedRows.length <= 10000,
-        "GraftDml: UPDATE touches more than 10000 partitions — " +
-          "this is a rewrite, not an incremental commit")
-      if (touchedRows.isEmpty) return Seq.empty // no matches: no commit
-      val touched: Seq[Seq[Any]] = touchedRows.toIndexedSeq
-        .map(r => pcols.indices.map(r.get))
-      val scoped = GraftDml.scopedTo(spark, t, pcols, touchedRows,
-        sel.schema)
-      val content = scoped.select(updatedCols(scoped): _*)
-        .drop(FactVersioned.VGenCol)
-      // enforced CHECKs validate the MODIFIED rows — filter on the
-      // PRE-assignment cond, then project through the assignments
-      // (filtering post-assignment would miss rows whose update
-      // falsifies the cond); carried rows were valid when written
-      GraftDml.enforceChecks(spark, path, basisGen,
-        Some(scoped.where(c).select(updatedCols(scoped): _*)), "UPDATE")
-      // basis = the resolution-time head (see GraftDeleteCommand)
-      FactVersioned.replacePartitionsBy(spark, path, content, pcols,
-        touched, retain = retain, basisGen = basisGen)
-    } else {
-      if (t.where(c).isEmpty) return Seq.empty
-      GraftDml.enforceChecks(spark, path, None,
-        Some(t.where(c).select(updatedCols(t): _*)), "UPDATE")
-      Versioned.commit(t.select(updatedCols(t): _*), path, retain = retain)
-    }
+    val pcols = FactVersioned.logicalPartitionColumns(spark, path)
+    val sel = t.where(c).select(pcols.map(col): _*)
+    val touched = GraftDml.touchedRowsOf(sel, pcols, "UPDATE")
+    if (touched.isEmpty) return Seq.empty // no matches: no commit
+    val scoped = GraftDml.scopedTo(spark, t, pcols, touched,
+      sel.schema)
+    val content = scoped.select(updatedCols(scoped): _*)
+      .drop(FactVersioned.VGenCol)
+    // enforced CHECKs validate the MODIFIED rows — filter on the
+    // PRE-assignment cond, then project through the assignments
+    // (filtering post-assignment would miss rows whose update
+    // falsifies the cond); carried rows were valid when written
+    GraftDml.enforceChecks(spark, path, basisGen,
+      Some(scoped.where(c).select(updatedCols(scoped): _*)), "UPDATE")
+    // basis = the resolution-time head (see GraftDeleteCommand)
+    FactVersioned.replacePartitionsBy(spark, path, content, pcols,
+      touched, retain = retain, basisGen = Some(basisGen))
     Seq.empty
   }
 }
@@ -1536,43 +1456,32 @@ case class GraftUpdateCommand(
   * the matches); a partition deleted empty is dropped from the new
   * generation (partition-delete semantics, conflict-detected like any
   * touched dir). SQL three-valued logic: rows where `cond` is NULL are
-  * KEPT (only true deletes). Dimension tables commit the remaining
-  * rows as a fresh full-copy generation. */
+  * KEPT (only true deletes). An unpartitioned table rewrites its one
+  * root partition. */
 case class GraftDeleteCommand(
     relation: LogicalPlan,
     cond: AnalyzedCondition,
     path: String,
-    basisGen: Option[Long], // Some(resolved head) = fact; None = dim
+    basisGen: Long, // the resolution-pinned head
     retain: Int) extends LeafRunnableCommand {
-  private def isFact: Boolean = basisGen.isDefined
 
   override def run(spark: SparkSession): Seq[Row] = {
     val t = GraftColumnBridge.ofRows(spark, relation)
     val c: Column = GraftColumnBridge.column(cond.expr)
     val keepCond = coalesce(c, lit(false)) === lit(false)
-    if (isFact) {
-      val pcols = FactVersioned.logicalPartitionColumns(spark, path)
-      val sel = t.where(c).select(pcols.map(col): _*)
-      val touchedRows = sel.distinct().limit(10001).collect()
-      require(touchedRows.length <= 10000,
-        "GraftDml: DELETE touches more than 10000 partitions — " +
-          "this is a rewrite, not an incremental commit")
-      if (touchedRows.isEmpty) return Seq.empty // no matches: no commit
-      val touched: Seq[Seq[Any]] = touchedRows.toIndexedSeq
-        .map(r => pcols.indices.map(r.get))
-      val keep = GraftDml.scopedTo(spark, t.where(keepCond), pcols,
-          touchedRows, sel.schema)
-        .drop(FactVersioned.VGenCol)
-      // basis = the RESOLUTION-time head whose files this command read:
-      // an intervening foreign commit is then a detected conflict, not
-      // a silent overwrite from a stale read
-      FactVersioned.replacePartitionsBy(spark, path, keep, pcols, touched,
-        retain = retain, basisGen = basisGen,
-        properties = Map("operation" -> "DELETE"))
-    } else {
-      if (t.where(c).isEmpty) return Seq.empty
-      Versioned.commit(t.where(keepCond), path, retain = retain)
-    }
+    val pcols = FactVersioned.logicalPartitionColumns(spark, path)
+    val sel = t.where(c).select(pcols.map(col): _*)
+    val touched = GraftDml.touchedRowsOf(sel, pcols, "DELETE")
+    if (touched.isEmpty) return Seq.empty // no matches: no commit
+    val keep = GraftDml.scopedTo(spark, t.where(keepCond), pcols,
+        touched, sel.schema)
+      .drop(FactVersioned.VGenCol)
+    // basis = the RESOLUTION-time head whose files this command read:
+    // an intervening foreign commit is then a detected conflict, not
+    // a silent overwrite from a stale read
+    FactVersioned.replacePartitionsBy(spark, path, keep, pcols, touched,
+      retain = retain, basisGen = Some(basisGen),
+      properties = Map("operation" -> "DELETE"))
     Seq.empty
   }
 }

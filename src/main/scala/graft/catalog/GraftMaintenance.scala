@@ -6,10 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import graft.operators.{FactVersioned, Versioned, ZOrder}
+import graft.operators.FactVersioned
 
 /** SQL maintenance surface over [[GraftCatalog]] tables — the table
   * LIFECYCLE statements the reference's SQL-facing users
@@ -20,26 +19,26 @@ import graft.operators.{FactVersioned, Versioned, ZOrder}
   *  - `OPTIMIZE <catalog>.<table> [WHERE pcol = lit [AND ...]]
   *    [ZORDER BY (c1, c2, ...)]` →
   *    [[FactVersioned.compactPartitionsBy]] over the head partitions
-  *    in scope (every leaf without WHERE; at 100 TB a compaction is
-  *    always partition-scoped — the Delta OPTIMIZE WHERE posture:
-  *    partition predicates only) / a coalesced fresh full-copy
-  *    generation (dimension). Content-preserving by construction: one
+  *    in scope (every leaf without WHERE — an unpartitioned table's
+  *    one leaf is its root; at 100 TB a compaction is always
+  *    partition-scoped — the Delta OPTIMIZE WHERE posture: partition
+  *    predicates only). Content-preserving by construction: one
   *    new generation whose rows are byte-identical, prior generations
   *    untouched until retention (compaction never breaks time
   *    travel).
   *  - `VACUUM <catalog>.<table> [RETAIN <n> GENERATIONS] [DRY RUN]` →
-  *    [[FactVersioned.vacuum]] / [[Versioned.vacuum]]: expire
+  *    [[FactVersioned.vacuum]]: expire
   *    generations beyond the window and GC unreferenced data files.
   *    Returns one row per expired generation; `DRY RUN` previews the
   *    set without acting.
   *  - `DESCRIBE HISTORY <catalog>.<table>` → the commit log, newest
   *    first: generation, commit instant (the marker's visibility
-  *    time), declared touched partitions (fact; the conflict-detection
-  *    record) and commit properties.
+  *    time), declared touched partitions (the conflict-detection
+  *    record; `""` names an unpartitioned table's root) and commit
+  *    properties.
   *  - `RESTORE [TABLE] <catalog>.<table> TO VERSION AS OF n` →
-  *    [[FactVersioned.restore]] (fact: METADATA-ONLY manifest+schema
-  *    copy, zero data staged) / [[Versioned.restore]] (dim: fresh
-  *    full copy) — roll back as a new, auditable generation.
+  *    [[FactVersioned.restore]] (METADATA-ONLY manifest+schema copy,
+  *    zero data staged) — roll back as a new, auditable generation.
   *  - `DESCRIBE DETAIL <catalog>.<table>` → one-row table summary:
   *    kind, partition columns, generation counts, head footprint.
   *
@@ -161,8 +160,7 @@ object GraftMaintenance {
     case _ => None
   }
 
-  private[graft] final case class Resolved(
-      path: String, isFact: Boolean, catalogName: String)
+  private[graft] final case class Resolved(path: String, catalogName: String)
 
   /** [[resolve]] over a dotted `<catalog>.<table>` string — the entry
     * the SQL table functions ([[graft.GraftFunctions]]) use to accept
@@ -172,7 +170,7 @@ object GraftMaintenance {
     resolve(spark, parts(ref), stmt)
 
   /** Run-time resolution: `<catalog>.<table>` where the catalog conf
-    * names [[GraftCatalog]]; kind detected from the table layout. */
+    * names [[GraftCatalog]] and the table holds a committed generation. */
   private[catalog] def resolve(
       spark: SparkSession, ps: Seq[String], stmt: String): Resolved = {
     require(ps.length == 2,
@@ -194,26 +192,9 @@ object GraftMaintenance {
     // reached under its new name, never under its old one
     val path = TablePointers.resolve(spark, root, tbl)
       .getOrElse(throw noTable)
-    if (FactVersioned.generations(spark, path).nonEmpty)
-      Resolved(path, isFact = true, cat)
-    else if (Versioned.generations(spark, path).nonEmpty)
-      Resolved(path, isFact = false, cat)
-    else throw noTable
+    if (FactVersioned.generations(spark, path).isEmpty) throw noTable
+    Resolved(path, cat)
   }
-
-  /** Retention for maintenance commits — the same conf-or-preserve
-    * resolution INSERT/DML use ([[GraftCatalog]]'s `retainFor`): never
-    * silently shrink a table maintained at higher retention. */
-  private[catalog] def retainFor(
-      spark: SparkSession, cat: String, path: String): Int =
-    spark.conf.getOption(s"spark.sql.catalog.$cat.retain")
-      .flatMap(_.toIntOption)
-      .getOrElse {
-        val depth =
-          math.max(FactVersioned.generations(spark, path).length,
-            Versioned.generations(spark, path).length)
-        math.max(3, depth)
-      }
 }
 
 /** Delegating parser: the five maintenance statements (OPTIMIZE,
@@ -270,14 +251,14 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 }
 
 /** `OPTIMIZE t [WHERE partition predicates] [ZORDER BY (cols)]` — a
-  * content-preserving compaction commit. Fact tables rewrite the head
-  * partitions in scope through [[FactVersioned.compactPartitions]]
-  * (z-clustered with per-file bounds when ZORDER BY is given, one file
-  * per partition otherwise); the UNSCOPED plain form compacts only
+  * content-preserving compaction commit rewriting the head partitions
+  * in scope through [[FactVersioned.compactPartitionsBy]] (z-clustered
+  * with per-file bounds when ZORDER BY is given, one file per
+  * partition otherwise); the UNSCOPED plain form compacts only
   * FRAGMENTED partitions (≥2 manifest files) so `OPTIMIZE t` at
   * 100 TB costs ∝ fragmentation, never a full-table rewrite of
-  * already-compact partitions. Dimension tables commit a coalesced
-  * (optionally z-sorted) fresh full-copy generation. Older generations
+  * already-compact partitions. An unpartitioned table's one partition
+  * is its root (WHERE has nothing to scope there). Older generations
   * keep their pre-compaction files until retention — OPTIMIZE never
   * breaks time travel.
   *
@@ -397,60 +378,42 @@ case class GraftOptimizeCommand(
 
   override def run(spark: SparkSession): Seq[Row] = {
     val r = GraftMaintenance.resolve(spark, table, "OPTIMIZE")
-    val retain = GraftMaintenance.retainFor(spark, r.catalogName, r.path)
-    if (r.isFact) {
-      val pcols = FactVersioned.logicalPartitionColumns(spark, r.path)
-      val cmap = FactVersioned.generationColMap(spark, r.path)
-      val schema = FactVersioned.generationHandle(spark, r.path, None)._2
-      val all = FactVersioned.partitionDirs(spark, r.path)
-      val scoped = all.filter(matches(_, pcols, schema,
+    val retain = GraftCatalog.retainFor(spark, r.catalogName, r.path)
+    val pcols = FactVersioned.logicalPartitionColumns(spark, r.path)
+    require(where.isEmpty || pcols.nonEmpty,
+      "OPTIMIZE WHERE: the table is unpartitioned — the restriction " +
+        "has nothing to scope")
+    val cmap = FactVersioned.generationColMap(spark, r.path)
+    val schema = FactVersioned.generationHandle(spark, r.path, None)._2
+    val all = FactVersioned.partitionDirs(spark, r.path)
+    val scoped =
+      if (where.isEmpty) all
+      else all.filter(matches(_, pcols, schema,
         c => FactVersioned.physOf(cmap, c)))
-      if (where.nonEmpty && scoped.isEmpty && all.nonEmpty)
-        throw new IllegalArgumentException(
-          "OPTIMIZE WHERE matched no partitions — a silent no-op " +
-            "compaction would read as 'already optimized'. Available: " +
-            all.take(20).mkString(", ") +
-            (if (all.length > 20) s", … (${all.length} total)" else ""))
-      // Unscoped plain OPTIMIZE compacts only FRAGMENTED partitions
-      // (≥2 files — known from the manifest, zero FS calls): at 100 TB
-      // "OPTIMIZE t" must be ∝ fragmentation, not a full-table
-      // rewrite of already-compact partitions (the Delta minFileSize
-      // posture). An explicit WHERE scope and ZORDER BY (re-CLUSTERING
-      // is the point, file counts irrelevant) always take the listed
-      // partitions as-is.
-      val dirs =
-        if (where.nonEmpty || zorderCols.nonEmpty) scoped
-        else {
-          val counts = FactVersioned.manifestFileCounts(spark, r.path)
-          scoped.filter(d => counts.getOrElse(d, 0L) > 1L)
-        }
-      if (dirs.isEmpty) return Seq.empty // nothing fragmented: no commit
-      val c = FactVersioned.compactPartitionsBy(spark, r.path, dirs, pcols,
-        retain = retain, zorderCols = zorderCols, statsCols = zorderCols,
-        properties = Map("operation" -> "OPTIMIZE"))
-      Seq(Row(c.gen, dirs.length.toLong))
-    } else {
-      require(where.isEmpty,
-        "OPTIMIZE WHERE: dimension tables are unpartitioned — the " +
-          "restriction has nothing to scope")
-      val head = Versioned.read(spark, r.path)
-      val genPath = new org.apache.hadoop.fs.Path(
-        Versioned.generationPath(spark, r.path))
-      val fs = genPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val bytes = fs.listStatus(genPath)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum
-      val target = math.max(1,
-        math.ceil(bytes.toDouble / (128L * 1024 * 1024)).toInt)
-      val content =
-        if (zorderCols.isEmpty) head.coalesce(target)
-        else head.withColumn("__graft_z", ZOrder.zValue(head, zorderCols, 12))
-          .repartitionByRange(target, col("__graft_z"))
-          .sortWithinPartitions(col("__graft_z"))
-          .drop("__graft_z")
-      val c = Versioned.commit(content, r.path, retain = retain)
-      Seq(Row(c.gen, 1L))
-    }
+    if (where.nonEmpty && scoped.isEmpty && all.nonEmpty)
+      throw new IllegalArgumentException(
+        "OPTIMIZE WHERE matched no partitions — a silent no-op " +
+          "compaction would read as 'already optimized'. Available: " +
+          all.take(20).mkString(", ") +
+          (if (all.length > 20) s", … (${all.length} total)" else ""))
+    // Unscoped plain OPTIMIZE compacts only FRAGMENTED partitions
+    // (≥2 files — known from the manifest, zero FS calls): at 100 TB
+    // "OPTIMIZE t" must be ∝ fragmentation, not a full-table
+    // rewrite of already-compact partitions (the Delta minFileSize
+    // posture). An explicit WHERE scope and ZORDER BY (re-CLUSTERING
+    // is the point, file counts irrelevant) always take the listed
+    // partitions as-is.
+    val dirs =
+      if (where.nonEmpty || zorderCols.nonEmpty) scoped
+      else {
+        val counts = FactVersioned.manifestFileCounts(spark, r.path)
+        scoped.filter(d => counts.getOrElse(d, 0L) > 1L)
+      }
+    if (dirs.isEmpty) return Seq.empty // nothing fragmented: no commit
+    val c = FactVersioned.compactPartitionsBy(spark, r.path, dirs, pcols,
+      retain = retain, zorderCols = zorderCols, statsCols = zorderCols,
+      properties = Map("operation" -> "OPTIMIZE"))
+    Seq(Row(c.gen, dirs.length.toLong))
   }
 }
 
@@ -472,26 +435,23 @@ case class GraftVacuumCommand(
   override def run(spark: SparkSession): Seq[Row] = {
     val r = GraftMaintenance.resolve(spark, table, "VACUUM")
     val n = retain.getOrElse(
-      GraftMaintenance.retainFor(spark, r.catalogName, r.path))
+      GraftCatalog.retainFor(spark, r.catalogName, r.path))
     val dropped =
       if (dryRun) {
         require(n >= 1, "VACUUM must retain at least the head generation")
-        val committed =
-          if (r.isFact) FactVersioned.generations(spark, r.path)
-          else Versioned.generations(spark, r.path)
+        val committed = FactVersioned.generations(spark, r.path)
         val floor = committed.takeRight(n).headOption.getOrElse(Long.MaxValue)
         committed.filter(_ < floor)
       }
-      else if (r.isFact) FactVersioned.vacuum(spark, r.path, n)
-      else Versioned.vacuum(spark, r.path, n)
+      else FactVersioned.vacuum(spark, r.path, n)
     dropped.map(Row(_))
   }
 }
 
 /** `DESCRIBE HISTORY t` — the commit log, newest first: generation,
   * the commit marker's visibility instant, the declared touched
-  * partitions (fact tables; null for full-copy dimensions, whose
-  * commits always replace everything) and commit properties.
+  * partitions (`""` is an unpartitioned table's root) and commit
+  * properties.
   * Metadata-scale: marker mtimes + touched files + properties files,
   * no data scan. */
 case class GraftDescribeHistoryCommand(
@@ -508,26 +468,19 @@ case class GraftDescribeHistoryCommand(
 
   override def run(spark: SparkSession): Seq[Row] = {
     val r = GraftMaintenance.resolve(spark, table, "DESCRIBE HISTORY")
-    if (r.isFact) {
-      FactVersioned.generationCommitTimes(spark, r.path).reverse.map {
-        case (g, ms) => Row(g, new java.sql.Timestamp(ms),
-          FactVersioned.touchedPartitions(spark, r.path, g),
-          FactVersioned.commitProperties(spark, r.path, g))
-      }
-    } else {
-      Versioned.generationCommitTimes(spark, r.path).reverse.map {
-        case (g, ms) => Row(g, new java.sql.Timestamp(ms), null, null)
-      }
+    FactVersioned.generationCommitTimes(spark, r.path).reverse.map {
+      case (g, ms) => Row(g, new java.sql.Timestamp(ms),
+        FactVersioned.touchedPartitions(spark, r.path, g),
+        FactVersioned.commitProperties(spark, r.path, g))
     }
   }
 }
 
 /** `RESTORE [TABLE] t TO VERSION AS OF n` — roll the head back (or
-  * forward) to generation `n` as a NEW commit. Fact tables restore
-  * METADATA-ONLY ([[FactVersioned.restore]]: the new generation's
-  * manifest and pinned schema are verbatim copies of `n`'s, zero data
-  * staged — the Delta RESTORE posture); dimension tables commit `n`'s
-  * content as a fresh full copy. History is preserved: the restore is
+  * forward) to generation `n` as a NEW commit, METADATA-ONLY
+  * ([[FactVersioned.restore]]: the new generation's manifest and
+  * pinned schema are verbatim copies of `n`'s, zero data staged — the
+  * Delta RESTORE posture). History is preserved: the restore is
   * itself a generation (stamped `operation=RESTORE`,
   * `restored_from=n`), and the pre-restore head stays time-travelable
   * until retention. */
@@ -540,21 +493,16 @@ case class GraftRestoreCommand(
 
   override def run(spark: SparkSession): Seq[Row] = {
     val r = GraftMaintenance.resolve(spark, table, "RESTORE")
-    val retain = GraftMaintenance.retainFor(spark, r.catalogName, r.path)
-    val c =
-      if (r.isFact)
-        FactVersioned.restore(spark, r.path, gen, retain = retain,
-          properties = Map("operation" -> "RESTORE"))
-      else Versioned.restore(spark, r.path, gen, retain = retain)
-    Seq(Row(c match {
-      case fc: FactVersioned.Commit => fc.gen
-      case vc: Versioned.Commit => vc.gen
-    }, gen))
+    val c = FactVersioned.restore(spark, r.path, gen,
+      retain = GraftCatalog.retainFor(spark, r.catalogName, r.path),
+      properties = Map("operation" -> "RESTORE"))
+    Seq(Row(c.gen, gen))
   }
 }
 
 /** `DESCRIBE DETAIL t` — one-row table summary (the Delta shape):
-  * store kind, partition columns, retained/head generation numbers,
+  * kind (`fact` when partitioned, `dim` when not), partition columns,
+  * retained/head generation numbers,
   * and the HEAD generation's physical footprint (file count + bytes).
   * Metadata-scale: one manifest read — commits record per-file byte
   * sizes IN the manifest ([[FactVersioned.manifestFiles]]), so the
@@ -578,30 +526,19 @@ case class GraftDescribeDetailCommand(
   override def run(spark: SparkSession): Seq[Row] = {
     val r = GraftMaintenance.resolve(spark, table, "DESCRIBE DETAIL")
     val hconf = spark.sparkContext.hadoopConfiguration
-    if (r.isFact) {
-      val gens = FactVersioned.generations(spark, r.path)
-      val files = FactVersioned.manifestFiles(spark, r.path)
-      val data = s"${r.path}/${FactVersioned.DataDir}"
-      val fs = new org.apache.hadoop.fs.Path(r.path).getFileSystem(hconf)
-      val bytes = files.map { case (f, sz) =>
-        sz.getOrElse(fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(s"$data/$f")).getLen)
-      }.sum
-      val pcols =
-        try FactVersioned.logicalPartitionColumns(spark, r.path)
-        catch { case _: IllegalArgumentException => Seq.empty[String] }
-      Seq(Row("fact", r.path, pcols, gens.length.toLong, gens.max,
-        files.length.toLong, bytes,
-        FactVersioned.partitionDirs(spark, r.path).length.toLong))
-    } else {
-      val gens = Versioned.generations(spark, r.path)
-      val head = new org.apache.hadoop.fs.Path(
-        Versioned.generationPath(spark, r.path))
-      val fs = head.getFileSystem(hconf)
-      val data = fs.listStatus(head)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      Seq(Row("dim", r.path, Seq.empty[String], gens.length.toLong,
-        gens.max, data.length.toLong, data.map(_.getLen).sum, 1L))
-    }
+    val gens = FactVersioned.generations(spark, r.path)
+    val files = FactVersioned.manifestFiles(spark, r.path)
+    val data = s"${r.path}/${FactVersioned.DataDir}"
+    val fs = new org.apache.hadoop.fs.Path(r.path).getFileSystem(hconf)
+    val bytes = files.map { case (f, sz) =>
+      sz.getOrElse(fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(s"$data/$f")).getLen)
+    }.sum
+    val pcols =
+      try FactVersioned.logicalPartitionColumns(spark, r.path)
+      catch { case _: IllegalArgumentException => Seq.empty[String] }
+    Seq(Row(if (pcols.isEmpty) "dim" else "fact", r.path, pcols,
+      gens.length.toLong, gens.max, files.length.toLong, bytes,
+      FactVersioned.partitionDirs(spark, r.path).length.toLong))
   }
 }

@@ -6,21 +6,18 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
-import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, SupportsNamespaces, Table, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.{FactVersioned, Versioned}
+import graft.operators.FactVersioned
 
 // ---- INSERT surface: append-only writes routed THROUGH the stores'
 // own committers (claim/marker protocol intact) -----------------------
 
-/** Delegating base for the writable head-generation tables: reads pass
-  * straight to the native [[ParquetTable]]; INSERT INTO lands via the
+/** The writable head-generation table: reads pass straight to the
+  * native `ParquetTable`; INSERT INTO lands via the
   * DSv2→V1 bridge ([[org.apache.spark.sql.connector.write.V1Write]]),
   * whose `InsertableRelation` hands the whole resolved input frame to
   * the store's committer — the one write shape these stores support
@@ -44,16 +41,25 @@ import graft.operators.{FactVersioned, Versioned}
   *
   * Top-level (not catalog-inner) so [[GraftDml]]'s resolution rule can
   * recognize a resolved `DataSourceV2Relation` over a graft table and
-  * recover its path — the MERGE/DELETE routing needs exactly that. */
-private[catalog] abstract class GraftWritableTable(
+  * recover its path — the MERGE/DELETE routing needs exactly that.
+  *
+  * @param resolvedGen the head generation this resolution pinned —
+  *   [[GraftDml]]'s UPDATE/DELETE/MERGE commands read THESE files and
+  *   pass this as the commit's `basisGen`, so a foreign commit landing
+  *   between statement analysis and execution is caught by the
+  *   store's conflict detection instead of being silently overwritten
+  *   from a stale read. */
+private[catalog] class GraftWritableTable(
     inner: Table with org.apache.spark.sql.connector.catalog.SupportsRead,
     val graftTablePath: String,
-    retain: () => Int) extends Table
+    retain: () => Int,
+    val resolvedGen: Long) extends Table
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.TruncatableTable {
-  protected def spark: SparkSession = SparkSession.active
-  protected def retention: Int = retain()
+  private def spark: SparkSession = SparkSession.active
+  private def path: String = graftTablePath
+  private def retention: Int = retain()
   /** Retention for the [[GraftDml]] MERGE/DELETE commands — the same
     * conf-or-preserve resolution INSERT uses. */
   private[catalog] def retentionForDml: Int = retain()
@@ -64,11 +70,11 @@ private[catalog] abstract class GraftWritableTable(
     PartitionTransforms.read(SparkSession.active, graftTablePath)
   /** True for the GENERATED partition column (commit-assigned like
     * provenance: writes derive it, input values are ignored). */
-  protected def isGeneratedCol(name: String): Boolean =
+  private def isGeneratedCol(name: String): Boolean =
     transformSpec.exists(_.genCol.equalsIgnoreCase(name))
   override def name(): String = inner.name()
-  /** The native schema, with [[FactVersioned.VGenCol]] (when present —
-    * fact tables only) carrying a NULL column DEFAULT in its field
+  /** The native schema, with [[FactVersioned.VGenCol]] carrying a NULL
+    * column DEFAULT in its field
     * metadata: provenance is commit-assigned (input values ignored),
     * so a write that omits it must analyze — `INSERT ... BY NAME`
     * fills the default for the missing name — instead of demanding a
@@ -108,7 +114,6 @@ private[catalog] abstract class GraftWritableTable(
       else c
     }
   override def partitioning(): Array[Transform] = inner.partitioning()
-  override def properties(): util.Map[String, String] = inner.properties()
   override def capabilities()
       : util.Set[org.apache.spark.sql.connector.catalog.TableCapability] = {
     val caps = new util.HashSet(inner.capabilities())
@@ -126,10 +131,10 @@ private[catalog] abstract class GraftWritableTable(
       .TableCapability.OVERWRITE_DYNAMIC)
     // `MERGE ... WITH SCHEMA EVOLUTION`: Spark's own
     // ResolveMergeIntoSchemaEvolution rule gates on this capability and
-    // routes the widening through alterTable → the stores' ADDITIVE
-    // evolution commits (fact: FactVersioned.addColumns — metadata-only,
-    // carried rows null-fill, tombstoned names still reject; dim: a
-    // widened full-copy generation). The widening lands as its own
+    // routes the widening through alterTable → the store's ADDITIVE
+    // evolution commit (FactVersioned.addColumns — metadata-only,
+    // carried rows null-fill, tombstoned names still reject). The
+    // widening lands as its own
     // auditable generation at statement analysis, BEFORE the merge's
     // data commit — two commits, both through the claim/marker protocol.
     caps.add(org.apache.spark.sql.connector.catalog
@@ -189,34 +194,6 @@ private[catalog] abstract class GraftWritableTable(
               }
         }
     }
-  def insert(data: org.apache.spark.sql.DataFrame): Unit
-  /** `INSERT OVERWRITE` under `partitionOverwriteMode=dynamic`:
-    * replace exactly the partitions the data holds rows for. */
-  def overwriteDynamic(data: org.apache.spark.sql.DataFrame): Unit
-  /** `INSERT OVERWRITE` with the analyzed static delete filters —
-    * `[AlwaysTrue]` for the spec-less spelling, partition `EqualTo`s
-    * for a static PARTITION spec. */
-  def overwriteWhere(
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      data: org.apache.spark.sql.DataFrame): Unit
-}
-
-/** Fact-table INSERT: append via [[FactVersioned.append]] (cost ∝
-  * touched partitions). The resolved input carries the [[FactVersioned.VGenCol]]
-  * provenance slot (it is part of the table schema); its values are
-  * IGNORED — provenance is assigned by the commit itself, like a
-  * generated column — so `INSERT ... SELECT ..., NULL` is the shape. */
-/** @param resolvedGen the head generation this resolution pinned —
-  *   [[GraftDml]]'s UPDATE/DELETE commands read THESE files and pass
-  *   this as the commit's `basisGen`, so a foreign commit landing
-  *   between statement analysis and execution is caught by the
-  *   store's conflict detection instead of being silently overwritten
-  *   from a stale read. */
-private[catalog] class WritableFactTable(
-    inner: Table with org.apache.spark.sql.connector.catalog.SupportsRead,
-    path: String, retain: () => Int,
-    val resolvedGen: Long)
-    extends GraftWritableTable(inner, path, retain) {
   /** SHOW TBLPROPERTIES / DESCRIBE EXTENDED read the RESOLVED
     * generation's pinned record (per-era; SET/UNSET commits a new
     * generation) — pinned to `resolvedGen`, not re-read at call time,
@@ -248,7 +225,12 @@ private[catalog] class WritableFactTable(
       rows: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     transformSpec.fold(rows)(_.derive(rows))
 
-  override def insert(data: org.apache.spark.sql.DataFrame): Unit = {
+  /** INSERT INTO: append via [[FactVersioned.appendBy]] (cost ∝
+    * touched partitions). The resolved input carries the
+    * [[FactVersioned.VGenCol]] provenance slot (it is part of the table
+    * schema); its values are IGNORED — provenance is assigned by the
+    * commit itself, like a generated column. */
+  def insert(data: org.apache.spark.sql.DataFrame): Unit = {
     val rows = derived(data.drop(FactVersioned.VGenCol))
     FactVersioned.appendBy(spark, path, rows,
       FactVersioned.logicalPartitionColumns(spark, path),
@@ -266,7 +248,7 @@ private[catalog] class WritableFactTable(
     * `resolvedGen` rides as the commit basis, so a foreign commit
     * landing between analysis and execution conflicts retryably
     * instead of being silently overwritten. */
-  override def overwriteWhere(
+  def overwriteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter],
       data: org.apache.spark.sql.DataFrame): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -304,14 +286,10 @@ private[catalog] class WritableFactTable(
     // (partition values come from dir names) — the truncateTable cost
     // class, not a data scan
     val head = FactVersioned.read(spark, path)
-    val headTouched = head.where(pred)
-      .select(pcols.map(col): _*).distinct().limit(10001).collect()
-    val dataTouched = rows
-      .select(pcols.map(col): _*).distinct().limit(10001).collect()
-    require(headTouched.length <= 10000 && dataTouched.length <= 10000,
-      "GraftCatalog: INSERT OVERWRITE would replace more than 10000 " +
-        "partitions in one statement — scope the overwrite, or use " +
-        "FactVersioned.replacePartitionsBy with an explicit touched set")
+    val headTouched = FactVersioned.touchedTuples(head.where(pred), pcols,
+      10000, "GraftCatalog: INSERT OVERWRITE")
+    val dataTouched = FactVersioned.touchedTuples(rows, pcols, 10000,
+      "GraftCatalog: INSERT OVERWRITE")
     // every inserted row must live inside the spec'd scope — outside
     // rows would land in partitions the delete filter never cleared
     // (Spark injects static spec values as constants, so this only
@@ -320,10 +298,8 @@ private[catalog] class WritableFactTable(
       require(rows.where(!pred).isEmpty,
         "GraftCatalog: INSERT OVERWRITE data holds rows outside the " +
           "static PARTITION spec")
-    val touched = (headTouched ++ dataTouched)
-      .map(r => pcols.indices.map(r.get(_)): Seq[Any]).distinct
     FactVersioned.replacePartitionsBy(spark, path, rows, pcols,
-      touched.toIndexedSeq, retain = retention,
+      (headTouched ++ dataTouched).distinct, retain = retention,
       basisGen = Some(resolvedGen),
       properties = Map("operation" -> "INSERT OVERWRITE"))
     ()
@@ -339,53 +315,41 @@ private[catalog] class WritableFactTable(
     * carried byte-identical (gate q176 FS-asserts). An empty input is
     * a no-op by the same contract (nothing to replace), matching
     * Spark's own dynamic-mode file-source semantics. */
-  override def overwriteDynamic(
+  def overwriteDynamic(
       data: org.apache.spark.sql.DataFrame): Unit = {
-    import org.apache.spark.sql.functions.col
     // materialize ONCE — the touched-set derivation and the commit
     // both consume the (possibly expensive) SELECT
     val rows = derived(data.drop(FactVersioned.VGenCol)).localCheckpoint()
     val pcols = FactVersioned.logicalPartitionColumns(spark, path)
-    val touched = rows
-      .select(pcols.map(col): _*).distinct().limit(10001).collect()
-    require(touched.length <= 10000,
-      "GraftCatalog: dynamic INSERT OVERWRITE would replace more than " +
-        "10000 partitions in one statement — scope the overwrite, or " +
-        "use FactVersioned.replacePartitionsBy with an explicit " +
-        "touched set")
+    val touched = FactVersioned.touchedTuples(rows, pcols, 10000,
+      "GraftCatalog: dynamic INSERT OVERWRITE")
     if (touched.nonEmpty)
-      FactVersioned.replacePartitionsBy(spark, path, rows, pcols,
-        touched.toIndexedSeq.map(r => pcols.indices.map(r.get(_)): Seq[Any]),
+      FactVersioned.replacePartitionsBy(spark, path, rows, pcols, touched,
         retain = retention, basisGen = Some(resolvedGen),
         properties = Map("operation" -> "INSERT OVERWRITE DYNAMIC"))
     ()
   }
 
   /** `TRUNCATE TABLE` — VERSIONED emptying: one commit that declares
-    * every head partition touched and stages nothing, so the new head
-    * is empty while every retained generation still time-travels (the
-    * inverse safety posture of DROP: nothing is destroyed). Cost: one
-    * partition-column scan for the touched tuples + a manifest write —
-    * never a data rewrite. */
+    * every head partition touched (an unpartitioned table: its root)
+    * and stages nothing, so the new head is empty while every retained
+    * generation still time-travels (the inverse safety posture of
+    * DROP: nothing is destroyed). Cost: one partition-column scan for
+    * the touched tuples + a manifest write — never a data rewrite. */
   override def truncateTable(): Boolean = {
     // an already-empty head (no partition dirs in the manifest) has
-    // nothing to truncate — and no partition COLUMNS to recover from
-    // dir names either, so probe the manifest first
+    // nothing to truncate
     if (FactVersioned.partitionDirs(spark, path, None).isEmpty)
       return true
     val head = FactVersioned.read(spark, path)
-    val pcolsAll = FactVersioned.logicalPartitionColumns(spark, path)
-    val touched = head
-      .select(pcolsAll.map(org.apache.spark.sql.functions.col): _*)
-      .distinct().limit(10001).collect()
-    require(touched.length <= 10000,
-      "GraftCatalog TRUNCATE: more than 10000 partitions")
-    if (touched.nonEmpty)
-      FactVersioned.replacePartitionsBy(spark, path,
-        head.drop(FactVersioned.VGenCol).limit(0), pcolsAll,
-        touched.toIndexedSeq.map(r => pcolsAll.indices.map(r.get)),
-        retain = retention, basisGen = Some(resolvedGen),
-        properties = Map("operation" -> "TRUNCATE"))
+    val pcols = FactVersioned.logicalPartitionColumns(spark, path)
+    FactVersioned.replacePartitionsBy(spark, path,
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], head.schema),
+      pcols, FactVersioned.touchedTuples(head, pcols, 10000,
+        "GraftCatalog TRUNCATE"),
+      retain = retention, basisGen = Some(resolvedGen),
+      properties = Map("operation" -> "TRUNCATE"))
     true
   }
 }
@@ -394,10 +358,11 @@ private[catalog] class WritableFactTable(
   * not landed yet: write-only (Spark's CreateTableAsSelectExec writes
   * the query result through this object immediately after
   * createTable). The first insert commits generation 0 THROUGH the
-  * store's committer — fact tables via `replacePartitions` on the
-  * declared partition column, dimensions via a full-copy commit — and
-  * clears the pending marker; from then on the table resolves like
-  * any committed graft table. */
+  * store's committer (`replacePartitionsBy` on the declared partition
+  * columns — none for an unpartitioned table, whose root is then the
+  * one touched partition, even for an empty result) and clears the
+  * pending marker; from then on the table resolves like any committed
+  * graft table. */
 private[catalog] class PendingGraftTable(
     tableName: String,
     path: String,
@@ -434,19 +399,11 @@ private[catalog] class PendingGraftTable(
               // derived here — the SELECT never names it
               val data = PartitionTransforms.read(spark, path)
                 .fold(data0)(_.derive(data0))
-              if (pcols.nonEmpty) {
-                val touchedRows = data.select(pcols.map(
-                    org.apache.spark.sql.functions.col): _*)
-                  .distinct().limit(10001).collect()
-                require(touchedRows.length <= 10000,
-                  "GraftCatalog CTAS: more than 10000 partitions")
-                FactVersioned.replacePartitionsBy(spark, path, data, pcols,
-                  touchedRows.toIndexedSeq.map(r => pcols.indices.map(r.get)),
-                  retain = retain(),
-                  properties = Map("operation" -> "CREATE TABLE AS SELECT"))
-              } else {
-                Versioned.commit(data, path, retain = retain())
-              }
+              FactVersioned.replacePartitionsBy(spark, path, data, pcols,
+                FactVersioned.touchedTuples(data, pcols, 10000,
+                  "GraftCatalog CTAS"),
+                retain = retain(),
+                properties = Map("operation" -> "CREATE TABLE AS SELECT"))
               val marker = new Path(path, GraftCatalog.PendingMarkerName)
               marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
                 .delete(marker, false)
@@ -454,64 +411,4 @@ private[catalog] class PendingGraftTable(
             }
         }
     }
-}
-
-/** Dimension-table INSERT: full-copy stores commit whole generations,
-  * so append = current generation ∪ rows as a fresh commit. */
-private[catalog] class WritableDimTable(
-    inner: Table with org.apache.spark.sql.connector.catalog.SupportsRead,
-    path: String, retain: () => Int)
-    extends GraftWritableTable(inner, path, retain) {
-  override def properties(): util.Map[String, String] = {
-    val m = new util.HashMap(inner.properties())
-    GraftCatalog.readDimProps(spark, path)
-      .filterNot(_._1.startsWith(GraftCatalog.ConstraintKeyPrefix))
-      .foreach { case (k, v) => m.put(k, v) }
-    m
-  }
-
-  override def constraints()
-      : Array[org.apache.spark.sql.connector.catalog.constraints
-        .Constraint] =
-    GraftCatalog.decodeConstraints(GraftCatalog.readDimProps(spark, path))
-  override def insert(data: org.apache.spark.sql.DataFrame): Unit = {
-    val current = Versioned.read(spark, path)
-    Versioned.commit(current.unionByName(data), path,
-      retain = retention)
-    ()
-  }
-
-  /** `INSERT OVERWRITE` on a full-copy dimension: the fresh generation
-    * IS the overwrite — the data replaces the head, history
-    * time-travels until retention. Partition specs cannot reach an
-    * unpartitioned table (Spark rejects the PARTITION clause earlier),
-    * so only the spec-less AlwaysTrue shape arrives. */
-  override def overwriteWhere(
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      data: org.apache.spark.sql.DataFrame): Unit = {
-    require(filters.forall(
-        _.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue]),
-      "GraftCatalog: a dimension table has no partitions to scope an " +
-        s"INSERT OVERWRITE to; got ${filters.mkString(", ")}")
-    Versioned.commit(data, path, retain = retention)
-    ()
-  }
-
-  /** Dynamic mode on an UNPARTITIONED table never analyzes (Spark's
-    * ResolveInsertInto only picks dynamic when partition columns lack
-    * static values, and a dimension reports none) — defensive twin of
-    * the spec-less overwrite for hand-built plans. */
-  override def overwriteDynamic(
-      data: org.apache.spark.sql.DataFrame): Unit = {
-    Versioned.commit(data, path, retain = retention)
-    ()
-  }
-
-  /** `TRUNCATE TABLE` for a full-copy store: a fresh EMPTY generation
-    * under the current schema; history time-travels until retention. */
-  override def truncateTable(): Boolean = {
-    Versioned.commit(Versioned.read(spark, path).limit(0), path,
-      retain = retention)
-    true
-  }
 }

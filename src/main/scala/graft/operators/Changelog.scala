@@ -126,27 +126,13 @@ object Changelog {
   }
 
   /** Row-level diff between two committed generations of a
-    * [[Versioned]] table: `insert` / `update_pre` / `update_post` /
+    * [[FactVersioned]] table: `insert` / `update_pre` / `update_post` /
     * `delete` rows transforming `fromGen` into `toGen` — "what changed
     * between corpus versions", the audit/repro question generational
     * snapshots exist to answer. One keys-shuffle join between the two
-    * generations. */
+    * whole generations; [[FactChangeFeed]] cuts the join to the
+    * partitions the later generations declared touched. */
   def generationDiff(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePath: String,
-      fromGen: Long,
-      toGen: Long,
-      keys: Seq[String]): DataFrame =
-    changeSet(
-      Versioned.read(spark, tablePath, Some(fromGen)),
-      Versioned.read(spark, tablePath, Some(toGen)),
-      keys, dedupNullKeyed = true, emitDeletes = true)
-
-  /** [[generationDiff]] over a [[FactVersioned]] table. The join cost
-    * can be cut to the CHANGED partitions by diffing only the dirs the
-    * later generations declared touched — [[FactChangeFeed]] does
-    * exactly that; this is the whole-generation form. */
-  def factGenerationDiff(
       spark: org.apache.spark.sql.SparkSession,
       tablePath: String,
       fromGen: Long,

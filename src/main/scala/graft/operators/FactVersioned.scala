@@ -7,17 +7,21 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
-/** Time travel for PARTITIONED fact tables: a generation is a MANIFEST
+/** Time travel for every catalog table: a generation is a MANIFEST
   * of (partition dir → file list), and a commit writes only the
-  * changed partitions' files plus one manifest — the design
-  * [[Versioned]]'s own doc names for the fact-table scale
-  * (`Versioned.scala`: full-copy generations are dimension-scope; facts
-  * version per partition). This is the lakehouse snapshot idea
-  * (Iceberg manifests / Delta log) on plain parquet + parquet
-  * manifests: data files are IMMUTABLE and SHARED across generations —
-  * an untouched partition's manifest rows carry over verbatim, so
-  * storage and write cost are ∝ changed partitions, not table size,
-  * while every retained generation stays readable byte-exact.
+  * changed partitions' files plus one manifest. This is the lakehouse
+  * snapshot idea (Iceberg manifests / Delta log) on plain parquet +
+  * parquet manifests: data files are IMMUTABLE and SHARED across
+  * generations — an untouched partition's manifest rows carry over
+  * verbatim, so storage and write cost are ∝ changed partitions, not
+  * table size, while every retained generation stays readable
+  * byte-exact.
+  *
+  * A table may have ZERO partition columns (a dimension table): its
+  * one partition is the generation's data root — manifest rows are
+  * `("", "vgen=<n>/part-…")` and a data commit's touched set is the
+  * single empty tuple, so the same commit protocol, conflict rule and
+  * metadata layout serve partitioned and unpartitioned tables alike.
   *
   * Layout under `tablePath/`:
   *  - `_graft_vdata/vgen=<n>/<pcol>=<val>/part-*.parquet` — the data
@@ -29,11 +33,14 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   *    relative to `_graft_vdata`. `schema.ddl` pins the generation's
   *    schema (partition-column types are never trusted to dir-name
   *    inference — same posture as [[Upsert.readPartitionedSnapshot]]).
-  *    `_graft_claim` / `_graft_committed` as in [[Versioned]]: the
-  *    claim's exclusive create serializes concurrent committers onto
-  *    distinct numbers, the marker (written LAST) makes a generation
-  *    visible, and retention never touches a fresh claimed-uncommitted
-  *    generation.
+  *    `_graft_claim` / `_graft_committed` ([[Versioned.ClaimMarker]] /
+  *    [[Versioned.CommitMarker]]): the claim's exclusive create
+  *    serializes concurrent committers onto distinct numbers, the
+  *    marker (written LAST) makes a generation visible, and retention
+  *    never touches a fresh claimed-uncommitted generation.
+  *  - `_graft_gens/_partition_columns` — the table's physical
+  *    partition-column list, recorded once by the first commit (see
+  *    [[partitionColumns]]).
   *
   * Retention deletes expired generations' MANIFESTS, then
   * garbage-collects data files no retained manifest references —
@@ -253,7 +260,7 @@ object FactVersioned {
 
   /** CAS-claim the next generation number: the claim marker's
     * exclusive create serializes concurrent committers onto distinct
-    * numbers (see [[Versioned.commit]]). Shared by every committing
+    * numbers. Shared by every committing
     * entry point so the protocol cannot drift between them. */
   private def claimNext(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -352,6 +359,25 @@ object FactVersioned {
     * fingerprint concurrent committers check overlap against. */
   val TouchedFile = "touched"
 
+  /** The touched-file line naming an unpartitioned table's one root
+    * partition (dir ""): Hive-escaped dir names always hold a '=', so
+    * the token never collides with a real partition. */
+  private val RootDirLine = "."
+
+  /** Persist generation `g`'s DECLARED touched set (staged dirs ∪
+    * partition deletes) — the conflict-detection record later
+    * committers check overlap against. Hive-escaped dir names
+    * (newline-safe), one per line, written before the marker so a
+    * visible generation always carries it. */
+  private def writeTouched(
+      fs: org.apache.hadoop.fs.FileSystem, tablePath: String, g: Long,
+      dirs: Seq[String]): Unit = {
+    val tf = fs.create(new Path(genMeta(tablePath, g), TouchedFile), true)
+    try tf.write(dirs.sorted.map(d => if (d.isEmpty) RootDirLine else d)
+      .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    finally tf.close()
+  }
+
   /** Per-generation application-level properties (Iceberg's snapshot
     * summary posture): small provenance key/values a committer attaches
     * atomically with the commit — written before the marker, so a
@@ -395,7 +421,8 @@ object FactVersioned {
         org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
         new String(out.toByteArray, StandardCharsets.UTF_8)
       } finally in.close()
-      text.split("\n").filter(_.nonEmpty).toSet
+      text.split("\n").filter(_.nonEmpty)
+        .map(l => if (l == RootDirLine) "" else l).toSet
     } else {
       // legacy fallback (pre-touched-file generations): infer from the
       // memoized manifest rows — same result, zero Spark jobs
@@ -692,7 +719,9 @@ object FactVersioned {
   }
 
   /** (generation, commit-marker mtime millis) per committed generation,
-    * ascending — see [[Versioned.generationCommitTimes]]. */
+    * ascending — the record `TIMESTAMP AS OF` resolution binds to (the
+    * marker is written LAST, so its mtime IS the commit's visibility
+    * instant). */
   def generationCommitTimes(
       spark: SparkSession, tablePath: String): Seq[(Long, Long)] = {
     val fs = fsOf(spark, tablePath)
@@ -731,18 +760,13 @@ object FactVersioned {
       partitionCols: Seq[String],
       retain: Int = 3,
       maxTouchedPartitions: Int = 10000): Commit = {
-    require(partitionCols.nonEmpty, "no partition columns given")
     val gens = generations(spark, tablePath)
     if (gens.isEmpty)
       return upsertBy(spark, tablePath, updates, keys, partitionCols,
         retain, maxTouchedPartitions)
-    val touchedRows = updates.select(partitionCols.map(col): _*)
-      .distinct().limit(maxTouchedPartitions + 1).collect()
-    require(touchedRows.length <= maxTouchedPartitions,
-      s"upsertEvolveBy touches more than $maxTouchedPartitions partitions")
+    val touched = touchedTuples(updates, partitionCols,
+      maxTouchedPartitions, "upsertEvolveBy")
     requireKeyUnique(updates, keys, "FactVersioned.upsertEvolveBy")
-    val touched: Seq[Seq[Any]] = touchedRows.toIndexedSeq
-      .map(r => partitionCols.indices.map(r.get))
     val basis = gens.max
     val physCols = physicalPartitionColumns(spark, tablePath, partitionCols)
     val touchedDirs = touched.map(v => partitionDirPath(physCols, v))
@@ -979,7 +1003,6 @@ object FactVersioned {
       typeWiden: Boolean = false,
       tblProps: Option[Map[String, String]] = None): Commit = {
     require(retain >= 1, "retain must keep at least the new generation")
-    require(partitionCols.nonEmpty, "no partition columns given")
     requireCleanProperties(properties)
     partitionCols.foreach { pc =>
       require(content.columns.contains(pc),
@@ -1235,8 +1258,11 @@ object FactVersioned {
       toStage.write.partitionBy(physPartitionCols: _*)
         .parquet(genData.toString)
     }
+    // an unpartitioned table stages straight into its data root: the
+    // root ("") is its one leaf
     def leafDirs(base: Path, depth: Int): Array[String] =
       if (!fs.exists(base)) Array.empty
+      else if (depth == 0) Array("")
       else if (depth == 1)
         fs.listStatus(base).filter(_.isDirectory).map(_.getPath.getName)
       else fs.listStatus(base).filter(_.isDirectory).flatMap(d =>
@@ -1252,6 +1278,14 @@ object FactVersioned {
     awaitLowerClaims(fs, tablePath, next, "FactVersioned")
 
     val head = generations(spark, tablePath).lastOption
+    // the table's FIRST commit records its physical partition-column
+    // list (every lower claim resolved and none published, so no other
+    // committer can be first) — the one source [[partitionColumns]]
+    // reads, which dir names cannot give for an unpartitioned or empty
+    // table
+    if (head.isEmpty)
+      Versioned.atomicWriteFile(fs, partitionColumnsPath(tablePath),
+        physPartitionCols.mkString("\n"))
     val parentGen = basisGen.orElse(parentAtClaim).getOrElse(-1L)
     if (head.exists(_ > parentGen)) {
       // someone committed since our basis: overlap is computed from each
@@ -1318,9 +1352,12 @@ object FactVersioned {
     // from the manifest instead of an O(files) driver getFileStatus
     // loop; carried rows keep the sizes their own commit recorded
     val fresh: Seq[(String, String, Long)] = stagedDirs.toIndexedSeq.flatMap { d =>
-      fs.listStatus(new Path(genData, d))
+      val (leaf, rel) =
+        if (d.isEmpty) (genData, s"$VGenCol=$next")
+        else (new Path(genData, d), s"$VGenCol=$next/$d")
+      fs.listStatus(leaf)
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(f => (d, s"$VGenCol=$next/$d/${f.getPath.getName}", f.getLen))
+        .map(f => (d, s"$rel/${f.getPath.getName}", f.getLen))
     }
     // DRIVER-SIDE MANIFEST PUBLISH (optimization guide §1.2 step 1 +
     // §5 "the driver should do almost no data work" — and a manifest
@@ -1376,7 +1413,8 @@ object FactVersioned {
             // stats `file` is absolute (scheme-qualified): recover the
             // vgen-relative (leaf-dir path, file name) by anchoring on
             // this commit's own `vgen=N/` segment — depth-agnostic, so
-            // multi-column (nested-dir) partitions match too
+            // multi-column (nested-dir) partitions match too, and a file
+            // straight under it is the unpartitioned root ("")
             val marker = java.util.regex.Pattern.quote(genData.getName)
             // staged files hold physical names; stats are recorded
             // under them (readWhere translates its lookups), so stat
@@ -1386,7 +1424,7 @@ object FactVersioned {
               statsCols.map(physOf(cmap, _)))
               .withColumn("s_fname", element_at(split(col("file"), "/"), -1))
               .withColumn("s_fdir",
-                regexp_extract(col("file"), s"$marker/(.*)/[^/]+$$", 1))
+                regexp_extract(col("file"), s"$marker/(?:(.*)/)?[^/]+$$", 1))
               .drop("file")
             baseRows
               .withColumn("fname", element_at(split(col("file"), "/"), -1))
@@ -1445,14 +1483,7 @@ object FactVersioned {
         .getBytes(StandardCharsets.UTF_8))
       finally tp.close()
     }
-    // the DECLARED touched set (staged dirs ∪ partition deletes) — the
-    // conflict-detection record later committers check overlap against.
-    // Hive-escaped dir names (newline-safe), one per line, before the
-    // marker so a visible generation always carries it.
-    val tf = fs.create(new Path(genMeta(tablePath, next), TouchedFile), true)
-    try tf.write(touchedDirs.sorted.mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally tf.close()
+    writeTouched(fs, tablePath, next, touchedDirs)
     if (properties.nonEmpty) {
       val pf = fs.create(
         new Path(genMeta(tablePath, next), PropertiesFile), true)
@@ -1845,15 +1876,45 @@ object FactVersioned {
     if (cmap.isEmpty) cols else cols.map(c => physOf(cmap, c))
   }
 
-  def partitionColumns(spark: SparkSession, tablePath: String): Seq[String] = {
-    val g = resolveGen(spark, tablePath, None)
-    val dir = generations(spark, tablePath).reverse.iterator
+  /** Table-level record of the PHYSICAL partition-column list (one
+    * name per line; empty = unpartitioned), written once by the
+    * table's first commit. It never changes: a partition rename goes
+    * through the column map, and dir names keep their physical
+    * spelling forever. */
+  private def partitionColumnsPath(t: String) =
+    new Path(gensRoot(t), "_partition_columns")
+
+  /** The table's PHYSICAL partition column names in nesting order —
+    * empty for an unpartitioned table — from the record the first
+    * commit wrote, memoized per head generation. Tables written before
+    * the record existed recover them from the newest retained
+    * generation whose manifest holds a partition dir (nested Hive
+    * `c1=v1/c2=v2` forms, unescaped), and fail loudly when none does. */
+  def partitionColumns(spark: SparkSession, tablePath: String): Seq[String] =
+    partitionColumns(spark, tablePath, generations(spark, tablePath))
+
+  /** [[partitionColumns]] over the committed generations `gens` the
+    * caller already listed. */
+  private[graft] def partitionColumns(
+      spark: SparkSession, tablePath: String, gens: Seq[Long]): Seq[String] = {
+    require(gens.nonEmpty, s"no committed generations at $tablePath")
+    MetaCache.get(metaKey(spark, tablePath, gens.max, "pcols")) {
+      Versioned.readSmall(fsOf(spark, tablePath),
+          partitionColumnsPath(tablePath))
+        .map(_.split("\n").filter(_.nonEmpty).toSeq)
+        .getOrElse(inferPartitionColumns(spark, tablePath, gens))
+    }
+  }
+
+  private def inferPartitionColumns(
+      spark: SparkSession, tablePath: String, gens: Seq[Long]): Seq[String] = {
+    val dir = gens.reverse.iterator
       .map(gg => manifestRows(spark, tablePath, gg).headOption.map(_._1))
       .find(_.nonEmpty).flatten
     require(dir.nonEmpty,
-      s"FactVersioned.partitionColumns: generation $g of $tablePath has " +
-        "no partitions (nor does any retained generation) — pass the " +
-        "partition columns explicitly")
+      s"FactVersioned.partitionColumns: generation ${gens.max} of " +
+        s"$tablePath has no partitions (nor does any retained " +
+        "generation) — pass the partition columns explicitly")
     dir.get.split("/").toSeq.map { seg =>
       val eq = seg.indexOf('=')
       require(eq > 0,
@@ -1862,6 +1923,24 @@ object FactVersioned {
         .unescapePathName(seg.substring(0, eq))
     }
   }
+
+  /** The distinct partition tuples `rows` holds, in `partitionCols`
+    * order — the touched set a data commit declares. An unpartitioned
+    * table's one partition (the empty tuple) is always touched: every
+    * data commit restages its root. More than `maxTouched` tuples
+    * fail — that is a rewrite, not an incremental commit. */
+  private[graft] def touchedTuples(
+      rows: DataFrame, partitionCols: Seq[String], maxTouched: Int,
+      who: String): IndexedSeq[Seq[Any]] =
+    if (partitionCols.isEmpty) IndexedSeq(Seq.empty)
+    else {
+      val rs = rows.select(partitionCols.map(col): _*)
+        .distinct().limit(maxTouched + 1).collect()
+      require(rs.length <= maxTouched,
+        s"$who touches more than $maxTouched partitions — this is a " +
+          "rewrite, not an incremental commit")
+      rs.toIndexedSeq.map(r => partitionCols.indices.map(r.get))
+    }
 
   /** [[upsert]] for MULTI-COLUMN partitioned tables: the touched set
     * is the updates' distinct partition TUPLES, each naming one nested
@@ -1879,15 +1958,9 @@ object FactVersioned {
       properties: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Nil,
       preCommit: () => Unit = () => ()): Commit = {
-    require(partitionCols.nonEmpty, "no partition columns given")
-    val touchedRows = updates.select(partitionCols.map(col): _*)
-      .distinct().limit(maxTouchedPartitions + 1).collect()
-    require(touchedRows.length <= maxTouchedPartitions,
-      s"upsertBy touches more than $maxTouchedPartitions partitions — " +
-        "this is a rewrite, not an incremental commit")
+    val touched = touchedTuples(updates, partitionCols,
+      maxTouchedPartitions, "upsertBy")
     requireKeyUnique(updates, keys, "FactVersioned.upsertBy")
-    val touched: Seq[Seq[Any]] = touchedRows.toIndexedSeq
-      .map(r => partitionCols.indices.map(r.get))
     val gens = generations(spark, tablePath)
     val commit =
       if (gens.isEmpty)
@@ -1922,14 +1995,8 @@ object FactVersioned {
       maxTouchedPartitions: Int = 10000,
       properties: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Nil): Commit = {
-    require(partitionCols.nonEmpty, "no partition columns given")
-    val touchedRows = rows.select(partitionCols.map(col): _*)
-      .distinct().limit(maxTouchedPartitions + 1).collect()
-    require(touchedRows.length <= maxTouchedPartitions,
-      s"appendBy touches more than $maxTouchedPartitions partitions — " +
-        "this is a rewrite, not an incremental commit")
-    val touched: Seq[Seq[Any]] = touchedRows.toIndexedSeq
-      .map(r => partitionCols.indices.map(r.get))
+    val touched = touchedTuples(rows, partitionCols, maxTouchedPartitions,
+      "appendBy")
     val gens = generations(spark, tablePath)
     if (gens.isEmpty)
       return replacePartitionsBy(spark, tablePath, rows, partitionCols,
@@ -2049,7 +2116,6 @@ object FactVersioned {
       filesPerPartition: Int = 8,
       properties: Map[String, String] = Map.empty): Commit = {
     require(dirs.nonEmpty, "compactPartitionsBy: no dirs given")
-    require(partitionCols.nonEmpty, "no partition columns given")
     val head = resolveGen(spark, tablePath, None)
     val raw = readFiles(spark, tablePath, head, Some(dirs))
     val pcols = partitionCols.map(col)
@@ -2065,8 +2131,8 @@ object FactVersioned {
           .sortWithinPartitions(pcols :+ col("__graft_z"): _*)
           .drop("__graft_z")
       }
-    val touched: Seq[Seq[Any]] = raw.select(pcols: _*).distinct().collect()
-      .toIndexedSeq.map(r => partitionCols.indices.map(r.get))
+    val touched = touchedTuples(raw, partitionCols, dirs.size,
+      "compactPartitionsBy")
     replacePartitionsBy(spark, tablePath, content, partitionCols, touched,
       retain, basisGen = Some(head), statsCols = statsCols,
       properties = properties)
@@ -3374,11 +3440,7 @@ object FactVersioned {
         org.apache.hadoop.fs.FileUtil.copy(fs, srcDefs, fs,
           defaultsPath(tablePath, next), false,
           spark.sparkContext.hadoopConfiguration)
-      val tf = fs.create(new Path(genMeta(tablePath, next), TouchedFile),
-        true)
-      try tf.write(touchedDirs.mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-      finally tf.close()
+      writeTouched(fs, tablePath, next, touchedDirs)
       val props = properties ++ Map("restored_from" -> gen.toString)
       val pf = fs.create(
         new Path(genMeta(tablePath, next), PropertiesFile), true)

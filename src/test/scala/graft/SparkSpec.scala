@@ -1,12 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.FactVersioned
 
 /** Shared local SparkSession for specs (one per suite, local[4]). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Commit `df` as the whole content of the UNPARTITIONED table at
+    * `path`: its one partition, the root, is declared touched. */
+  def commitWhole(
+      df: DataFrame, path: String, retain: Int = 3): FactVersioned.Commit =
+    FactVersioned.replacePartitionsBy(df.sparkSession, path, df, Nil,
+      Seq(Nil), retain)
 
   override def afterAll(): Unit = () // keep the shared session alive
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{FactVersioned, RetryContract, Upsert, Versioned}
+import graft.operators.{FactVersioned, RetryContract, Upsert}
 
 /** [[GraftCatalog]]: named-table SQL must resolve to EXACTLY the same
   * rows as the path-based generation reads (latest and VERSION AS OF),
@@ -27,17 +27,17 @@ class GraftCatalogSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_cat_").toString
     val path = s"$root/dims"
     val v0 = dim(50)
-    Versioned.commit(v0, path)
+    commitWhole(v0, path)
     val v1 = Upsert.upsert(v0,
       dim(50).where($"id" % 2 === 0).withColumn("v", $"v" * 3), Seq("id"))
-    Versioned.commit(v1, path)
+    commitWhole(v1, path)
     register(root)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "name", "v").as[(Long, String, Long)].collect().toSet
     assert(rows(spark.sql("SELECT * FROM graftt.dims")) ==
-      rows(Versioned.read(spark, path)))
+      rows(FactVersioned.read(spark, path)))
     assert(rows(spark.sql("SELECT * FROM graftt.dims VERSION AS OF 0")) ==
-      rows(Versioned.read(spark, path, Some(0L))))
+      rows(FactVersioned.read(spark, path, Some(0L))))
     assert(rows(spark.sql("SELECT * FROM graftt.dims VERSION AS OF 0")) !=
       rows(spark.sql("SELECT * FROM graftt.dims")))
   }
@@ -84,11 +84,11 @@ class GraftCatalogSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_cat_").toString
     val path = s"$root/dims"
     val v0 = dim(20)
-    Versioned.commit(v0, path)
+    commitWhole(v0, path)
     Thread.sleep(1100) // marker mtimes are second-granular on some FS
     val between = java.time.Instant.now()
     Thread.sleep(1100)
-    Versioned.commit(
+    commitWhole(
       Upsert.upsert(v0, dim(20).withColumn("v", $"v" + 1), Seq("id")), path)
     register(root)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -98,11 +98,11 @@ class GraftCatalogSpec extends SparkSpec {
       .withZone(java.time.ZoneOffset.UTC)
     val asOf = spark.sql(
       s"SELECT * FROM graftt.dims TIMESTAMP AS OF '${fmt.format(between)}'")
-    assert(rows(asOf) == rows(Versioned.read(spark, path, Some(0L))))
+    assert(rows(asOf) == rows(FactVersioned.read(spark, path, Some(0L))))
     val now = spark.sql(
       s"SELECT * FROM graftt.dims TIMESTAMP AS OF " +
         s"'${fmt.format(java.time.Instant.now())}'")
-    assert(rows(now) == rows(Versioned.read(spark, path, Some(1L))))
+    assert(rows(now) == rows(FactVersioned.read(spark, path, Some(1L))))
     intercept[Exception] {
       spark.sql(
         "SELECT * FROM graftt.dims TIMESTAMP AS OF '1999-01-01 00:00:00'")
@@ -131,7 +131,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("SHOW TABLES lists the versioned tables under the root") {
     val root = Files.createTempDirectory("graft_cat_").toString
-    Versioned.commit(dim(5), s"$root/dtable")
+    commitWhole(dim(5), s"$root/dtable")
     val f = (1 to 6).map(i => (i.toLong, i % 2, i * 1.0)).toDF("k", "p", "x")
     FactVersioned.upsert(spark, s"$root/ftable", f, Seq("k"), "p")
     // a non-table dir must not be listed
@@ -161,12 +161,12 @@ class GraftCatalogSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/t2").exists())
     // mutation DDL on real tables still rejected (ADD/DROP COLUMN are
     // the allowed changes — metadata-scale evolution, tested
-    // separately; DROP COLUMN on a dim commits a fresh full copy)
-    Versioned.commit(dim(5), s"$root/dt")
+    // separately; DROP COLUMN on a dim is a metadata-only commit)
+    commitWhole(dim(5), s"$root/dt")
     spark.sql("ALTER TABLE graftt.dt DROP COLUMN v").collect()
     assert(!spark.table("graftt.dt").columns.contains("v"),
-      "dim DROP COLUMN must commit a narrowed full copy")
-    // dim RENAME: a fresh full-copy generation under the new name
+      "dim DROP COLUMN must narrow the head's schema")
+    // dim RENAME: a metadata-only commit under the new name
     spark.sql("ALTER TABLE graftt.dt RENAME COLUMN name TO nm").collect()
     assert(spark.table("graftt.dt").columns.contains("nm"))
     intercept[Exception] {
@@ -203,7 +203,7 @@ class GraftCatalogSpec extends SparkSpec {
         "SELECT 99L AS k, 0 AS p, 1L AS v")
       assert(spark.table("graftt.tf").count() == 1)
       // dimension tables truncate the same way
-      Versioned.commit(dim(5), s"$root/td")
+      commitWhole(dim(5), s"$root/td")
       spark.sql("TRUNCATE TABLE graftt.td")
       assert(spark.table("graftt.td").count() == 0)
       assert(spark.sql("SELECT * FROM graftt.td VERSION AS OF 0")
@@ -235,7 +235,7 @@ class GraftCatalogSpec extends SparkSpec {
     // the pinned reader fails LOUDLY (files gone), never half-answers
     intercept[Exception] { pinned.collect() }
     // dimension table purges too
-    Versioned.commit(dim(5), s"$root/pd")
+    commitWhole(dim(5), s"$root/pd")
     spark.sql("DROP TABLE graftt.pd PURGE").collect()
     assert(!new java.io.File(s"$root/pd").exists())
     // purging nothing fails loudly
@@ -283,10 +283,10 @@ class GraftCatalogSpec extends SparkSpec {
     intercept[Exception] {
       spark.sql("ALTER TABLE graftt.fa ADD COLUMN note STRING").collect()
     }
-    // dimensions evolve by full-copy commit
-    Versioned.commit(dim(5), s"$root/da")
+    // dimensions evolve by the same metadata-only commit
+    commitWhole(dim(5), s"$root/da")
     spark.sql("ALTER TABLE graftt.da ADD COLUMN z INT")
-    assert(Versioned.generations(spark, s"$root/da") == Seq(0L, 1L))
+    assert(FactVersioned.generations(spark, s"$root/da") == Seq(0L, 1L))
     assert(spark.sql("SELECT z FROM graftt.da")
       .collect().forall(_.isNullAt(0)))
     assert(!spark.sql("SELECT * FROM graftt.da VERSION AS OF 0")
@@ -329,11 +329,11 @@ class GraftCatalogSpec extends SparkSpec {
       "generation; the old generation still time-travels") {
     val root = Files.createTempDirectory("graft_cat_").toString
     val path = s"$root/dims"
-    Versioned.commit(dim(10), path)
+    commitWhole(dim(10), path)
     register(root)
     spark.sql(
       "INSERT INTO graftt.dims VALUES (100, 's100', 1000)")
-    assert(Versioned.generations(spark, path) == Seq(0L, 1L))
+    assert(FactVersioned.generations(spark, path) == Seq(0L, 1L))
     assert(spark.sql("SELECT count(*) FROM graftt.dims")
       .as[Long].head() === 11L)
     assert(spark.sql("SELECT count(*) FROM graftt.dims VERSION AS OF 0")
@@ -418,10 +418,10 @@ class GraftCatalogSpec extends SparkSpec {
     intercept[UnsupportedOperationException] {
       spark.sql("DROP TABLE graftt.ctas_fact")
     }
-    // dimension CTAS: unpartitioned → full-copy Versioned store
+    // dimension CTAS: unpartitioned → one root partition per generation
     spark.sql(
       "CREATE TABLE graftt.ctas_dim AS SELECT k, v FROM ctas_src")
-    assert(Versioned.generations(spark, s"$root/ctas_dim") == Seq(0L))
+    assert(FactVersioned.generations(spark, s"$root/ctas_dim") == Seq(0L))
     assert(spark.sql("SELECT COUNT(*) FROM graftt.ctas_dim")
       .head().getLong(0) == 60L)
     // multi-column identity partitioning creates a nested-leaf fact
@@ -754,7 +754,7 @@ class GraftCatalogSpec extends SparkSpec {
         r.getString(1) == "ingest-v2"))
     // dims: table-root record
     val dpath = s"$root/dt"
-    Versioned.commit(
+    commitWhole(
       (1 to 4).map(i => (i.toLong, i * 10L)).toDF("k", "v"), dpath,
       retain = 5)
     spark.sql("ALTER TABLE grafttp.dt SET TBLPROPERTIES ('team' = 'ml')")
@@ -802,8 +802,131 @@ class GraftCatalogSpec extends SparkSpec {
     spark.sql("CREATE TABLE graftt.tr AS SELECT 1L AS a, 2L AS b")
     assert(spark.sql("SELECT a FROM graftt.tr").as[Long].head() == 1L)
     // dimension tables rename through the same door
-    Versioned.commit(dim(5), s"$root/dr")
+    commitWhole(dim(5), s"$root/dr")
     spark.sql("ALTER TABLE graftt.dr RENAME TO dr2")
     assert(spark.sql("SELECT count(*) FROM graftt.dr2").as[Long].head() == 5L)
+  }
+
+  test("INSERT lands on a table whose retained generations are all " +
+      "empty (retain=1, CTAS, TRUNCATE): the partition columns come " +
+      "from the table's record, partitioned or not") {
+    val root = Files.createTempDirectory("graft_cat_empty_").toString
+    spark.conf.set("spark.sql.catalog.graftre",
+      classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftre.root", root)
+    spark.conf.set("spark.sql.catalog.graftre.retain", "1")
+    try {
+      Seq("pe" -> Seq("p"), "ue" -> Nil).foreach { case (t, pcols) =>
+        val path = s"$root/$t"
+        val part =
+          if (pcols.isEmpty) "" else s"PARTITIONED BY (${pcols.mkString(",")})"
+        spark.sql(s"""CREATE TABLE graftre.$t $part AS
+          |SELECT id AS k, CAST(id % 2 AS INT) AS p
+          |FROM range(4)""".stripMargin)
+        spark.sql(s"TRUNCATE TABLE graftre.$t")
+        assert(FactVersioned.generations(spark, path) == Seq(1L), t)
+        assert(spark.table(s"graftre.$t").count() == 0, t)
+        spark.sql(s"INSERT INTO graftre.$t BY NAME SELECT 7L AS k, 1 AS p")
+        assert(spark.table(s"graftre.$t").select("k", "p")
+          .as[(Long, Int)].collect().toSeq == Seq((7L, 1)), t)
+        assert(FactVersioned.partitionColumns(spark, path) == pcols, t)
+      }
+    } finally spark.conf.unset("spark.sql.catalog.graftre.retain")
+  }
+
+  test("door parity: one SQL sequence leaves the same logical rows on a " +
+      "partitioned and an unpartitioned table after every step") {
+    val root = Files.createTempDirectory("graft_cat_parity_").toString
+    val s = GraftDml.enable(spark)
+    s.conf.set("spark.sql.catalog.gp", classOf[GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.gp.root", root)
+    s.conf.set("spark.sql.catalog.gp.retain", "30")
+    // (table name, CTAS partition clause); names follow the RENAME step
+    val tables = Seq("pt" -> "PARTITIONED BY (p)", "ut" -> "")
+    var names = tables.map(_._1)
+    def rowsOf(t: String, at: String = ""): Seq[String] = {
+      val df = s.sql(s"SELECT * FROM gp.$t $at")
+      df.select(df.columns.filterNot(_ == FactVersioned.VGenCol).sorted
+        .map(col).toIndexedSeq: _*).collect().map(_.toString).sorted.toSeq
+    }
+    def headGen(t: String): Long =
+      FactVersioned.generations(s, s"$root/$t").max
+    val fmt = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
+      .withZone(java.time.ZoneOffset.UTC)
+    var beforeTruncate = Map.empty[String, Long]
+    s.createDataFrame(
+        Seq((6L, 0, 600L, (6, "m6")), (20L, 2, 200L, (20, "m20"))))
+      .toDF("k", "p", "v", "st0")
+      .selectExpr("k", "p", "v", "named_struct('a', st0._1, 'b', st0._2) AS st")
+      .createOrReplaceTempView("parity_src")
+    val steps: Seq[(String, String => Unit)] = Seq(
+      "CTAS" -> { t =>
+        s.sql(s"""CREATE TABLE gp.$t ${tables.toMap.getOrElse(t, "")} AS
+          |SELECT id AS k, CAST(id % 3 AS INT) AS p, id * 10 AS v,
+          |  named_struct('a', CAST(id AS INT), 'b', concat('n', id)) AS st
+          |FROM range(1, 13)""".stripMargin) },
+      "INSERT" -> { t =>
+        s.sql(s"""INSERT INTO gp.$t BY NAME
+          |SELECT 13L AS k, 1 AS p, 130L AS v,
+          |  named_struct('a', 13, 'b', 'n13') AS st""".stripMargin) },
+      "UPDATE" -> (t => s.sql(s"UPDATE gp.$t SET v = v + 1 WHERE k <= 4")),
+      "DELETE" -> (t => s.sql(s"DELETE FROM gp.$t WHERE k = 5")),
+      "MERGE" -> { t =>
+        s.sql(s"""MERGE INTO gp.$t t USING parity_src s ON t.k = s.k
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin) },
+      "ADD COLUMN" -> (t => s.sql(s"ALTER TABLE gp.$t ADD COLUMN w STRING")),
+      "RENAME COLUMN" ->
+        (t => s.sql(s"ALTER TABLE gp.$t RENAME COLUMN v TO amount")),
+      "DROP COLUMN" -> (t => s.sql(s"ALTER TABLE gp.$t DROP COLUMN w")),
+      "ALTER TYPE (nested)" ->
+        (t => s.sql(s"ALTER TABLE gp.$t ALTER COLUMN st.a TYPE BIGINT")),
+      "SET TBLPROPERTIES" ->
+        (t => s.sql(s"ALTER TABLE gp.$t SET TBLPROPERTIES ('team' = 'x')")),
+      "ADD CONSTRAINT" -> (t =>
+        s.sql(s"ALTER TABLE gp.$t ADD CONSTRAINT pos CHECK (amount > 0)")),
+      "TRUNCATE" -> { t =>
+        beforeTruncate += t -> headGen(t)
+        s.sql(s"TRUNCATE TABLE gp.$t") },
+      "RESTORE" -> (t => s.sql(
+        s"RESTORE TABLE gp.$t TO VERSION AS OF ${beforeTruncate(t)}")),
+      "OPTIMIZE" -> (t => s.sql(s"OPTIMIZE gp.$t")),
+      "VACUUM" -> (t => s.sql(s"VACUUM gp.$t RETAIN 30 GENERATIONS")))
+    steps.foreach { case (step, run) =>
+      names.foreach(run)
+      assert(rowsOf(names(0)) == rowsOf(names(1)), s"after $step")
+    }
+    assert(rowsOf("pt").length == 13)
+    assert(s.table("gp.pt").schema("st").dataType ==
+      s.table("gp.ut").schema("st").dataType)
+    // time travel: VERSION AS OF 0 is the CTAS, TIMESTAMP AS OF now is
+    // the head
+    assert(rowsOf("pt", "VERSION AS OF 0") == rowsOf("ut", "VERSION AS OF 0"))
+    assert(rowsOf("ut", "VERSION AS OF 0").length == 12)
+    Thread.sleep(5)
+    val now = s"TIMESTAMP AS OF '${fmt.format(java.time.Instant.now())}'"
+    assert(rowsOf("pt", now) == rowsOf("pt") && rowsOf("ut", now) ==
+      rowsOf("ut"))
+    // history: every commit of both tables carries its operation
+    names.foreach { t =>
+      val ops = s.sql(s"DESCRIBE HISTORY gp.$t")
+        .select("properties").collect()
+        .flatMap(r => Option(r.getMap[String, String](0)))
+        .flatMap(_.get("operation")).toSet
+      assert(Set("CREATE TABLE AS SELECT", "INSERT", "MERGE", "DELETE",
+        "TRUNCATE", "RESTORE").subsetOf(ops), s"$t: $ops")
+    }
+    // detail: the kind follows the partitioning
+    assert(s.sql("DESCRIBE DETAIL gp.pt").select("kind").as[String].head() ==
+      "fact")
+    assert(s.sql("DESCRIBE DETAIL gp.ut").select("kind").as[String].head() ==
+      "dim")
+    // table RENAME, then PURGE
+    names.foreach(t => s.sql(s"ALTER TABLE gp.$t RENAME TO ${t}2"))
+    names = names.map(_ + "2")
+    assert(rowsOf(names(0)) == rowsOf(names(1)))
+    names.foreach(t => s.sql(s"DROP TABLE gp.$t PURGE"))
+    names.foreach(t => assert(!s.catalog.tableExists(s"gp.$t"), t))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{FactVersioned, Versioned}
+import graft.operators.FactVersioned
 
 /** [[GraftDml]]: SQL MERGE/DELETE over catalog tables route through
   * the versioned committers — upsert semantics hash-equal to the API
@@ -181,14 +181,14 @@ class GraftDmlSpec extends SparkSpec {
     assert(now.size == 91)
     // dim door
     val dimPath = s"$wh/dioi"
-    Versioned.commit((1 to 5).map(i => (i.toLong, s"n$i")).toDF("k", "name"),
+    commitWhole((1 to 5).map(i => (i.toLong, s"n$i")).toDF("k", "name"),
       dimPath)
     s.createDataset(Seq((1L, "one"), (9L, "nine"))).toDF("k", "name")
       .createOrReplaceTempView("ioi_dim")
     s.sql(
       """MERGE INTO g.dioi t USING ioi_dim s ON t.k = s.k
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val dn = Versioned.read(s, dimPath).as[(Long, String)].collect().toMap
+    val dn = FactVersioned.read(s, dimPath).as[(Long, String)].collect().toMap
     assert(dn(1L) == "n1" && dn(9L) == "nine" && dn.size == 6)
     // partial INSERT: unassigned columns are NULL (the Delta posture)
     s.createDataset(Seq(Tuple1(500L))).toDF("k")
@@ -249,9 +249,10 @@ class GraftDmlSpec extends SparkSpec {
           |WHEN NOT MATCHED BY SOURCE AND t.v > 5 THEN DELETE""".stripMargin)
     }
     assert(e2.getMessage.contains("partition column"))
-    // dim full sync: unmatched rows go, no scoping needed (full-copy)
+    // dim full sync: unmatched rows go, no scoping needed (one root
+    // partition)
     val dimPath = s"$wh/dsync"
-    Versioned.commit((1 to 10).map(i => (i.toLong, s"n$i")).toDF("k", "name"),
+    commitWhole((1 to 10).map(i => (i.toLong, s"n$i")).toDF("k", "name"),
       dimPath)
     s.createDataset(Seq((2L, "two"), (11L, "eleven"))).toDF("k", "name")
       .createOrReplaceTempView("dim_sync")
@@ -260,7 +261,7 @@ class GraftDmlSpec extends SparkSpec {
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *
         |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
-    val dn = Versioned.read(s, dimPath).as[(Long, String)].collect().toMap
+    val dn = FactVersioned.read(s, dimPath).as[(Long, String)].collect().toMap
     assert(dn == Map(2L -> "two", 11L -> "eleven"))
   }
 
@@ -389,7 +390,7 @@ class GraftDmlSpec extends SparkSpec {
     }.get
     val cmd = GraftDeleteCommand(filter.child,
       new AnalyzedCondition(filter.condition), path,
-      basisGen = Some(0L), retain = 3)
+      basisGen = 0L, retain = 3)
     // a foreign committer lands on the SAME partition after resolution
     FactVersioned.upsert(s, path,
       Seq((3L, 0, 777L)).toDF("k", "p", "v"), Seq("k"), "p")
@@ -400,13 +401,48 @@ class GraftDmlSpec extends SparkSpec {
     // nothing of the stale delete landed; the foreign commit survives
     assert(FactVersioned.generations(s, path) == Seq(0L, 1L))
     assert(rows(FactVersioned.read(s, path)).contains((3L, 0, 777L)))
+
+    // an UNPARTITIONED table: every data commit touches its one root
+    // partition, so a statement resolved before a foreign INSERT
+    // conflicts instead of committing a stale copy that drops the row
+    val wh = Files.createTempDirectory("graft_dml_lost_").toString
+    s.conf.set("spark.sql.catalog.gl", classOf[GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.gl.root", wh)
+    s.createDataset(Seq((2L, "two"), (30L, "thirty"))).toDF("k", "name")
+      .createOrReplaceTempView("lost_src")
+    Seq(
+      "UPDATE gl.d0 SET name = 'x' WHERE k = 1",
+      """MERGE INTO gl.d1 t USING lost_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin,
+      "DELETE FROM gl.d2 WHERE k = 3"
+    ).zipWithIndex.foreach { case (stmt, i) =>
+      val dpath = s"$wh/d$i"
+      commitWhole((1 to 5).map(i => (i.toLong, s"n$i")).toDF("k", "name"),
+        dpath)
+      // analyzed, not run: the graft command pins basis generation 0
+      val resolved = s.sessionState.executePlan(
+        s.sessionState.sqlParser.parsePlan(stmt)).analyzed
+      assert(resolved.isInstanceOf[
+        org.apache.spark.sql.execution.command.LeafRunnableCommand],
+        s"not routed to a graft command: $resolved")
+      s.sql(s"INSERT INTO gl.d$i (k, name) VALUES (99, 'foreign')")
+      intercept[java.util.ConcurrentModificationException] {
+        resolved.asInstanceOf[
+          org.apache.spark.sql.execution.command.LeafRunnableCommand].run(s)
+      }
+      assert(FactVersioned.generations(s, dpath) == Seq(0L, 1L), stmt)
+      assert(FactVersioned.read(s, dpath).as[(Long, String)].collect()
+        .toSet == (1 to 5).map(i => (i.toLong, s"n$i")).toSet +
+          ((99L, "foreign")), stmt)
+    }
   }
 
   test("DML over a dimension (full-copy) table: merge and delete " +
       "commit fresh generations with the expected content") {
     val wh = Files.createTempDirectory("graft_dml_dim_").toString
     val path = s"$wh/d"
-    Versioned.commit((1 to 20).map(i => (i.toLong, s"n$i")).toDF("k", "name"),
+    commitWhole((1 to 20).map(i => (i.toLong, s"n$i")).toDF("k", "name"),
       path)
     val s = GraftDml.enable(spark)
     s.conf.set("spark.sql.catalog.g", classOf[GraftCatalog].getName)
@@ -417,13 +453,13 @@ class GraftDmlSpec extends SparkSpec {
       """MERGE INTO g.d t USING dsrc s ON t.k = s.k
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    val now = Versioned.read(s, path)
+    val now = FactVersioned.read(s, path)
       .as[(Long, String)].collect().toMap
     assert(now(5L) == "five" && now(21L) == "new" && now(6L) == "n6")
     s.sql("DELETE FROM g.d WHERE k <= 3")
-    assert(Versioned.read(s, path).count() == 18)
+    assert(FactVersioned.read(s, path).count() == 18)
     s.sql("UPDATE g.d SET name = concat(name, '!') WHERE k = 10")
-    assert(Versioned.read(s, path).where(col("k") === 10)
+    assert(FactVersioned.read(s, path).where(col("k") === 10)
       .select("name").as[String].head() == "n10!")
   }
 
@@ -450,9 +486,9 @@ class GraftDmlSpec extends SparkSpec {
     assert(messagesOf(e).contains("cardinality violation"), messagesOf(e))
     assert(FactVersioned.generations(s, path) == Seq(0L),
       "a rejected MERGE must not commit")
-    // dim door: same source shape over a full-copy table
+    // dim door: same source shape over an unpartitioned table
     val dimPath = s"$wh/ddup"
-    Versioned.commit((1 to 10).map(i => (i.toLong, s"n$i")).toDF("k", "name"),
+    commitWhole((1 to 10).map(i => (i.toLong, s"n$i")).toDF("k", "name"),
       dimPath)
     s.createDataset(Seq((5L, "a"), (5L, "b"))).toDF("k", "name")
       .createOrReplaceTempView("dup_dim_src")
@@ -463,7 +499,7 @@ class GraftDmlSpec extends SparkSpec {
           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     }
     assert(messagesOf(e2).contains("cardinality violation"), messagesOf(e2))
-    assert(Versioned.generations(s, dimPath).length == 1,
+    assert(FactVersioned.generations(s, dimPath).length == 1,
       "a rejected dim MERGE must not commit")
   }
 
@@ -703,8 +739,8 @@ class GraftDmlSpec extends SparkSpec {
       }
       assert(messagesOf(e).contains("DROPPED"), messagesOf(e))
       // dimension tables widen through the same door (alterTable →
-      // a widened full-copy generation, then the append)
-      Versioned.commit((1 to 5).map(i => (i.toLong, s"n$i"))
+      // a metadata-only widening commit, then the append)
+      commitWhole((1 to 5).map(i => (i.toLong, s"n$i"))
         .toDF("k", "name"), s"${path.stripSuffix("/t")}/d")
       s.sql("INSERT INTO g.d BY NAME " +
         "SELECT 6L AS k, 'n6' AS name, 'x' AS tag")
@@ -831,7 +867,7 @@ class GraftDmlSpec extends SparkSpec {
       "(full-copy commit, no scoping needed)") {
     val wh = Files.createTempDirectory("graft_dml_dimbs_").toString
     val path = s"$wh/d"
-    Versioned.commit(
+    commitWhole(
       (1 to 10).map(i => (i.toLong, s"n$i", 0)).toDF("k", "name", "stale"),
       path)
     val s = GraftDml.enable(spark)
@@ -843,7 +879,7 @@ class GraftDmlSpec extends SparkSpec {
       """MERGE INTO g.d t USING dim_feed s ON t.k = s.k
         |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET stale = 1
         |""".stripMargin)
-    val now = Versioned.read(s, path)
+    val now = FactVersioned.read(s, path)
       .select("k", "stale").as[(Long, Int)].collect().toMap
     assert((1 to 3).forall(i => now(i.toLong) == 0))
     assert((4 to 10).forall(i => now(i.toLong) == 1))

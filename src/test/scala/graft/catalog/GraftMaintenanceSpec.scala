@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{FactVersioned, Versioned}
+import graft.operators.FactVersioned
 
 /** SQL maintenance statements (OPTIMIZE / VACUUM / DESCRIBE HISTORY)
   * route through the stores' maintenance APIs; everything else still
@@ -84,24 +84,24 @@ class GraftMaintenanceSpec extends SparkSpec {
       "full-copy generation, VACUUM expires, HISTORY lists") {
     val wh = Files.createTempDirectory("graft_maint_dim_").toString
     val path = s"$wh/d"
-    Versioned.commit((1 to 50).map(i => (i.toLong, s"n$i")).toDF("k", "name")
+    commitWhole((1 to 50).map(i => (i.toLong, s"n$i")).toDF("k", "name")
       .repartition(8), path)
-    Versioned.commit((1 to 50).map(i => (i.toLong, s"m$i")).toDF("k", "name")
+    commitWhole((1 to 50).map(i => (i.toLong, s"m$i")).toDF("k", "name")
       .repartition(8), path)
     val s = GraftDml.enable(spark)
     s.conf.set("spark.sql.catalog.g", classOf[GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.g.root", wh)
-    val before = Versioned.read(s, path)
+    val before = FactVersioned.read(s, path)
       .as[(Long, String)].collect().toSet
     s.sql("OPTIMIZE g.d")
-    assert(Versioned.generations(s, path) == Seq(0L, 1L, 2L))
-    assert(Versioned.read(s, path).as[(Long, String)].collect().toSet
+    assert(FactVersioned.generations(s, path) == Seq(0L, 1L, 2L))
+    assert(FactVersioned.read(s, path).as[(Long, String)].collect().toSet
       == before)
     assert(s.sql("DESCRIBE HISTORY g.d").collect()
       .map(_.getLong(0)).toSeq == Seq(2L, 1L, 0L))
     assert(s.sql("VACUUM g.d RETAIN 1 GENERATIONS").collect()
       .map(_.getLong(0)).toSeq == Seq(0L, 1L))
-    assert(Versioned.generations(s, path) == Seq(2L))
+    assert(FactVersioned.generations(s, path) == Seq(2L))
   }
 
   test("OPTIMIZE WHERE scopes the compaction to matching partitions " +
@@ -298,17 +298,17 @@ class GraftMaintenanceSpec extends SparkSpec {
       .select("k", "p", "v").as[(Long, Int, Long)].collect().toSet
     assert(afterDml == gen0.map { case (k, p, v) =>
       (k, p, if (p == 1 && k <= 4) v + 5 else v) })
-    // dims restore by full copy
+    // dims restore the same metadata-only way
     val wh2 = Files.createTempDirectory("graft_maint_restore_dim_").toString
-    Versioned.commit((1 to 5).map(i => (i.toLong, s"a$i")).toDF("k", "n"),
+    commitWhole((1 to 5).map(i => (i.toLong, s"a$i")).toDF("k", "n"),
       s"$wh2/d")
-    Versioned.commit((1 to 5).map(i => (i.toLong, s"b$i")).toDF("k", "n"),
+    commitWhole((1 to 5).map(i => (i.toLong, s"b$i")).toDF("k", "n"),
       s"$wh2/d")
     val s2 = GraftDml.enable(spark)
     s2.conf.set("spark.sql.catalog.g2", classOf[GraftCatalog].getName)
     s2.conf.set("spark.sql.catalog.g2.root", wh2)
     s2.sql("RESTORE g2.d TO VERSION AS OF 0")
-    assert(Versioned.read(s2, s"$wh2/d").select("n").as[String]
+    assert(FactVersioned.read(s2, s"$wh2/d").select("n").as[String]
       .collect().toSet == (1 to 5).map(i => s"a$i").toSet)
   }
 
@@ -323,7 +323,7 @@ class GraftMaintenanceSpec extends SparkSpec {
     assert(r.getLong(3) == 3L && r.getLong(4) == 2L)
     assert(r.getLong(5) > 0L && r.getLong(6) > 0L && r.getLong(7) == 3L)
     // dims
-    Versioned.commit((1 to 5).map(i => (i.toLong, s"n$i")).toDF("k", "n"),
+    commitWhole((1 to 5).map(i => (i.toLong, s"n$i")).toDF("k", "n"),
       s"$wh/dd")
     val dd = s.sql("DESCRIBE DETAIL g.dd").collect().head
     assert(dd.getString(0) == "dim" && dd.getLong(3) == 1L &&

@@ -6,14 +6,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{FactVersioned, Versioned}
+import graft.operators.FactVersioned
 
 /** SQL `INSERT OVERWRITE` (VERDICT r15 Next #5): static PARTITION
   * specs replace exactly the named partitions through
   * [[FactVersioned.replacePartitionsBy]] (write-amp ∝ the spec, other
   * partitions carried byte-identical), the spec-less spelling replaces
-  * the whole head as one versioned commit, dims full-copy — and time
-  * travel keeps the pre-overwrite content in every case. */
+  * the whole head as one versioned commit (an unpartitioned table's
+  * one root partition) — and time travel keeps the pre-overwrite
+  * content in every case. */
 class InsertOverwriteSpec extends SparkSpec {
   import spark.implicits._
 
@@ -176,14 +177,14 @@ class InsertOverwriteSpec extends SparkSpec {
       classOf[GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.graftow3.root", wh)
     val path = s"$wh/dt"
-    Versioned.commit(base(8), path, retain = 5)
+    commitWhole(base(8), path, retain = 5)
     s.sql(
       """INSERT OVERWRITE graftow3.dt
         |SELECT k + 100 AS k, p, v FROM graftow3.dt WHERE p = 2
         |""".stripMargin)
-    val now = Versioned.read(spark, path)
+    val now = FactVersioned.read(spark, path)
     assert(now.count() == base(8).where(col("p") === 2).count())
     assert(now.where(col("k") <= 100).count() == 0)
-    assert(Versioned.read(spark, path, Some(0L)).count() == 8)
+    assert(FactVersioned.read(spark, path, Some(0L)).count() == 8)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{FactVersioned, Versioned}
+import graft.operators.FactVersioned
 
 /** `ALTER TABLE ADD/DROP CONSTRAINT ... CHECK` (r17 — VERDICT r16 Next
   * #4): constraints persist per generation (fact) / at the table root
@@ -137,7 +137,7 @@ class TableConstraintSpec extends SparkSpec {
       "record and enforce on INSERT and UPDATE") {
     val wh = tmp()
     val path = s"$wh/dim"
-    Versioned.commit(
+    commitWhole(
       Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "name", "score"),
       path, retain = 5)
     val s = GraftDml.enable(spark)
@@ -146,21 +146,21 @@ class TableConstraintSpec extends SparkSpec {
     s.conf.set("spark.sql.catalog.graftcd.root", wh)
     s.sql("ALTER TABLE graftcd.dim ADD CONSTRAINT pos CHECK (score > 0)")
     val recorded = GraftCatalog.decodeConstraints(
-      GraftCatalog.readDimProps(s, path))
+      FactVersioned.tableProperties(s, path))
     assert(recorded.length == 1 && recorded.head.name() == "pos")
     val viol = intercept[Throwable] {
       s.sql("INSERT INTO graftcd.dim VALUES (3, 'c', -1)")
     }
     assert(causeMessages(viol).exists(m =>
       m.contains("pos") || m.toLowerCase.contains("check")))
-    assert(Versioned.read(s, path).count() == 2)
+    assert(FactVersioned.read(s, path).count() == 2)
     val uviol = intercept[Throwable] {
       s.sql("UPDATE graftcd.dim SET score = -7 WHERE id = 1")
     }
     assert(causeMessages(uviol).exists(m =>
       m.contains("pos") || m.toLowerCase.contains("check")))
     s.sql("INSERT INTO graftcd.dim VALUES (3, 'c', 30)")
-    assert(Versioned.read(s, path).count() == 3)
+    assert(FactVersioned.read(s, path).count() == 3)
   }
 
   test("CREATE TABLE with an inline CONSTRAINT clause is rejected " +

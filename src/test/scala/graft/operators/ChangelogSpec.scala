@@ -84,8 +84,8 @@ class ChangelogSpec extends SparkSpec {
     // the same via two committed generations
     val path = java.nio.file.Files
       .createTempDirectory("graft_gdiff").toString + "/t"
-    Versioned.commit(current, path)
-    Versioned.commit(next, path)
+    commitWhole(current, path)
+    commitWhole(next, path)
     val diff = Changelog.generationDiff(spark, path, 0L, 1L, Seq("k"))
       .collect().map(r => (r.getAs[String]("op"), r.getAs[Long]("k")))
       .toSet

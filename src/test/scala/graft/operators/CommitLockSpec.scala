@@ -150,7 +150,7 @@ class CommitLockSpec extends SparkSpec {
       e.getMessage.contains(CommitLock.AssumeAtomicKey), e.getMessage)
     // dim-store creation rejects identically
     intercept[UnsupportedOperationException] {
-      Versioned.commit(df, s"$root/d")
+      commitWhole(df, s"$root/d")
     }
     try {
       // the documented opt-in unlocks the store

@@ -268,9 +268,9 @@ class NestedEvolutionSpec extends SparkSpec {
       .filterNot(c => c == FactVersioned.VGenCol || c == "p")
     assert(cols2 == Seq("lead", "k", "c1", "c2", "midway", "meta"),
       s"statement-order positioning must hold, got $cols2")
-    // dim: same surface, full-copy
+    // dim (unpartitioned): same surface, same metadata-only commit
     val dpath = s"$wh/dt"
-    Versioned.commit((1 to 4).map(i => (i.toLong, i * 10L)).toDF("k", "v"),
+    commitWhole((1 to 4).map(i => (i.toLong, i * 10L)).toDF("k", "v"),
       dpath, retain = 5)
     s.sql("ALTER TABLE graftpos.dt ADD COLUMN tag STRING FIRST")
     assert(s.sql("SELECT * FROM graftpos.dt").columns.toSeq ==
@@ -305,8 +305,8 @@ class NestedEvolutionSpec extends SparkSpec {
     s.sql("ALTER TABLE g2.f DROP COLUMN meta.score")
     assert(s.table("g2.f").schema("meta").dataType
       .asInstanceOf[StructType].fieldNames.toSeq == Seq("src", "lang"))
-    // dimension: full-copy reshape
-    Versioned.commit(base(4), s"$wh/d")
+    // dimension (unpartitioned): the same metadata-only reshape
+    commitWhole(base(4), s"$wh/d")
     s.sql("ALTER TABLE g2.d ADD COLUMN meta.lang STRING")
     assert(s.table("g2.d").schema("meta").dataType
       .asInstanceOf[StructType].fieldNames.toSeq ==
@@ -489,8 +489,8 @@ class NestedEvolutionSpec extends SparkSpec {
         |  CAST(NULL AS BIGINT) AS vgen""".stripMargin)
     assert(s.sql("SELECT meta.points FROM g3.f WHERE k = 100")
       .as[Long].head() == 77L)
-    // dimension: full-copy reshape through the same statement
-    Versioned.commit(base(4), s"$wh/d")
+    // dimension (unpartitioned): the same statement, same commit
+    commitWhole(base(4), s"$wh/d")
     s.sql("ALTER TABLE g3.d RENAME COLUMN meta.score TO points")
     assert(s.sql("SELECT meta.points FROM g3.d").as[Long]
       .collect().toSet == (1 to 4).map(_ * 10L).toSet)
@@ -580,8 +580,8 @@ class NestedEvolutionSpec extends SparkSpec {
         |  'gold' AS tier, CAST(NULL AS BIGINT) AS vgen""".stripMargin)
     assert(s.sql("SELECT tier FROM g4.f WHERE k = 100")
       .as[String].head() == "gold")
-    // dimension: the full-copy generation materializes the default
-    Versioned.commit(base(4), s"$wh/d")
+    // dimension (unpartitioned): the default fills carried files
+    commitWhole(base(4), s"$wh/d")
     s.sql("ALTER TABLE g4.d ADD COLUMN tier STRING DEFAULT 'dim'")
     assert(s.sql("SELECT tier FROM g4.d").as[String]
       .collect().toSeq == Seq.fill(4)("dim"))

@@ -98,9 +98,9 @@ class TableRenameSpec extends SparkSpec {
   test("dimension rename: the full-copy store moves the same way") {
     val root = tmp()
     val a = s"$root/da"
-    Versioned.commit(base(8), a, retain = 5)
-    Versioned.commit(base(8).withColumn("v", col("v") + 1), a, retain = 5)
-    val before = Versioned.read(spark, a)
+    commitWhole(base(8), a, retain = 5)
+    commitWhole(base(8).withColumn("v", col("v") + 1), a, retain = 5)
+    val before = FactVersioned.read(spark, a)
       .as[(Long, Int, Long)].collect().toSet
     val s = catalog("gtrd", root)
     s.sql("ALTER TABLE gtrd.da RENAME TO db")
@@ -108,7 +108,7 @@ class TableRenameSpec extends SparkSpec {
       .as[(Long, Int, Long)].collect().toSet == before)
     assert(s.sql("SELECT count(*) FROM gtrd.db VERSION AS OF 0")
       .as[Long].head() == 8L)
-    assert(Versioned.generations(spark, a) == Seq(0L, 1L))
+    assert(FactVersioned.generations(spark, a) == Seq(0L, 1L))
     assert(!fsOf(a).exists(new Path(s"$root/db")))
     val e = intercept[Exception] {
       s.sql("INSERT INTO gtrd.da SELECT 9L AS k, 0 AS p, 90L AS v")

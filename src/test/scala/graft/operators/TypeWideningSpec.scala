@@ -13,8 +13,8 @@ import graft.SparkSpec
   * files stay narrow on disk and Spark's parquet readers fill the
   * wider pinned schema in place; time travel keeps each era's types;
   * narrowings and lossy changes are rejected with full-rewrite
-  * guidance. The SQL door routes facts there and dims to a full-copy
-  * cast generation. */
+  * guidance. The SQL door routes partitioned and unpartitioned tables
+  * alike there. */
 class TypeWideningSpec extends SparkSpec {
   import spark.implicits._
 
@@ -144,7 +144,7 @@ class TypeWideningSpec extends SparkSpec {
       .exists(_.contains("not a safe widening")), lossy.getMessage)
     // dim
     val dpath = s"$wh/dt"
-    Versioned.commit(base(5), dpath, retain = 5)
+    commitWhole(base(5), dpath, retain = 5)
     s.sql("ALTER TABLE graftw.dt ALTER COLUMN v TYPE BIGINT")
     val d = s.sql("SELECT k, v FROM graftw.dt")
     assert(d.schema("v").dataType == LongType)
