@@ -1446,7 +1446,8 @@ case class GraftUpdateCommand(
       Some(scoped.where(c).select(updatedCols(scoped): _*)), "UPDATE")
     // basis = the resolution-time head (see GraftDeleteCommand)
     FactVersioned.replacePartitionsBy(spark, path, content, pcols,
-      touched, retain = retain, basisGen = Some(basisGen))
+      touched, retain = retain, basisGen = Some(basisGen),
+      properties = Map("operation" -> "UPDATE"))
     Seq.empty
   }
 }

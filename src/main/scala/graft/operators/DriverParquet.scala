@@ -1,14 +1,22 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+import org.apache.spark.sql.types.StructType
 
 /** Driver-side reads and writes of METADATA-SCALE parquet sidecars
   * (file lists, manifests, centroids, tiny registries) with
@@ -26,9 +34,46 @@ object DriverParquet {
   val MaxBytes: Long = 16L * 1024L * 1024L
 
   private[operators] def footerSchema(conf: Configuration, f: FileStatus): MessageType = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
     try r.getFooter.getFileMetaData.getSchema finally r.close()
+  }
+
+  /** `f`'s footer without its row-group metadata: the part Spark's
+    * schema inference reads. */
+  private def fileFooter(conf: Configuration, f: FileStatus): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+      HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try r.getFooter finally r.close()
+  }
+
+  /** The schema `spark.read.parquet(dir)` infers for the flat parquet
+    * dir whose listing is `listing`, from ONE footer read on the driver
+    * instead of a Spark job. The footer is the one Spark's inference
+    * (`ParquetUtils.inferSchema`) reads — `_common_metadata`, else
+    * `_metadata`, else the first data file in path order — and Spark's
+    * own function turns it into the schema. None ⇒ the caller must let
+    * Spark infer, so Spark's result or error stands: no data file, a
+    * visible subdirectory (partition discovery), schema merging on, or
+    * a footer the driver cannot read. */
+  def inferredSchema(
+      spark: SparkSession,
+      conf: Configuration,
+      listing: Seq[FileStatus]): Option[StructType] = {
+    import ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+    val visible = listing
+      .filterNot(f => GraftParquetBridge.hiddenName(f.getPath.getName))
+      .sortBy(_.getPath.toString)
+    if (GraftParquetBridge.mergeSchemaEnabled(spark) ||
+        visible.exists(_.isDirectory)) return None
+    def named(n: String) = visible.find(_.getPath.getName == n)
+    val summaries = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+    visible.find(f => !summaries(f.getPath.getName)).flatMap { firstData =>
+      val f = named(PARQUET_COMMON_METADATA_FILE)
+        .orElse(named(PARQUET_METADATA_FILE)).getOrElse(firstData)
+      try GraftParquetBridge.schemaOf(spark, f.getPath, fileFooter(conf, f))
+      catch { case NonFatal(_) => None }
+    }
   }
 
   private def parquetFilesUnder(

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import CallSites.{callerSite, overlapped, withCallSite}
+
 /** Persisted ANN index over a [[FactVersioned]] table — the
   * generation-aware sibling of [[AnnIndex]], closing the seam SCALING.md
   * carried from round 8 ("ANN sidecars × FactVersioned").
@@ -72,8 +74,6 @@ object FactAnnIndex {
     * stages its rows and file lists before the publish renames them. */
   private val StagingDir = "_staging"
 
-  private val CallSiteShort = "callSite.short"
-
   def indexDir(tablePath: String, vecCol: String): String =
     s"$tablePath/$DirPrefix$vecCol"
 
@@ -90,31 +90,6 @@ object FactAnnIndex {
   private def fsOf(spark: SparkSession, tablePath: String) =
     new Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Spark's own short call-site form, `<method> at <file>:<line>`, of
-    * the entry point that calls this. */
-  private def callerSite(): String = {
-    val f = new Throwable().getStackTrace()(1)
-    s"${f.getMethodName} at ${f.getFileName}:${f.getLineNumber}"
-  }
-
-  /** Run `body` with `site` as the call site of every Spark job it
-    * issues — AQE stage jobs inherit the local property — and restore
-    * the caller's value after. */
-  private def withCallSite[T](spark: SparkSession, site: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty(CallSiteShort)
-    sc.setLocalProperty(CallSiteShort, site)
-    try body finally sc.setLocalProperty(CallSiteShort, prev)
-  }
-
-  /** `body` as an [[Overlap]] future under the submitting thread's call
-    * site: pooled threads do not inherit local properties. */
-  private def overlapped[T](spark: SparkSession)(body: => T)
-      : scala.concurrent.Future[T] = {
-    val site = spark.sparkContext.getLocalProperty(CallSiteShort)
-    scala.concurrent.Future(withCallSite(spark, site)(body))(Overlap.ec)
-  }
 
   /** Manifest-relative file paths (`vgen=<g>/<dir>/<file>`) of a
     * committed generation, via the public [[FactVersioned]] handle. */

@@ -222,17 +222,23 @@ object Upsert {
     * Bookmark's `.bak` fallback); return None only when neither
     * generation exists (genuine first run). Read errors on an EXISTING
     * directory (corruption, permissions) propagate — they must fail
-    * loudly, not read as empty. */
+    * loudly, not read as empty. Opening a generation costs one listing
+    * and one footer read on the driver
+    * ([[DriverParquet.inferredSchema]]), not a schema-inference job. */
   def readSnapshot(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Option[DataFrame] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(conf)
-    val bak = new org.apache.hadoop.fs.Path(path + "__prev")
-    if (fs.exists(dst)) Some(spark.read.parquet(path))
-    else if (fs.exists(bak)) Some(spark.read.parquet(path + "__prev"))
-    else None
+    def open(dir: String): Option[DataFrame] = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val listing =
+        try p.getFileSystem(conf).listStatus(p).toSeq
+        catch { case _: java.io.FileNotFoundException => return None }
+      val reader = DriverParquet.inferredSchema(spark, conf, listing)
+        .fold(spark.read)(spark.read.schema)
+      Some(reader.parquet(dir))
+    }
+    open(path).orElse(open(path + "__prev"))
   }
 
   /** True when a readable snapshot generation (primary or `__prev`)

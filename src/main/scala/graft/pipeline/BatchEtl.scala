@@ -5,7 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Constraints, Upsert}
+import graft.operators.{CallSites, Constraints, Upsert}
 import graft.sources.{Bookmark, Fixtures}
 import graft.streaming.RecordingStream
 
@@ -50,7 +50,11 @@ object BatchEtl {
     * bookmark (the reference pushes from/to into the API request; here
     * the predicate lands on the scan and is partition-prunable). */
   def run(spark: SparkSession, paths: Paths,
-      now: Instant = Instant.now()): LoadReport = {
+      now: Instant = Instant.now()): LoadReport =
+    // one call site for every job of the run, AQE stage jobs included
+    CallSites.withCallSite(spark, CallSites.callerSite())(load(spark, paths, now))
+
+  private def load(spark: SparkSession, paths: Paths, now: Instant): LoadReport = {
     val bookmark = new Bookmark(spark, paths.bookmark)
     val since = bookmark.read(default = Instant.EPOCH)
 
@@ -74,7 +78,7 @@ object BatchEtl {
     // FK check runs against the MERGED meeting snapshot — checking the
     // since-filtered increment would flag every participant of a
     // previously-loaded meeting as an orphan on incremental runs
-    val meetingsNow = spark.read.parquet(paths.meetings)
+    val meetingsNow = snapshot(spark, paths.meetings)
     val orphanParts = Constraints.referentialViolations(
       participants, "meeting_uuid", meetingsNow, "uuid").count()
 
@@ -95,6 +99,11 @@ object BatchEtl {
     val merged = Upsert.upsert(target, updates, keys,
       dedupNullKeyed = dedupNullKeyed)
     Upsert.writeSnapshot(merged, path)
-    spark.read.parquet(path).count()
+    snapshot(spark, path).count()
   }
+
+  /** The snapshot just committed at `path`, opened crash-safely. */
+  private def snapshot(spark: SparkSession, path: String): DataFrame =
+    Upsert.readSnapshot(spark, path)
+      .getOrElse(sys.error(s"no snapshot at $path"))
 }

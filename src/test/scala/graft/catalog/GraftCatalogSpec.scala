@@ -914,8 +914,8 @@ class GraftCatalogSpec extends SparkSpec {
         .select("properties").collect()
         .flatMap(r => Option(r.getMap[String, String](0)))
         .flatMap(_.get("operation")).toSet
-      assert(Set("CREATE TABLE AS SELECT", "INSERT", "MERGE", "DELETE",
-        "TRUNCATE", "RESTORE").subsetOf(ops), s"$t: $ops")
+      assert(Set("CREATE TABLE AS SELECT", "INSERT", "UPDATE", "MERGE",
+        "DELETE", "TRUNCATE", "RESTORE").subsetOf(ops), s"$t: $ops")
     }
     // detail: the kind follows the partitioning
     assert(s.sql("DESCRIBE DETAIL gp.pt").select("kind").as[String].head() ==

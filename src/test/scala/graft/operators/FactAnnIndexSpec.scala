@@ -457,30 +457,6 @@ class FactAnnIndexSpec extends SparkSpec {
       .as[(Int, String, Long, Int, Array[Byte])].collect()
       .map { case (g, p, id, c, q) => (g, p, id, c, q.toSeq) }.toSet
 
-  /** Spark jobs `body` starts, counted by a listener; a marker job
-    * afterwards flushes the listener bus (events arrive in order). */
-  private def jobsOf(body: => Unit): Int = {
-    val starts = new java.util.concurrent.atomic.AtomicInteger(0)
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.job.description") == "jobsOf-marker"))
-          marker.countDown()
-        else if (marker.getCount > 0) starts.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      spark.sparkContext.setJobDescription("jobsOf-marker")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      starts.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   /** Commits after the index build, each adding fresh files except the
     * whole-partition delete: five fresh generations in all. */
   private def lifecycle(path: String): Seq[() => Unit] = Seq(

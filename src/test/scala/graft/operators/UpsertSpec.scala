@@ -110,6 +110,61 @@ class UpsertSpec extends SparkSpec {
     assert(Upsert.readSnapshot(spark, s"$dir/never_written").isEmpty)
   }
 
+  test("readSnapshot opens a primary or __prev-only snapshot of nested, " +
+      "timestamp and decimal columns with Spark's schema and no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString
+    val path = s"$dir/tbl"
+    val df = spark.sql("""SELECT id,
+        named_struct('a', id, 'b', cast(id AS string)) AS st,
+        array(id, id + 1) AS arr, map(cast(id AS string), id * 2) AS m,
+        timestamp_seconds(id * 3600) AS ts,
+        cast(id / 7 AS decimal(12, 3)) AS dec
+      FROM range(5)""")
+    Upsert.writeSnapshot(df, path)
+    def same(p: String): Unit = {
+      var opened: org.apache.spark.sql.DataFrame = null
+      assert(jobsOf { opened = Upsert.readSnapshot(spark, path).get } == 0)
+      val inferred = spark.read.parquet(p)
+      assert(opened.schema == inferred.schema)
+      assert(opened.collect().toSeq.map(_.toString).sorted ==
+        inferred.collect().toSeq.map(_.toString).sorted)
+    }
+    same(path)
+    // the mid-swap crash window: only __prev holds the snapshot
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.rename(new org.apache.hadoop.fs.Path(path),
+      new org.apache.hadoop.fs.Path(path + "__prev"))
+    same(path + "__prev")
+  }
+
+  test("readSnapshot infers from the first data file in path order, and " +
+      "lets Spark infer when schemas merge or no data file exists") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString
+    val path = s"$dir/tbl"
+    // part-files of different schemas: inference reads only the first
+    (1 to 4).foreach { i =>
+      spark.range(2).selectExpr("id", s"id * $i AS c$i")
+        .write.mode("append").parquet(path)
+    }
+    assert(Upsert.readSnapshot(spark, path).get.schema ==
+      spark.read.parquet(path).schema)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      val merged = Upsert.readSnapshot(spark, path).get.schema
+      assert(merged == spark.read.parquet(path).schema)
+      assert(merged.fieldNames.toSet == Set("id", "c1", "c2", "c3", "c4"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    // a snapshot dir with no data file fails as Spark's read does
+    val empty = s"$dir/empty"
+    new java.io.File(empty).mkdirs()
+    new java.io.File(empty, "_SUCCESS").createNewFile()
+    val want = intercept[Exception](spark.read.parquet(empty))
+    val got = intercept[Exception](Upsert.readSnapshot(spark, empty))
+    assert(got.getClass == want.getClass &&
+      got.isInstanceOf[org.apache.spark.sql.AnalysisException])
+  }
+
   test("upsertEvolve adds new columns, nulls old rows, rejects type drift") {
     val target = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("k", "s", "v")
     val updates = Seq((2L, "B", 25.0, "X"), (3L, "c", 30.0, "Y"))

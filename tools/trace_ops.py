@@ -1,0 +1,74 @@
+#!/usr/bin/env python3
+"""Print each traced operation of a perfbench trace with its Spark jobs.
+
+Usage:
+
+    python3 tools/trace_ops.py perfbench/out/trace-zoom_etl-3.json \\
+        [--kind read|write] [--name dept_activity] [--limit 5]
+
+A traced run (`python3 perfbench/run.py ... --trace 1`) writes
+`perfbench/out/trace-<workload>-<seed>.json` with its operations and
+Spark jobs. A job belongs to the operation whose wall window holds the
+job's start, the rule perfbench's per-layer metrics use. For every
+traced operation the tool prints one header line (id, kind, name,
+duration, job count) and one line per job: its start offset from the
+operation's start, its duration, its task count and its call site. A
+summary per kind follows: operations, mean jobs per operation, and job
+counts by call site, most frequent first.
+
+The per-operation timeline shows where a change's saving lands: which
+jobs an operation lost, and what its remaining time is spent on. The
+tool only reads the trace file.
+"""
+import argparse
+import collections
+import json
+
+
+def load(path):
+    with open(path) as f:
+        t = json.load(f)
+    ops = [o for o in t["ops"] if o["traced"] and o["ok"]]
+    jobs = sorted(t["jobs"], key=lambda j: j["start_ms"])
+    return ops, [j for j in jobs if j["end_ms"] >= 0]
+
+
+def jobs_of(op, jobs):
+    return [j for j in jobs if op["start_ms"] <= j["start_ms"] <= op["end_ms"]]
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("trace")
+    ap.add_argument("--kind", choices=("read", "write"))
+    ap.add_argument("--name", help="only operations of this name")
+    ap.add_argument("--limit", type=int, default=0,
+                    help="print at most this many operations (0: all)")
+    a = ap.parse_args()
+
+    ops, jobs = load(a.trace)
+    ops = [o for o in ops if (a.kind is None or o["kind"] == a.kind)
+           and (a.name is None or o["name"] == a.name)]
+    by_kind = collections.defaultdict(list)
+    for i, o in enumerate(ops):
+        js = jobs_of(o, jobs)
+        by_kind[o["kind"]].append(js)
+        if a.limit and i >= a.limit:
+            continue
+        print(f"op {o['id']} {o['kind']} {o['name']}: {o['ms']:.0f} ms, "
+              f"{len(js)} jobs")
+        for j in js:
+            print(f"  +{j['start_ms'] - o['start_ms']:6d} ms "
+                  f"{j['end_ms'] - j['start_ms']:6d} ms "
+                  f"{j['tasks']:4d} tasks  {j['call_site']}")
+    for kind, per_op in sorted(by_kind.items()):
+        n = len(per_op)
+        sites = collections.Counter(j["call_site"] for js in per_op for j in js)
+        print(f"{kind}: {n} ops, "
+              f"{sum(len(js) for js in per_op) / max(1, n):.2f} jobs/op")
+        for site, c in sites.most_common():
+            print(f"  {c:5d}  {site}")
+
+
+if __name__ == "__main__":
+    main()
