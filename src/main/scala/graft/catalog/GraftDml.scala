@@ -130,6 +130,7 @@ object GraftDml {
     * turns on together. */
   def install(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(s => GraftMergeVgenRule(s))
+    ext.injectResolutionRule(s => GraftInsertVgenRule(s))
     ext.injectResolutionRule(s => GraftInsertEvolveRule(s))
     ext.injectPostHocResolutionRule(s => GraftDmlRule(s))
     // hidden-partitioning predicate mapping (r17): filters on a
@@ -770,13 +771,14 @@ final class AnalyzedCondition(val expr: Expression) extends Serializable
 final class AnalyzedColumns(val cols: Seq[(String, Expression)])
   extends Serializable
 
-/** Parse-time wrapper around a MERGE's source ([[GraftSqlParser]]
-  * plants it): reports `resolved = false` so the analyzer's MERGE
-  * star expansion (which resolves EVERY target column — the reserved
-  * `vgen` provenance slot included — against same-named source
-  * columns, throwing on a miss) waits until [[GraftMergeVgenRule]]
-  * has decided whether the source needs a NULL `vgen` appended.
-  * Unwrapped verbatim for non-graft targets — one extra analyzer
+/** Parse-time wrapper around a MERGE's source or a positional
+  * INSERT's query ([[GraftSqlParser]] plants it): reports
+  * `resolved = false` so the analyzer's MERGE star expansion (which
+  * resolves EVERY target column — the reserved `vgen` provenance slot
+  * included — against same-named source columns, throwing on a miss)
+  * and its INSERT arity check wait until [[GraftMergeVgenRule]] or
+  * [[GraftInsertVgenRule]] has decided whether the query needs a NULL
+  * `vgen`. Unwrapped verbatim otherwise — one extra analyzer
   * iteration, zero semantic change. */
 case class VgenWiden(child: LogicalPlan)
     extends org.apache.spark.sql.catalyst.plans.logical.UnaryNode {
@@ -832,6 +834,38 @@ case class GraftMergeVgenRule(session: SparkSession) extends Rule[LogicalPlan] {
           !w.child.output.exists(
             _.name.equalsIgnoreCase(FactVersioned.VGenCol))
         m.copy(sourceTable = if (needs) widen(w.child) else w.child)
+    }
+}
+
+/** The positional-INSERT twin of [[GraftMergeVgenRule]]: an
+  * `INSERT INTO <graft table> VALUES (...)` (or `SELECT`) without a
+  * column list that supplies every column but `vgen` gets a NULL
+  * `vgen` placed at its slot. Spark fills a column default only for
+  * TRAILING omitted columns, and `vgen` sorts before the partition
+  * columns of a partitioned table, so this insert otherwise fails
+  * with INSERT_COLUMN_ARITY_MISMATCH. Columns a static
+  * `PARTITION (p = v)` spec supplies are not expected from the query.
+  * Any other arity is unwrapped verbatim for Spark to judge. */
+case class GraftInsertVgenRule(session: SparkSession) extends Rule[LogicalPlan] {
+  import org.apache.spark.sql.catalyst.expressions.Alias
+  import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, Project}
+  import org.apache.spark.sql.types.LongType
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformDown {
+      case i @ InsertIntoStatement(t, spec, cols, w: VgenWiden, _, _, false)
+          if cols.isEmpty && t.resolved && w.child.resolved =>
+        val static = spec.collect { case (c, Some(_)) => c }
+        val expected = t.output.filterNot(a =>
+          static.exists(_.equalsIgnoreCase(a.name)))
+        val slot = expected.indexWhere(
+          _.name.equalsIgnoreCase(FactVersioned.VGenCol))
+        val q = w.child
+        val pad = slot >= 0 && q.output.size == expected.size - 1 &&
+          GraftDml.graftTarget(t).nonEmpty
+        i.copy(query = if (!pad) q else Project(
+          q.output.take(slot) ++ (Alias(Literal(null, LongType),
+            FactVersioned.VGenCol)() +: q.output.drop(slot)), q))
     }
 }
 

@@ -205,10 +205,13 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   /** Wrap every MERGE source in [[VgenWiden]] so the analyzer's star
     * expansion waits for [[GraftMergeVgenRule]]'s decision (append a
     * NULL `vgen` for graft fact targets, unwrap verbatim otherwise),
-    * and every plain `INSERT ... BY NAME` query in [[GraftInsertWiden]]
+    * every plain `INSERT ... BY NAME` query in [[GraftInsertWiden]]
     * so output resolution waits for [[GraftInsertEvolveRule]]'s
-    * schema-widening decision. Neither statement nests in subqueries,
-    * so each transform touches at most one node (plus CTE wrappers). */
+    * schema-widening decision, and every positional INSERT query
+    * without a column list in [[VgenWiden]] so output resolution waits
+    * for [[GraftInsertVgenRule]]'s decision. Neither statement nests in
+    * subqueries, so each transform touches at most one node (plus CTE
+    * wrappers). */
   private def deferMergeSources(plan: LogicalPlan): LogicalPlan =
     plan.transformDown {
       case m: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable
@@ -218,6 +221,10 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
           if i.byName && i.userSpecifiedCols.isEmpty && !i.overwrite &&
             !i.query.isInstanceOf[GraftInsertWiden] =>
         i.copy(query = GraftInsertWiden(i.query))
+      case i: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement
+          if !i.byName && i.userSpecifiedCols.isEmpty &&
+            !i.query.isInstanceOf[VgenWiden] =>
+        i.copy(query = VgenWiden(i.query))
     }
 
   override def parsePlan(sqlText: String): LogicalPlan =

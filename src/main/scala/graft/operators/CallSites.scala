@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.GraftLocalProperties
 import org.apache.spark.sql.SparkSession
 
 /** Program call sites on Spark jobs. Without one, a job submitted from
@@ -28,11 +29,27 @@ private[graft] object CallSites {
     try body finally sc.setLocalProperty(ShortForm, prev)
   }
 
-  /** `body` as an [[Overlap]] future under the submitting thread's call
-    * site: pooled threads do not inherit local properties. */
+  /** Run `body` with the current call site prefixed by `tag`
+    * (`<tag>: <site>`), so a trace tells apart the jobs one call site
+    * issues for several tables; unchanged when no call site is set. */
+  def tagged[T](spark: SparkSession, tag: String)(body: => T): T =
+    Option(spark.sparkContext.getLocalProperty(ShortForm)) match {
+      case Some(site) => withCallSite(spark, s"$tag: $site")(body)
+      case None => body
+    }
+
+  /** `body` as an [[Overlap]] future under the submitting thread's
+    * Spark local properties — job group, description, call site, SQL
+    * execution id — captured at submit; the pool thread's own are put
+    * back after. A pool thread is born with a copy of its creator's
+    * properties and keeps them, so without the capture its jobs would
+    * run under whatever job group it was born under, and cancelling
+    * the submitter's group would miss them. */
   def overlapped[T](spark: SparkSession)(body: => T)
       : scala.concurrent.Future[T] = {
-    val site = spark.sparkContext.getLocalProperty(ShortForm)
-    scala.concurrent.Future(withCallSite(spark, site)(body))(Overlap.ec)
+    val sc = spark.sparkContext
+    val props = GraftLocalProperties.capture(sc)
+    scala.concurrent.Future(
+      GraftLocalProperties.withProperties(sc, props)(body))(Overlap.ec)
   }
 }

@@ -8,7 +8,8 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 
 /** Driver-side overlap of INDEPENDENT Spark jobs (guide §2.6): a
   * dedicated bounded daemon pool + await helpers shared by every
-  * overlap site (TfIdf / AnnIndex / FactAnnIndex / GraftDml).
+  * overlap site (TfIdf / AnnIndex / FactAnnIndex / GraftDml / Upsert's
+  * multi-table staging / BatchEtl's constraint counts).
   *
   * Why not `ExecutionContext.Implicits.global` + `Duration.Inf`: the
   * global fork-join pool couples unrelated builds (one build's blocked
@@ -23,9 +24,12 @@ object Overlap {
 
   private val threadCount = new AtomicInteger(0)
 
+  /** Size of the pool. */
+  val Threads: Int =
+    math.min(16, math.max(4, Runtime.getRuntime.availableProcessors() / 4))
+
   implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(
-    Executors.newFixedThreadPool(
-      math.min(16, math.max(4, Runtime.getRuntime.availableProcessors() / 4)),
+    Executors.newFixedThreadPool(Threads,
       new ThreadFactory {
         override def newThread(r: Runnable): Thread = {
           val t = new Thread(r,

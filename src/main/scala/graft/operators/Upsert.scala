@@ -180,15 +180,43 @@ object Upsert {
     writeSnapshots(Seq(df -> path))
 
   /** Multi-table transactional snapshot write: ALL plans execute into
-    * tmp dirs first, THEN all directories swap. Required when the plans
-    * read each other's current snapshots (e.g. the promote pair: the new
-    * staging is an anti-join against the new main, whose plan still scans
-    * the old main files — swapping early would yank files out from under
-    * the second plan). This is the reference's single-transaction pair
-    * commit (load.py:230) for plain-parquet storage. */
+    * tmp dirs first, THEN all directories swap, in input order. Required
+    * when the plans read each other's current snapshots (e.g. the
+    * promote pair: the new staging is an anti-join against the new
+    * main, whose plan still scans the old main files — swapping early
+    * would yank files out from under the second plan). This is the
+    * reference's single-transaction pair commit (load.py:230) for
+    * plain-parquet storage.
+    *
+    * The plans stage concurrently, as [[CallSites.overlapped]] jobs
+    * (one plan stages on the caller's thread); each plan's jobs carry
+    * the caller's call site tagged with its table's dir name. A plan
+    * that fails to stage swaps no table: every staging job resolves,
+    * the tmp dirs are deleted, and the first failure (by input order)
+    * is rethrown. Call it from outside the [[Overlap]] pool: the staging
+    * futures queue for pool threads while the caller waits. */
   def writeSnapshots(dfsAndPaths: Seq[(DataFrame, String)]): Unit = {
-    dfsAndPaths.foreach { case (df, path) =>
-      df.write.mode("overwrite").parquet(path + "__tmp")
+    def stage(df: DataFrame, path: String): Unit = {
+      val table = new org.apache.hadoop.fs.Path(path).getName
+      CallSites.tagged(df.sparkSession, table) {
+        df.write.mode("overwrite").parquet(path + "__tmp")
+      }
+    }
+    try {
+      dfsAndPaths match {
+        case Seq((df, path)) => stage(df, path)
+        case _ => Overlap.awaitAll(dfsAndPaths.map { case (df, path) =>
+          CallSites.overlapped(df.sparkSession)(stage(df, path))
+        })
+      }
+    } catch {
+      case e: Throwable =>
+        dfsAndPaths.foreach { case (df, path) =>
+          val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
+          tmp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(tmp, true)
+        }
+        throw e
     }
     dfsAndPaths.foreach { case (df, path) =>
       val hadoopConf = df.sparkSession.sparkContext.hadoopConfiguration

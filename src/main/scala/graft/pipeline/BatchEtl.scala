@@ -2,10 +2,12 @@ package graft.pipeline
 
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{CallSites, Constraints, Upsert}
+import graft.operators.{CallSites, Constraints, Overlap, Upsert}
 import graft.sources.{Bookmark, Fixtures}
 import graft.streaming.RecordingStream
 
@@ -16,13 +18,19 @@ import graft.streaming.RecordingStream
   * (.expand over 1000-user/200-meeting chunks) IS Spark partition
   * parallelism; the XCom List[Dict] hops ARE DataFrames; the flatten
   * barrier IS a shuffle; Celery workers ARE executors. What remains is
-  * the semantic ordering the reference enforces (etl_process.py:233-236):
+  * the semantic ordering the reference enforces on its COMMITS
+  * (etl_process.py:233-236):
   *
   *   users → meetings → participants → recording merge → bookmark commit
   *
   * (participants AFTER meetings because of the FK; the watermark commits
-  * LAST so failures reprocess. Keyed rows are safe under replay — the
-  * upserts are idempotent on their keys. NULL-keyed guest participants
+  * LAST so failures reprocess. Like the reference's fan-out, the work
+  * behind the commits runs at once: the three table loads stage
+  * concurrently, then swap in that order in one
+  * [[graft.operators.Upsert.writeSnapshots]] call, so a failure while
+  * staging leaves every table and the bookmark on the old generation.
+  * Keyed rows are safe under replay — the upserts are idempotent on
+  * their keys. NULL-keyed guest participants
   * would bypass the keyed upsert (Postgres NULL-distinctness, same as
   * the reference), so the participant load enables dedupNullKeyed:
   * replaying a batch after a mid-run failure does not re-append guests).
@@ -65,41 +73,60 @@ object BatchEtl {
         col("start_time") >= lit(java.sql.Timestamp.from(since)))
     val participants = Fixtures.readParticipants(spark, paths.participantsJson)
 
-    // ---- constraint surface Postgres enforced declaratively ----
-    val userDupes = Constraints.uniqueViolations(users, Seq("id")).count()
+    // ---- constraint surface Postgres enforced declaratively, counted
+    // beside the staging wave ----
+    val userDupes = CallSites.overlapped(spark)(
+      Constraints.uniqueViolations(users, Seq("id")).count())
 
-    // ---- ordered loads (K1-K3) ----
-    val newUsers = upsertSnapshot(spark, paths.users, users, Seq("id"))
-    val newMeetings =
-      upsertSnapshot(spark, paths.meetings, meetings, Seq("uuid"))
-    val newParts = upsertSnapshot(spark, paths.participants, participants,
-      Seq("meeting_uuid", "user_id"), dedupNullKeyed = true)
+    // ---- loads (K1-K3) as one transaction: the three upserts stage at
+    // once against the current generations, then swap in FK order ----
+    val loads = Seq(
+      observedUpsert(spark, paths.users, users, Seq("id")),
+      observedUpsert(spark, paths.meetings, meetings, Seq("uuid")),
+      observedUpsert(spark, paths.participants, participants,
+        Seq("meeting_uuid", "user_id"), dedupNullKeyed = true))
+    try Upsert.writeSnapshots(loads.map { case (df, path, _) => df -> path })
+    finally Await.ready(userDupes, Overlap.AwaitTimeout)
+    val Seq(newUsers, newMeetings, newParts) =
+      loads.map { case (_, _, rows) => rows.get(RowsMetric).asInstanceOf[Long] }
 
     // FK check runs against the MERGED meeting snapshot — checking the
     // since-filtered increment would flag every participant of a
-    // previously-loaded meeting as an orphan on incremental runs
+    // previously-loaded meeting as an orphan on incremental runs. It is
+    // counted beside the promote, which reads the same snapshot.
     val meetingsNow = snapshot(spark, paths.meetings)
-    val orphanParts = Constraints.referentialViolations(
-      participants, "meeting_uuid", meetingsNow, "uuid").count()
+    val orphanParts = CallSites.overlapped(spark)(
+      Constraints.referentialViolations(
+        participants, "meeting_uuid", meetingsNow, "uuid").count())
 
     // ---- staging→main recording merge (J1+K5+J2), after meetings ----
-    if (Upsert.snapshotExists(spark, paths.recordingStaging))
-      RecordingStream.promote(spark, paths.recordingStaging, meetingsNow,
-        paths.recordings)
+    try {
+      if (Upsert.snapshotExists(spark, paths.recordingStaging))
+        RecordingStream.promote(spark, paths.recordingStaging, meetingsNow,
+          paths.recordings)
+    } finally Await.ready(orphanParts, Overlap.AwaitTimeout)
 
     // ---- watermark commit LAST (S8 ordering) ----
+    val dupes = Await.result(userDupes, Overlap.AwaitTimeout)
+    val orphans = Await.result(orphanParts, Overlap.AwaitTimeout)
     bookmark.commit(now)
-    LoadReport(newUsers, newMeetings, newParts, userDupes, orphanParts, now)
+    LoadReport(newUsers, newMeetings, newParts, dupes, orphans, now)
   }
 
-  private def upsertSnapshot(spark: SparkSession, path: String,
+  private val RowsMetric = "rows"
+
+  /** The upsert of `updates` into the snapshot at `path`, with the
+    * observation that counts the rows its write commits (read it only
+    * after the write has returned). */
+  private def observedUpsert(spark: SparkSession, path: String,
       updates: DataFrame, keys: Seq[String],
-      dedupNullKeyed: Boolean = false): Long = {
+      dedupNullKeyed: Boolean = false): (DataFrame, String, Observation) = {
     val target = Upsert.readSnapshot(spark, path).getOrElse(updates.limit(0))
+    val rows = Observation()
     val merged = Upsert.upsert(target, updates, keys,
       dedupNullKeyed = dedupNullKeyed)
-    Upsert.writeSnapshot(merged, path)
-    snapshot(spark, path).count()
+      .observe(rows, count(lit(1)).as(RowsMetric))
+    (merged, path, rows)
   }
 
   /** The snapshot just committed at `path`, opened crash-safely. */

@@ -325,6 +325,36 @@ class GraftCatalogSpec extends SparkSpec {
       .as[Long].head() === 31L)
   }
 
+  test("positional INSERT omitting vgen lands on a partitioned table: " +
+      "a NULL vgen fills its slot before the partition column") {
+    val root = Files.createTempDirectory("graft_cat_").toString
+    val path = s"$root/facts"
+    val f0 = (1 to 6).map(i => (i.toLong, i % 3, i * 1.0)).toDF("k", "p", "x")
+    FactVersioned.upsert(spark, path, f0, Seq("k"), "p")
+    val s = GraftDml.enable(spark)
+    s.conf.set("spark.sql.catalog.graftv", classOf[GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.graftv.root", root)
+    // vgen is not the trailing column, so Spark's trailing default
+    // fill does not reach it
+    assert(s.table("graftv.facts").columns.toSeq ==
+      Seq("k", "x", FactVersioned.VGenCol, "p"))
+    s.sql("INSERT INTO graftv.facts VALUES (100, 2.5, 1)")
+    s.sql("INSERT INTO graftv.facts SELECT 101L, 3.5, 2")
+    // a static partition spec supplies p; the query omits vgen too
+    s.sql("INSERT INTO graftv.facts PARTITION (p = 0) VALUES (102, 4.5)")
+    // full width: the given vgen is ignored by the committer, as before
+    s.sql("INSERT INTO graftv.facts VALUES (103, 5.5, 99, 1)")
+    val rows = FactVersioned.read(s, path)
+      .select("k", "p", "x").as[(Long, Int, Double)].collect().toSet
+    assert(rows == (1 to 6).map(i => (i.toLong, i % 3, i * 1.0)).toSet ++
+      Set((100L, 1, 2.5), (101L, 2, 3.5), (102L, 0, 4.5), (103L, 1, 5.5)))
+    assert(!rows.exists(_._1 == 99L))
+    // two columns short is not a vgen omission: Spark's arity error
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      s.sql("INSERT INTO graftv.facts VALUES (104, 1)"))
+    assert(e.getMessage.contains("INSERT_COLUMN_ARITY_MISMATCH"))
+  }
+
   test("INSERT INTO a dimension table commits a fresh full-copy " +
       "generation; the old generation still time-travels") {
     val root = Files.createTempDirectory("graft_cat_").toString

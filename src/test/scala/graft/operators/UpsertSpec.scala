@@ -91,6 +91,42 @@ class UpsertSpec extends SparkSpec {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(path + "__prev")))
   }
 
+  test("writeSnapshots stages its plans at once, tags their jobs with " +
+      "the table, and swaps no table when one plan fails to stage") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wave").toString
+    val paths = Seq("ta", "tb", "tc").map(t => s"$dir/$t")
+    paths.foreach(p => Upsert.writeSnapshot(Seq(("old", 0)).toDF("k", "v"), p))
+    // healthy plans whose two tasks take a second each; the middle plan
+    // fails at execution (the error depends on the row, so it cannot be
+    // folded away at planning)
+    val nap = udf { (i: Long) => Thread.sleep(1000); i.toInt }
+    def healthy = spark.range(0, 2, 1, 2)
+      .select(lit("new").as("k"), nap(col("id")).as("v"))
+    val failing = spark.range(0, 2, 1, 2).select(lit("new").as("k"),
+      raise_error(concat(lit("boom "), col("id"))).cast("int").as("v"))
+    val jobs = jobsSeen {
+      CallSites.withCallSite(spark, "spec site") {
+        val e = intercept[Exception](Upsert.writeSnapshots(
+          Seq(healthy -> paths(0), failing -> paths(1), healthy -> paths(2))))
+        assert(e.getMessage.contains("boom"))
+      }
+    }
+    def jobsOfTable(t: String) = jobs.filter(_.callSite == s"$t: spec site")
+    val (a, c) = (jobsOfTable("ta"), jobsOfTable("tc"))
+    assert(a.nonEmpty && c.nonEmpty, jobs.map(_.callSite))
+    assert(a.exists(x => c.exists(x.overlaps)),
+      s"no overlap: ${a.map(j => j.startMs -> j.endMs)} vs " +
+        s"${c.map(j => j.startMs -> j.endMs)}")
+    // no table swapped, no staging left behind
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    paths.foreach { p =>
+      assert(Upsert.readSnapshot(spark, p).get.as[(String, Int)].collect()
+        === Array(("old", 0)), p)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(p + "__tmp")), p)
+    }
+  }
+
   test("readSnapshot falls back to __prev in the mid-swap crash window") {
     val dir = java.nio.file.Files.createTempDirectory("graft_snap").toString
     val path = s"$dir/tbl"

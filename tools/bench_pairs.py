@@ -27,9 +27,11 @@ neither), the parent's IQR, and a verdict against the metric's bound:
                bound, and not every change run beats every parent run;
   within bound otherwise.
 
-It also prints failed/attempted operations and correct runs per side.
-The tool only reads BENCHMARK.json and runs perfbench/run.py; it changes
-neither.
+It also prints failed/attempted operations and correct runs per side,
+and each pair's CPU steal: the share of the host's CPU time taken by
+other guests while each side ran (from /proc/stat; "-" where that file
+is missing), so noisy pairs can be told apart. The tool only reads
+BENCHMARK.json and runs perfbench/run.py; it changes neither.
 """
 import argparse
 import json
@@ -44,6 +46,22 @@ SECONDS = 12
 
 def log(msg):
     print(f"[bench_pairs] {msg}", file=sys.stderr, flush=True)
+
+
+def cpu_ticks():
+    """(steal, total) CPU ticks since boot, or None without /proc/stat."""
+    try:
+        with open("/proc/stat") as fh:
+            f = [int(x) for x in fh.readline().split()[1:9]]
+    except (OSError, ValueError):
+        return None
+    return f[7] if len(f) > 7 else 0, sum(f)
+
+
+def steal_pct(before, after):
+    if before is None or after is None or after[1] <= before[1]:
+        return None
+    return 100.0 * (after[0] - before[0]) / (after[1] - before[1])
 
 
 def run_one(checkout, workload, seed):
@@ -94,13 +112,21 @@ def verdict(parent, change, better, bound):
 
 def report(bench, runs):
     for wl in sorted({r["workload"] for r in runs}):
-        pairs = {}
+        pairs, steal, seeds = {}, {}, {}
         for r in runs:
             if r["workload"] == wl:
                 pairs.setdefault(r["pair"], {})[r["side"]] = r["result"]
+                steal.setdefault(r["pair"], {})[r["side"]] = r.get("steal_pct")
+                seeds[r["pair"]] = r["seed"]
         done = [pairs[i] for i in sorted(pairs)
                 if {"parent", "change"} <= set(pairs[i])]
         print(f"\n== {wl}: {len(done)} pairs, --seconds {SECONDS}")
+        pct = lambda x: "-" if x is None else f"{x:.1f}%"
+        for i in sorted(pairs):
+            if {"parent", "change"} <= set(pairs[i]):
+                print(f"  pair {i} seed {seeds[i]}: steal parent "
+                      f"{pct(steal[i]['parent'])} change "
+                      f"{pct(steal[i]['change'])}")
         for side in ("parent", "change"):
             att = sum(d[side].get("attempted", 0) for d in done)
             fail = sum(d[side].get("failed", 0) for d in done)
@@ -157,8 +183,11 @@ def main():
             for side in order:
                 checkout = a.parent if side == "parent" else a.change
                 log(f"{wl} pair {i} seed {seed}: {side}")
+                t0 = cpu_ticks()
+                result = run_one(os.path.abspath(checkout), wl, seed)
                 rec = {"workload": wl, "pair": i, "seed": seed, "side": side,
-                       "result": run_one(os.path.abspath(checkout), wl, seed)}
+                       "steal_pct": steal_pct(t0, cpu_ticks()),
+                       "result": result}
                 runs.append(rec)
                 if a.out:
                     with open(a.out, "a") as fh:

@@ -11,14 +11,19 @@ A traced run (`python3 perfbench/run.py ... --trace 1`) writes
 Spark jobs. A job belongs to the operation whose wall window holds the
 job's start, the rule perfbench's per-layer metrics use. For every
 traced operation the tool prints one header line (id, kind, name,
-duration, job count) and one line per job: its start offset from the
-operation's start, its duration, its task count and its call site. A
-summary per kind follows: operations, mean jobs per operation, and job
-counts by call site, most frequent first.
+duration, job count), a line with its job overlap: busy time (the
+union of its jobs' intervals), the sum of its job durations, and the
+peak number of its jobs running at once; then one line per job: its
+start offset from the operation's start, its duration, its task count
+and its call site. A summary per kind follows: operations, mean jobs
+per operation, mean busy and summed job time, the highest peak, and
+job counts by call site, most frequent first.
 
 The per-operation timeline shows where a change's saving lands: which
-jobs an operation lost, and what its remaining time is spent on. The
-tool only reads the trace file.
+jobs an operation lost, and what its remaining time is spent on. Job
+time summing to more than the busy time means jobs overlapped; busy
+time well under the operation's duration means the driver worked
+alone in between. The tool only reads the trace file.
 """
 import argparse
 import collections
@@ -35,6 +40,27 @@ def load(path):
 
 def jobs_of(op, jobs):
     return [j for j in jobs if op["start_ms"] <= j["start_ms"] <= op["end_ms"]]
+
+
+def overlap(js):
+    """(busy ms, summed job ms, peak concurrent jobs) of jobs `js`."""
+    busy, cur = 0, None
+    for j in sorted(js, key=lambda j: j["start_ms"]):
+        s, e = j["start_ms"], j["end_ms"]
+        if cur is None or s > cur:
+            busy += e - s
+            cur = e
+        elif e > cur:
+            busy += e - cur
+            cur = e
+    # a job ending at the instant another starts does not overlap it
+    edges = sorted([(j["start_ms"], 1) for j in js] +
+                   [(j["end_ms"], -1) for j in js], key=lambda x: (x[0], x[1]))
+    peak = run = 0
+    for _, d in edges:
+        run += d
+        peak = max(peak, run)
+    return busy, sum(j["end_ms"] - j["start_ms"] for j in js), peak
 
 
 def main():
@@ -55,8 +81,11 @@ def main():
         by_kind[o["kind"]].append(js)
         if a.limit and i >= a.limit:
             continue
+        busy, summed, peak = overlap(js)
         print(f"op {o['id']} {o['kind']} {o['name']}: {o['ms']:.0f} ms, "
               f"{len(js)} jobs")
+        print(f"  busy {busy} ms, job time {summed} ms, "
+              f"peak {peak} concurrent")
         for j in js:
             print(f"  +{j['start_ms'] - o['start_ms']:6d} ms "
                   f"{j['end_ms'] - j['start_ms']:6d} ms "
@@ -64,8 +93,12 @@ def main():
     for kind, per_op in sorted(by_kind.items()):
         n = len(per_op)
         sites = collections.Counter(j["call_site"] for js in per_op for j in js)
+        ov = [overlap(js) for js in per_op]
         print(f"{kind}: {n} ops, "
-              f"{sum(len(js) for js in per_op) / max(1, n):.2f} jobs/op")
+              f"{sum(len(js) for js in per_op) / max(1, n):.2f} jobs/op, "
+              f"busy {sum(o[0] for o in ov) / max(1, n):.0f} ms/op, "
+              f"job time {sum(o[1] for o in ov) / max(1, n):.0f} ms/op, "
+              f"peak {max((o[2] for o in ov), default=0)} concurrent")
         for site, c in sites.most_common():
             print(f"  {c:5d}  {site}")
 
