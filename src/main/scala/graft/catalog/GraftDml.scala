@@ -1166,10 +1166,9 @@ case class GraftMergeCommand(
     // the ordering is not load-bearing; the guarantee kept is that a
     // duplicate-keyed MERGE never commits (awaitUnique precedes every
     // publish) and never exits cleanly (the finally below rethrows).
-    import scala.concurrent.{Await, Future}
-    import graft.operators.Overlap
-    import Overlap.ec
-    val dupF = Future {
+    import scala.concurrent.Await
+    import graft.operators.{CallSites, Overlap}
+    val dupF = CallSites.overlapped(spark) {
       FactVersioned.requireKeyUnique(src, sNames.distinct, "GraftDml MERGE")
     }
     def awaitUnique(): Unit = Await.result(dupF, Overlap.AwaitTimeout)
@@ -1265,7 +1264,7 @@ case class GraftMergeCommand(
     // in clause order before anything can commit, with the exact
     // pre-overlap error text.
     import scala.concurrent.{Await, Future}
-    import graft.operators.Overlap
+    import graft.operators.{CallSites, Overlap}
     val movedProbes = Seq.newBuilder[Future[Array[Row]]]
     val moveCheck = (hit: DataFrame, a: Seq[(String, Expression)]) => {
       val pExprs = pcols.map { p =>
@@ -1280,7 +1279,7 @@ case class GraftMergeCommand(
         .select(sNames.map(col) ++ tpNames.map(col) ++
           pExprs.zipWithIndex.map { case (e, i) => e.as(s"__graft_sp$i") }: _*)
         .limit(1)
-      movedProbes += Future(m.collect())(Overlap.ec)
+      movedProbes += CallSites.overlapped(spark)(m.collect())
       ()
     }
     def requireUnmoved(m: Array[Row]): Unit =
@@ -1321,17 +1320,16 @@ case class GraftMergeCommand(
         val checkedUpdates = updates0.map { u =>
           val d = sp.derive(u)
           val probe = d.where(!(col(sp.genCol) <=> col(tpOfGen))).limit(1)
-          movedProbes += Future(probe.collect())(Overlap.ec)
-            .map { moved =>
-              if (moved.nonEmpty)
-                throw new IllegalStateException(
-                  s"GraftDml: MERGE updates ${sp.source} across " +
-                    s"${sp.kind}-partitions (re-derived ${sp.genCol} " +
-                    "leaves the row's current partition) — a " +
-                    "partition-moving update would leave the stale row " +
-                    "behind. DELETE the key and re-INSERT it instead.")
-              Array.empty[Row]
-            }(Overlap.ec)
+          movedProbes += CallSites.overlapped(spark) {
+            if (probe.collect().nonEmpty)
+              throw new IllegalStateException(
+                s"GraftDml: MERGE updates ${sp.source} across " +
+                  s"${sp.kind}-partitions (re-derived ${sp.genCol} " +
+                  "leaves the row's current partition) — a " +
+                  "partition-moving update would leave the stale row " +
+                  "behind. DELETE the key and re-INSERT it instead.")
+            Array.empty[Row]
+          }
           d
         }
         (checkedUpdates, inserts0.map(sp.derive))

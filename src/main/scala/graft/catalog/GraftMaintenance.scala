@@ -66,7 +66,7 @@ object GraftMaintenance {
 
   /** A literal: optionally DATE-/TIMESTAMP-prefixed quoted string, or
     * a bare token (timestamp partition columns are first-class since
-    * r14 — [[graft.operators.Upsert.partitionDirName]]). */
+    * r14 — [[graft.operators.FactVersioned.partitionDirName]]). */
   private val Lit = "(?:(?:DATE|TIMESTAMP)\\s+)?'[^']*'|[^\\s']+"
 
   /** One conjunct: `col <op> literal`, `col BETWEEN lo AND hi`, or

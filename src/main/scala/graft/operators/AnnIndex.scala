@@ -11,15 +11,13 @@ import graft.functions.VectorFunctions._
   *
   * `Similarity.ivfTopK` / `sq8TopK` re-train centroids, re-assign the
   * whole corpus, and re-quantize inside EVERY call — correct, but at
-  * 100 TB an index is a persisted artifact refreshed ∝ touched
-  * partitions, exactly the posture the bloom/stats sidecars already
-  * have ([[DataSkipping.writeBloomIndex]] /
-  * `refreshBloomIndexPartitioned`). [[writeIndex]] pays the training +
-  * assignment + quantization ONCE into `_graft_ann__<col>/`;
+  * 100 TB an index is a persisted artifact. [[writeIndex]] pays the
+  * training + assignment + quantization ONCE into `_graft_ann__<col>/`;
   * [[ivfTopKIndexed]] / [[sq8TopKIndexed]] then answer queries reading
-  * ONLY the sidecar (never the raw vector column), and
-  * [[refreshIndexPartitioned]] re-indexes just the partitions a
-  * partition-scoped commit touched.
+  * ONLY the sidecar (never the raw vector column). The sidecar is
+  * build-once over a flat table: a rewrite of the table needs a fresh
+  * [[writeIndex]]. Versioned tables whose index follows every commit
+  * use [[FactAnnIndex]], which refreshes ∝ the new generations' files.
   *
   * Sidecar layout under `<tablePath>/_graft_ann__<vecCol>/`:
   *  - `rows/part=<dir>/` — one Hive partition per SOURCE partition dir
@@ -28,9 +26,7 @@ import graft.functions.VectorFunctions._
   *    unit-normalized vector, its IVF cell, its SQ8 codes, and its
   *    m-byte PQ codes. Storing `u` here is what lets the query phase
   *    skip the base table entirely (the posture of FAISS-style on-disk
-  *    indexes, which keep full vectors for exact re-rank); the rows are
-  *    clustered by source partition so a refresh swaps whole
-  *    subdirectories, write cost ∝ touched partitions.
+  *    indexes, which keep full vectors for exact re-rank).
   *  - `centroids/` — (cell, centroid), metadata-scale.
   *  - `codebooks/` — (subspace, code, centroid) PQ sub-centroids,
   *    metadata-scale (m × ksub rows).
@@ -42,21 +38,10 @@ import graft.functions.VectorFunctions._
   * an unchanged table the indexed variants return BIT-IDENTICAL results
   * to their per-call counterparts (spec-asserted) — the index changes
   * WHEN work happens, never WHAT is computed.
-  *
-  * Commit integration: partition-scoped committers park the sidecar
-  * (live → `_graft_ann_stale__<col>`) via
-  * [[DataSkipping.invalidateManifest]], so a post-commit query fails
-  * loudly ("no index") instead of reading stale cells;
-  * [[refreshIndexPartitioned]] un-parks and re-indexes ∝ touched dirs.
-  * Centroids are NOT retrained on refresh — the standard IVF posture
-  * (cells drift from optimal as data drifts; retrain by re-running
-  * [[writeIndex]] on whatever cadence recall monitoring dictates).
-  * Single writer per table, like every committer here.
   */
 object AnnIndex {
 
   val DirPrefix = "_graft_ann__"
-  val StaleDirPrefix = "_graft_ann_stale__"
   private val TmpDirPrefix = "_graft_ann_tmp__"
 
   /** `part` value for rows whose files sit directly under the table
@@ -69,7 +54,7 @@ object AnnIndex {
   private def rowsDir(tablePath: String, vecCol: String): String =
     s"${indexDir(tablePath, vecCol)}/rows"
 
-  /** True if a LIVE (not parked) index exists for `vecCol`. */
+  /** True if an index exists for `vecCol`. */
   def hasIndex(spark: SparkSession, tablePath: String, vecCol: String): Boolean = {
     val p = new Path(indexDir(tablePath, vecCol))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -171,11 +156,9 @@ object AnnIndex {
       // longest path needs 2 (optimization guide §2.6 — overlap
       // independent jobs). Failures surface at the awaits; publish
       // still renames only after every write completed.
-      import scala.concurrent.Future
-      import Overlap.ec
       // the id is the index key: candidate re-attach and self-exclusion
       // are id-keyed, so duplicates would silently corrupt results
-      val dupF = Future {
+      val dupF = CallSites.overlapped(spark) {
         base.groupBy("id").count()
           .where(col("count") > 1).limit(1).count()
       }
@@ -200,25 +183,25 @@ object AnnIndex {
       if (fs.exists(tmp)) fs.delete(tmp, true)
       import spark.implicits._
       val writes = Seq(
-        Future {
+        CallSites.overlapped(spark) {
           assignQuantize(base, centroids, codebooks, literalCellThreshold)
             .write.partitionBy("part")
             .parquet(new Path(tmp, "rows").toString)
         },
-        Future {
+        CallSites.overlapped(spark) {
           centroids.zipWithIndex.toIndexedSeq
             .map { case (c, i) => (i, c.toSeq) }
             .toDF("cell", "centroid")
             .coalesce(1).write.parquet(new Path(tmp, "centroids").toString)
         },
-        Future {
+        CallSites.overlapped(spark) {
           codebooks.zipWithIndex.toIndexedSeq
             .flatMap { case (cb, s) =>
               cb.zipWithIndex.map { case (c, i) => (s, i, c.toSeq) } }
             .toDF("subspace", "code", "centroid")
             .coalesce(1).write.parquet(new Path(tmp, "codebooks").toString)
         },
-        Future {
+        CallSites.overlapped(spark) {
           Seq((sample.head.length, lists, seed, trainCap, pqM, pqKsub))
             .toDF("dim", "n_lists", "seed", "train_cap", "pq_m", "pq_ksub")
             .coalesce(1).write.parquet(new Path(tmp, "meta").toString)
@@ -230,25 +213,21 @@ object AnnIndex {
         s"AnnIndex.writeIndex: $idCol must be unique in $tablePath")
 
       val live = new Path(root, DirPrefix + vecCol)
-      val stale = new Path(root, StaleDirPrefix + vecCol)
-      if (fs.exists(stale)) fs.delete(stale, true)
       if (fs.exists(live)) fs.delete(live, true)
       require(fs.rename(tmp, live),
         s"AnnIndex.writeIndex: publish rename failed for $live")
-      // let partition-scoped commits know there is an index to park
-      DataSkipping.touchIndexMarker(spark, tablePath)
     } finally base.unpersist(blocking = false)
   }
 
   /** Centroids of the live index, cell-ordered. Fails loudly when the
-    * index is absent or parked by an un-refreshed commit. */
+    * index is absent. */
   private def readCentroids(
       spark: SparkSession,
       tablePath: String,
       vecCol: String): Array[Array[Double]] = {
     require(hasIndex(spark, tablePath, vecCol),
       s"AnnIndex: no live index for $vecCol at $tablePath — writeIndex " +
-        "first (or refreshIndexPartitioned after a partition-scoped commit)")
+        "first")
     spark.read.parquet(s"${indexDir(tablePath, vecCol)}/centroids")
       .orderBy("cell").select("centroid").collect()
       .map(_.getSeq[Double](0).toArray)
@@ -681,111 +660,5 @@ object AnnIndex {
     Similarity.topKPerKey(scored, k)
       .select(col("key").as("query_id"), col("id").as("neighbor_id"),
         col("rank"), col("sim"))
-  }
-
-  /** Hive-layout percent-decoding of `part=` child names — decoding
-    * only; encoding stays Spark's job (refresh swaps adopt whatever
-    * child names the fresh partitioned write produced). */
-  private def unescapePathName(s: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .unescapePathName(s)
-
-  /** Re-index ∝ touched partitions after a partition-scoped commit:
-    * un-park the sidecar if a commit parked it, recompute rows for
-    * `touchedDirs` (Hive-style names, `Upsert.PartitionedCommit`'s
-    * `rewritten ++ deleted`) against the EXISTING centroids, and swap
-    * only those `rows/part=` subdirectories — untouched subdirs stay
-    * byte-identical.
-    *
-    * With `validate = true` (default), recorded per-partition file
-    * names are checked against the table's real listing (one per-dir
-    * listing pass, metadata-scale; names compared, never URI
-    * renderings) and any drifted or vanished partition is rebuilt too —
-    * the same self-healing the bloom/stats refresh has. `validate =
-    * false` trusts the caller's touched list (the serial single-writer
-    * loop), cost strictly ∝ touched dirs. */
-  def refreshIndexPartitioned(
-      spark: SparkSession,
-      tablePath: String,
-      idCol: String,
-      vecCol: String,
-      touchedDirs: Seq[String],
-      validate: Boolean = true,
-      literalCellThreshold: Int = 4096): Unit = {
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(root, DirPrefix + vecCol)
-    val stale = new Path(root, StaleDirPrefix + vecCol)
-    if (fs.exists(stale)) {
-      if (fs.exists(live)) fs.delete(live, true)
-      require(fs.rename(stale, live),
-        s"AnnIndex.refresh: could not un-park $stale")
-    }
-    require(fs.exists(live),
-      s"AnnIndex.refresh: no index (live or parked) for $vecCol at " +
-        s"$tablePath — writeIndex first")
-    val rowsRoot = new Path(live, "rows")
-    val rootName = root.getName
-
-    var rebuild = touchedDirs.toSet
-    if (validate) {
-      val recorded: Map[String, Set[String]] =
-        spark.read.parquet(rowsRoot.toString)
-          .select(col("part"), col("file")).distinct().collect()
-          .map(r => (r.getString(0), new Path(r.getString(1)).getName))
-          .groupBy(_._1).map { case (p, fl) => p -> fl.map(_._2).toSet }
-      val actual: Map[String, Set[String]] = fs.listStatus(root)
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-        .map { d =>
-          d -> fs.listStatus(new Path(root, d))
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath.getName).toSet
-        }.toMap
-      rebuild ++= actual.collect {
-        case (d, a) if recorded.getOrElse(d, Set.empty[String]) != a => d
-      }
-      rebuild ++= recorded.keySet
-        .filterNot(_ == RootPart).filterNot(actual.contains)
-    }
-    if (rebuild.isEmpty) return
-    require(!rebuild.contains(RootPart),
-      "AnnIndex.refresh covers partitioned tables; rebuild an " +
-        "unpartitioned table's index with writeIndex")
-
-    val centroids = readCentroids(spark, tablePath, vecCol)
-    val codebooks = readCodebooks(spark, tablePath, vecCol)
-    val children: Map[String, Path] = fs.listStatus(rowsRoot)
-      .filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith("part="))
-      .map(p => unescapePathName(p.getName.stripPrefix("part=")) -> p)
-      .toMap
-    rebuild.toSeq.sorted.foreach { d =>
-      val dataDir = new Path(root, d)
-      if (!fs.exists(dataDir)) {
-        children.get(d).foreach(fs.delete(_, true))
-      } else {
-        val scan = spark.read.option("basePath", tablePath)
-          .parquet(dataDir.toString)
-        val fresh = assignQuantize(
-          baseOf(scan, idCol, vecCol, rootName), centroids, codebooks,
-          literalCellThreshold)
-        val tmp = new Path(root, TmpDirPrefix + vecCol + "_refresh")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        fresh.write.partitionBy("part").parquet(tmp.toString)
-        children.get(d).foreach(fs.delete(_, true))
-        // adopt whatever child name (escaping) the fresh write produced;
-        // an all-null/zero-norm partition legitimately produces none
-        fs.listStatus(tmp).filter(_.isDirectory).map(_.getPath)
-          .filter(_.getName.startsWith("part="))
-          .foreach { c =>
-            val dst = new Path(rowsRoot, c.getName)
-            if (fs.exists(dst)) fs.delete(dst, true)
-            require(fs.rename(c, dst),
-              s"AnnIndex.refresh: swap failed for $dst")
-          }
-        fs.delete(tmp, true)
-      }
-    }
   }
 }

@@ -3,15 +3,17 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Table-level commit lock for the partition-swap committers.
+/** A mutual-exclusion lock over a filesystem path, plus the filesystem
+  * contract every committer relies on.
   *
-  * The swap phase of a partition-scoped commit is a sequence of
-  * directory renames; two writers interleaving swaps (or a repair
-  * racing a live swap's `_prev.` window) could strand a commit's data.
-  * The lock makes the SWAP PHASE mutually exclusive per table — the
-  * expensive part of a commit (merge + staging write) runs unlocked and
-  * concurrent, so disjoint writers overlap on all the real work and
-  * serialize only on renames (milliseconds).
+  * Data commits do not take this lock: [[FactVersioned]] serializes
+  * writers through generation claims and detects overlap from each
+  * intervener's touched set. The lock guards the short critical
+  * sections that are not generation commits: the table-name record's
+  * rewrite ([[graft.catalog.TablePointers]]) and the publish step of an
+  * ANN index refresh ([[FactAnnIndex]]), where deleting an orphan is
+  * safe only while no other refresh sits between its renames and its
+  * file lists. Holders finish in milliseconds; contenders wait.
   *
   * Protocol: a QUEUE lock over globally-unique claim files — a
   * filesystem rendition of Lamport's bakery algorithm. Naively naming
@@ -43,11 +45,11 @@ import org.apache.spark.sql.SparkSession
   * fresh claim that re-landed under a recycled name. Crashed choosers
   * and holders age past [[StaleLockMs]] and are ignored/GC'd. The
   * only remaining cross-writer assumption is the lease itself: a
-  * holder must finish its swap within [[StaleLockMs]] (renames are
-  * ms-scale against a 1 h TTL).
+  * holder must finish its critical section within [[StaleLockMs]]
+  * (milliseconds against a 1 h TTL).
   *
-  * Multi-table transactions (the promote pair) acquire in sorted-path
-  * order, so two transactions over the same tables cannot deadlock. */
+  * A holder of several locks acquires them in sorted-path order, so
+  * two such holders cannot deadlock. */
 object CommitLock {
 
   val LockName = "_graft_commit_lock"
@@ -279,39 +281,5 @@ object CommitLock {
         catch { case _: java.io.IOException => () }
       }
     }
-  }
-
-  /** Per-dir file-name sets of `dirs` under `path` — the conflict
-    * fingerprint: a partition-dir swap always produces fresh file names
-    * (task UUIDs), so equality of name sets ⇔ no commit touched the dir
-    * since the fingerprint. A missing dir fingerprints as empty. */
-  def fingerprint(
-      spark: SparkSession,
-      path: String,
-      dirs: Seq[String]): Map[String, Set[String]] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    dirs.distinct.map { d =>
-      val p = new Path(root, d)
-      val names =
-        if (!fs.exists(p)) Set.empty[String]
-        else fs.listStatus(p).filter(_.isFile).map(_.getPath.getName).toSet
-      d -> names
-    }.toMap
-  }
-
-  /** [[fingerprint]] over every visible partition dir of the table —
-    * for committers whose touched set is only known after reading (the
-    * promote transaction derives it from the data): any concurrent
-    * commit to either table invalidates the whole transaction. */
-  def fingerprintAll(
-      spark: SparkSession, path: String): Map[String, Set[String]] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Map.empty
-    val dirs = fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-    fingerprint(spark, path, dirs.toIndexedSeq)
   }
 }

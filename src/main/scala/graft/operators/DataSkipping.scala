@@ -50,25 +50,6 @@ object DataSkipping {
     * underscore makes every parquet reader skip it as a data source. */
   val ManifestDir = "_graft_stats"
 
-  /** Where a partition-scoped commit parks the previous manifest: the
-    * swap rewrites individual partition DIRS, so a root-level manifest
-    * would otherwise survive stale — silently wrong pruning. Commits
-    * rename it here atomically ([[invalidateManifest]]); readers only
-    * honor [[ManifestDir]], and [[refreshManifestPartitioned]] consumes
-    * the parked copy to rebuild stats ∝ touched partitions. */
-  val StaleManifestDir = "_graft_stats_stale"
-
-  /** Marker file created by every index writer. Commits probe THIS one
-    * fixed name (a single `getFileStatus`) before paying the root
-    * listing that finds manifests/sidecars to park — on an object
-    * store, listing a root with 10k partition dirs is a PAGED walk per
-    * commit, while the marker probe is one round trip. Never-indexed
-    * tables (the common fact-table steady state) therefore pay ~zero
-    * coherence cost per commit. The marker persists once any index has
-    * existed; a lingering marker after index removal costs one extra
-    * listing per commit, never correctness. */
-  val IndexMarker = "_graft_indexed"
-
   /** One range predicate for pruning: `lower <= col <= upper`
     * (inclusive both ends; pass the same bounds to the residual filter
     * so pruned-scan results are exactly `WHERE col BETWEEN lo AND hi`). */
@@ -116,228 +97,14 @@ object DataSkipping {
       spark: SparkSession,
       tablePath: String,
       statsCols: Seq[String]): Unit = {
-    // marker FIRST: a crash between index publish and marker would
-    // otherwise leave an index the commit fast-path never parks —
-    // silently stale pruning. The reverse crash (marker, no index)
-    // only costs commits one extra listing.
-    touchIndexMarker(spark, tablePath)
     buildManifest(spark, tablePath, statsCols)
       .coalesce(1)
       .write.mode("overwrite")
       .parquet(manifestPath(tablePath))
   }
 
-  /** Create the commit-probe marker (see [[IndexMarker]]). Also used by
-    * [[AnnIndex.writeIndex]] — ANN sidecars park through the same
-    * commit hook. */
-  private[operators] def touchIndexMarker(
-      spark: SparkSession, tablePath: String): Unit = {
-    val p = new Path(s"$tablePath/$IndexMarker")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) fs.create(p, true).close()
-  }
-
   def readManifest(spark: SparkSession, tablePath: String): DataFrame =
     spark.read.parquet(manifestPath(tablePath))
-
-  /** True if a stats manifest exists for `tablePath`. */
-  def hasManifest(spark: SparkSession, tablePath: String): Boolean = {
-    val p = new Path(manifestPath(tablePath))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Park the live manifest as stale (atomic rename) — called by
-    * partition-scoped commits whose per-dir swaps would otherwise leave
-    * a root manifest silently stale. Readers honor only the live name,
-    * so between commit and [[refreshManifestPartitioned]] a pruned scan
-    * fails loudly (no manifest) instead of pruning wrongly. Returns
-    * true if a manifest was parked. */
-  def invalidateManifest(spark: SparkSession, tablePath: String): Boolean = {
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Fast path: one fixed-name probe. Tables that never had an index
-    // (the steady state for most fact tables) skip the root listing
-    // entirely — a listing over many partition dirs is a paged walk
-    // on object stores, paid per commit otherwise.
-    if (!fs.exists(new Path(root, IndexMarker))) return false
-    val entries =
-      try fs.listStatus(root)
-      catch { case _: java.io.FileNotFoundException => return false }
-    // bloom sidecars park the same way (live → stale rename): a
-    // post-commit lookup fails loudly (no live index) instead of
-    // probing dead files, and refreshBloomIndexPartitioned rebuilds
-    // from the parked copy ∝ touched dirs
-    entries
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(BloomDirPrefix))
-      .foreach { s =>
-        val staleB = new Path(root,
-          StaleBloomDirPrefix + s.getPath.getName.stripPrefix(BloomDirPrefix))
-        if (fs.exists(staleB)) fs.delete(staleB, true)
-        fs.rename(s.getPath, staleB)
-      }
-    // ANN sidecars likewise: a post-commit ivfTopKIndexed/sq8TopKIndexed
-    // fails loudly instead of probing stale cells/codes;
-    // AnnIndex.refreshIndexPartitioned un-parks and re-indexes ∝ touched
-    entries
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(AnnIndex.DirPrefix))
-      .foreach { s =>
-        val staleA = new Path(root,
-          AnnIndex.StaleDirPrefix +
-            s.getPath.getName.stripPrefix(AnnIndex.DirPrefix))
-        if (fs.exists(staleA)) fs.delete(staleA, true)
-        fs.rename(s.getPath, staleA)
-      }
-    // text-retrieval sidecars (BM25 doc maps / df partials) park the
-    // same way; TfIdf.refreshTextIndexPartitioned un-parks ∝ touched
-    entries
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(TfIdf.DirPrefix))
-      .foreach { s =>
-        val staleT = new Path(root,
-          TfIdf.StaleDirPrefix +
-            s.getPath.getName.stripPrefix(TfIdf.DirPrefix))
-        if (fs.exists(staleT)) fs.delete(staleT, true)
-        fs.rename(s.getPath, staleT)
-      }
-    if (!entries.exists(s => s.isDirectory &&
-        s.getPath.getName == ManifestDir)) false
-    else {
-      val stale = new Path(s"$tablePath/$StaleManifestDir")
-      if (fs.exists(stale)) fs.delete(stale, true)
-      fs.rename(new Path(manifestPath(tablePath)), stale)
-      true
-    }
-  }
-
-  /** Rebuild the manifest after a partition-scoped commit at stats cost
-    * ∝ TOUCHED partitions (mirroring the commit's own write cost):
-    * keep the parked manifest's rows for still-valid files, recompute
-    * stats for `touchedDirs` (Hive-style names, e.g. `p_year=1995` —
-    * [[Upsert.PartitionedCommit]]'s `rewritten` ++ `deleted`) AND for
-    * any directory the parked copy turns out not to cover, then
-    * publish the union live.
-    *
-    * SELF-HEALING by construction: kept rows are validated against the
-    * table's ACTUAL file listing (metadata-scale — one listing per
-    * partition dir), so a parked copy that predates OTHER un-refreshed
-    * commits (interleaved compaction, a crash between park and
-    * publish, several commits before one refresh) cannot smuggle dead
-    * file rows into the live manifest, and any dir holding files the
-    * parked copy doesn't know is rescanned in full. Falls back to a
-    * full [[writeManifest]] when no prior manifest exists. Matching is
-    * anchored to the directory component under `tablePath` — a
-    * touched-dir NAME appearing in some ancestor path segment cannot
-    * misclassify files. */
-  /** @param assumeSerialCommits true ⇒ skip the self-healing listing
-    *   validation and trust that the parked copy is exactly one commit
-    *   old. ONLY correct for a single writer that refreshes after
-    *   EVERY commit (the streaming loop); cost drops to ∝ touched
-    *   dirs. Default false = validate against the real listing. */
-  def refreshManifestPartitioned(
-      spark: SparkSession,
-      tablePath: String,
-      touchedDirs: Seq[String],
-      statsCols: Seq[String],
-      assumeSerialCommits: Boolean = false): Unit =
-    refreshIndexPartitioned(spark, tablePath, touchedDirs,
-      StaleManifestDir, ManifestDir,
-      fullRebuild = () => writeManifest(spark, tablePath, statsCols),
-      rebuildFor = scan => statsOf(scan, statsCols),
-      assumeSerialCommits = assumeSerialCommits)
-
-  /** Shared park-consume-validate-publish refresh for the stats
-    * manifest and the bloom sidecars (see [[refreshManifestPartitioned]]
-    * for the semantics). `rebuildFor` maps a basePath-scoped scan of
-    * the dirs needing rebuild to fresh index rows with a `file`
-    * column. */
-  private def refreshIndexPartitioned(
-      spark: SparkSession,
-      tablePath: String,
-      touchedDirs: Seq[String],
-      staleDirName: String,
-      liveDirName: String,
-      fullRebuild: () => Unit,
-      rebuildFor: DataFrame => DataFrame,
-      assumeSerialCommits: Boolean = false): Unit = {
-    val root = new Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stale = new Path(root, staleDirName)
-    val live = new Path(root, liveDirName)
-    val base =
-      if (fs.exists(stale)) Some(spark.read.parquet(stale.toString))
-      else if (fs.exists(live)) Some(spark.read.parquet(live.toString))
-      else None
-    base match {
-      case None => fullRebuild()
-      case Some(m) =>
-        import spark.implicits._
-        val (kept, rescan) =
-          if (assumeSerialCommits) {
-            // single-writer loop that refreshes after EVERY commit:
-            // the parked copy is exactly one commit old, so only the
-            // declared touched dirs can be stale — no validation
-            // listing needed (cost strictly ∝ touched dirs). Match on
-            // the file's immediate parent-dir NAME extracted from the
-            // manifest's own strings: scheme/authority-insensitive by
-            // construction (a qualified-root prefix compare can keep
-            // stale rows when the writer's URI rendering differs from
-            // fs.makeQualified), and exact because manifest files live
-            // only at root/<partition dir>/<file>.
-            val parentName =
-              regexp_extract(col("file"), "([^/]+)/[^/]*$", 1)
-            val touchedMatch =
-              if (touchedDirs.isEmpty) lit(false)
-              else parentName.isin(touchedDirs: _*)
-            (m.where(!touchedMatch).localCheckpoint(), touchedDirs.toSet)
-          } else {
-            // SELF-HEALING general path: validate the parked rows
-            // against the table's real file listing (one per-dir
-            // listing pass — same order as the commit's own partition
-            // discovery), so a parked copy predating OTHER
-            // un-refreshed commits cannot smuggle dead rows, and dirs
-            // it does not cover are rescanned in full.
-            val dirs = fs.listStatus(root).filter(_.isDirectory)
-              .map(_.getPath.getName)
-              .filterNot(n => n.startsWith("_") || n.startsWith("."))
-            val filesByDir: Map[String, Set[String]] = dirs.map { d =>
-              d -> fs.listStatus(new Path(root, d))
-                .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-                .map(f => fs.makeQualified(f.getPath).toString).toSet
-            }.toMap
-            val baseFiles =
-              m.select("file").collect().map(_.getString(0)).toSet
-            val rescanAll = touchedDirs.toSet ++
-              filesByDir.collect {
-                case (d, fls) if fls.exists(!baseFiles.contains(_)) => d
-              }
-            val validFiles = filesByDir
-              .filterNot { case (d, _) => rescanAll.contains(d) }
-              .values.flatten.toSeq
-            // eager copy: the publish overwrites the directory the
-            // kept rows are being read from
-            (m.join(validFiles.toDF("file"), Seq("file"), "left_semi")
-              .localCheckpoint(), rescanAll)
-          }
-        val rescanPaths = rescan.toSeq.sorted
-          .map(d => new Path(root, d))
-          .filter(fs.exists(_))
-          .map(_.toString)
-        val fresh =
-          if (rescanPaths.isEmpty) kept
-          else kept.unionByName(rebuildFor(
-            // basePath keeps the partition column resolvable even
-            // though only the rescanned dirs are listed
-            spark.read.option("basePath", tablePath)
-              .parquet(rescanPaths: _*)))
-        // marker before publish — a refreshed table must stay visible
-        // to the commit fast-path even if the original marker is lost
-        touchIndexMarker(spark, tablePath)
-        fresh.coalesce(1).write.mode("overwrite").parquet(live.toString)
-        if (fs.exists(stale)) fs.delete(stale, true)
-    }
-  }
 
   /** A file can contain a row matching `lo <= c <= hi` only if it has
     * any non-null value and its [min, max] intersects [lo, hi]. An
@@ -406,7 +173,6 @@ object DataSkipping {
   // 1.2 B/key·ln(1/fpp)/ln²2 — ~1.2 MB per 1M-key file at 1 %.
 
   private[operators] val BloomDirPrefix = "_graft_bloom__"
-  private[operators] val StaleBloomDirPrefix = "_graft_bloom_stale__"
 
   private def bloomPath(tablePath: String, keyCol: String) =
     s"$tablePath/$BloomDirPrefix$keyCol"
@@ -423,7 +189,6 @@ object DataSkipping {
       tablePath: String,
       keyCol: String,
       fpp: Double = 0.01): Unit = {
-    touchIndexMarker(spark, tablePath) // first — see writeManifest
     bloomRowsOf(spark.read.parquet(tablePath), keyCol, fpp)
       .coalesce(1).write.mode("overwrite")
       .parquet(bloomPath(tablePath, keyCol))
@@ -464,24 +229,6 @@ object DataSkipping {
     }.toDF("file", "n_keys", "bloom")
     rows
   }
-
-  /** Rebuild the bloom index after a partition-scoped commit at cost
-    * ∝ TOUCHED partitions — the bloom analog of
-    * [[refreshManifestPartitioned]], with the same self-healing
-    * validation against the real file listing. Falls back to a full
-    * [[writeBloomIndex]] when no prior index exists. */
-  def refreshBloomIndexPartitioned(
-      spark: SparkSession,
-      tablePath: String,
-      touchedDirs: Seq[String],
-      keyCol: String,
-      fpp: Double = 0.01,
-      assumeSerialCommits: Boolean = false): Unit =
-    refreshIndexPartitioned(spark, tablePath, touchedDirs,
-      StaleBloomDirPrefix + keyCol, BloomDirPrefix + keyCol,
-      fullRebuild = () => writeBloomIndex(spark, tablePath, keyCol, fpp),
-      rebuildFor = scan => bloomRowsOf(scan, keyCol, fpp),
-      assumeSerialCommits = assumeSerialCommits)
 
   def hasBloomIndex(
       spark: SparkSession, tablePath: String, keyCol: String): Boolean = {

@@ -68,7 +68,7 @@ object Dedup {
     * shape of exact dedup (dedupe each arriving increment against
     * history without re-deduping history — refresh cost ∝ batch, like
     * [[graft.operators.IncrementalAgg]] for aggregates and
-    * `Upsert.upsertPartitioned` for storage).
+    * [[graft.operators.FactVersioned.upsert]] for storage).
     *
     * Scale posture: the corpus side enters the join as 8-byte
     * `xxhash64` content hashes ONLY (projected before the exchange —

@@ -53,11 +53,11 @@ import CallSites.{callerSite, overlapped, withCallSite}
   * is queryable with the exact content it committed, including
   * generations older than the index.
   *
-  * Staleness is intrinsic rather than parked: a generation whose
-  * manifest references un-indexed files fails loudly at [[topK]]
-  * ("refreshIndex first") — unlike [[AnnIndex]]'s park-on-commit,
-  * older generations REMAIN queryable while the head awaits refresh,
-  * which is the right posture for a versioned store.
+  * Staleness is intrinsic: a generation whose manifest references
+  * un-indexed files fails loudly at [[topK]] ("refreshIndex first"),
+  * while older generations REMAIN queryable as the head awaits
+  * refresh — the right posture for a versioned store, where
+  * [[AnnIndex]]'s flat sidecar is build-once.
   *
   * Uniqueness contract: ids must be unique WITHIN each commit's content
   * (the invariant [[FactVersioned.upsert]] maintains for key-unique

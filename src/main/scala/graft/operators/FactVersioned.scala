@@ -3,7 +3,8 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
@@ -32,7 +33,7 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
   *  - `_graft_gens/gen=<n>/manifest/` — (dir, file) rows; `file` is
   *    relative to `_graft_vdata`. `schema.ddl` pins the generation's
   *    schema (partition-column types are never trusted to dir-name
-  *    inference — same posture as [[Upsert.readPartitionedSnapshot]]).
+  *    inference).
   *    `_graft_claim` / `_graft_committed` ([[Versioned.ClaimMarker]] /
   *    [[Versioned.CommitMarker]]): the claim's exclusive create
   *    serializes concurrent committers onto distinct numbers, the
@@ -974,7 +975,57 @@ object FactVersioned {
     require(cols.length == vals.length,
       s"partition tuple arity ${vals.length} != columns ${cols.length}")
     cols.zip(vals).map { case (c, v) =>
-      Upsert.partitionDirName(c, v) }.mkString("/")
+      partitionDirName(c, v) }.mkString("/")
+  }
+
+  /** Directory name for one partition value, matching Spark's own
+    * partitioned-write layout (escaping included; null →
+    * `__HIVE_DEFAULT_PARTITION__`). Restricted to the types whose
+    * string form provably matches Spark's `Cast(v AS STRING)` path
+    * layout — string, integral, boolean, java.sql.Date/LocalDate, and
+    * timestamps: TIMESTAMP renders through Spark's own
+    * fraction formatter in the SESSION time zone (exactly the write
+    * path's `Cast(ts AS STRING)`), TIMESTAMP_NTZ through the same
+    * formatter at UTC (wall-clock micros, zone-free by definition).
+    * Any mismatch with the staged layout is self-checking: the
+    * committer's undeclared-partitions require compares these names
+    * against the dirs Spark actually wrote. */
+  private[graft] def partitionDirName(col: String, v: Any): String = {
+    def tsFmt(zone: java.time.ZoneId) =
+      org.apache.spark.sql.catalyst.util.TimestampFormatter
+        .getFractionFormatter(zone)
+    def sessionZone = org.apache.spark.sql.catalyst.util.DateTimeUtils
+      .getZoneId(org.apache.spark.sql.internal.SQLConf.get
+        .sessionLocalTimeZone)
+    val s = v match {
+      case null => null
+      case d: java.sql.Date => d.toString
+      case d: java.time.LocalDate => d.toString
+      case s: String => s
+      case i: java.lang.Integer => i.toString
+      case l: java.lang.Long => l.toString
+      case sh: java.lang.Short => sh.toString
+      case b: java.lang.Byte => b.toString
+      case b: java.lang.Boolean => b.toString
+      case t: java.sql.Timestamp => tsFmt(sessionZone).format(
+        org.apache.spark.sql.catalyst.util.DateTimeUtils
+          .fromJavaTimestamp(t))
+      case i: java.time.Instant => tsFmt(sessionZone).format(
+        org.apache.spark.sql.catalyst.util.DateTimeUtils
+          .instantToMicros(i))
+      case ldt: java.time.LocalDateTime => // TIMESTAMP_NTZ
+        tsFmt(java.time.ZoneOffset.UTC).format(
+          org.apache.spark.sql.catalyst.util.DateTimeUtils
+            .localDateTimeToMicros(ldt))
+      case other => throw new IllegalArgumentException(
+        s"unsupported partition value type: " +
+          s"${other.getClass.getName} (use string/int/long/" +
+          "boolean/date/timestamp partition columns)")
+    }
+    if (s == null)
+      ExternalCatalogUtils.escapePathName(col) + "=" +
+        ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+    else ExternalCatalogUtils.getPartitionPathString(col, s)
   }
 
   /** [[replacePartitions]] for MULTI-COLUMN partitioning (VERDICT r10
@@ -1683,7 +1734,7 @@ object FactVersioned {
     * a NEWER committed generation exists whose schema shape or column
     * mapping differs from the basis generation's — the precondition for
     * reclassifying a derive-time AnalysisException as the retryable
-    * concurrent-DDL drift (see the catch in [[upsert]]). Metadata-scale
+    * concurrent-DDL drift (see the catch in [[mergeTouched]]). Metadata-scale
     * reads only (MetaCache-memoized schema/colmap sidecars). */
   private def metadataDriftedSince(
       spark: SparkSession, tablePath: String, basis: Long): Boolean = {
@@ -1727,7 +1778,8 @@ object FactVersioned {
   /** Upsert into the latest generation: touched partitions' new content
     * = current rows whose key has no update + the updates; commits via
     * [[replacePartitions]], so only touched partitions are read
-    * (manifest-pruned) or written.
+    * (manifest-pruned) or written. The single-column form of
+    * [[upsertBy]].
     *
     * Updates must be key-unique — ENFORCED via [[requireKeyUnique]]
     * (not just documented): two source rows sharing a key would both
@@ -1753,67 +1805,9 @@ object FactVersioned {
       maxTouchedPartitions: Int = 10000,
       properties: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Nil,
-      preCommit: () => Unit = () => ()): Commit = {
-    val touchedRows = updates.select(partitionCol).distinct()
-      .limit(maxTouchedPartitions + 1).collect()
-    require(touchedRows.length <= maxTouchedPartitions,
-      s"upsert touches more than $maxTouchedPartitions partitions — " +
-        "this is a rewrite, not an incremental commit")
-    requireKeyUnique(updates, keys, "FactVersioned.upsert")
-    val touched = touchedRows.map(_.get(0)).toIndexedSeq
-    val gens = generations(spark, tablePath)
-    val commit =
-      if (gens.isEmpty)
-        replacePartitions(spark, tablePath, updates, partitionCol,
-          touched, retain, properties = properties, statsCols = statsCols,
-          preCommit = preCommit)
-      else {
-        val basis = gens.max // the head this merge is derived from
-        try {
-          val physCol = physicalPartitionColumns(
-            spark, tablePath, Seq(partitionCol)).head
-          val touchedDirs =
-            touched.map(v => Upsert.partitionDirName(physCol, v))
-          val current = readDirs(spark, tablePath, Some(basis), touchedDirs)
-          val keep = current.join(
-            updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-          replacePartitions(spark, tablePath, keep.unionByName(updates),
-            partitionCol, touched, retain, basisGen = Some(basis),
-            properties = properties, statsCols = statsCols,
-            preCommit = preCommit)
-        } catch {
-          // The carry/union above ANALYZES eagerly, and parts of the
-          // derive (column-mapping resolution, nested-struct alignment)
-          // read the table's CURRENT metadata — a rename/add/drop
-          // landing between `basis` and here can make that analysis
-          // fail (e.g. UNION INCOMPATIBLE_COLUMN_TYPE) before the
-          // claim-time drift guard can classify it. That is the same
-          // retryable race, not a caller error: reclassify it as the
-          // standard drift ConcurrentModificationException — but ONLY
-          // when the head's schema/colmap really moved past the basis;
-          // a genuinely malformed source (metadata unchanged) keeps
-          // its original analysis error. Two drift directions: the DDL
-          // landed AFTER the basis resolved (metadataDriftedSince), or
-          // BEFORE it — the caller built `updates` against the head it
-          // saw, a DDL committed, and this upsert resolved the
-          // post-DDL basis, so the source's shape matches an OLDER
-          // generation (staleSourceShape). Both are re-derivable races,
-          // not statement errors.
-          case e: org.apache.spark.sql.AnalysisException
-              if metadataDriftedSince(spark, tablePath, basis) ||
-                staleSourceShape(spark, tablePath, basis, updates.schema) =>
-            throw new java.util.ConcurrentModificationException(
-              s"FactVersioned: the schema or column mapping of $tablePath " +
-                s"changed after this commit's basis generation $basis (a " +
-                "rename/add/drop landed concurrently; the upsert's " +
-                "content was derived under the old metadata: " +
-                s"${e.getClass.getSimpleName}) — retry the operation " +
-                "against the new head")
-        }
-      }
-    recordMergeKeys(spark, tablePath, keys)
-    commit
-  }
+      preCommit: () => Unit = () => ()): Commit =
+    upsertBy(spark, tablePath, updates, keys, Seq(partitionCol), retain,
+      maxTouchedPartitions, properties, statsCols, preCommit)
 
   /** The table's partition column name, recovered from the head
     * generation's manifest dir names (Hive `pcol=value` forms,
@@ -1919,8 +1913,7 @@ object FactVersioned {
       val eq = seg.indexOf('=')
       require(eq > 0,
         s"FactVersioned.partitionColumns: malformed partition dir '$seg'")
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(seg.substring(0, eq))
+      ExternalCatalogUtils.unescapePathName(seg.substring(0, eq))
     }
   }
 
@@ -1961,6 +1954,49 @@ object FactVersioned {
     val touched = touchedTuples(updates, partitionCols,
       maxTouchedPartitions, "upsertBy")
     requireKeyUnique(updates, keys, "FactVersioned.upsertBy")
+    mergeTouched(spark, tablePath, updates, keys, partitionCols, touched,
+      retain, properties, statsCols, preCommit)
+  }
+
+  /** Upsert one raw micro-batch that may repeat keys: it is reduced to
+    * one row per key under [[Upsert.upsert]]'s winner rule
+    * ([[Upsert.batchWinners]] — the largest `orderBy`, by default the
+    * last row in batch order), and rows with a NULL key are appended as
+    * plain inserts on every delivery (Postgres NULL-distinctness, as in
+    * [[Upsert.upsert]]). The winners are key-unique by construction, so
+    * the cardinality check of [[upsertBy]] — which groups NULL keys
+    * together — does not run. */
+  private[graft] def upsertBatchBy(
+      spark: SparkSession,
+      tablePath: String,
+      batch: DataFrame,
+      keys: Seq[String],
+      partitionCols: Seq[String],
+      orderBy: Option[Column] = None,
+      statsCols: Seq[String] = Nil,
+      preCommit: () => Unit = () => ()): Commit = {
+    val (winners, nullKeyed) =
+      Upsert.batchWinners(batch, keys, orderBy, batch.columns.toSeq)
+    val rows = winners.unionByName(nullKeyed)
+    val touched = touchedTuples(rows, partitionCols, 10000, "upsertBatchBy")
+    mergeTouched(spark, tablePath, rows, keys, partitionCols, touched,
+      retain = 3, Map.empty, statsCols, preCommit)
+  }
+
+  /** The upsert commit shared by [[upsertBy]] and [[upsertBatchBy]]:
+    * each touched partition's current rows whose key has no update,
+    * plus the updates, replace that partition. */
+  private def mergeTouched(
+      spark: SparkSession,
+      tablePath: String,
+      updates: DataFrame,
+      keys: Seq[String],
+      partitionCols: Seq[String],
+      touched: Seq[Seq[Any]],
+      retain: Int,
+      properties: Map[String, String],
+      statsCols: Seq[String],
+      preCommit: () => Unit): Commit = {
     val gens = generations(spark, tablePath)
     val commit =
       if (gens.isEmpty)
@@ -1968,17 +2004,47 @@ object FactVersioned {
           touched, retain, properties = properties, statsCols = statsCols,
           preCommit = preCommit)
       else {
-        val basis = gens.max
-        val physCols =
-          physicalPartitionColumns(spark, tablePath, partitionCols)
-        val touchedDirs = touched.map(v => partitionDirPath(physCols, v))
-        val current = readDirs(spark, tablePath, Some(basis), touchedDirs)
-        val keep = current.join(
-          updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        replacePartitionsBy(spark, tablePath, keep.unionByName(updates),
-          partitionCols, touched, retain, basisGen = Some(basis),
-          properties = properties, statsCols = statsCols,
-          preCommit = preCommit)
+        val basis = gens.max // the head this merge is derived from
+        try {
+          val physCols =
+            physicalPartitionColumns(spark, tablePath, partitionCols)
+          val touchedDirs = touched.map(v => partitionDirPath(physCols, v))
+          val current = readDirs(spark, tablePath, Some(basis), touchedDirs)
+          val keep = current.join(
+            updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+          replacePartitionsBy(spark, tablePath, keep.unionByName(updates),
+            partitionCols, touched, retain, basisGen = Some(basis),
+            properties = properties, statsCols = statsCols,
+            preCommit = preCommit)
+        } catch {
+          // The carry/union above ANALYZES eagerly, and parts of the
+          // derive (column-mapping resolution, nested-struct alignment)
+          // read the table's CURRENT metadata — a rename/add/drop
+          // landing between `basis` and here can make that analysis
+          // fail (e.g. UNION INCOMPATIBLE_COLUMN_TYPE) before the
+          // claim-time drift guard can classify it. That is the same
+          // retryable race, not a caller error: reclassify it as the
+          // standard drift ConcurrentModificationException — but ONLY
+          // when the head's schema/colmap really moved past the basis;
+          // a genuinely malformed source (metadata unchanged) keeps
+          // its original analysis error. Two drift directions: the DDL
+          // landed AFTER the basis resolved (metadataDriftedSince), or
+          // BEFORE it — the caller built `updates` against the head it
+          // saw, a DDL committed, and this upsert resolved the
+          // post-DDL basis, so the source's shape matches an OLDER
+          // generation (staleSourceShape). Both are re-derivable races,
+          // not statement errors.
+          case e: org.apache.spark.sql.AnalysisException
+              if metadataDriftedSince(spark, tablePath, basis) ||
+                staleSourceShape(spark, tablePath, basis, updates.schema) =>
+            throw new java.util.ConcurrentModificationException(
+              s"FactVersioned: the schema or column mapping of $tablePath " +
+                s"changed after this commit's basis generation $basis (a " +
+                "rename/add/drop landed concurrently; the upsert's " +
+                "content was derived under the old metadata: " +
+                s"${e.getClass.getSimpleName}) — retry the operation " +
+                "against the new head")
+        }
       }
     recordMergeKeys(spark, tablePath, keys)
     commit
@@ -2013,7 +2079,8 @@ object FactVersioned {
   /** Append `rows` to the latest generation (INSERT INTO semantics —
     * no key dedup): each touched partition's new content = its current
     * rows ∪ the appended rows; commits via [[replacePartitions]], so
-    * cost ∝ touched partitions. */
+    * cost ∝ touched partitions. The single-column form of
+    * [[appendBy]]. */
   def append(
       spark: SparkSession,
       tablePath: String,
@@ -2022,27 +2089,9 @@ object FactVersioned {
       retain: Int = 3,
       maxTouchedPartitions: Int = 10000,
       properties: Map[String, String] = Map.empty,
-      statsCols: Seq[String] = Nil): Commit = {
-    val touchedRows = rows.select(partitionCol).distinct()
-      .limit(maxTouchedPartitions + 1).collect()
-    require(touchedRows.length <= maxTouchedPartitions,
-      s"append touches more than $maxTouchedPartitions partitions — " +
-        "this is a rewrite, not an incremental commit")
-    val touched = touchedRows.map(_.get(0)).toIndexedSeq
-    val gens = generations(spark, tablePath)
-    if (gens.isEmpty)
-      return replacePartitions(spark, tablePath, rows, partitionCol,
-        touched, retain, properties = properties, statsCols = statsCols)
-    val basis = gens.max
-    val physCol = physicalPartitionColumns(
-      spark, tablePath, Seq(partitionCol)).head
-    val touchedDirs =
-      touched.map(v => Upsert.partitionDirName(physCol, v))
-    val current = readDirs(spark, tablePath, Some(basis), touchedDirs)
-    replacePartitions(spark, tablePath, current.unionByName(rows),
-      partitionCol, touched, retain, basisGen = Some(basis),
-      properties = properties, statsCols = statsCols)
-  }
+      statsCols: Seq[String] = Nil): Commit =
+    appendBy(spark, tablePath, rows, Seq(partitionCol), retain,
+      maxTouchedPartitions, properties, statsCols)
 
   /** Compact `dirs` of the head generation: rewrite each listed
     * partition's (possibly many, accumulated-across-commits) files as
@@ -2072,31 +2121,9 @@ object FactVersioned {
       zorderCols: Seq[String] = Nil,
       statsCols: Seq[String] = Nil,
       zorderBits: Int = 12,
-      filesPerPartition: Int = 8): Commit = {
-    require(dirs.nonEmpty, "compactPartitions: no dirs given")
-    val head = resolveGen(spark, tablePath, None)
-    val raw = readFiles(spark, tablePath, head, Some(dirs))
-    val content =
-      if (zorderCols.isEmpty)
-        raw.repartition(math.max(dirs.size, 1), col(partitionCol))
-      else {
-        val z = ZOrder.zValue(raw, zorderCols, zorderBits)
-        raw.withColumn("__graft_z", z)
-          .repartitionByRange(
-            math.max(dirs.size * math.max(filesPerPartition, 1), 1),
-            col(partitionCol), col("__graft_z"))
-          .sortWithinPartitions(col(partitionCol), col("__graft_z"))
-          .drop("__graft_z")
-      }
-    // touched values are recovered from the content itself: dir names
-    // are Hive-escaped `pcol=value` forms, and replacePartitions
-    // re-derives the same names, so declaring the read rows' distinct
-    // partition values is exact
-    val touched = raw.select(partitionCol).distinct().collect()
-      .map(_.get(0)).toIndexedSeq
-    replacePartitions(spark, tablePath, content, partitionCol, touched,
-      retain, basisGen = Some(head), statsCols = statsCols)
-  }
+      filesPerPartition: Int = 8): Commit =
+    compactPartitionsBy(spark, tablePath, dirs, Seq(partitionCol), retain,
+      zorderCols, statsCols, zorderBits, filesPerPartition)
 
   /** [[compactPartitions]] for MULTI-COLUMN partitioned tables: `dirs`
     * name nested leaf-dir paths (`c1=v1/c2=v2`); each listed leaf's
@@ -2151,27 +2178,9 @@ object FactVersioned {
       keys: Seq[String],
       partitionCol: String,
       retain: Int = 3,
-      maxTouchedPartitions: Int = 10000): Commit = {
-    val gens = generations(spark, tablePath)
-    if (gens.isEmpty)
-      return upsert(spark, tablePath, updates, keys, partitionCol, retain,
-        maxTouchedPartitions)
-    val touchedRows = updates.select(partitionCol).distinct()
-      .limit(maxTouchedPartitions + 1).collect()
-    require(touchedRows.length <= maxTouchedPartitions,
-      s"upsertEvolve touches more than $maxTouchedPartitions partitions")
-    requireKeyUnique(updates, keys, "FactVersioned.upsertEvolve")
-    val touched = touchedRows.map(_.get(0)).toIndexedSeq
-    val basis = gens.max
-    val physCol = physicalPartitionColumns(
-      spark, tablePath, Seq(partitionCol)).head
-    val touchedDirs =
-      touched.map(v => Upsert.partitionDirName(physCol, v))
-    val current = readDirs(spark, tablePath, Some(basis), touchedDirs)
-    replacePartitions(spark, tablePath,
-      Upsert.upsertEvolve(current, updates, keys),
-      partitionCol, touched, retain, basisGen = Some(basis))
-  }
+      maxTouchedPartitions: Int = 10000): Commit =
+    upsertEvolveBy(spark, tablePath, updates, keys, Seq(partitionCol),
+      retain, maxTouchedPartitions)
 
   /** Commit a new generation whose pinned schema is widened by `added`
     * (nullable, appended) columns with NO data rewrite — pure
@@ -3332,13 +3341,11 @@ object FactVersioned {
   }
 
   /** Directory-name prefixes of every column-keyed sidecar family
-    * (live + parked-stale forms; transient `*_tmp__` staging is owned
-    * by in-flight builders and deliberately not carried). */
+    * (transient `*_tmp__` staging is owned by in-flight builders and
+    * deliberately not carried). */
   private val SidecarPrefixes: Seq[String] = Seq(
-    AnnIndex.DirPrefix, AnnIndex.StaleDirPrefix,
-    TfIdf.DirPrefix, TfIdf.StaleDirPrefix,
-    FactAnnIndex.DirPrefix,
-    DataSkipping.BloomDirPrefix, DataSkipping.StaleBloomDirPrefix)
+    AnnIndex.DirPrefix, TfIdf.DirPrefix, FactAnnIndex.DirPrefix,
+    DataSkipping.BloomDirPrefix)
 
   /** Rename each `<prefix><old>` sidecar dir to `<prefix><new>` after
     * a column rename — see [[renameColumns]]. The column segment

@@ -19,7 +19,7 @@ object Maintenance {
   final case class CompactionReport(
       filesBefore: Long, filesAfter: Long, bytes: Long, compacted: Boolean)
 
-  /** THE fragmentation test, shared by both compactors and
+  /** THE fragmentation test, shared by [[compactSnapshot]] and
     * [[healthReport]]: more than twice the ideal file count for the
     * byte volume (count-based — see [[compactSnapshot]]'s doc for why
     * a mean-size test lies). */
@@ -41,9 +41,9 @@ object Maintenance {
     * safe to run after every load.
     *
     * Flat snapshot tables only: a partitioned layout (subdirectories
-    * from [[writePartitioned]] / [[Upsert.upsertPartitioned]]) commits
-    * per DIRECTORY, so this throws rather than silently no-opping —
-    * use [[compactPartitionedSnapshot]] for those. */
+    * from [[writePartitioned]]) makes this throw rather than silently
+    * no-op — partitioned tables live in [[FactVersioned]], whose
+    * [[FactVersioned.compactPartitionsBy]] compacts per partition. */
   def compactSnapshot(
       spark: SparkSession,
       path: String,
@@ -57,8 +57,8 @@ object Maintenance {
     if (!fs.exists(p)) return CompactionReport(0, 0, 0, false)
     val entries = fs.listStatus(p).toSeq
     require(!entries.exists(_.isDirectory),
-      s"compactSnapshot: $path contains subdirectories — use " +
-        "compactPartitionedSnapshot for partitioned tables")
+      s"compactSnapshot: $path contains subdirectories — compact " +
+        "partitioned tables with FactVersioned.compactPartitionsBy")
     val dataFiles = entries
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     val bytes = dataFiles.map(_.getLen).sum
@@ -73,86 +73,6 @@ object Maintenance {
     val after = fs.listStatus(p).toSeq
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")).toLong
     CompactionReport(nFiles, after, bytes, true)
-  }
-
-  /** Per-directory compaction for PARTITION-SCOPED snapshot tables
-    * ([[Upsert.upsertPartitioned]]'s layout): each fragmented partition
-    * dir is rewritten to ≈`targetFileBytes` files and committed through
-    * the same crash-safe per-dir swap the upsert path uses (write to a
-    * sibling staging dir, rename via the hidden `_prev.` generation).
-    * Fragmentation test and no-op behavior match [[compactSnapshot]],
-    * applied per dir — healthy dirs schedule no job and their files
-    * stay byte-identical. Fragmentation arises here when a commit's
-    * write parallelism exceeded one task per partition value
-    * (`filesPerPartition` salting, AQE splits) or after many
-    * `touchedHint` no-op rewrites at low row counts. */
-  def compactPartitionedSnapshot(
-      spark: SparkSession,
-      path: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): Map[String, CompactionReport] = {
-    Upsert.repairPartitionedSnapshot(spark, path)
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Map.empty
-    val dirs = fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith("."))
-    val sized = dirs.map { d =>
-      val dataFiles = fs.listStatus(new Path(root, d))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      val bytes = dataFiles.map(_.getLen).sum
-      val nFiles = dataFiles.length.toLong
-      (d, bytes, nFiles, !fragmented(nFiles, bytes, targetFileBytes))
-    }
-    // Rewrites replace files a root-level DataSkipping manifest
-    // describes — park it before the first swap (values are unchanged
-    // by compaction, but file paths/groupings are not). A fully
-    // healthy table is a pure no-op and keeps its manifest live.
-    if (sized.exists(!_._4)) DataSkipping.invalidateManifest(spark, path)
-    val tmpRoot = new Path(
-      path + "__ptmp_" + java.util.UUID.randomUUID().toString.take(8))
-    try {
-      sized.map { case (d, bytes, nFiles, healthy) =>
-        val dirPath = new Path(root, d)
-        if (healthy) d -> CompactionReport(nFiles, nFiles, bytes, false)
-        else {
-          val targetFiles = math.max(1,
-            math.ceil(bytes.toDouble / targetFileBytes).toInt)
-          // Compaction is values-preserving ONLY against the exact file
-          // set it read — fingerprint it, stage unlocked, and swap only
-          // if the dir is unchanged under the commit lock. A dir a
-          // concurrent commit touched is SKIPPED this cycle (clobbering
-          // it would throw the commit's fresh files away); the next
-          // maintenance tick re-evaluates it.
-          val fp = CommitLock.fingerprint(spark, path, Seq(d))
-          // dir files carry no partition column — the rewrite is a plain
-          // flat read/coalesce/write of THIS dir only
-          val tmp = new Path(tmpRoot, d)
-          spark.read.parquet(dirPath.toString).coalesce(targetFiles)
-            .write.mode("overwrite").parquet(tmp.toString)
-          val swapped = CommitLock.withLocks(spark, Seq(path)) {
-            if (CommitLock.fingerprint(spark, path, Seq(d)) != fp) false
-            else {
-              val prev = new Path(root, Upsert.HiddenPrev + d)
-              if (fs.exists(prev)) fs.delete(prev, true)
-              fs.rename(dirPath, prev)
-              fs.rename(tmp, dirPath)
-              fs.delete(prev, true)
-              true
-            }
-          }
-          if (!swapped) d -> CompactionReport(nFiles, nFiles, bytes, false)
-          else {
-            val after = fs.listStatus(dirPath)
-              .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .toLong
-            d -> CompactionReport(nFiles, after, bytes, true)
-          }
-        }
-      }.toMap
-    } finally {
-      if (fs.exists(tmpRoot)) fs.delete(tmpRoot, true)
-    }
   }
 
   final case class TableHealth(

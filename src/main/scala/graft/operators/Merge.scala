@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Staging→main promote: the reference's only multi-statement relational
@@ -50,48 +50,45 @@ object Merge {
     PromoteResult(newMain, remaining)
   }
 
-  /** What a partition-scoped promote committed (empty touched set ⇒
-    * nothing gated in, nothing written). */
+  /** What a partition-scoped promote committed: the main upsert, then
+    * the staging commit that dropped the promoted keys. */
   final case class PromotePartitionedResult(
-      main: Upsert.PartitionedCommit, staging: Upsert.PartitionedCommit)
+      main: FactVersioned.Commit, staging: FactVersioned.Commit)
 
-  /** [[promote]] over partition-scoped snapshot tables: both the main
-    * upsert and the staging delete rewrite ONLY the partition
-    * directories holding promoted rows. Write cost per cycle is
-    * proportional to the promoted batch, not to the accumulated main
-    * table — the at-scale form of the promote transaction (the flat
-    * [[promote]] + [[Upsert.writeSnapshots]] pair rewrites both tables
-    * in full every cycle).
+  /** [[promote]] over two [[FactVersioned]] tables partitioned by
+    * `partitionCol`: both commits touch ONLY the partitions holding
+    * promoted rows, so the cost per cycle is ∝ the promoted batch, not
+    * the accumulated main table. Returns None when no staged row's
+    * parent has arrived (nothing is written).
     *
-    * Same two-phase commit ordering as the flat pair: both output
-    * plans execute against the CURRENT generations before any
-    * partition dir swaps ([[Upsert.writeSnapshotsPartitioned]]).
+    * Two commits, main first: an upsert of the promoted rows into main
+    * ([[FactVersioned.upsertBatchBy]] — the winner rule of [[promote]]'s
+    * [[Upsert.upsert]], NULL-keyed rows inserted), then a staging
+    * commit pinned to the staging generation the promote read, whose
+    * touched partitions keep only the rows whose key was not
+    * promoted. A staging commit that lands on a touched partition in
+    * between makes the second commit conflict
+    * (ConcurrentModificationException); the promote then re-derives
+    * both commits from the new staging head, at most `commitRetries`
+    * times. A crash between the two commits leaves the promoted rows
+    * in both tables; the next promote re-promotes them, idempotently
+    * for keyed rows.
     *
-    * Semantics note vs [[promote]]: the staging-side delete anti-joins
-    * against THIS CYCLE'S PROMOTED keys (not the full new main — which
-    * would execute the whole main-upsert plan a second time just to
-    * project its keys). A parked row whose key already exists in main
-    * but was not promoted this cycle (possible only when an
-    * already-promoted key is redelivered AND its parent has since
-    * vanished from `parent`) stays parked instead of being dropped —
-    * it re-promotes (idempotently) whenever its parent reappears.
-    * Keys must not migrate partitions (see the contract in [[Upsert]]'s
-    * partition-scoped section).
+    * Semantics note vs [[promote]]: the staging side drops THIS
+    * CYCLE'S PROMOTED keys (not every key of the new main), so a
+    * parked row whose key already sits in main but whose parent has
+    * since vanished stays parked, and re-promotes when its parent
+    * reappears. NULL-keyed rows never match a key: as in [[promote]],
+    * they stay parked and are inserted into main again on every
+    * promote. Keys must not move between partitions (see
+    * [[FactVersioned.upsert]]).
     *
-    * @param schema       full staging/main row schema including
-    *                     `partitionCol` (pins partition-column typing;
-    *                     both tables share the row shape, as in the
-    *                     reference's staging/main pair)
-    * @param partitionCol partition column of BOTH snapshot tables */
-  /** @param commitRetries optimistic-concurrency retries (see
-    *   [[Upsert.upsertPartitioned]]). The promote's touched set is only
-    *   known after reading staging, so the fingerprint covers EVERY
-    *   partition dir of both tables — a concurrent commit to either
-    *   (e.g. the streaming upsert landing a batch in staging mid-
-    *   promote, whose rows an unguarded staging swap would delete)
-    *   aborts the swap and re-runs the transaction from the new state. */
+    * @param preCommit runs inside each of the two commits, after its
+    *   claim is linearized, with that commit's table path (see
+    *   [[FactVersioned.replacePartitions]]); a throw aborts that
+    *   commit. */
   def promotePartitioned(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       stagingPath: String,
       parent: DataFrame,
       fk: String,
@@ -99,48 +96,39 @@ object Merge {
       mainPath: String,
       mainKeys: Seq[String],
       partitionCol: String,
-      schema: org.apache.spark.sql.types.StructType,
-      maxTouchedPartitions: Int = 10000,
-      commitRetries: Int = 3): Option[PromotePartitionedResult] = {
+      commitRetries: Int = 3,
+      preCommit: String => Unit = _ => ())
+      : Option[PromotePartitionedResult] = {
+    val pcols = Seq(partitionCol)
     var attempt = 0
     while (true) {
       attempt += 1
-      val fpStaging = CommitLock.fingerprintAll(spark, stagingPath)
-      val fpMain = CommitLock.fingerprintAll(spark, mainPath)
-      val staging = Upsert.readPartitionedSnapshot(spark, stagingPath, schema)
-        .getOrElse(sys.error(s"promotePartitioned: no staging snapshot at $stagingPath"))
-      val parentKeys = parent.select(col(parentKey).as(fk))
-      val promoted = staging.join(parentKeys, Seq(fk), "left_semi")
-      val touched = promoted.select(col(partitionCol)).distinct()
-        .limit(maxTouchedPartitions + 1).collect().map(_.get(0)).toSeq
-      require(touched.size <= maxTouchedPartitions,
-        s"promotePartitioned: promoted rows touch > $maxTouchedPartitions " +
-          s"partitions of $partitionCol")
+      val basis = FactVersioned.generations(spark, stagingPath).lastOption
+        .getOrElse(sys.error(
+          s"promotePartitioned: no staging table at $stagingPath"))
+      val staging = FactVersioned.read(spark, stagingPath, Some(basis))
+      // the USING join leads with `fk`; main keeps staging's column order
+      val promoted = staging
+        .join(parent.select(col(parentKey).as(fk)), Seq(fk), "left_semi")
+        .select(staging.columns.toIndexedSeq.map(col): _*)
+      val touched = FactVersioned.touchedTuples(promoted, pcols, 10000,
+        "promotePartitioned")
       if (touched.isEmpty) return None // nothing gated in this cycle
-      val filter = Upsert.touchedFilter(partitionCol, touched)
-      val mainPruned = Upsert.readPartitionedSnapshot(spark, mainPath, schema)
-        .map(_.where(filter)).getOrElse(promoted.limit(0))
-      val newMainTouched = Upsert.upsert(mainPruned, promoted, mainKeys)
-      val remaining = staging.where(filter).join(
-        promoted.select(mainKeys.map(col): _*), mainKeys, "left_anti")
       try {
-        // both paths were just repaired by their readPartitionedSnapshot
-        val Seq(mainCommit, stagingCommit) = Upsert.writeSnapshotsPartitioned(Seq(
-          Upsert.PartitionedWrite(newMainTouched, mainPath, partitionCol, touched),
-          Upsert.PartitionedWrite(remaining, stagingPath, partitionCol, touched)),
-          skipRepair = true,
-          preSwapCheck = () => {
-            if (CommitLock.fingerprintAll(spark, stagingPath) != fpStaging ||
-                CommitLock.fingerprintAll(spark, mainPath) != fpMain)
-              throw new java.util.ConcurrentModificationException(
-                s"promotePartitioned($stagingPath -> $mainPath): a table " +
-                  "changed since the transaction was computed")
-          })
+        val mainCommit = FactVersioned.upsertBatchBy(spark, mainPath,
+          promoted, mainKeys, pcols, preCommit = () => preCommit(mainPath))
+        val physCols =
+          FactVersioned.physicalPartitionColumns(spark, stagingPath, pcols)
+        val remaining = FactVersioned.readDirs(spark, stagingPath,
+          Some(basis), touched.map(FactVersioned.partitionDirPath(physCols, _)))
+          .join(promoted.select(mainKeys.map(col): _*), mainKeys, "left_anti")
+        val stagingCommit = FactVersioned.replacePartitionsBy(spark,
+          stagingPath, remaining, pcols, touched, basisGen = Some(basis),
+          preCommit = () => preCommit(stagingPath))
         return Some(PromotePartitionedResult(mainCommit, stagingCommit))
       } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt > commitRetries) throw e
-          // re-run the transaction against the new state
+        case _: java.util.ConcurrentModificationException
+            if attempt <= commitRetries => // re-derive from the new head
       }
     }
     sys.error("unreachable")

@@ -8,8 +8,10 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 
 /** Driver-side overlap of INDEPENDENT Spark jobs (guide §2.6): a
   * dedicated bounded daemon pool + await helpers shared by every
-  * overlap site (TfIdf / AnnIndex / FactAnnIndex / GraftDml / Upsert's
-  * multi-table staging / BatchEtl's constraint counts).
+  * overlap site (TfIdf / AnnIndex / GraftDml / Upsert's multi-table
+  * staging / BatchEtl's constraint counts / the gates' twins). Work
+  * enters the pool only through [[CallSites.overlapped]], which runs
+  * it under the submitter's Spark local properties.
   *
   * Why not `ExecutionContext.Implicits.global` + `Duration.Inf`: the
   * global fork-join pool couples unrelated builds (one build's blocked
@@ -28,7 +30,8 @@ object Overlap {
   val Threads: Int =
     math.min(16, math.max(4, Runtime.getRuntime.availableProcessors() / 4))
 
-  implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(
+  /** The pool; submit through [[CallSites.overlapped]]. */
+  private[operators] val ec: ExecutionContext = ExecutionContext.fromExecutor(
     Executors.newFixedThreadPool(Threads,
       new ThreadFactory {
         override def newThread(r: Runnable): Thread = {

@@ -299,19 +299,18 @@ object TfIdf {
   //
   // bm25TopK re-tokenizes the corpus and recomputes df/avgdl on EVERY
   // call — correct, but at 100 TB retrieval stats are a persisted
-  // artifact refreshed ∝ touched partitions, exactly the AnnIndex
-  // posture. writeTextIndex pays tokenize + tf/df aggregation ONCE
-  // into `_graft_text__<col>/`; bm25TopKIndexed answers queries
-  // reading ONLY the sidecar; refreshTextIndexPartitioned re-derives
-  // just the partitions a partition-scoped commit touched.
+  // artifact, exactly the AnnIndex posture. writeTextIndex pays
+  // tokenize + tf/df aggregation ONCE into `_graft_text__<col>/`;
+  // bm25TopKIndexed answers queries reading ONLY the sidecar. The
+  // sidecar is build-once: a rewrite of the table needs a fresh
+  // writeTextIndex.
   //
   // Sidecar layout under `<tablePath>/_graft_text__<textCol>/`:
   //  - `rows/part=<dir>/`  — (file, doc_id, tfm map<term,tf>, len):
   //    each tokenized document's term map + length, clustered by
-  //    SOURCE partition dir so a refresh swaps whole subdirectories;
+  //    SOURCE partition dir;
   //  - `stats/part=<dir>/` — (term, df): PER-PARTITION document
   //    frequencies. Global df = Σ over partitions (df is additive), so
-  //    a one-partition refresh recomputes one partition's partials and
   //    the corpus-global table is re-aggregated at query time — a
   //    vocabulary-scale agg, never a corpus scan;
   //  - `counts/part=<dir>/` — (n_docs, total_len): partition doc
@@ -323,19 +322,15 @@ object TfIdf {
   // per-call path, and the sidecar's (tfm, len, df, n, totalLen) are
   // the same aggregations computed per-partition-additively, so on an
   // unchanged table bm25TopKIndexed is BIT-IDENTICAL to bm25TopK
-  // (spec-asserted). Commit integration: partition-scoped committers
-  // park the sidecar (live → `_graft_text_stale__<col>`) via
-  // DataSkipping.invalidateManifest, so a post-commit query fails
-  // loudly instead of reading stale stats.
+  // (spec-asserted).
 
   val DirPrefix = "_graft_text__"
-  val StaleDirPrefix = "_graft_text_stale__"
   private val TmpDirPrefix = "_graft_text_tmp__"
 
   def indexDir(tablePath: String, textCol: String): String =
     s"$tablePath/$DirPrefix$textCol"
 
-  /** True if a LIVE (not parked) text index exists for `textCol`. */
+  /** True if a text index exists for `textCol`. */
   def hasIndex(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, textCol: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(indexDir(tablePath, textCol))
@@ -405,9 +400,7 @@ object TfIdf {
     // (optimization guide §2.6, overlap independent jobs). Failures
     // surface at the joins below; the publish rename still happens
     // only after every write completed.
-    import scala.concurrent.Future
-    import Overlap.ec
-    val dupF = Future {
+    val dupF = CallSites.overlapped(spark) {
       scan.groupBy(col(idCol)).count()
         .where(col("count") > 1).limit(1).count()
     }
@@ -417,7 +410,7 @@ object TfIdf {
     if (fs.exists(tmp)) fs.delete(tmp, true)
     val writes = Seq(
       ("rows", rows), ("stats", stats), ("counts", counts)).map {
-      case (sub, df) => Future {
+      case (sub, df) => CallSites.overlapped(spark) {
         df.write.partitionBy("part")
           .parquet(new org.apache.hadoop.fs.Path(tmp, sub).toString)
       }
@@ -428,12 +421,9 @@ object TfIdf {
     require(scala.concurrent.Await.result(dupF, Overlap.AwaitTimeout) == 0,
       s"TfIdf.writeTextIndex: $idCol must be unique in $tablePath")
     val live = new org.apache.hadoop.fs.Path(root, DirPrefix + textCol)
-    val stale = new org.apache.hadoop.fs.Path(root, StaleDirPrefix + textCol)
-    if (fs.exists(stale)) fs.delete(stale, true)
     if (fs.exists(live)) fs.delete(live, true)
     require(fs.rename(tmp, live),
       s"TfIdf.writeTextIndex: publish rename failed for $live")
-    DataSkipping.touchIndexMarker(spark, tablePath)
   }
 
   /** BM25 top-k reading ONLY the sidecar: doc term-maps and lengths
@@ -454,8 +444,7 @@ object TfIdf {
       maxDfFraction: Double = 1.0): DataFrame = {
     require(hasIndex(spark, tablePath, textCol),
       s"TfIdf: no live text index for $textCol at $tablePath — " +
-        "writeTextIndex first (or refreshTextIndexPartitioned after a " +
-        "partition-scoped commit)")
+        "writeTextIndex first")
     val dir = indexDir(tablePath, textCol)
     val docVecs = spark.read.parquet(s"$dir/rows")
       .select("doc_id", "tfm", "len")
@@ -468,108 +457,5 @@ object TfIdf {
     val totalLen = tots.getLong(1)
     bm25Core(Par.spread(docVecs), dfT, n, totalLen,
       queries, qIdCol, qTextCol, k, k1, b, roundTo, maxDfFraction)
-  }
-
-  /** Re-derive the sidecar ∝ touched partitions after a
-    * partition-scoped commit: un-park if a commit parked it, rebuild
-    * `rows/stats/counts` subdirectories for `touchedDirs` only —
-    * untouched subdirs stay byte-identical. With `validate = true`,
-    * recorded per-partition files are checked against the table's real
-    * listing and drifted/vanished partitions rebuild too (the
-    * AnnIndex self-healing contract; a partition whose every document
-    * is zero-token legitimately records files only in `counts/`). */
-  def refreshTextIndexPartitioned(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePath: String,
-      idCol: String,
-      textCol: String,
-      touchedDirs: Seq[String],
-      validate: Boolean = true): Unit = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(root, DirPrefix + textCol)
-    val stale = new org.apache.hadoop.fs.Path(root, StaleDirPrefix + textCol)
-    if (fs.exists(stale)) {
-      if (fs.exists(live)) fs.delete(live, true)
-      require(fs.rename(stale, live),
-        s"TfIdf.refresh: could not un-park $stale")
-    }
-    require(fs.exists(live),
-      s"TfIdf.refresh: no text index (live or parked) for $textCol at " +
-        s"$tablePath — writeTextIndex first")
-
-    var rebuild = touchedDirs.toSet
-    if (validate) {
-      val recorded: Map[String, Set[String]] =
-        spark.read.parquet(new org.apache.hadoop.fs.Path(live, "rows").toString)
-          .select(col("part"), col("file")).distinct().collect()
-          .map(r => (r.getString(0),
-            new org.apache.hadoop.fs.Path(r.getString(1)).getName))
-          .groupBy(_._1).map { case (p, fl) => p -> fl.map(_._2).toSet }
-      val actual: Map[String, Set[String]] = fs.listStatus(root)
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-        .map { d =>
-          d -> fs.listStatus(new org.apache.hadoop.fs.Path(root, d))
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath.getName).toSet
-        }.toMap
-      rebuild ++= actual.collect {
-        case (d, a) if recorded.getOrElse(d, Set.empty[String]) != a => d
-      }
-      rebuild ++= recorded.keySet
-        .filterNot(_ == AnnIndex.RootPart).filterNot(actual.contains)
-    }
-    if (rebuild.isEmpty) return
-    require(!rebuild.contains(AnnIndex.RootPart),
-      "TfIdf.refresh covers partitioned tables; rebuild an " +
-        "unpartitioned table's index with writeTextIndex")
-
-    val unescape = org.apache.spark.sql.catalyst.catalog
-      .ExternalCatalogUtils.unescapePathName _
-    def children(sub: String): Map[String, org.apache.hadoop.fs.Path] = {
-      val p = new org.apache.hadoop.fs.Path(live, sub)
-      if (!fs.exists(p)) Map.empty
-      else fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith("part="))
-        .map(c => unescape(c.getName.stripPrefix("part=")) -> c)
-        .toMap
-    }
-    rebuild.toSeq.sorted.foreach { d =>
-      val dataDir = new org.apache.hadoop.fs.Path(root, d)
-      if (!fs.exists(dataDir)) {
-        Seq("rows", "stats", "counts").foreach(sub =>
-          children(sub).get(d).foreach(fs.delete(_, true)))
-      } else {
-        val scan = spark.read.option("basePath", tablePath)
-          .parquet(dataDir.toString)
-        val (rows, stats, counts) =
-          sidecarOf(scan, idCol, textCol, root.getName)
-        val tmp = new org.apache.hadoop.fs.Path(root,
-          TmpDirPrefix + textCol + "_refresh")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        rows.write.partitionBy("part")
-          .parquet(new org.apache.hadoop.fs.Path(tmp, "rows").toString)
-        stats.write.partitionBy("part")
-          .parquet(new org.apache.hadoop.fs.Path(tmp, "stats").toString)
-        counts.write.partitionBy("part")
-          .parquet(new org.apache.hadoop.fs.Path(tmp, "counts").toString)
-        Seq("rows", "stats", "counts").foreach { sub =>
-          children(sub).get(d).foreach(fs.delete(_, true))
-          val tmpSub = new org.apache.hadoop.fs.Path(tmp, sub)
-          if (fs.exists(tmpSub))
-            fs.listStatus(tmpSub).filter(_.isDirectory).map(_.getPath)
-              .filter(_.getName.startsWith("part="))
-              .foreach { c =>
-                val dst = new org.apache.hadoop.fs.Path(
-                  new org.apache.hadoop.fs.Path(live, sub), c.getName)
-                if (fs.exists(dst)) fs.delete(dst, true)
-                require(fs.rename(c, dst),
-                  s"TfIdf.refresh: swap failed for $dst")
-              }
-        }
-        fs.delete(tmp, true)
-      }
-    }
   }
 }

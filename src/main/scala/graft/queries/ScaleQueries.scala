@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BloomPrune, Bucketing, Changelog, DataSkipping, FactVersioned, Merge, Skew, Upsert, ZOrder}
+import graft.operators.{BloomPrune, Bucketing, CallSites, Changelog, DataSkipping, FactVersioned, Merge, Skew, Upsert, ZOrder}
 
 /** Driver gates for the SCALE-POSTURE operators (SURVEY §4) that were
   * previously covered only by unit tests (VERDICT r6 "What's missing" #3
@@ -19,12 +19,12 @@ import graft.operators.{BloomPrune, Bucketing, Changelog, DataSkipping, FactVers
   *    exchanges, enforced via [[Bucketing.isShuffleFree]].
   *  - q84: [[Skew.saltedJoin]] ≡ plain equi-join — the salt scatter /
   *    replicate / join pipeline must be value-transparent.
-  *  - q85: partition-scoped upsert ([[Upsert.upsertPartitioned]]) —
-  *    MERGE semantics through the partitioned snapshot path, with the
-  *    commit report asserting only the touched year was rewritten.
-  *  - q86: partition-scoped promote transaction
-  *    ([[Merge.promotePartitioned]]) — both sides of the staging→main
-  *    transaction read back from DISK after partition-dir swaps.
+  *  - q85: partition-scoped upsert ([[FactVersioned.upsert]]) — MERGE
+  *    semantics through the versioned store, with the commit report
+  *    asserting only the touched year was rewritten.
+  *  - q86: partition-scoped promote ([[Merge.promotePartitioned]]) —
+  *    both sides of the staging→main promote read back from DISK
+  *    after their commits.
   *  - q91: [[DataSkipping]] file-stats pruning — a range scan over a
   *    sorted layout must SKIP files (asserted in-gate) and still return
   *    exactly the DuckDB filter result via the residual predicate.
@@ -104,29 +104,27 @@ object ScaleQueries extends QueryPack {
           sum(col("cents")).cast("long").as("total_cents"))
     }),
 
-    // Partition-scoped upsert: orders snapshotted by order year; the
+    // Partition-scoped upsert: orders committed by order year; the
     // update batch touches ONE of the seven year partitions; the other
-    // six are never read, never rewritten (PartitionedUpsertSpec proves
-    // byte-identity; here the commit report is asserted and the merged
-    // VALUES are hash-gated).
+    // six keep their files (PartitionedUpsertSpec proves the manifest
+    // carries them verbatim; here the commit report is asserted and the
+    // merged VALUES are hash-gated).
     "q85_upsert_partitioned" -> ((s, dir) => {
       val wh = Files.createTempDirectory("graft_q85_").toString
       val path = s"$wh/orders_by_year"
       val o = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           year(col("o_orderdate")).as("p_year"))
-      val years = o.select("p_year").distinct().collect().map(_.get(0)).toSeq
-      Upsert.writeSnapshotsPartitioned(Seq(
-        Upsert.PartitionedWrite(o, path, "p_year", years)))
+      FactVersioned.upsert(s, path, o, Seq("o_orderkey"), "p_year")
       val updates = o.where(col("p_year") === 1995 &&
           col("o_orderkey") % 2 === 0)
         .withColumn("o_orderstatus", lit("U"))
         .withColumn("o_totalprice", col("o_totalprice") * 2)
       val commit =
-        Upsert.upsertPartitioned(s, path, updates, Seq("o_orderkey"), "p_year")
-      require(commit.rewritten == Seq("p_year=1995") && commit.deleted.isEmpty,
+        FactVersioned.upsert(s, path, updates, Seq("o_orderkey"), "p_year")
+      require(commit.rewrittenDirs == Seq("p_year=1995"),
         s"q85: expected exactly p_year=1995 rewritten, got $commit")
-      val out = Upsert.readPartitionedSnapshot(s, path, o.schema).get
+      val out = FactVersioned.read(s, path)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .localCheckpoint()
       val p = new org.apache.hadoop.fs.Path(wh)
@@ -134,8 +132,8 @@ object ScaleQueries extends QueryPack {
       out
     }),
 
-    // Partition-scoped promote: the J1+K5+J2 transaction over
-    // year-partitioned staging/main snapshots, read back from disk.
+    // Partition-scoped promote: the J1+K5+J2 promote over
+    // year-partitioned staging/main tables, read back from disk.
     "q86_promote_partitioned" -> ((s, dir) => {
       val wh = Files.createTempDirectory("graft_q86_").toString
       val stagingPath = s"$wh/staging"
@@ -143,19 +141,15 @@ object ScaleQueries extends QueryPack {
       val staged = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           year(col("o_orderdate")).as("p_year"))
-      val years = staged.select("p_year").distinct().collect().map(_.get(0)).toSeq
-      Upsert.writeSnapshotsPartitioned(Seq(
-        Upsert.PartitionedWrite(staged, stagingPath, "p_year", years)))
+      FactVersioned.upsert(s, stagingPath, staged, Seq("o_orderkey"), "p_year")
       val parent = t(s, dir, "customer")
         .where(col("c_mktsegment") === "BUILDING")
       val res = Merge.promotePartitioned(s, stagingPath, parent,
-        "o_custkey", "c_custkey", mainPath, Seq("o_orderkey"), "p_year",
-        staged.schema)
-      require(res.exists(_.main.rewritten.nonEmpty),
-        "q86: promote transaction wrote nothing")
-      val main = Upsert.readPartitionedSnapshot(s, mainPath, staged.schema).get
-      val parked = Upsert.readPartitionedSnapshot(
-        s, stagingPath, staged.schema).get
+        "o_custkey", "c_custkey", mainPath, Seq("o_orderkey"), "p_year")
+      require(res.exists(_.main.rewrittenDirs.nonEmpty),
+        "q86: promote wrote nothing to main")
+      val main = FactVersioned.read(s, mainPath)
+      val parked = FactVersioned.read(s, stagingPath)
       val out = main.withColumn("side", lit("main"))
         .unionByName(parked.withColumn("side", lit("staging")))
         .select("side", "o_orderkey", "o_custkey", "o_totalprice")
@@ -378,9 +372,8 @@ object ScaleQueries extends QueryPack {
           Seq("o_orderstatus"), stats)
       // the batch's key shift is independent of window 1's consumption
       // — overlap the max-key aggregation with the first poll (§2.6)
-      import graft.operators.Overlap
-      val maxKeyF = scala.concurrent.Future(
-        o.agg(max(col("o_orderkey"))).head().getLong(0))(Overlap.ec)
+      val maxKeyF = CallSites.overlapped(s)(
+        o.agg(max(col("o_orderkey"))).head().getLong(0))
       FactVersioned.upsert(s, path, o, Seq("o_orderkey"), "p_year")
       // window 1: the initial snapshot as inserts, applied to an
       // empty-but-shaped state
@@ -391,7 +384,8 @@ object ScaleQueries extends QueryPack {
       }
       // q98's batch: modified 1995 rows, fresh shifted keys, and 1996
       // rows redelivered verbatim (zero change rows from the start)
-      val maxKey = scala.concurrent.Await.result(maxKeyF, Overlap.AwaitTimeout)
+      val maxKey = scala.concurrent.Await.result(maxKeyF,
+        graft.operators.Overlap.AwaitTimeout)
       val batch = o.where(col("p_year") === 1995 && col("o_orderkey") % 2 === 0)
         .withColumn("o_orderstatus", lit("U"))
         .withColumn("o_totalprice", col("o_totalprice") * 2)
@@ -552,7 +546,7 @@ object ScaleQueries extends QueryPack {
       // the hash-equality compare — build it CONCURRENTLY so its two
       // commits back-fill the merge's stage tails (guide §2.6)
       val twin = s"$wh/orders_twin"
-      val twinF = scala.concurrent.Future {
+      val twinF = CallSites.overlapped(s0) {
         FactVersioned.upsert(s0, twin, o, Seq("o_orderkey"), "p_year")
         val src = o.where(col("p_year") === 1995 && col("o_orderkey") % 2 === 0)
           .withColumn("o_orderstatus", lit("M"))
@@ -562,7 +556,7 @@ object ScaleQueries extends QueryPack {
               .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
               .withColumn("o_orderstatus", lit("N")))
         FactVersioned.upsert(s0, twin, src, Seq("o_orderkey"), "p_year")
-      }(graft.operators.Overlap.ec)
+      }
       FactVersioned.upsert(s0, path, o, Seq("o_orderkey"), "p_year")
       val s = graft.catalog.GraftDml.enable(s0)
       s.conf.set("spark.sql.catalog.graft",
@@ -1363,13 +1357,13 @@ object ScaleQueries extends QueryPack {
       // the compare; built concurrently so its commits back-fill the
       // merge's stage tails (guide §2.6)
       val twin = s"$wh/orders_sy_twin"
-      val twinF = scala.concurrent.Future {
+      val twinF = CallSites.overlapped(s0) {
         FactVersioned.upsert(s0, twin, o, Seq("o_orderkey"), "p_year")
         FactVersioned.replacePartitions(s0, twin,
           o.where(col("p_year") === 1995 && col("o_orderkey") % 2 === 0)
             .withColumn("o_orderstatus", lit("S")),
           "p_year", Seq(1995))
-      }(graft.operators.Overlap.ec)
+      }
       FactVersioned.upsert(s0, path, o, Seq("o_orderkey"), "p_year")
       val s = graft.catalog.GraftDml.enable(s0)
       s.conf.set("spark.sql.catalog.graft",
@@ -1490,7 +1484,7 @@ object ScaleQueries extends QueryPack {
       // API twin (own table, aliased-source upsert) — independent of
       // the SQL path until the compare; built concurrently (guide §2.6)
       val twin = s"$wh/orders_km_twin"
-      val twinF = scala.concurrent.Future {
+      val twinF = CallSites.overlapped(s0) {
         FactVersioned.upsert(s0, twin, o, Seq("o_orderkey"), "p_year")
         val src = o.where(col("p_year") === 1995 && col("o_orderkey") % 2 === 0)
           .withColumn("o_orderstatus", lit("K"))
@@ -1500,7 +1494,7 @@ object ScaleQueries extends QueryPack {
               .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
               .withColumn("o_orderstatus", lit("L")))
         FactVersioned.upsert(s0, twin, src, Seq("o_orderkey"), "p_year")
-      }(graft.operators.Overlap.ec)
+      }
       FactVersioned.upsert(s0, path, o, Seq("o_orderkey"), "p_year")
       val s = graft.catalog.GraftDml.enable(s0)
       s.conf.set("spark.sql.catalog.graft",
@@ -1582,7 +1576,7 @@ object ScaleQueries extends QueryPack {
       // re-statused 'S' and stale odds flagged 'X' — independent of
       // the SQL path until the compare; built concurrently (§2.6)
       val twin = s"$wh/orders_su_twin"
-      val twinF = scala.concurrent.Future {
+      val twinF = CallSites.overlapped(s0) {
         FactVersioned.upsert(s0, twin, o, Seq("o_orderkey"), "p_year")
         val in95 = o.where(col("p_year") === 1995)
         FactVersioned.replacePartitions(s0, twin,
@@ -1591,7 +1585,7 @@ object ScaleQueries extends QueryPack {
             .unionByName(in95.where(col("o_orderkey") % 2 =!= 0)
               .withColumn("o_orderstatus", lit("X"))),
           "p_year", Seq(1995))
-      }(graft.operators.Overlap.ec)
+      }
       FactVersioned.upsert(s0, path, o, Seq("o_orderkey"), "p_year")
       val s = graft.catalog.GraftDml.enable(s0)
       s.conf.set("spark.sql.catalog.graft",
@@ -1685,7 +1679,7 @@ object ScaleQueries extends QueryPack {
       // independent of the SQL path until the compare; built
       // concurrently (guide §2.6)
       val twin = s"$wh/orders_ev_twin"
-      val twinF = scala.concurrent.Future {
+      val twinF = CallSites.overlapped(s0) {
         FactVersioned.upsert(s0, twin, o, Seq("o_orderkey"), "p_year")
         FactVersioned.upsertEvolve(s0, twin,
           o.where(col("p_year") === 1995 && col("o_orderkey") % 2 === 0)
@@ -1693,7 +1687,7 @@ object ScaleQueries extends QueryPack {
             .withColumn("note",
               concat(lit("note-"), col("o_orderkey").cast("string"))),
           Seq("o_orderkey"), "p_year")
-      }(graft.operators.Overlap.ec)
+      }
       FactVersioned.upsert(s0, path, o, Seq("o_orderkey"), "p_year")
       val s = graft.catalog.GraftDml.enable(s0)
       s.conf.set("spark.sql.catalog.graft",
@@ -2768,9 +2762,9 @@ object ScaleQueries extends QueryPack {
     // the 100 TB norm): the full lifecycle over a fact table
     // partitioned by a TIMESTAMP column — upsert (dir names derive
     // through Spark's own cast-to-string layout,
-    // Upsert.partitionDirName), SQL MERGE (probe carries the timestamp
-    // partition slot; write-amp = the one touched day, FS-asserted),
-    // and OPTIMIZE WHERE over a TIMESTAMP literal range (typed
+    // FactVersioned.partitionDirName), SQL MERGE (probe carries the
+    // timestamp partition slot; write-amp = the one touched day,
+    // FS-asserted), and OPTIMIZE WHERE over a TIMESTAMP literal range (typed
     // comparison, never string compare). Output value-gated against
     // the DuckDB mirror; timestamps leave the output as strings (the
     // oracle-compare dtype contract).
@@ -2932,8 +2926,7 @@ object ScaleQueries extends QueryPack {
       val twin = graft.operators.FactChangeFeed
         .window(s, path, Seq("o_orderkey"), Some(0L), 1L)
         .select("op", "o_orderkey", "o_orderstatus", "o_totalprice")
-      val twinF = scala.concurrent.Future(twin.collect().toSet)(
-        graft.operators.Overlap.ec)
+      val twinF = CallSites.overlapped(s)(twin.collect().toSet)
       // the from-empty window is the full initial snapshot as inserts
       val seed = s.sql(
         """SELECT op FROM
@@ -2993,8 +2986,7 @@ object ScaleQueries extends QueryPack {
         """SELECT op, o_orderkey, o_orderstatus, o_totalprice
           |FROM graft_table_changes('graft.orders_kl', 'o_orderkey', 0, 1)
           |""".stripMargin)
-      val twinF = scala.concurrent.Future(twin.collect().toSet)(
-        graft.operators.Overlap.ec)
+      val twinF = CallSites.overlapped(s)(twin.collect().toSet)
       // a table with no recorded keys fails with guidance
       val bare = s"$wh/bare"
       o.limit(10).write.parquet(bare)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.operators.{FactVersioned, Merge, Upsert}
+import graft.operators.{FactVersioned, Merge}
 import graft.streaming.EventAggregates
 import graft.streaming.EventAggregates.Event
 
@@ -17,7 +17,7 @@ import graft.streaming.EventAggregates.Event
   * The streaming operators were previously covered only by unit tests —
   * these queries run the real Structured Streaming machinery
   * (MemoryStream micro-batches, flatMapGroupsWithState, foreachBatch
-  * snapshot upserts, the promote transaction) to completion inside a
+  * staging upserts, the promote) to completion inside a
   * batch query, so their results flow through the DuckDB hash gate like
   * every batch operator:
   *
@@ -27,10 +27,9 @@ import graft.streaming.EventAggregates.Event
   *    sessionization, so stream ≡ batch is hash-checked by the driver.
   *  - q76: the webhook→staging→promote loop — micro-batched idempotent
   *    staging upserts WITH a deliberate redelivery of a whole batch,
-  *    then the J1+K5+J2 promote transaction committed through the
-  *    crash-safe snapshot swap; the promoted main table read back from
-  *    disk must equal a plain semi-join, proving the loop is
-  *    exactly-once end to end.
+  *    then the J1+K5+J2 promote committed to FactVersioned tables; the
+  *    promoted main table read back from disk must equal a plain
+  *    semi-join, proving the loop is exactly-once end to end.
   *
   * Money values ride as whole cents (`round(value*100)`) so double
   * accumulation inside streaming state is exact integer arithmetic —
@@ -43,18 +42,14 @@ object StreamReplayQueries extends QueryPack {
   /** Session gap: 30 min, matching q14. */
   private val GapMs = 30L * 60 * 1000
 
-  /** Driver-side mirror of `to_date(date_trunc("week", ts))` under the
-    * UTC session: the Monday of the event's UTC week. Used to hand the
-    * partitioned upsert its touched-partition hint without a distinct
-    * scan; a mismatch with the engine's derivation fails loudly in the
-    * commit's undeclared-partition check, so drift cannot drop rows. */
-  private def weeksOf(evs: Seq[Event]): Seq[Any] =
-    evs.map { e =>
-      java.time.Instant.ofEpochMilli(e.ts.getTime)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate
-        .`with`(java.time.temporal.TemporalAdjusters
-          .previousOrSame(java.time.DayOfWeek.MONDAY))
-    }.distinct.map(java.sql.Date.valueOf(_): Any)
+  /** q76's staging commit for one micro-batch of events: the batch is
+    * week-partitioned (`p_date`) and upserted on `event_id`, the newest
+    * `(ts, event_id)` winning within the batch. */
+  private def stageBatch(batch: DataFrame, stagingPath: String): Unit =
+    FactVersioned.upsertBatchBy(batch.sparkSession, stagingPath,
+      batch.withColumn("p_date", to_date(date_trunc("week", col("ts")))),
+      Seq("event_id"), Seq("p_date"),
+      orderBy = Some(struct(col("ts"), col("event_id"))))
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q75_stream_sessions" -> ((s, dir) => {
@@ -137,23 +132,16 @@ object StreamReplayQueries extends QueryPack {
       val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
       try {
-      // K4: foreachBatch idempotent upsert into the staging snapshot,
+      // K4: foreachBatch idempotent upsert into the staging table,
       // exactly RecordingStream.start's PARTITION-SCOPED sink shape
-      // (partitionByStartDate): the staging table is date-partitioned
-      // and each micro-batch rewrites only the date dirs it touches —
-      // the at-scale write posture (cost ∝ batch, not table), here run
-      // under the same oracle as the flat path it replaced (r6 weak
-      // mark: full-snapshot write amplification).
-      val allWeeks = weeksOf(evs.toIndexedSeq)
+      // (partitionByStartDate): the staging table is a week-partitioned
+      // FactVersioned table and each micro-batch commits only the weeks
+      // it touches — the at-scale write posture (cost ∝ batch, not
+      // table), here run under the same oracle as the flat path it
+      // replaced (r6 weak mark: full-snapshot write amplification).
       val q = input.toDF().writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
-          val b = batch.withColumn("p_date",
-            to_date(date_trunc("week", col("ts"))))
-          Upsert.upsertPartitioned(sp, staging, b, Seq("event_id"),
-            "p_date", orderBy = Some(struct(col("ts"), col("event_id"))),
-            touchedHint = Some(allWeeks))
-          ()
+          stageBatch(batch, staging)
         }
         .start()
       try {
@@ -174,22 +162,19 @@ object StreamReplayQueries extends QueryPack {
         input.addData((rest ++ first).toIndexedSeq)
         q.processAllAvailable()
       } finally q.stop()
-      // J1+K5+J2 promote transaction, partition-scoped: parent gate =
-      // BUILDING-segment customers; both output plans execute before
-      // any partition dir swaps, then main is read back from DISK —
-      // the gate covers the commit path, not just the plan
-      val pSchema = org.apache.spark.sql.Encoders.product[Event].schema
-        .add("p_date", org.apache.spark.sql.types.DateType)
+      // J1+K5+J2 promote, partition-scoped: parent gate =
+      // BUILDING-segment customers; main commits first, then staging,
+      // and main is read back from DISK — the gate covers the commit
+      // path, not just the plan
       val parent = t(s, dir, "customer")
         .where(col("c_mktsegment") === "BUILDING")
       Merge.promotePartitioned(s, staging, parent, "user_id", "c_custkey",
-        main, Seq("event_id"), "p_date", pSchema)
-        .getOrElse(sys.error("q76: promote transaction wrote nothing"))
+        main, Seq("event_id"), "p_date")
+        .getOrElse(sys.error("q76: promote wrote nothing"))
       // materialize the disk read-back, then remove the temp workspace —
       // the query runs 3+ times per bench/verify cycle and would
-      // otherwise strand a full staging+main snapshot in /tmp each time
-      val out = Upsert.readPartitionedSnapshot(s, main, pSchema)
-        .getOrElse(sys.error(s"no main snapshot at $main"))
+      // otherwise strand a full staging+main table in /tmp each time
+      val out = FactVersioned.read(s, main)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value").cast("long").as("cents"))
         .localCheckpoint()
@@ -282,24 +267,14 @@ object StreamReplayQueries extends QueryPack {
     val parent = t(s, dir, "customer")
       .where(col("c_mktsegment") === "BUILDING")
       .localCheckpoint() // read once, not once per run
-    val pSchema = org.apache.spark.sql.Encoders.product[Event].schema
-      .add("p_date", org.apache.spark.sql.types.DateType)
     val wh = new AtomicReference[String]()
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "8")
     try {
-      val allWeeks = weeksOf(evs.toIndexedSeq)
       val input = MemoryStream[Event]
       val q = input.toDF().writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          val sp = batch.sparkSession
-          val b = batch.withColumn("p_date",
-            to_date(date_trunc("week", col("ts"))))
-          Upsert.upsertPartitioned(sp, wh.get + "/staging", b,
-            Seq("event_id"), "p_date",
-            orderBy = Some(struct(col("ts"), col("event_id"))),
-            touchedHint = Some(allWeeks))
-          ()
+          stageBatch(batch, wh.get + "/staging")
         }
         .start()
       try {
@@ -313,10 +288,8 @@ object StreamReplayQueries extends QueryPack {
           input.addData((rest ++ first).toIndexedSeq)
           q.processAllAvailable()
           Merge.promotePartitioned(s, s"$ws/staging", parent,
-            "user_id", "c_custkey", s"$ws/main", Seq("event_id"),
-            "p_date", pSchema)
-          lastRows = Upsert.readPartitionedSnapshot(s, s"$ws/main", pSchema)
-            .map(_.count()).getOrElse(0L)
+            "user_id", "c_custkey", s"$ws/main", Seq("event_id"), "p_date")
+          lastRows = FactVersioned.read(s, s"$ws/main").count()
           val sec = (System.nanoTime() - t0) / 1e9
           val p = new org.apache.hadoop.fs.Path(ws)
           p.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -368,7 +341,7 @@ object StreamReplayQueries extends QueryPack {
 
     // The promoted main table must be exactly the parent-gated events —
     // no duplicates from the replayed batch, nothing lost across the
-    // micro-batch snapshot swaps.
+    // micro-batch commits.
     "q76_stream_promote" ->
       """SELECT e.event_id, e.user_id, e.event_type,
         |  CAST(round(e.value * 100) AS BIGINT) AS cents

@@ -234,8 +234,7 @@ object TextQueries extends QueryPack {
     // no tokenization in the query path; asserted in-gate). Shares
     // bm25Core with the per-call path, so it is hash-identical to q127
     // (spec-asserted bit-parity) and carries the same full formula
-    // mirror. At 100 TB the refresh is ∝ touched partitions
-    // (TfIdfSpec), the AnnIndex amortization posture for text.
+    // mirror — the AnnIndex amortization posture for text.
     "q134_bm25_indexed" -> ((s, dir) => {
       val path = java.nio.file.Files
         .createTempDirectory("graft_q134_").toString + "/documents"
@@ -287,8 +286,7 @@ object TextQueries extends QueryPack {
           s"got $scans")
       // execute once, overlapped with the twin (guide §2.6) — was 3
       // full executions (compare ×2 + the bench count)
-      val outF = scala.concurrent.Future(out.collect())(
-        graft.operators.Overlap.ec)
+      val outF = graft.operators.CallSites.overlapped(s)(out.collect())
       val twin = graft.operators.TfIdf.bm25TopKIndexed(s, path, "text",
         s.table("q159_queries"), "qid", "qtext", k = 3)
       val twinRows = twin.collect()

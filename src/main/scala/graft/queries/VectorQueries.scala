@@ -146,8 +146,8 @@ object VectorQueries extends QueryPack {
     // hash-identical to q45's (spec-asserted in AnnIndexSpec; the
     // oracle re-verifies every reported value + recall independently).
     // The in-gate require proves the QUERY phase scans only the
-    // sidecar: at 100 TB the corpus pass happens at index-build/refresh
-    // time (∝ touched partitions), never per query.
+    // sidecar: at 100 TB the corpus pass happens at index-build time,
+    // never per query.
     "q110_ivf_indexed" -> ((s, dir) => {
       val tablePath = annTable(s, dir, "q110")
       AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
@@ -177,8 +177,7 @@ object VectorQueries extends QueryPack {
       // guide §2.6) and return the collected rows as a local relation:
       // the out-vs-twin compare and the bench's final count previously
       // re-ran the same ANN query three times
-      val outF = scala.concurrent.Future(out.collect())(
-        graft.operators.Overlap.ec)
+      val outF = graft.operators.CallSites.overlapped(s)(out.collect())
       val twin = AnnIndex.ivfTopKIndexed(s, tablePath, "embedding",
         k = 3, nProbe = 10)
       val twinRows = twin.collect()
@@ -368,8 +367,7 @@ object VectorQueries extends QueryPack {
       requireCellJoinCandidates(out)
       // execute once, overlapped with the twin (§2.6) — was 3 full
       // executions (compare ×2 + the bench count)
-      val outF = scala.concurrent.Future(out.collect())(
-        graft.operators.Overlap.ec)
+      val outF = graft.operators.CallSites.overlapped(s)(out.collect())
       val twin = AnnIndex.ivfSq8TopKIndexedFor(s, tablePath, "embedding",
         queries, "vec_id", "embedding", k = 3, nProbe = 10)
       val twinRows = twin.collect()

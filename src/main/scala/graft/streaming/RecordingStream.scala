@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Normalize
 import graft.model.Schemas
-import graft.operators.{Constraints, Merge, PrioritySelect, Upsert}
+import graft.operators.{Constraints, FactVersioned, Merge, PrioritySelect, Upsert}
 
 /** The webhook path (SURVEY §3.2, ref lambda/zoom_webhook/handler.py:38-125)
   * as Structured Streaming:
@@ -87,28 +87,27 @@ object RecordingStream {
   /** Partition column added to the staging/main row in partitioned
     * mode: the recording's start date — immutable for a given
     * recording id (the key-to-partition stability contract of
-    * [[Upsert.upsertPartitioned]]), and the natural pruning axis: a
+    * [[FactVersioned.upsert]]), and the natural pruning axis: a
     * micro-batch of webhooks touches the last day or two, so each
-    * commit rewrites 1-2 date directories of a table that may span
+    * commit rewrites 1-2 date partitions of a table that may span
     * years. A null `recording_start` (unparseable timestamp) lands in
-    * the Hive default partition — still a single directory. */
+    * the Hive default partition — still a single partition. */
   val PartitionCol = "part_date"
 
   /** Start the streaming query: JSON events under `inDir` → staging
-    * parquet snapshot at `stagingPath` via idempotent upsert on id.
+    * table at `stagingPath` via idempotent upsert on id.
     *
-    * @param partitionByStartDate false ⇒ flat snapshot, full rewrite
-    *   per batch (gate-sized tables). true ⇒ the staging table is
-    *   date-partitioned ([[PartitionCol]]) and each micro-batch
-    *   rewrites only the partitions it touches — the at-scale posture
-    *   (per-batch write cost ∝ batch, not table).
-    * @param maintainStatsCols non-empty ⇒ (partitioned mode only) the
-    *   staging table's [[graft.operators.DataSkipping]] manifest over
-    *   these columns is kept LIVE across commits: the commit parks it,
-    *   and the loop immediately refreshes it ∝ the touched partitions
-    *   — downstream pruned scans never observe a stale or missing
-    *   manifest between batches. Cost: one metadata-scale refresh per
-    *   batch over the 1-2 dirs the batch rewrote. */
+    * @param partitionByStartDate false ⇒ flat parquet snapshot, full
+    *   rewrite per batch (gate-sized tables). true ⇒ the staging table
+    *   is a [[FactVersioned]] table partitioned by [[PartitionCol]],
+    *   and each micro-batch commits only the partitions it touches —
+    *   the at-scale posture (per-batch write cost ∝ batch, not table).
+    *   Read it with `FactVersioned.read`.
+    * @param maintainStatsCols non-empty ⇒ (partitioned mode only)
+    *   every staging commit records per-file bounds of these columns
+    *   in its manifest ([[FactVersioned.replacePartitions]]'s
+    *   `statsCols`), so `FactVersioned.readWhere` prunes on them at
+    *   every generation with no refresh step. */
   def start(
       spark: SparkSession,
       inDir: String,
@@ -128,26 +127,19 @@ object RecordingStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
         val (files, dead) = flattenEvents(batch)
-        val selected0 = selectPreferred(s, files)
+        val selected = selectPreferred(s, files)
           .drop("category") // one row per (meeting, category) winner
         deadLetterDir.foreach(d =>
           dead.write.mode("append").json(d))
-        if (partitionByStartDate) {
-          val selected = selected0
-            .withColumn(PartitionCol, to_date(col("recording_start")))
-          val commit = Upsert.upsertPartitioned(s, stagingPath, selected,
-            Seq("id"), PartitionCol, orderBy = Some(col("event_ts")))
-          if (maintainStatsCols.nonEmpty)
-            // this loop is the single writer and refreshes after every
-            // commit, so the serial fast path applies: refresh cost is
-            // strictly ∝ the 1-2 dirs this batch rewrote, no listing
-            graft.operators.DataSkipping.refreshManifestPartitioned(
-              s, stagingPath, commit.rewritten ++ commit.deleted,
-              maintainStatsCols, assumeSerialCommits = true)
-        } else {
-          val staging = readSnapshotOr(s, stagingPath, selected0)
+        if (partitionByStartDate)
+          FactVersioned.upsertBatchBy(s, stagingPath,
+            selected.withColumn(PartitionCol, to_date(col("recording_start"))),
+            Seq("id"), Seq(PartitionCol), orderBy = Some(col("event_ts")),
+            statsCols = maintainStatsCols)
+        else {
+          val staging = readSnapshotOr(s, stagingPath, selected)
           Upsert.writeSnapshot(
-            Upsert.upsert(staging, selected0, Seq("id"),
+            Upsert.upsert(staging, selected, Seq("id"),
               orderBy = Some(col("event_ts"))), stagingPath)
         }
         ()
@@ -155,27 +147,12 @@ object RecordingStream {
       .start()
   }
 
-  /** Row schema of the partitioned staging/main tables, derived by
-    * planning the transform over an empty frame (no job runs) — keeps
-    * the partitioned read's schema pinned without a hand-maintained
-    * duplicate of the transform's output shape. */
-  def partitionedStagingSchema(
-      spark: SparkSession): org.apache.spark.sql.types.StructType = {
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      Schemas.webhookSchema)
-    val (files, _) = flattenEvents(empty)
-    selectPreferred(spark, files)
-      .drop("category")
-      .withColumn(PartitionCol, to_date(col("recording_start")))
-      .schema
-  }
-
   /** Periodic staging→main reconcile (the reference's merge_recordings
     * task): promote staged recordings whose meeting has arrived.
     * In partitioned mode ([[start]]'s `partitionByStartDate`) both
-    * sides of the transaction rewrite only the date partitions holding
-    * promoted rows. */
+    * tables are [[FactVersioned]] tables and both commits touch only
+    * the date partitions holding promoted rows
+    * ([[Merge.promotePartitioned]]). */
   def promote(
       spark: SparkSession,
       stagingPath: String,
@@ -184,8 +161,7 @@ object RecordingStream {
       partitionByStartDate: Boolean = false): Unit = {
     if (partitionByStartDate) {
       Merge.promotePartitioned(spark, stagingPath, meetings,
-        "meeting_uuid", "uuid", mainPath, Seq("id"), PartitionCol,
-        partitionedStagingSchema(spark))
+        "meeting_uuid", "uuid", mainPath, Seq("id"), PartitionCol)
       ()
     } else {
       val staging = Upsert.readSnapshot(spark, stagingPath)

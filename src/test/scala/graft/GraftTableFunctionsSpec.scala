@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, FactChangeFeed, FactVersioned, TfIdf, Upsert}
+import graft.operators.{AnnIndex, FactChangeFeed, FactVersioned, Maintenance, TfIdf}
 
 /** [[GraftFunctions.tableBuilders]]: the SQL table-valued functions
   * resolve to EXACTLY their operators' plans — every TVF result is
@@ -35,8 +35,7 @@ class GraftTableFunctionsSpec extends SparkSpec {
   test("graft_ann_topk_for (external query batch) is hash-equal to " +
       "ivfSq8TopKIndexedFor") {
     val path = tmp() + "/t"
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(corpus(180), path, "p", Seq(0, 1, 2))))
+    Maintenance.writePartitioned(corpus(180), path, Seq("p"), Nil)
     AnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
     corpus(180).where(col("id") % 10 === 0)
       .select(col("id").as("qid"), col("vec").as("qvec"))

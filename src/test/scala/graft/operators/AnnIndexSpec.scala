@@ -2,7 +2,6 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,8 +9,7 @@ import graft.SparkSpec
 
 /** [[AnnIndex]]: the persisted IVF/SQ8 sidecar must change WHEN work
   * happens, never WHAT is computed — indexed queries are bit-identical
-  * to their per-call counterparts, read only the sidecar, park on
-  * partition-scoped commits, and refresh ∝ touched partitions. */
+  * to their per-call counterparts and read only the sidecar. */
 class AnnIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,8 +30,7 @@ class AnnIndexSpec extends SparkSpec {
     }.toDF("id", "p", "vec")
 
   private def writePartitioned(df: DataFrame, path: String): Unit =
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(df, path, "p", Seq(0, 1, 2))))
+    Maintenance.writePartitioned(df, path, Seq("p"), Nil)
 
   private def resultSet(df: DataFrame): Set[(Long, Long, Int, Double)] =
     df.select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
@@ -75,40 +72,6 @@ class AnnIndexSpec extends SparkSpec {
       overFetch = 4))
     assert(indexed == percall)
     assert(indexed.nonEmpty)
-  }
-
-  test("refresh keeps PQ codes consistent with a fresh encode") {
-    val path = tmp() + "/t"
-    val df = corpus(120)
-    writePartitioned(df, path)
-    AnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4,
-      pqM = 4, pqKsub = 16)
-    // commit new rows into partition p=1, refresh, and compare the
-    // indexed PQ answer against per-call pqTopK over the new table
-    // content ONLY if codebooks match — they won't (pqTopK retrains on
-    // the new corpus), so instead assert the refreshed rows' codes
-    // equal a fresh pqEncode under the PERSISTED codebooks
-    val updates = (200 to 220).map { i =>
-      (i.toLong, 1, (0 until 8).map(j => math.cos(i * 13 + j * 5)))
-    }.toDF("id", "p", "vec")
-    val commit = Upsert.upsertPartitioned(spark, path, updates,
-      Seq("id"), "p")
-    AnnIndex.refreshIndexPartitioned(spark, path, "id", "vec",
-      commit.rewritten ++ commit.deleted)
-    val idx = spark.read.parquet(s"$path/${AnnIndex.DirPrefix}vec/rows")
-      .select(col("id"), col("u"), col("pq"))
-      .as[(Long, Seq[Double], Array[Byte])].collect()
-    val books = spark.read
-      .parquet(s"$path/${AnnIndex.DirPrefix}vec/codebooks")
-      .orderBy("subspace", "code").select("subspace", "centroid").collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map(_._2.map(_.getSeq[Double](1).toArray)).toArray
-    val bounds = Similarity.pqBounds(8, 4)
-    assert(idx.nonEmpty && idx.exists(_._1 >= 200L))
-    idx.foreach { case (_, u, pq) =>
-      assert(pq.toSeq ==
-        Similarity.pqEncode(u.toArray, books, bounds).toSeq)
-    }
   }
 
   test("ivfSq8TopKIndexed probing all cells is bit-identical to sq8TopK " +
@@ -297,138 +260,5 @@ class AnnIndexSpec extends SparkSpec {
           s"query phase scanned outside the sidecar: $p")
       }
     }
-  }
-
-  test("partition-scoped commit parks the index; queries fail loudly") {
-    val path = tmp() + "/t"
-    val data = corpus(120)
-    writePartitioned(data, path)
-    AnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
-    assert(AnnIndex.hasIndex(spark, path, "vec"))
-    val updates = data.where(col("p") === 1)
-      .withColumn("vec", transform(col("vec"), x => x * 2.0))
-    Upsert.upsertPartitioned(spark, path, updates, Seq("id"), "p")
-    assert(!AnnIndex.hasIndex(spark, path, "vec"),
-      "a partition-scoped commit must park the ANN sidecar")
-    intercept[IllegalArgumentException] {
-      AnnIndex.ivfTopKIndexed(spark, path, "vec", k = 3)
-    }
-    intercept[IllegalArgumentException] {
-      AnnIndex.sq8TopKIndexed(spark, path, "vec", k = 3)
-    }
-  }
-
-  test("refresh re-indexes touched partitions only; untouched subdirs untouched") {
-    val path = tmp() + "/t"
-    val data = corpus(180)
-    writePartitioned(data, path)
-    AnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rowsRoot = new Path(s"${AnnIndex.indexDir(path, "vec")}/rows")
-    def childFiles(child: String): Map[String, Long] =
-      fs.listStatus(new Path(rowsRoot, child)).filter(_.isFile)
-        .map(f => f.getPath.getName -> f.getModificationTime).toMap
-    val p0Before = childFiles("part=p%3D0")
-    assert(p0Before.nonEmpty, "sanity: hive-escaped child exists")
-
-    // make ids 7 and 10 (both p=1) identical: after refresh each must
-    // report the other as its rank-1 neighbor at sim 1.0
-    val donor = data.where(col("id") === 10).select("vec")
-      .as[Seq[Double]].head()
-    val updates = data.where(col("p") === 1)
-      .withColumn("vec",
-        when(col("id") === 7, typedLit(donor)).otherwise(col("vec")))
-    val commit = Upsert.upsertPartitioned(spark, path, updates, Seq("id"), "p")
-    assert(commit.rewritten == Seq("p=1"))
-    AnnIndex.refreshIndexPartitioned(spark, path, "id", "vec",
-      commit.rewritten ++ commit.deleted, validate = false)
-
-    assert(AnnIndex.hasIndex(spark, path, "vec"))
-    assert(childFiles("part=p%3D0") == p0Before,
-      "untouched partition's index subdir must stay byte-identical")
-    val m = AnnIndex.sq8TopKIndexed(spark, path, "vec", k = 1)
-      .where(col("query_id").isin(7L, 10L))
-      .select(col("query_id"), col("neighbor_id"), col("sim"))
-      .as[(Long, Long, Double)].collect()
-      .map(t => t._1 -> ((t._2, t._3))).toMap
-    assert(m(7L) == ((10L, 1.0)), s"refreshed index must see new vectors: $m")
-    assert(m(10L) == ((7L, 1.0)), s"refreshed index must see new vectors: $m")
-  }
-
-  test("randomized commit/refresh interleavings keep the sidecar exact: " +
-      "indexed ≡ per-call on the evolving table") {
-    // seeded fuzz of the refresh lifecycle: partition rewrites, whole-
-    // partition deletes, and re-adds, each followed by a refresh.
-    // Invariants after every step (centroids are deliberately NOT
-    // retrained on refresh, so the centroid-free SQ8 path and the
-    // all-cells-probed combined path must stay BIT-identical to their
-    // per-call counterparts on the current table):
-    val rnd = new scala.util.Random(91L)
-    val path = tmp() + "/t"
-    val initial = corpus(150)
-    writePartitioned(initial, path)
-    AnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
-    def jitter(df: org.apache.spark.sql.DataFrame, salt: Int) =
-      df.withColumn("vec", transform(col("vec"),
-        x => x + lit(math.sin(salt) * 0.37)))
-    var present = Set(0, 1, 2)
-    (1 to 5).foreach { step =>
-      val p = rnd.nextInt(3)
-      val commit =
-        if (present.contains(p) && rnd.nextInt(4) == 0) {
-          // delete partition p entirely (empty content for touched p)
-          present -= p
-          Upsert.writeSnapshotsPartitioned(Seq(Upsert.PartitionedWrite(
-            initial.where(lit(false)), path, "p", Seq(p)))).head
-        } else {
-          // rewrite (or re-add) partition p with jittered vectors
-          present += p
-          Upsert.upsertPartitioned(spark, path,
-            jitter(initial.where(col("p") === p), step), Seq("id"), "p")
-        }
-      AnnIndex.refreshIndexPartitioned(spark, path, "id", "vec",
-        commit.rewritten ++ commit.deleted,
-        validate = rnd.nextBoolean())
-      val table = spark.read.parquet(path)
-      assert(resultSet(
-        AnnIndex.sq8TopKIndexed(spark, path, "vec", k = 3)) ==
-        resultSet(Similarity.sq8TopK(table, "id", "vec", k = 3)),
-        s"step $step: SQ8 indexed diverged from per-call")
-      assert(resultSet(
-        AnnIndex.ivfSq8TopKIndexed(spark, path, "vec", k = 3, nProbe = 4)) ==
-        resultSet(Similarity.sq8TopK(table, "id", "vec", k = 3)),
-        s"step $step: all-cells combined diverged from per-call")
-    }
-    assert(present.nonEmpty) // sanity: the loop kept a live table
-  }
-
-  test("validate=true self-heals undeclared drift and vanished partitions") {
-    val path = tmp() + "/t"
-    val data = corpus(150)
-    writePartitioned(data, path)
-    AnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // drift behind the index's back: drop partition p=2 entirely and
-    // rewrite p=1's files without declaring either
-    fs.delete(new Path(path, "p=2"), true)
-    val rewritten = data.where(col("p") === 1)
-      .withColumn("vec", transform(col("vec"), x => x * 3.0))
-    fs.delete(new Path(path, "p=1"), true)
-    rewritten.drop("p").write.parquet(s"$path/p=1")
-    AnnIndex.refreshIndexPartitioned(spark, path, "id", "vec",
-      touchedDirs = Seq.empty, validate = true)
-    val parts = spark.read
-      .parquet(s"${AnnIndex.indexDir(path, "vec")}/rows")
-      .select(col("part")).distinct().as[String].collect().toSet
-    assert(parts == Set("p=0", "p=1"),
-      s"vanished partition's rows must be dropped, drifted one rebuilt: $parts")
-    // the rebuilt rows carry the rewritten vectors (norm-invariant check:
-    // stored u is unit-normalized, so compare against fresh normalize)
-    val ids = spark.read
-      .parquet(s"${AnnIndex.indexDir(path, "vec")}/rows")
-      .where(col("part") === "p=1").count()
-    assert(ids == rewritten.count())
   }
 }

@@ -58,4 +58,40 @@ class CallSitesSpec extends SparkSpec {
     // every pool thread has its own properties back
     assert(!onEveryThread(sc.getLocalProperty(GroupKey)).contains("group-B"))
   }
+
+  test("a MERGE's pool-submitted probes run under the statement's job " +
+      "group") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft_callsites_")
+      .toString
+    FactVersioned.upsert(spark, s"$wh/t",
+      (1 to 30).map(i => (i.toLong, i % 3, i * 10L)).toDF("k", "p", "v"),
+      Seq("k"), "p")
+    val s = graft.catalog.GraftDml.enable(spark)
+    s.conf.set("spark.sql.catalog.g",
+      classOf[graft.catalog.GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.g.root", wh)
+    s.range(0, 5).selectExpr("id * 3 + 3 AS k", "0 AS p", "id AS v",
+        "CAST(NULL AS BIGINT) AS vgen")
+      .createOrReplaceTempView("cs_src")
+    val sc = spark.sparkContext
+    // every pool thread is born under (or keeps) group A's properties
+    sc.setJobGroup("group-A", "pool filler")
+    try onEveryThread(())
+    finally sc.clearJobGroup()
+
+    // the MERGE's key-uniqueness probe and its partition-move probe
+    // run on the pool while the statement runs under group G
+    val jobs = jobsSeen {
+      sc.setJobGroup("group-G", "merge")
+      try s.sql(
+        """MERGE INTO g.t AS t USING cs_src AS s ON t.k = s.k
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      finally sc.clearJobGroup()
+    }
+    assert(FactVersioned.generations(spark, s"$wh/t") == Seq(0L, 1L))
+    val groups = jobs.map(j => j.props.getProperty(GroupKey))
+    assert(groups.nonEmpty && groups.forall(_ == "group-G"), groups)
+  }
 }

@@ -99,101 +99,6 @@ class DataSkippingSpec extends SparkSpec {
     assert(scan.df.isEmpty)
   }
 
-  test("partition-scoped commit parks the manifest; refresh is ∝ touched") {
-    import org.apache.spark.sql.Row
-    val path = tmp() + "/t"
-    val df = (1 to 300).map(i => (i.toLong, 1995 + i % 3, i * 10L))
-      .toDF("k", "p_year", "v")
-    val years = Seq(1995, 1996, 1997)
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(df, path, "p_year", years)))
-    DataSkipping.writeManifest(spark, path, Seq("k", "p_year"))
-    val before = DataSkipping.readManifest(spark, path).collect()
-      .map(r => r.getAs[String]("file") -> r).toMap
-
-    // upsert touching only 1996: manifest must be PARKED (stale), and a
-    // pruned scan must fail loudly instead of using stale stats
-    val updates = df.where(col("p_year") === 1996)
-      .withColumn("v", col("v") + 1)
-    Upsert.upsertPartitioned(spark, path, updates, Seq("k"), "p_year")
-    assert(!DataSkipping.hasManifest(spark, path),
-      "stale manifest must not stay live across a partition-dir swap")
-    intercept[Exception] {
-      DataSkipping.prunedScan(spark, path,
-        Seq(DataSkipping.ColRange("k", lit(1L), lit(10L)))).df.count()
-    }
-
-    // incremental refresh: untouched files keep IDENTICAL stats rows;
-    // touched-year rows point at the swapped dir's new files
-    DataSkipping.refreshManifestPartitioned(spark, path,
-      Seq("p_year=1996"), Seq("k", "p_year"))
-    val after = DataSkipping.readManifest(spark, path).collect()
-      .map(r => r.getAs[String]("file") -> r).toMap
-    val untouchedBefore = before.keys.filterNot(_.contains("/p_year=1996/"))
-    assert(untouchedBefore.nonEmpty)
-    untouchedBefore.foreach { f =>
-      assert(after.contains(f), s"untouched file $f lost its stats row")
-      assert(after(f) == before(f), s"untouched stats row changed for $f")
-    }
-    assert(after.keys.exists(_.contains("/p_year=1996/")))
-    assert(before.keys.filter(_.contains("/p_year=1996/"))
-      .forall(!after.contains(_)), "stale 1996 file rows must be gone")
-
-    // and the refreshed manifest prunes correctly: a 1996-only range
-    val scan = DataSkipping.prunedScan(spark, path,
-      Seq(DataSkipping.ColRange("p_year", lit(1996), lit(1996))))
-    assert(scan.report.filesRead < scan.report.filesTotal)
-    assert(scan.df.count() == 100)
-    assert(scan.df.agg(min("v")).head().getLong(0) % 10 == 1,
-      "refreshed scan must see the upserted values")
-  }
-
-  test("serial-commit fast path drops touched rows under foreign URI rendering") {
-    val path = tmp() + "/t"
-    val df = (1 to 300).map(i => (i.toLong, 1995 + i % 3, i * 10L))
-      .toDF("k", "p_year", "v")
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(df, path, "p_year", Seq(1995, 1996, 1997))))
-    DataSkipping.writeManifest(spark, path, Seq("k", "p_year"))
-    val updates = df.where(col("p_year") === 1996)
-      .withColumn("v", col("v") + 1)
-    Upsert.upsertPartitioned(spark, path, updates, Seq("k"), "p_year")
-    // rewrite the PARKED copy's file strings to a different scheme
-    // rendering (file:///x → file:/x) — as a manifest written on a
-    // filesystem whose qualified-URI rendering differs would look. A
-    // root-prefix compare would keep the dead 1996 rows; the
-    // parent-dir-name match must still drop them.
-    val stale = s"$path/${DataSkipping.StaleManifestDir}"
-    val native = spark.read.parquet(stale).select("file")
-      .head().getString(0)
-    // flip whichever rendering _metadata.file_path produced to the other
-    val (from, to) =
-      if (native.startsWith("file:///")) ("^file:///", "file:/")
-      else ("^file:/", "file:///")
-    val parked = spark.read.parquet(stale)
-      .withColumn("file", regexp_replace(col("file"), from, to))
-      .localCheckpoint()
-    val deadRows96 = parked.collect().map(_.getAs[String]("file"))
-      .filter(_.contains("/p_year=1996/")).toSet
-    assert(deadRows96.nonEmpty, "sanity: parked copy covers 1996")
-    parked.coalesce(1).write.mode("overwrite").parquet(stale)
-    DataSkipping.refreshManifestPartitioned(spark, path,
-      Seq("p_year=1996"), Seq("k", "p_year"), assumeSerialCommits = true)
-    val files96 = DataSkipping.readManifest(spark, path).collect()
-      .map(_.getAs[String]("file")).filter(_.contains("/p_year=1996/"))
-    assert(files96.nonEmpty)
-    assert(files96.forall(!deadRows96.contains(_)),
-      "rewritten (dead) 1996 rows must be dropped by the fast path")
-    assert(files96.distinct.length == files96.length,
-      "dead parked rows must not survive alongside fresh ones")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    files96.foreach { f =>
-      assert(fs.exists(new org.apache.hadoop.fs.Path(new java.net.URI(f))),
-        s"manifest row points at dead file $f")
-    }
-  }
-
   test("bloom index prunes point lookups on a scatter column") {
     val path = tmp() + "/t"
     // laid out by d; k is scattered, so min/max can't prune k-lookups
@@ -229,86 +134,6 @@ class DataSkippingSpec extends SparkSpec {
       Seq("user_7", "user_123"))
     assert(scan.df.count() == 2)
     assert(scan.report.filesRead < scan.report.filesTotal)
-  }
-
-  test("partitioned commit parks bloom sidecars; refresh is ∝ touched") {
-    val path = tmp() + "/t"
-    val df = (1 to 200).map(i => (i.toLong, 2000 + i % 2, s"p$i"))
-      .toDF("k", "p_year", "v")
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(df, path, "p_year", Seq(2000, 2001))))
-    DataSkipping.writeBloomIndex(spark, path, "k")
-    val before = spark.read.parquet(s"$path/_graft_bloom__k").collect()
-      .map(r => r.getAs[String]("file") ->
-        r.getAs[Array[Byte]]("bloom").toSeq).toMap
-
-    val updates = df.where(col("p_year") === 2000)
-      .withColumn("v", lit("changed"))
-    Upsert.upsertPartitioned(spark, path, updates, Seq("k"), "p_year")
-    assert(!DataSkipping.hasBloomIndex(spark, path, "k"),
-      "stale bloom sidecar must not stay live across a partition-dir swap")
-
-    DataSkipping.refreshBloomIndexPartitioned(spark, path,
-      Seq("p_year=2000"), "k")
-    assert(DataSkipping.hasBloomIndex(spark, path, "k"))
-    val after = spark.read.parquet(s"$path/_graft_bloom__k").collect()
-      .map(r => r.getAs[String]("file") ->
-        r.getAs[Array[Byte]]("bloom").toSeq).toMap
-    val untouched = before.keys.filter(_.contains("/p_year=2001/"))
-    assert(untouched.nonEmpty)
-    untouched.foreach { f =>
-      assert(after(f) == before(f), s"untouched bloom row changed for $f")
-    }
-    assert(before.keys.filter(_.contains("/p_year=2000/"))
-      .forall(!after.contains(_)), "stale 2000 bloom rows must be gone")
-
-    // refreshed index still answers lookups exactly; both keys are odd
-    // (untouched 2001 partition), so the rewritten file can be skipped
-    val scan = DataSkipping.pointLookupScan(spark, path, "k", Seq(3L, 5L))
-    assert(scan.df.count() == 2)
-    assert(scan.report.filesRead < scan.report.filesTotal,
-      s"2000-partition file should be bloom-skipped: ${scan.report}")
-  }
-
-  test("refresh self-heals across an interleaved un-refreshed rewrite") {
-    val path = tmp() + "/t"
-    val df = (1 to 300).map(i => (i.toLong, 1995 + i % 3, i * 10L))
-      .toDF("k", "p_year", "v")
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(df, path, "p_year", Seq(1995, 1996, 1997))))
-    DataSkipping.writeManifest(spark, path, Seq("k", "p_year"))
-
-    // commit #1 rewrites 1995 and parks the manifest; NO refresh runs
-    Upsert.upsertPartitioned(spark, path,
-      df.where(col("p_year") === 1995).withColumn("v", col("v") + 1),
-      Seq("k"), "p_year")
-    // commit #2 rewrites 1996; the already-parked (pre-#1) copy stays
-    Upsert.upsertPartitioned(spark, path,
-      df.where(col("p_year") === 1996).withColumn("v", col("v") + 2),
-      Seq("k"), "p_year")
-
-    // refresh is told only about commit #2's dirs — it must detect
-    // that 1995's files are unknown to the parked copy and rescan
-    // that dir as well, never publishing rows for dead files
-    DataSkipping.refreshManifestPartitioned(spark, path,
-      Seq("p_year=1996"), Seq("k", "p_year"))
-    val m = DataSkipping.readManifest(spark, path)
-    val files = m.select("file").collect().map(_.getString(0))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    files.foreach { f =>
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-        new java.net.URI(f))), s"manifest row references dead file $f")
-    }
-    // full coverage: every live data file has a manifest row
-    val scan = DataSkipping.prunedScan(spark, path,
-      Seq(DataSkipping.ColRange("k", lit(1L), lit(300L))))
-    assert(scan.df.count() == 300)
-    assert(scan.report.filesTotal == files.length.toLong)
-    // and the refreshed stats see both commits' values
-    val scan95 = DataSkipping.prunedScan(spark, path,
-      Seq(DataSkipping.ColRange("p_year", lit(1995), lit(1995))))
-    assert(scan95.df.agg(min("v")).head().getLong(0) % 10 == 1)
   }
 
   test("missing stats column fails loudly") {

@@ -312,7 +312,7 @@ class FactAnnIndexSpec extends SparkSpec {
             initial.where(lit(false)), "p", Seq(p))
         case 1 if present.contains(p) =>
           FactVersioned.compactPartitions(spark, path,
-            Seq(Upsert.partitionDirName("p", p)), "p")
+            Seq(FactVersioned.partitionDirName("p", p)), "p")
         case _ =>
           present += p
           FactVersioned.upsert(spark, path,
@@ -464,7 +464,7 @@ class FactAnnIndexSpec extends SparkSpec {
       corpus(150, shift = 5).where(col("p") === 0), Seq("id"), "p",
       retain = 10),
     () => FactVersioned.compactPartitions(spark, path,
-      Seq(Upsert.partitionDirName("p", 1)), "p", retain = 10),
+      Seq(FactVersioned.partitionDirName("p", 1)), "p", retain = 10),
     () => FactVersioned.replacePartitions(spark, path,
       corpus(150).where(lit(false)), "p", Seq(2), retain = 10),
     () => FactVersioned.upsert(spark, path,

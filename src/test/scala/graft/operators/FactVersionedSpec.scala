@@ -460,6 +460,24 @@ class FactVersionedSpec extends SparkSpec {
     assert(e2.getMessage.contains("previously DROPPED"), e2.getMessage)
   }
 
+  test("upsertBy over a source shaped before a rename raises the " +
+      "retryable ConcurrentModificationException") {
+    val path = tmp()
+    FactVersioned.upsert(spark, path, base(30), Seq("k"), "p", retain = 10)
+    // the caller shapes its source under the head it saw; a rename
+    // lands before the upsert resolves its basis
+    val src = Seq((1L, 0, 11L)).toDF("k", "p", "v")
+    FactVersioned.renameColumns(spark, path, Map("v" -> "amount"),
+      retain = 10)
+    val e = intercept[java.util.ConcurrentModificationException] {
+      FactVersioned.upsertBy(spark, path, src, Seq("k"), Seq("p"),
+        retain = 10)
+    }
+    assert(e.getMessage.contains("retry the operation against the new head"),
+      e.getMessage)
+    assert(FactVersioned.generations(spark, path).size == 2)
+  }
+
   test("append (INSERT semantics) keeps existing rows and stays ∝ touched") {
     val path = tmp()
     FactVersioned.upsert(spark, path, base(30), Seq("k"), "p")

@@ -84,40 +84,6 @@ class MaintenanceSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() === 4000)
   }
 
-  test("compactPartitionedSnapshot compacts only fragmented dirs, " +
-      "healthy dirs stay byte-identical") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_pcompact_").toString + "/t"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // partition a: healthy (1 file); partition b: fragmented (8 files)
-    Seq(("a", 1L)).toDF("p", "id")
-      .write.partitionBy("p").parquet(path)
-    (1 to 8).foreach { i =>
-      Seq(("b", i.toLong)).toDF("p", "id").coalesce(1)
-        .write.mode("append").partitionBy("p").parquet(path)
-    }
-    def files(d: String) = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/p=$d"))
-      .filter(f => f.getPath.getName.endsWith(".parquet"))
-      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
-      .sortBy(_._1).toSeq
-    val aBefore = files("a")
-    assert(files("b").size === 8)
-    val reports = Maintenance.compactPartitionedSnapshot(spark, path)
-    assert(!reports("p=a").compacted)
-    assert(reports("p=b").compacted &&
-      reports("p=b").filesBefore === 8L && reports("p=b").filesAfter === 1L)
-    assert(files("a") === aBefore) // untouched, byte-identical
-    assert(files("b").size === 1)
-    val got = spark.read.parquet(path)
-    assert(got.count() === 9)
-    assert(got.where($"p" === "b").count() === 8) // no rows lost
-    // idempotent: second run is a universal no-op
-    assert(Maintenance.compactPartitionedSnapshot(spark, path)
-      .values.forall(!_.compacted))
-  }
-
   test("healthReport: flags fragmentation, pure metadata, both layouts") {
     val dir = java.nio.file.Files.createTempDirectory("graft_health").toString
     // flat healthy: one file

@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Partition-scoped snapshot upsert/promote (the at-scale write path):
-  * MERGE semantics must equal the flat [[Upsert.upsert]], while on disk
-  * only the touched partition directories change — untouched partitions
-  * stay byte-identical (same files, same lengths, same mtimes). */
+/** Partition-scoped upsert/promote over [[FactVersioned]] tables (the
+  * at-scale write path): MERGE semantics must equal the flat
+  * [[Upsert.upsert]] / [[Merge.promote]], while only the touched
+  * partitions get new files — an untouched partition's manifest rows
+  * and files carry over verbatim. */
 class PartitionedUpsertSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,36 +28,44 @@ class PartitionedUpsertSpec extends SparkSpec {
     (4L, d("2024-01-03"), "d", 40))
     .toDF("id", "p_date", "name", "v")
 
-  /** (relative file path, length, mtime) of every data file under a
-    * partition dir — the byte-identity witness. */
-  private def fileState(root: String, dir: String): Seq[(String, Long, Long)] = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new Path(root, dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter(_.isFile)
-      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
-      .sortBy(_._1)
-  }
-
   private def writeSeed(path: String, df: DataFrame = seed): Unit = {
-    val touched = df.select("p_date").distinct().collect().map(_.get(0)).toSeq
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(df, path, "p_date", touched)))
+    FactVersioned.upsert(spark, path, df, Seq("id"), "p_date")
     ()
   }
 
-  test("upsertPartitioned matches flat upsert semantics") {
+  private def same(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  /** (file, length, mtime) of every head-manifest file under `dir` —
+    * the carried-verbatim witness. */
+  private def fileState(path: String, dir: String): Seq[(String, Long, Long)] = {
+    val data = new Path(path, FactVersioned.DataDir)
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val g = FactVersioned.generations(spark, path).max
+    FactVersioned.manifestFiles(spark, path, g).filter(_._1 == dir)
+      .map { case (_, f) =>
+        val st = fs.getFileStatus(new Path(data, f))
+        (f, st.getLen, st.getModificationTime)
+      }.sortBy(_._1)
+  }
+
+  test("upsertBatchBy matches flat upsert semantics") {
     val path = tmpDir() + "/t"
     writeSeed(path)
-    val updates = Seq(
-      (2L, d("2024-01-01"), "b2", 200), // update in touched partition
-      (9L, d("2024-01-02"), "i", 90))   // insert into another partition
-      .toDF("id", "p_date", "name", "v")
-    Upsert.upsertPartitioned(spark, path, updates, Seq("id"), "p_date")
-    val got = Upsert.readPartitionedSnapshot(spark, path, seed.schema).get
-    val want = Upsert.upsert(seed, updates, Seq("id"))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    val batch = Seq(
+      (Some(2L), d("2024-01-01"), "b1", 100), // update in a touched
+      (Some(2L), d("2024-01-01"), "b2", 200), // partition, redelivered:
+      (Some(9L), d("2024-01-02"), "i", 90),   // the last one wins; an
+      (None, d("2024-01-02"), "n", 1),        // insert; two NULL keys,
+      (None, d("2024-01-02"), "n", 1))        // both inserted
+      .toDF("id", "p_date", "name", "v").coalesce(1)
+    FactVersioned.upsertBatchBy(spark, path, batch, Seq("id"),
+      Seq("p_date"))
+    val got = FactVersioned.read(spark, path)
+    assert(same(got, Upsert.upsert(seed, batch, Seq("id"))))
+    assert(got.where($"id" === 2L).select("name").as[String].collect()
+      .toSeq === Seq("b2"))
+    assert(got.where($"id".isNull).count() === 2)
   }
 
   test("untouched partition dirs are byte-identical after an upsert") {
@@ -69,13 +78,13 @@ class PartitionedUpsertSpec extends SparkSpec {
     val updates = Seq((1L, d("2024-01-01"), "a2", 11))
       .toDF("id", "p_date", "name", "v")
     val commit =
-      Upsert.upsertPartitioned(spark, path, updates, Seq("id"), "p_date")
-    assert(commit.rewritten === Seq("p_date=2024-01-01"))
-    assert(commit.deleted.isEmpty)
+      FactVersioned.upsert(spark, path, updates, Seq("id"), "p_date")
+    assert(commit.rewrittenDirs === Seq("p_date=2024-01-01"))
+    // the new manifest carries the untouched partitions' files verbatim
     assert(fileState(path, "p_date=2024-01-02") === before02)
     assert(fileState(path, "p_date=2024-01-03") === before03)
     // and the touched partition DID change
-    val got = Upsert.readPartitionedSnapshot(spark, path, seed.schema).get
+    val got = FactVersioned.read(spark, path)
     assert(got.where($"id" === 1L).select("name").as[String].head() === "a2")
     assert(got.count() === 4)
   }
@@ -83,18 +92,15 @@ class PartitionedUpsertSpec extends SparkSpec {
   test("partition-pruned scan: untouched partitions are not read") {
     val path = tmpDir() + "/t"
     writeSeed(path)
-    val updates = Seq((1L, d("2024-01-01"), "a2", 11))
-      .toDF("id", "p_date", "name", "v")
-    val pruned = Upsert.readPartitionedSnapshot(spark, path, seed.schema).get
-      .where(Upsert.touchedFilter("p_date", Seq(d("2024-01-01"))))
-    // static partition pruning must reach the file index: of the three
-    // partition dirs only the touched one's file is scanned (executed
-    // numFiles metric — inputFiles reports the pre-pruning relation)
+    val pruned = FactVersioned.readDirs(spark, path, None,
+      Seq("p_date=2024-01-01"))
+    // the manifest prunes before the scan: of the three partitions only
+    // the touched one's file is opened (executed numFiles metric)
     assert(pruned.collect().length === 2) // ids 1,2 live there
-    assert(updates.count() === 1)
     val scan = pruned.queryExecution.executedPlan.collectLeaves()
       .find(_.metrics.contains("numFiles")).get
-    assert(scan.metrics("numFiles").value === 1)
+    assert(scan.metrics("numFiles").value ===
+      fileState(path, "p_date=2024-01-01").size)
   }
 
   test("emptied partitions are deleted; others untouched") {
@@ -104,14 +110,13 @@ class PartitionedUpsertSpec extends SparkSpec {
     // rewrite 01-01 (keep one row) and empty 01-02 entirely
     val replacement = Seq((1L, d("2024-01-01"), "only", 1))
       .toDF("id", "p_date", "name", "v")
-    val commits = Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(replacement, path, "p_date",
-        Seq(d("2024-01-01"), d("2024-01-02")))))
-    assert(commits.head.rewritten === Seq("p_date=2024-01-01"))
-    assert(commits.head.deleted === Seq("p_date=2024-01-02"))
-    assert(fileState(path, "p_date=2024-01-02").isEmpty)
+    val commit = FactVersioned.replacePartitions(spark, path, replacement,
+      "p_date", Seq(d("2024-01-01"), d("2024-01-02")))
+    assert(commit.rewrittenDirs === Seq("p_date=2024-01-01"))
+    assert(FactVersioned.partitionDirs(spark, path) ===
+      Seq("p_date=2024-01-01", "p_date=2024-01-03"))
     assert(fileState(path, "p_date=2024-01-03") === before03)
-    val got = Upsert.readPartitionedSnapshot(spark, path, seed.schema).get
+    val got = FactVersioned.read(spark, path)
     assert(got.select("id").as[Long].collect().sorted === Array(1L, 4L))
   }
 
@@ -120,55 +125,32 @@ class PartitionedUpsertSpec extends SparkSpec {
     val df = Seq(
       (1L, "plain", 1), (2L, "with space:colon", 2), (3L, null, 3))
       .toDF("id", "p", "v")
-    val touched = df.select("p").distinct().collect().map(_.get(0)).toSeq
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(df, path, "p", touched)))
-    val got = Upsert.readPartitionedSnapshot(spark, path, df.schema).get
-    assert(got.exceptAll(df).isEmpty && df.exceptAll(got).isEmpty)
+    FactVersioned.upsert(spark, path, df, Seq("id"), "p")
+    assert(same(FactVersioned.read(spark, path), df))
     // dir-name derivation matches what Spark's writer actually produced:
-    // rewriting the escaped-string partition must swap in place, not
-    // duplicate it under a differently-escaped name
+    // rewriting the escaped-string partition must replace it in place,
+    // not duplicate it under a differently-escaped name
     val up = Seq((2L, "with space:colon", 22)).toDF("id", "p", "v")
-    val commit = Upsert.upsertPartitioned(spark, path, up, Seq("id"), "p")
-    assert(commit.rewritten.size === 1 && commit.deleted.isEmpty)
-    val after = Upsert.readPartitionedSnapshot(spark, path, df.schema).get
+    val commit = FactVersioned.upsert(spark, path, up, Seq("id"), "p")
+    assert(commit.rewrittenDirs.size === 1)
+    assert(FactVersioned.partitionDirs(spark, path).size === 3)
+    val after = FactVersioned.read(spark, path)
     assert(after.count() === 3)
     assert(after.where($"id" === 2L).select("v").as[Int].head() === 22)
     // null partition upsert lands in the Hive default partition
     val upNull = Seq((3L, null.asInstanceOf[String], 33)).toDF("id", "p", "v")
-    Upsert.upsertPartitioned(spark, path, upNull, Seq("id"), "p")
-    val after2 = Upsert.readPartitionedSnapshot(spark, path, df.schema).get
+    assert(FactVersioned.upsert(spark, path, upNull, Seq("id"), "p")
+      .rewrittenDirs === Seq("p=__HIVE_DEFAULT_PARTITION__"))
+    val after2 = FactVersioned.read(spark, path)
     assert(after2.where($"p".isNull).select("v").as[Int].head() === 33)
     assert(after2.count() === 3)
-  }
-
-  test("mid-swap crash: _prev without a primary is restored on read") {
-    val path = tmpDir() + "/t"
-    writeSeed(path)
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // simulate the crash window: primary renamed away, replacement not
-    // yet in place
-    assert(fs.rename(new Path(path, "p_date=2024-01-02"),
-      new Path(path, "_prev.p_date=2024-01-02")))
-    val got = Upsert.readPartitionedSnapshot(spark, path, seed.schema).get
-    assert(got.count() === 4) // repaired: old generation restored
-    assert(got.where($"p_date" === d("2024-01-02")).count() === 1)
-    assert(!fs.exists(new Path(path, "_prev.p_date=2024-01-02")))
-  }
-
-  test("completed-swap leftovers (_prev with primary, _del) are cleaned") {
-    val path = tmpDir() + "/t"
-    writeSeed(path)
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(path, "_prev.p_date=2024-01-01"))
-    fs.mkdirs(new Path(path, "_del.p_date=2024-01-03"))
-    val got = Upsert.readPartitionedSnapshot(spark, path, seed.schema).get
-    assert(got.count() === 4) // hidden dirs never double-read
-    assert(!fs.exists(new Path(path, "_prev.p_date=2024-01-01")))
-    assert(!fs.exists(new Path(path, "_del.p_date=2024-01-03")))
-    assert(fs.exists(new Path(path, "p_date=2024-01-01")))
+    // an INT partition column reads back typed, not as a string
+    val ints = tmpDir() + "/i"
+    val byInt = Seq((1L, 7, "x"), (2L, -3, "y")).toDF("id", "p", "v")
+    FactVersioned.upsert(spark, ints, byInt, Seq("id"), "p")
+    val back = FactVersioned.read(spark, ints)
+    assert(back.schema("p").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(same(back, byInt))
   }
 
   test("promotePartitioned: only promoted partitions rewritten, " +
@@ -188,51 +170,90 @@ class PartitionedUpsertSpec extends SparkSpec {
     val before02 = fileState(stagingPath, "p_date=2024-01-02")
     val parent = Seq(100L, 200L).toDF("pk")
     val res = Merge.promotePartitioned(spark, stagingPath, parent,
-      "fk", "pk", mainPath, Seq("id"), "p_date", staging.schema).get
-    assert(res.main.rewritten === Seq("p_date=2024-01-01"))
+      "fk", "pk", mainPath, Seq("id"), "p_date").get
+    assert(res.main.rewrittenDirs === Seq("p_date=2024-01-01"))
     // staging's 01-01 partition emptied (both rows promoted)
-    assert(res.staging.deleted === Seq("p_date=2024-01-01"))
+    assert(res.staging.rewrittenDirs.isEmpty)
+    assert(FactVersioned.partitionDirs(spark, stagingPath) ===
+      Seq("p_date=2024-01-02", "p_date=2024-01-03"))
     assert(fileState(stagingPath, "p_date=2024-01-02") === before02)
-    val main = Upsert.readPartitionedSnapshot(
-      spark, mainPath, staging.schema).get
-    assert(main.select("id").as[Long].collect().sorted === Array(1L, 2L))
-    val parked = Upsert.readPartitionedSnapshot(
-      spark, stagingPath, staging.schema).get
-    assert(parked.select("id").as[Long].collect().sorted === Array(3L, 4L))
+    val flat = Merge.promote(staging, parent, "fk", "pk",
+      staging.limit(0), Seq("id"))
+    assert(same(FactVersioned.read(spark, mainPath), flat.main))
+    assert(same(FactVersioned.read(spark, stagingPath), flat.staging))
     // nothing gated ⇒ no write at all
+    val gens = FactVersioned.generations(spark, stagingPath)
     assert(Merge.promotePartitioned(spark, stagingPath,
-      Seq(777L).toDF("pk"), "fk", "pk", mainPath, Seq("id"), "p_date",
-      staging.schema).isEmpty)
+      Seq(777L).toDF("pk"), "fk", "pk", mainPath, Seq("id"),
+      "p_date").isEmpty)
+    assert(FactVersioned.generations(spark, stagingPath) === gens)
   }
 
-  test("vanished staging aborts the swap — live partitions are never " +
-      "interpreted as deletes") {
-    val path = tmpDir() + "/t"
-    writeSeed(path)
-    val before = Upsert.readPartitionedSnapshot(spark, path, seed.schema)
-      .get.collect().toSet
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val parent = new Path(path).getParent
-    val baseName = new Path(path).getName
-    val updates = Seq((1L, d("2024-01-01"), "a2", 11))
-      .toDF("id", "p_date", "name", "v")
-    // simulate a concurrent repair reclaiming the staging dir while
-    // phase 1 outlived the staleness TTL: delete __ptmp_* under the
-    // swap lock, right before the swap would run
-    intercept[java.util.ConcurrentModificationException] {
-      Upsert.writeSnapshotsPartitioned(
-        Seq(Upsert.PartitionedWrite(updates, path, "p_date",
-          Seq(d("2024-01-01")))),
-        preSwapCheck = () =>
-          fs.listStatus(parent).map(_.getPath)
-            .filter(_.getName.startsWith(baseName + "__ptmp_"))
-            .foreach(fs.delete(_, true)))
+  test("promotePartitioned: a crash between the two commits re-promotes " +
+      "idempotently") {
+    val root = tmpDir()
+    val stagingPath = s"$root/staging"
+    val mainPath = s"$root/main"
+    val staging = Seq(
+      (1L, d("2024-01-01"), 100L, "x"),
+      (2L, d("2024-01-02"), 100L, "y"),
+      (3L, d("2024-01-02"), 999L, "z"))
+      .toDF("id", "p_date", "fk", "payload")
+    writeSeed(stagingPath, staging)
+    val parent = Seq(100L).toDF("pk")
+    // the staging commit dies inside its protocol, after main committed
+    val boom = intercept[RuntimeException] {
+      Merge.promotePartitioned(spark, stagingPath, parent, "fk", "pk",
+        mainPath, Seq("id"), "p_date", preCommit = table =>
+          if (table == stagingPath) throw new RuntimeException("crash"))
     }
-    val after = Upsert.readPartitionedSnapshot(spark, path, seed.schema)
-      .get.collect().toSet
-    assert(after == before,
-      "aborted swap must leave every live partition untouched")
+    assert(boom.getMessage === "crash")
+    assert(FactVersioned.read(spark, mainPath).count() === 2)
+    assert(FactVersioned.read(spark, stagingPath).count() === 3)
+    // the rerun promotes the same rows again: once each in main, and
+    // gone from staging
+    Merge.promotePartitioned(spark, stagingPath, parent, "fk", "pk",
+      mainPath, Seq("id"), "p_date")
+    assert(FactVersioned.read(spark, mainPath).select("id").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 2L))
+    assert(FactVersioned.read(spark, stagingPath).select("id").as[Long]
+      .collect().toSeq === Seq(3L))
+  }
+
+  test("promotePartitioned: a staging commit landing mid-promote on a " +
+      "touched partition makes it retry, and the newer row reaches main") {
+    val root = tmpDir()
+    val stagingPath = s"$root/staging"
+    val mainPath = s"$root/main"
+    val staging = Seq(
+      (1L, d("2024-01-01"), 100L, "old"),
+      (2L, d("2024-01-02"), 999L, "parked"))
+      .toDF("id", "p_date", "fk", "payload")
+    writeSeed(stagingPath, staging)
+    val newer = Seq((1L, d("2024-01-01"), 100L, "new"))
+      .toDF("id", "p_date", "fk", "payload")
+    // A staging commit cannot land inside the staging commit's own
+    // hook (claims publish in number order, so it would wait on the
+    // promote's claim); it lands inside the main commit instead —
+    // after the promote read staging, before its staging commit.
+    var landed = 0
+    val res = Merge.promotePartitioned(spark, stagingPath,
+      Seq(100L).toDF("pk"), "fk", "pk", mainPath, Seq("id"), "p_date",
+      preCommit = table =>
+        if (table == mainPath && landed == 0) {
+          landed += 1
+          FactVersioned.upsert(spark, stagingPath, newer, Seq("id"),
+            "p_date")
+        })
+    assert(landed === 1 && res.nonEmpty)
+    // main committed twice (the first attempt's "old", then the retry's
+    // "new"); staging gained the foreign commit and the retry's drop
+    assert(FactVersioned.generations(spark, mainPath).size === 2)
+    assert(FactVersioned.read(spark, mainPath)
+      .select("id", "payload").as[(Long, String)].collect().toSeq ===
+      Seq((1L, "new")))
+    assert(FactVersioned.read(spark, stagingPath).select("id").as[Long]
+      .collect().toSeq === Seq(2L))
   }
 
   test("touched-partition guard fails loudly on a mis-chosen column") {
@@ -240,9 +261,10 @@ class PartitionedUpsertSpec extends SparkSpec {
     val updates = (1 to 50).map(i => (i.toLong, i, "x"))
       .toDF("id", "p", "name")
     val e = intercept[IllegalArgumentException] {
-      Upsert.upsertPartitioned(spark, path, updates, Seq("id"), "p",
+      FactVersioned.upsert(spark, path, updates, Seq("id"), "p",
         maxTouchedPartitions = 10)
     }
     assert(e.getMessage.contains("partitions"))
+    assert(FactVersioned.generations(spark, path).isEmpty)
   }
 }

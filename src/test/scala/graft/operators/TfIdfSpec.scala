@@ -94,8 +94,7 @@ class TfIdfSpec extends SparkSpec {
     val path = java.nio.file.Files
       .createTempDirectory("graft_text_").toString + "/t"
     val corpus = partitionedCorpus(120)
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(corpus, path, "p", Seq(0, 1, 2))))
+    Maintenance.writePartitioned(corpus, path, Seq("p"), Nil)
     TfIdf.writeTextIndex(spark, path, "doc_id", "text")
     val queries = corpus.where($"doc_id" % 10 === 0)
       .select($"doc_id".as("qid"), $"text".as("qtext"))
@@ -112,55 +111,5 @@ class TfIdfSpec extends SparkSpec {
     }.flatten.filter(_.contains(path))
     assert(scans.nonEmpty && scans.forall(_.contains(TfIdf.DirPrefix)),
       s"query phase must scan only the text sidecar, got: $scans")
-  }
-
-  test("refreshTextIndexPartitioned rebuilds only touched partitions; " +
-      "commit parks the sidecar and queries fail loudly until refresh") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_text_").toString + "/t"
-    val corpus = partitionedCorpus(90)
-    Upsert.writeSnapshotsPartitioned(Seq(
-      Upsert.PartitionedWrite(corpus, path, "p", Seq(0, 1, 2))))
-    TfIdf.writeTextIndex(spark, path, "doc_id", "text")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def snapshot(sub: String, dir: String): Seq[(String, Long)] = {
-      // part values are the SOURCE dir names ("p=1"), Hive-escaped in
-      // the sidecar's own partition child names
-      val esc = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(dir)
-      val p = new org.apache.hadoop.fs.Path(
-        s"$path/${TfIdf.DirPrefix}text/$sub/part=$esc")
-      fs.listStatus(p).filter(_.isFile)
-        .map(f => (f.getPath.getName, f.getModificationTime)).toSeq.sorted
-    }
-    val before1 = snapshot("rows", "p=1")
-    val before2 = snapshot("stats", "p=2")
-
-    // commit into p=0 → sidecar parks; indexed query fails loudly
-    val updates = Seq((200L, 0, "w1 w2 w1 fresh")).toDF("doc_id", "p", "text")
-    val commit = Upsert.upsertPartitioned(spark, path, updates,
-      Seq("doc_id"), "p")
-    val queries = Seq((1L, "w1 w2")).toDF("qid", "qtext")
-    val boom = intercept[IllegalArgumentException] {
-      TfIdf.bm25TopKIndexed(spark, path, "text",
-        queries, "qid", "qtext", k = 3)
-    }
-    assert(boom.getMessage.contains("no live text index"))
-
-    TfIdf.refreshTextIndexPartitioned(spark, path, "doc_id", "text",
-      commit.rewritten ++ commit.deleted, validate = false)
-    // untouched subdirs byte-identical (same files, same mtimes)
-    assert(snapshot("rows", "p=1") === before1)
-    assert(snapshot("stats", "p=2") === before2)
-    // refreshed index matches a per-call run over the new content
-    val indexed = TfIdf.bm25TopKIndexed(spark, path, "text",
-        queries, "qid", "qtext", k = 5)
-      .as[(Long, Long, Double, Int)].collect().toSet
-    val percall = TfIdf.bm25TopK(spark.read.parquet(path),
-        "doc_id", "text", queries, "qid", "qtext", k = 5)
-      .as[(Long, Long, Double, Int)].collect().toSet
-    assert(indexed === percall)
-    assert(indexed.exists(_._2 == 200L)) // the committed doc is findable
   }
 }

@@ -241,14 +241,14 @@ class UpsertSpec extends SparkSpec {
     val written = fs.listStatus(new org.apache.hadoop.fs.Path(out))
       .filter(_.isDirectory).map(_.getPath.getName)
       .filter(_.startsWith("ts=")).toSet
-    val derived = vals.map(Upsert.partitionDirName("ts", _)).toSet
+    val derived = vals.map(FactVersioned.partitionDirName("ts", _)).toSet
     assert(derived == written,
       s"derived $derived must equal Spark's layout $written")
     // the java.time.Instant form (datetime.java8API sessions) agrees
-    assert(Upsert.partitionDirName("ts", vals.head.toInstant) ==
-      Upsert.partitionDirName("ts", vals.head))
+    assert(FactVersioned.partitionDirName("ts", vals.head.toInstant) ==
+      FactVersioned.partitionDirName("ts", vals.head))
     // TIMESTAMP_NTZ (LocalDateTime) renders the wall clock verbatim
-    assert(Upsert.partitionDirName("ts",
+    assert(FactVersioned.partitionDirName("ts",
         java.time.LocalDateTime.parse("2024-01-03T07:30:00"))
       .contains("2024-01-03 07%3A30%3A00"))
   }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths => JPaths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.FactVersioned
 
 /** End-to-end streaming webhook path (SURVEY §3.2): JSON events →
   * validate/dead-letter → explode → R1 select → staged upsert →
@@ -111,6 +112,16 @@ class RecordingStreamSpec extends SparkSpec {
     }
   }
 
+  private def table(path: String) = FactVersioned.read(spark, path)
+
+  /** The table's ids, sorted; a NULL id reads as None. */
+  private def ids(path: String): Seq[Option[String]] =
+    table(path).select("id").collect().map(r => Option(r.getString(0)))
+      .toSeq.sortBy(_.getOrElse(""))
+
+  private def topics(path: String): Seq[String] =
+    table(path).select("topic").as[String].collect().toSeq.sorted
+
   test("partitioned mode: date-scoped staging commits, null start date " +
       "lands in the default partition, promote scopes both tables") {
     val root = Files.createTempDirectory("graft_streamp").toString
@@ -131,36 +142,88 @@ class RecordingStreamSpec extends SparkSpec {
       partitionByStartDate = true)
     q.processAllAvailable(); q.stop()
 
-    val fs = new org.apache.hadoop.fs.Path(staging).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(staging))
-      .filter(_.isDirectory).map(_.getPath.getName).toSet
-    assert(dirs.contains("part_date=2021-07-13"))
-    assert(dirs.contains("part_date=__HIVE_DEFAULT_PARTITION__"))
-
-    val schema = RecordingStream.partitionedStagingSchema(spark)
-    val staged = graft.operators.Upsert
-      .readPartitionedSnapshot(spark, staging, schema).get
-    assert(staged.select("id").as[String].collect().toSet
-      === Set("fA1", "fB1"))
+    assert(FactVersioned.partitionDirs(spark, staging).toSet === Set(
+      "part_date=2021-07-13", "part_date=__HIVE_DEFAULT_PARTITION__"))
+    assert(ids(staging) === Seq(Some("fA1"), Some("fB1")))
 
     // promote: only mA arrived → its date partition empties from
     // staging and appears in main; fB1 (null date) stays parked
     val meetings = Seq(("mA", "t")).toDF("uuid", "topic")
     RecordingStream.promote(spark, staging, meetings, main,
       partitionByStartDate = true)
-    val mainDf = graft.operators.Upsert
-      .readPartitionedSnapshot(spark, main, schema).get
-    assert(mainDf.select("id").as[String].collect().toSet === Set("fA1"))
-    val parked = graft.operators.Upsert
-      .readPartitionedSnapshot(spark, staging, schema).get
-    assert(parked.select("id").as[String].collect().toSet === Set("fB1"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(staging,
-      "part_date=2021-07-13"))) // emptied partition dir removed
+    assert(ids(main) === Seq(Some("fA1")))
+    assert(ids(staging) === Seq(Some("fB1")))
+    // the emptied partition leaves the staging head's manifest
+    assert(FactVersioned.partitionDirs(spark, staging) ===
+      Seq("part_date=__HIVE_DEFAULT_PARTITION__"))
+  }
+
+  test("partitioned mode: a same-batch redelivery stages each file " +
+      "once, the newest event's values winning") {
+    val root = Files.createTempDirectory("graft_streamr").toString
+    val in = s"$root/in"; Files.createDirectories(JPaths.get(in))
+    val staging = s"$root/staging"; val main = s"$root/main"
+    val e1 = event("mA", "Sync", file("fA1", "audio_only", "M4A"),
+      eventTs = 1000L)
+    val e2 = event("mA", "Sync Renamed", file("fA1", "audio_only", "M4A"),
+      eventTs = 2000L)
+    // one file = one micro-batch: the event, its redelivery, and a
+    // newer event for the same recording file
+    writeEvent(in, "e1.json", Seq(e1, e1, e2).mkString("\n"))
+    val q = RecordingStream.start(spark, in, staging, s"$root/ckpt",
+      partitionByStartDate = true)
+    q.processAllAvailable()
+    // the same batch redelivered as its own micro-batch
+    writeEvent(in, "e2.json", Seq(e1, e1, e2).mkString("\n"))
+    q.processAllAvailable(); q.stop()
+    assert(ids(staging) === Seq(Some("fA1")))
+    assert(topics(staging) === Seq("Sync Renamed"))
+    RecordingStream.promote(spark, staging,
+      Seq(("mA", "t")).toDF("uuid", "topic"), main,
+      partitionByStartDate = true)
+    assert(ids(main) === Seq(Some("fA1")))
+    assert(topics(main) === Seq("Sync Renamed"))
+    assert(ids(staging).isEmpty)
+  }
+
+  test("partitioned mode: a NULL-id file is a plain insert on every " +
+      "delivery and stays parked through promote") {
+    val root = Files.createTempDirectory("graft_streamn").toString
+    val in = s"$root/in"; Files.createDirectories(JPaths.get(in))
+    val staging = s"$root/staging"; val main = s"$root/main"
+    val nullFile =
+      """{"id":null,"meeting_id":"m","recording_start":"2021-07-13T21:44:51Z",
+        |"recording_end":"2021-07-13T23:39:22Z","recording_type":"t",
+        |"file_type":"audio_only","file_size":7,"file_extension":"M4A",
+        |"play_url":"p","download_url":"https://dl/n","status":"completed"}"""
+        .stripMargin.replace("\n", "")
+    val en = event("mN", "Guest", nullFile)
+    val ek = event("mK", "Keyed", file("fK1", "audio_only", "M4A"))
+    // batch 1 delivers the NULL-id event twice (R1 keeps one file per
+    // meeting and category); batch 2 once more, beside a keyed event
+    writeEvent(in, "e1.json", Seq(en, en).mkString("\n"))
+    val q = RecordingStream.start(spark, in, staging, s"$root/ckpt",
+      partitionByStartDate = true)
+    q.processAllAvailable()
+    assert(ids(staging) === Seq(None))
+    writeEvent(in, "e2.json", Seq(en, ek).mkString("\n"))
+    q.processAllAvailable(); q.stop()
+    assert(ids(staging) === Seq(None, None, Some("fK1")))
+    // NULL keys never match: both NULL rows are inserted into main and
+    // stay parked, so every promote inserts them again
+    val meetings = Seq(("mN", "t"), ("mK", "t")).toDF("uuid", "topic")
+    RecordingStream.promote(spark, staging, meetings, main,
+      partitionByStartDate = true)
+    assert(ids(main) === Seq(None, None, Some("fK1")))
+    assert(ids(staging) === Seq(None, None))
+    RecordingStream.promote(spark, staging, meetings, main,
+      partitionByStartDate = true)
+    assert(ids(main) === Seq(None, None, None, None, Some("fK1")))
+    assert(ids(staging) === Seq(None, None))
   }
 
   test("maintainStatsCols keeps the staging manifest live across commits") {
-    import graft.operators.DataSkipping
+    import graft.operators.DataSkipping.ColRange
     val root = Files.createTempDirectory("graft_streamm").toString
     val in = s"$root/in"; Files.createDirectories(JPaths.get(in))
     val staging = s"$root/staging"
@@ -170,30 +233,20 @@ class RecordingStreamSpec extends SparkSpec {
     val q = RecordingStream.start(spark, in, staging, s"$root/ckpt",
       partitionByStartDate = true, maintainStatsCols = Seq("id"))
     q.processAllAvailable()
-
-    assert(DataSkipping.hasManifest(spark, staging),
-      "manifest must be live after the first commit")
-    val before = DataSkipping.readManifest(spark, staging).count()
-    assert(before >= 1)
-
-    // a second batch (redelivery + a new meeting) commits again; the
-    // manifest must STILL be live and cover every current file
-    writeEvent(in, "e2.json", event("mC", "Retro", Seq(
-      file("fC1", "audio_only")).mkString(",")))
+    // a second batch commits a recording of the next day
+    writeEvent(in, "e2.json", event("mC", "Retro",
+      file("fC1", "audio_only").replace("2021-07-13", "2021-07-14")))
     q.processAllAvailable(); q.stop()
 
-    assert(DataSkipping.hasManifest(spark, staging),
-      "manifest must be refreshed, not left parked, after every commit")
-    val m = DataSkipping.readManifest(spark, staging)
-    val files = m.select("file").collect().map(_.getString(0)).toSet
-    val fs = new org.apache.hadoop.fs.Path(staging).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val schema = RecordingStream.partitionedStagingSchema(spark)
-    val live = graft.operators.Upsert
-      .readPartitionedSnapshot(spark, staging, schema).get
-      .select(org.apache.spark.sql.functions.col("_metadata.file_path"))
-      .distinct().collect().map(_.getString(0)).toSet
-    assert(files == live,
-      s"manifest coverage drifted: manifest=$files live=$live")
+    // the head's files all carry id bounds — the first commit's file
+    // carried verbatim, the second's fresh — so a point range on either
+    // id opens only that id's file, with no refresh step in between
+    Seq("fA1", "fC1").foreach { id =>
+      val scan = FactVersioned.readWhere(spark, staging, None,
+        Seq(ColRange("id", lit(id), lit(id))))
+      assert(scan.df.select("id").as[String].collect().toSeq === Seq(id))
+      assert(scan.report.filesRead === 1 && scan.report.filesTotal >= 2,
+        s"$id: ${scan.report}")
+    }
   }
 }
