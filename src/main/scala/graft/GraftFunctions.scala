@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 import graft.functions.TextFunctions
 import graft.functions.expressions._
-import graft.operators.{AnnIndex, FactChangeFeed, TfIdf}
+import graft.operators.{FactAnnIndex, FactChangeFeed, TfIdf}
 
 /** SQL-surface registration of the engine's native expressions, so
   * `spark.sql("SELECT graft_cosine(a, b) ...")` works alongside the
@@ -39,20 +39,24 @@ import graft.operators.{AnnIndex, FactChangeFeed, TfIdf}
   *    spanning an ALTER RENAME are exact: the from side translates
   *    through the column mappings to the window-end naming.
   *  - `graft_ann_topk('<table>', '<vec_col>', k, n_probe)` — IVF
-  *    top-k over the PERSISTED `_graft_ann__` sidecar
-  *    ([[AnnIndex.ivfTopKIndexed]]): corpus self-join shape, no base
-  *    scan in the query path.
+  *    top-k of the head generation over the persisted
+  *    [[FactAnnIndex]] ([[FactAnnIndex.topKIvf]]): corpus self-join
+  *    shape, no base scan in the query path.
   *  - `graft_ann_topk_for('<table>', '<vec_col>', '<query_view>',
   *    '<qid>', '<qvec>', k, n_probe)` — the production lookup shape:
-  *    an EXTERNAL query batch against the indexed corpus
-  *    ([[AnnIndex.ivfSq8TopKIndexedFor]], distributed cell join).
-  *  - `graft_bm25_topk('<table>', '<text_col>', '<query_view>',
+  *    an EXTERNAL query batch against the indexed head generation
+  *    ([[FactAnnIndex.topKFor]], distributed cell join).
+  *  - `graft_bm25_topk('<path>', '<text_col>', '<query_view>',
   *    '<qid>', '<qtext>', k)` — BM25 over the persisted
   *    `_graft_text__` sidecar ([[TfIdf.bm25TopKIndexed]]).
   *
   * Table arguments accept a GraftCatalog reference (`'graft.orders'`,
   * resolved through the session's `spark.sql.catalog.*` conf) or a
-  * direct filesystem path (anything containing '/'); query-batch
+  * direct filesystem path (anything containing '/'); the ANN doors
+  * need a [[FactAnnIndex.writeIndex]] on that table first.
+  * `graft_bm25_topk` works on a flat parquet path only: its
+  * `_graft_text__` sidecar cannot index a catalog table's versioned
+  * data, so a catalog reference resolves but fails. Query-batch
   * arguments name a table/view visible to `spark.table`. Scalar
   * arguments must FOLD to constants (literals, arithmetic over
   * literals, deterministic casts) — the plan is built at resolution
@@ -236,7 +240,7 @@ object GraftFunctions {
       val fn = "graft_ann_topk"
       argCount(es, 4, s"$fn('<table>', '<vec_col>', k, n_probe)")
       val spark = SparkSession.active
-      AnnIndex.ivfTopKIndexed(spark, tablePathArg(spark, es, 0, fn),
+      FactAnnIndex.topKIvf(spark, tablePathArg(spark, es, 0, fn),
         litString(es, 1, fn, "vec_col"),
         k = litInt(es, 2, fn, "k"), nProbe = litInt(es, 3, fn, "n_probe"))
         .queryExecution.analyzed
@@ -246,7 +250,7 @@ object GraftFunctions {
       argCount(es, 7, s"$fn('<table>', '<vec_col>', '<query_view>', " +
         "'<qid_col>', '<qvec_col>', k, n_probe)")
       val spark = SparkSession.active
-      AnnIndex.ivfSq8TopKIndexedFor(spark, tablePathArg(spark, es, 0, fn),
+      FactAnnIndex.topKFor(spark, tablePathArg(spark, es, 0, fn),
         litString(es, 1, fn, "vec_col"),
         spark.table(litString(es, 2, fn, "query_view")),
         litString(es, 3, fn, "qid_col"),

@@ -496,7 +496,7 @@ case class NfcNormalize(child: Expression)
 
 /** Reconstructed SQ8 dot product of two quantized vectors — the
   * candidate-scoring inner loop of the IVF+SQ8 indexed ANN path
-  * (`AnnIndex.ivfSq8TopKIndexed`), as a FULL-codegen expression so the
+  * (`AnnIndex.ivfSq8Core`), as a FULL-codegen expression so the
   * integer MAC stays fused inside the cell join's projection instead
   * of crossing a Ser/De + mapPartitions boundary.
   *
@@ -576,7 +576,7 @@ case class Sq8ReconstructedDot(children: Seq[Expression])
 /** ADC (asymmetric distance computation) dot product of an EXACT query
   * vector against a product-quantized corpus code word — the candidate
   * scoring of the IVF+PQ indexed ANN path
-  * (`AnnIndex.ivfPqTopKIndexed`), as a FULL-codegen expression fused in
+  * (`AnnIndex.ivfPqCore`), as a FULL-codegen expression fused in
   * the cell join's projection.
   *
   *   sim = Σ_s dot(query[bounds(s)..bounds(s+1)), codebook_s[code_s])

@@ -47,7 +47,7 @@ object Changelog {
     * @param emitDeletes false (default) for UPSERT deltas — an upsert
     *   never deletes, and a batch is a partial view of the table, so
     *   "key absent from the batch" means nothing. true when `updates`
-    *   is a COMPLETE after-image ([[generationDiff]]): keyed rows of
+    *   is a COMPLETE after-image ([[FactChangeFeed.window]]): keyed rows of
     *   `current` absent from it are emitted as `delete` rows carrying
     *   the old image, and NULL-keyed rows of `current` with no
     *   all-column match in the after-image delete likewise (pair with
@@ -124,22 +124,4 @@ object Changelog {
       }
     withDeletes.select((OpCol +: cols).map(col): _*)
   }
-
-  /** Row-level diff between two committed generations of a
-    * [[FactVersioned]] table: `insert` / `update_pre` / `update_post` /
-    * `delete` rows transforming `fromGen` into `toGen` — "what changed
-    * between corpus versions", the audit/repro question generational
-    * snapshots exist to answer. One keys-shuffle join between the two
-    * whole generations; [[FactChangeFeed]] cuts the join to the
-    * partitions the later generations declared touched. */
-  def generationDiff(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePath: String,
-      fromGen: Long,
-      toGen: Long,
-      keys: Seq[String]): DataFrame =
-    changeSet(
-      FactVersioned.read(spark, tablePath, Some(fromGen)),
-      FactVersioned.read(spark, tablePath, Some(toGen)),
-      keys, dedupNullKeyed = true, emitDeletes = true)
 }

@@ -7,9 +7,12 @@ import org.apache.spark.sql.types.StructType
 
 import CallSites.{callerSite, overlapped, withCallSite}
 
-/** Persisted ANN index over a [[FactVersioned]] table — the
-  * generation-aware sibling of [[AnnIndex]], closing the seam SCALING.md
-  * carried from round 8 ("ANN sidecars × FactVersioned").
+/** The persisted ANN index: IVF/SQ8/PQ index rows over a
+  * [[FactVersioned]] table, kept current across its commits and queried
+  * through [[AnnIndex]]'s stateless plans. Every catalog table is a
+  * FactVersioned table (an unpartitioned one is a single root
+  * partition), so this one index serves catalog tables, the SQL doors
+  * and the ANN gates alike.
   *
   * The key design fact: FactVersioned data files are IMMUTABLE and
   * shared across generations (a commit writes only its touched
@@ -27,12 +30,14 @@ import CallSites.{callerSite, overlapped, withCallSite}
   *    touched partitions, never the table, and its job count does not
   *    grow with the number of generations. `pq` is the m-byte
   *    product-quantized code ([[topKPq]]'s 8×-smaller candidate tier);
-  *    `codebooks/` persists the sub-centroids like the plain sidecar's.
+  *    `codebooks/` persists the sub-centroids. Files directly under
+  *    `vgen=<g>/` (an unpartitioned table) have the empty dir, which
+  *    lands under Spark's empty-value name `part=__HIVE_DEFAULT_PARTITION__`.
   *  - `files/vgen=<g>/` — the indexed file names (metadata-scale),
   *    published only AFTER every generation's rows of the same refresh
   *    landed, so coverage checks and crash recovery never trust
   *    half-built rows.
-  *  - `centroids/`, `meta/` — as [[AnnIndex]]: IVF centroids trained
+  *  - `centroids/`, `meta/` — IVF centroids (cell, centroid) trained
   *    once (head generation at [[writeIndex]] time); refresh assigns
   *    new files against the EXISTING centroids (standard IVF posture —
   *    retrain by re-running writeIndex on recall-monitoring cadence).
@@ -45,10 +50,9 @@ import CallSites.{callerSite, overlapped, withCallSite}
   * each touched dir, and carries copy a parent dir's entries
   * verbatim, so by induction every generation's view of a partition
   * dir is exactly one whole `vgen=g/<dir>` subtree. The restricted
-  * rows then run the SAME combined IVF+SQ8 plan as
-  * [[AnnIndex.ivfSq8TopKIndexed]] (shared [[AnnIndex.ivfSq8Core]] —
-  * no corpus-sized driver collect anywhere), making the query phase
-  * plan-identical to the plain sidecar's. Because restriction is by
+  * rows then run one of [[AnnIndex]]'s plans — IVF+SQ8 ([[topK]]),
+  * IVF+PQ ([[topKPq]]) or plain IVF ([[topKIvf]]) — with no
+  * corpus-sized driver collect anywhere. Because restriction is by
   * manifest, TIME TRAVEL falls out for free: any retained generation
   * is queryable with the exact content it committed, including
   * generations older than the index.
@@ -56,8 +60,7 @@ import CallSites.{callerSite, overlapped, withCallSite}
   * Staleness is intrinsic: a generation whose manifest references
   * un-indexed files fails loudly at [[topK]] ("refreshIndex first"),
   * while older generations REMAIN queryable as the head awaits
-  * refresh — the right posture for a versioned store, where
-  * [[AnnIndex]]'s flat sidecar is build-once.
+  * refresh — the right posture for a versioned store.
   *
   * Uniqueness contract: ids must be unique WITHIN each commit's content
   * (the invariant [[FactVersioned.upsert]] maintains for key-unique
@@ -119,11 +122,16 @@ object FactAnnIndex {
   /** The `rows/vgen=g/part=…` child a (vgen, dir) pair lives under —
     * Spark's partitionBy escapes the `part` VALUE (which is itself an
     * on-disk dir name, `=` and `%` included) once more, so the child
-    * name is the symmetric single escape of it. */
-  private def rowsChild(rowsRoot: Path, g: Long, dir: String): Path =
-    new Path(rowsRoot, s"${FactVersioned.VGenCol}=$g/part=" +
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(dir))
+    * name is the symmetric single escape of it. A root file's dir is
+    * `""`, which partitionBy writes as Spark's empty-value partition
+    * name (`__HIVE_DEFAULT_PARTITION__`). */
+  private def rowsChild(rowsRoot: Path, g: Long, dir: String): Path = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val part =
+      if (dir.isEmpty) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+      else ExternalCatalogUtils.escapePathName(dir)
+    new Path(rowsRoot, s"${FactVersioned.VGenCol}=$g/part=$part")
+  }
 
   /** Manifest-relative path (`vgen=g/dir/file`, last three components)
     * of a scan's `_metadata.file_path`, DECODED back to the on-disk
@@ -515,11 +523,12 @@ object FactAnnIndex {
   /** Combined IVF+SQ8 top-k over one generation's committed content
     * (default: head), reading ONLY the sidecar — the
     * [[AnnIndex.ivfSq8Core]] plan over the manifest-restricted rows.
-    * The restriction is vgen partition pruning plus a join against the
-    * generation's (metadata-scale, locally-created) file list, so the
-    * query plan's file scans touch the index alone — never
-    * `_graft_vdata`. Fails loudly when the generation references
-    * un-indexed files. */
+    * The restriction is the list of the generation's owning `rows/`
+    * subtrees, so the query plan's file scans touch the index alone —
+    * never `_graft_vdata`. Fails loudly when the generation references
+    * un-indexed files. With `nProbe` ≥ the index's cell count the
+    * answer is bit-identical to `Similarity.sq8TopK` over the
+    * generation's content. */
   def topK(
       spark: SparkSession,
       tablePath: String,
@@ -530,12 +539,15 @@ object FactAnnIndex {
       overFetch: Int = 4,
       roundSim: Int = 4,
       literalCellThreshold: Int = 4096): DataFrame =
-    topKImpl(spark, tablePath, vecCol, k, gen, nProbe, overFetch,
-      roundSim, literalCellThreshold, queries = None)
+    topKImpl(spark, tablePath, vecCol, gen) { (rows, centroids) =>
+      AnnIndex.ivfSq8Core(rows, centroids, k, nProbe, overFetch, roundSim,
+        literalCellThreshold)
+    }
 
   /** [[topK]] for an EXTERNAL query batch against one generation's
-    * committed content — see [[AnnIndex.ivfSq8TopKIndexedFor]] for the
-    * query-batch contract (id-equality self-exclusion included). */
+    * committed content — the production lookup shape; see
+    * [[AnnIndex.ivfSq8Core]] for the query-batch contract (id-equality
+    * self-exclusion included). */
   def topKFor(
       spark: SparkSession,
       tablePath: String,
@@ -549,13 +561,15 @@ object FactAnnIndex {
       overFetch: Int = 4,
       roundSim: Int = 4,
       literalCellThreshold: Int = 4096): DataFrame =
-    topKImpl(spark, tablePath, vecCol, k, gen, nProbe, overFetch,
-      roundSim, literalCellThreshold,
-      queries = Some(AnnIndex.normalizedQueries(queries, qIdCol, qVecCol)))
+    topKImpl(spark, tablePath, vecCol, gen) { (rows, centroids) =>
+      AnnIndex.ivfSq8Core(rows, centroids, k, nProbe, overFetch, roundSim,
+        literalCellThreshold,
+        queries = Some(AnnIndex.normalizedQueries(queries, qIdCol, qVecCol)))
+    }
 
   /** FILTERED [[topK]] — hybrid search over one generation's content:
     * neighbors restricted to `allowed` ids (see
-    * [[AnnIndex.ivfSq8TopKIndexedWhere]] for the recall contract). */
+    * [[AnnIndex.ivfSq8Core]] for the recall contract). */
   def topKWhere(
       spark: SparkSession,
       tablePath: String,
@@ -568,15 +582,19 @@ object FactAnnIndex {
       overFetch: Int = 4,
       roundSim: Int = 4,
       literalCellThreshold: Int = 4096): DataFrame =
-    topKImpl(spark, tablePath, vecCol, k, gen, nProbe, overFetch,
-      roundSim, literalCellThreshold, queries = None,
-      allowed = Some(AnnIndex.normalizedAllowed(allowed, allowedIdCol)))
+    topKImpl(spark, tablePath, vecCol, gen) { (rows, centroids) =>
+      AnnIndex.ivfSq8Core(rows, centroids, k, nProbe, overFetch, roundSim,
+        literalCellThreshold,
+        allowed = Some(AnnIndex.normalizedAllowed(allowed, allowedIdCol)))
+    }
 
   /** [[topK]] over the PQ tier: the same generation-restricted rows
     * scored by the IVF+PQ cell-join plan ([[AnnIndex.ivfPqCore]] — ADC
     * over the persisted m-byte codes, full-codegen `PqAdcDot`, no
-    * corpus collect). The 8×-smaller candidate shuffle of q131, with
-    * time travel: any retained generation queryable at PQ's recall. */
+    * corpus collect). The 8×-smaller candidate shuffle, with time
+    * travel: any retained generation queryable at PQ's recall. With
+    * `nProbe` ≥ the cell count, bit-identical to `Similarity.pqTopK`
+    * over the generation's content (codebooks trained on its sample). */
   def topKPq(
       spark: SparkSession,
       tablePath: String,
@@ -587,8 +605,11 @@ object FactAnnIndex {
       overFetch: Int = 4,
       roundSim: Int = 4,
       literalCellThreshold: Int = 4096): DataFrame =
-    topKImpl(spark, tablePath, vecCol, k, gen, nProbe, overFetch,
-      roundSim, literalCellThreshold, queries = None, pq = true)
+    topKImpl(spark, tablePath, vecCol, gen) { (rows, centroids) =>
+      AnnIndex.ivfPqCore(rows, centroids,
+        readCodebooks(spark, tablePath, vecCol), k, nProbe, overFetch,
+        roundSim, literalCellThreshold)
+    }
 
   /** [[topKPq]] for an external query batch (see [[topKFor]]). */
   def topKPqFor(
@@ -604,24 +625,41 @@ object FactAnnIndex {
       overFetch: Int = 4,
       roundSim: Int = 4,
       literalCellThreshold: Int = 4096): DataFrame =
-    topKImpl(spark, tablePath, vecCol, k, gen, nProbe, overFetch,
-      roundSim, literalCellThreshold,
-      queries = Some(AnnIndex.normalizedQueries(queries, qIdCol, qVecCol)),
-      pq = true)
+    topKImpl(spark, tablePath, vecCol, gen) { (rows, centroids) =>
+      AnnIndex.ivfPqCore(rows, centroids,
+        readCodebooks(spark, tablePath, vecCol), k, nProbe, overFetch,
+        roundSim, literalCellThreshold,
+        queries = Some(AnnIndex.normalizedQueries(queries, qIdCol, qVecCol)))
+    }
 
-  private def topKImpl(
+  /** Plain IVF top-k over one generation's content: candidates from the
+    * persisted cell assignment, exact re-rank on the persisted unit
+    * vectors, no quantized tier ([[AnnIndex.ivfCore]]). With an index
+    * written from the head's content, bit-identical to
+    * `Similarity.ivfTopK` with the index's (nLists, seed) and the same
+    * `nProbe`. */
+  def topKIvf(
       spark: SparkSession,
       tablePath: String,
       vecCol: String,
       k: Int,
-      gen: Option[Long],
-      nProbe: Int,
-      overFetch: Int,
-      roundSim: Int,
-      literalCellThreshold: Int,
-      queries: Option[DataFrame],
-      allowed: Option[DataFrame] = None,
-      pq: Boolean = false): DataFrame = withCallSite(spark, callerSite()) {
+      gen: Option[Long] = None,
+      nProbe: Int = 4,
+      literalCellThreshold: Int = 4096): DataFrame =
+    topKImpl(spark, tablePath, vecCol, gen) { (rows, centroids) =>
+      AnnIndex.ivfCore(rows, centroids, k, nProbe, literalCellThreshold)
+    }
+
+  /** Resolve generation `gen` (default: head), check the index covers
+    * every file it references, and run `plan` over its index rows and
+    * the index's centroids. */
+  private def topKImpl(
+      spark: SparkSession,
+      tablePath: String,
+      vecCol: String,
+      gen: Option[Long])(
+      plan: (DataFrame, Array[Array[Double]]) => DataFrame): DataFrame =
+    withCallSite(spark, callerSite()) {
     val gens = FactVersioned.generations(spark, tablePath)
     require(gens.nonEmpty, s"no committed generations at $tablePath")
     val g = gen.getOrElse(gens.max)
@@ -637,8 +675,7 @@ object FactAnnIndex {
     // restriction IS the path list: manifests reference files
     // all-or-nothing per (vgen, dir) (see class doc), so listing
     // exactly the generation's owning subtrees restricts the index
-    // with zero per-row work — no join, no predicate, and the same
-    // plan shape as the plain-table sidecar
+    // with zero per-row work — no join, no predicate
     val rr = rowsRoot(tablePath, vecCol)
     val fs = fsOf(spark, tablePath)
     // a child can be legitimately absent: a dir whose rows all carried
@@ -653,18 +690,9 @@ object FactAnnIndex {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
           "query_id BIGINT, neighbor_id BIGINT, rank INT, sim DOUBLE"))
-    else {
-      val restricted = spark.read
-        .option("basePath", rr.toString)
-        .parquet(children: _*)
-      if (pq)
-        AnnIndex.ivfPqCore(restricted, centroids,
-          readCodebooks(spark, tablePath, vecCol), k, nProbe, overFetch,
-          roundSim, literalCellThreshold, queries, allowed)
-      else
-        AnnIndex.ivfSq8Core(restricted, centroids, k, nProbe, overFetch,
-          roundSim, literalCellThreshold, queries, allowed)
-    }
+    else plan(
+      spark.read.option("basePath", rr.toString).parquet(children: _*),
+      centroids)
   }
 
   /** Drop index subtrees whose owning generation's files are ALL

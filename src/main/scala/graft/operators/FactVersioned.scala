@@ -1965,7 +1965,10 @@ object FactVersioned {
     * plain inserts on every delivery (Postgres NULL-distinctness, as in
     * [[Upsert.upsert]]). The winners are key-unique by construction, so
     * the cardinality check of [[upsertBy]] — which groups NULL keys
-    * together — does not run. */
+    * together — does not run. `touched` is the batch's partition
+    * tuples when the caller already computed them (keys never move
+    * between partitions, so the winners touch exactly the batch's
+    * partitions); None derives them with one more scan. */
   private[graft] def upsertBatchBy(
       spark: SparkSession,
       tablePath: String,
@@ -1974,12 +1977,14 @@ object FactVersioned {
       partitionCols: Seq[String],
       orderBy: Option[Column] = None,
       statsCols: Seq[String] = Nil,
-      preCommit: () => Unit = () => ()): Commit = {
+      preCommit: () => Unit = () => (),
+      touched: Option[Seq[Seq[Any]]] = None): Commit = {
     val (winners, nullKeyed) =
       Upsert.batchWinners(batch, keys, orderBy, batch.columns.toSeq)
     val rows = winners.unionByName(nullKeyed)
-    val touched = touchedTuples(rows, partitionCols, 10000, "upsertBatchBy")
-    mergeTouched(spark, tablePath, rows, keys, partitionCols, touched,
+    val tuples = touched.getOrElse(
+      touchedTuples(rows, partitionCols, 10000, "upsertBatchBy"))
+    mergeTouched(spark, tablePath, rows, keys, partitionCols, tuples,
       retain = 3, Map.empty, statsCols, preCommit)
   }
 
@@ -3344,8 +3349,7 @@ object FactVersioned {
     * (transient `*_tmp__` staging is owned by in-flight builders and
     * deliberately not carried). */
   private val SidecarPrefixes: Seq[String] = Seq(
-    AnnIndex.DirPrefix, TfIdf.DirPrefix, FactAnnIndex.DirPrefix,
-    DataSkipping.BloomDirPrefix)
+    TfIdf.DirPrefix, FactAnnIndex.DirPrefix, DataSkipping.BloomDirPrefix)
 
   /** Rename each `<prefix><old>` sidecar dir to `<prefix><new>` after
     * a column rename — see [[renameColumns]]. The column segment

@@ -116,7 +116,8 @@ object Merge {
       if (touched.isEmpty) return None // nothing gated in this cycle
       try {
         val mainCommit = FactVersioned.upsertBatchBy(spark, mainPath,
-          promoted, mainKeys, pcols, preCommit = () => preCommit(mainPath))
+          promoted, mainKeys, pcols, preCommit = () => preCommit(mainPath),
+          touched = Some(touched))
         val physCols =
           FactVersioned.physicalPartitionColumns(spark, stagingPath, pcols)
         val remaining = FactVersioned.readDirs(spark, stagingPath,

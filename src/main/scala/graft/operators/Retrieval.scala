@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Hybrid retrieval fusion — combining a lexical ranking (BM25,
   * [[TfIdf.bm25TopK]]) with a vector ranking (ANN,
-  * [[AnnIndex.ivfSq8TopKIndexedFor]] / [[Similarity]]) into one
+  * [[FactAnnIndex.topKFor]] / [[Similarity]]) into one
   * result list per query: the shape production retrieval pipelines
   * actually run (sparse+dense hybrid search).
   *

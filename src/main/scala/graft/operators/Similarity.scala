@@ -464,8 +464,9 @@ object Similarity {
     (q, mn, scale, s)
   }
 
-  /** The SQ8 candidate scan shared by the per-call [[sq8TopK]] and the
-    * persisted [[AnnIndex.sq8TopKIndexed]]: each query quantizes itself,
+  /** The SQ8 candidate scan of the per-call [[sq8TopK]] (the persisted
+    * index's [[AnnIndex.ivfSq8Core]] computes the same sims as a cell
+    * join): each query quantizes itself,
     * scans the broadcast quantized index with reconstructed dots
     * (integer MACs), and keeps the top `m` by (approx sim desc, id asc).
     * Output: (key = query id, id = candidate id). */
@@ -714,7 +715,7 @@ object Similarity {
     * m=8 — 64× smaller than raw, 8× smaller than SQ8 — so the resident
     * index stays broadcastable another order of magnitude up the
     * corpus (1e8 rows × 8 B ≈ 800 MB). Beyond THAT, the cell-bucketed
-    * distributed join of [[AnnIndex.ivfSq8TopKIndexed]] is the shape
+    * distributed join of [[FactAnnIndex.topK]] is the shape
     * that removes the broadcast entirely.
     *
     * Two phases, like sq8TopK: (1) ADC candidate scan (each query's
@@ -732,9 +733,9 @@ object Similarity {
     * (driver-feasible to ~1e8 rows, a documented bounded convenience),
     * and was the one public PQ door where callers had to KNOW to
     * switch past that ceiling. The public PQ entry points are now
-    * [[AnnIndex.pqTopKIndexed]] (full-probe cell join — bit-identical
-    * results, no corpus collect at any scale) and
-    * [[AnnIndex.ivfPqTopKIndexed]] (probe-restricted). Kept for the
+    * [[FactAnnIndex.topKPq]] at full probes (cell join — bit-identical
+    * results, no corpus collect at any scale) and at restricted
+    * probes. Kept for the
     * in-repo gates/specs that assert bit-parity between the tiers. */
   private[graft] def pqTopK(
       df: DataFrame,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -330,6 +330,18 @@ object TfIdf {
   def indexDir(tablePath: String, textCol: String): String =
     s"$tablePath/$DirPrefix$textCol"
 
+  /** `part` value for rows whose files sit directly under the table
+    * root (unpartitioned tables). */
+  private val RootPart = "__root__"
+
+  /** Source partition-dir name of a file path: the immediate parent
+    * component (scheme/authority-insensitive — matching is on the dir
+    * NAME), or [[RootPart]] for files directly under the table root. */
+  private def partOf(file: Column, rootName: String): Column = {
+    val parent = regexp_extract(file, "([^/]+)/[^/]*$", 1)
+    when(parent === rootName, lit(RootPart)).otherwise(parent)
+  }
+
   /** True if a text index exists for `textCol`. */
   def hasIndex(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, textCol: String): Boolean = {
@@ -348,7 +360,7 @@ object TfIdf {
         col("_metadata.file_path").as("file"),
         col(idCol).cast("long").as("doc_id"),
         col(textCol).as("text"))
-      .withColumn("part", AnnIndex.partOf(col("file"), rootName))
+      .withColumn("part", partOf(col("file"), rootName))
     val terms = base.select(col("part"), col("file"), col("doc_id"),
       explode(TextFunctions.tokens(lower(col("text")))).as("term"))
     val tf = terms

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, Dedup, TfIdf}
+import graft.operators.{Dedup, FactAnnIndex, FactVersioned, TfIdf}
 
 /** PRODUCTION-PARAMETER bench twins (VERDICT r10 Next #6).
   *
@@ -50,17 +50,18 @@ object ProdBenchQueries extends QueryPack {
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // IVF+SQ8 indexed ANN, production shape: auto-sized nLists
-    // (max(16, ⌈√n⌉) — AnnIndex.writeIndex's default), a FIXED
-    // 256-query external batch, distributed cell join. Build ∝ n,
-    // query ∝ 256 × (n / nLists) × nProbe ≈ 256 × √n × 4.
+    // (max(16, ⌈√n⌉) — FactAnnIndex.writeIndex's default) over a
+    // one-generation table, a FIXED 256-query external batch,
+    // distributed cell join. Build ∝ n, query ∝ 256 × (n / nLists) ×
+    // nProbe ≈ 256 × √n × 4.
     "q145_ann_prod" -> ((s, dir) => {
       val wh = Files.createTempDirectory("graft_q145_").toString
       val path = s"$wh/embeddings"
       val emb = t(s, dir, "embeddings")
-      emb.write.parquet(path)
-      AnnIndex.writeIndex(s, path, "vec_id", "embedding")
+      FactVersioned.replacePartitionsBy(s, path, emb, Nil, Seq(Nil))
+      FactAnnIndex.writeIndex(s, path, "vec_id", "embedding")
       val queries = fixedBatch(emb, "vec_id", "embedding", 256, "qid", "qvec")
-      val out = AnnIndex.ivfSq8TopKIndexedFor(s, path, "embedding",
+      val out = FactAnnIndex.topKFor(s, path, "embedding",
         queries, "qid", "qvec", k = 10, nProbe = 4)
         .localCheckpoint()
       val p = new org.apache.hadoop.fs.Path(wh)

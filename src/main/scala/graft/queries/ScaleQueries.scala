@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BloomPrune, Bucketing, CallSites, Changelog, DataSkipping, FactVersioned, Merge, Skew, Upsert, ZOrder}
+import graft.operators.{BloomPrune, Bucketing, CallSites, Changelog, DataSkipping, FactChangeFeed, FactVersioned, Merge, Skew, Upsert, ZOrder}
 
 /** Driver gates for the SCALE-POSTURE operators (SURVEY §4) that were
   * previously covered only by unit tests (VERDICT r6 "What's missing" #3
@@ -345,7 +345,7 @@ object ScaleQueries extends QueryPack {
     // 0 and hash-mismatch the DuckDB mirror).
     "q114_cdc_subscription" -> ((s, dir) => {
       import org.apache.spark.sql.types.DecimalType
-      import graft.operators.{FactChangeFeed, IncrementalAgg}
+      import graft.operators.IncrementalAgg
       val wh = Files.createTempDirectory("graft_q114_").toString
       val path = s"$wh/orders_fact"
       val bm = s"$wh/feed.bookmark"
@@ -3295,7 +3295,8 @@ object ScaleQueries extends QueryPack {
     // Generation diff: the row-level delta between two committed
     // versions of a table — deletes (keys absent from the after-image),
     // updates (pre+post), inserts — the audit question time travel
-    // exists to answer, value-mirrored in full.
+    // exists to answer, read as the change feed's (0, 1] window and
+    // value-mirrored in full.
     "q109_generation_diff" -> ((s, dir) => {
       val wh = Files.createTempDirectory("graft_q109_").toString
       val path = s"$wh/orders_gen"
@@ -3312,7 +3313,7 @@ object ScaleQueries extends QueryPack {
         .unionByName(o.where(col("o_orderkey") % 5 === 0)
           .withColumn("o_orderkey", col("o_orderkey") + maxKey + 1))
       commitWhole(s, next, path)
-      val out = Changelog.generationDiff(s, path, 0L, 1L, Seq("o_orderkey"))
+      val out = FactChangeFeed.window(s, path, Seq("o_orderkey"), Some(0L), 1L)
         .localCheckpoint()
       val p = new org.apache.hadoop.fs.Path(wh)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.operators.{AnnIndex, Dedup, Similarity}
+import graft.operators.{Dedup, FactAnnIndex, FactVersioned, Similarity}
 
 /** Similarity search over the `embeddings` table (array<float>, dim 64).
   *
@@ -139,19 +139,18 @@ object VectorQueries extends QueryPack {
         .select(col("id_a"), col("id_b"),
           round(col("cosine"), 4).as("cosine"))),
 
-    // Persisted-index ANN (the lifecycle q45 lacks): build the
-    // _graft_ann__ sidecar ONCE (training + assignment + quantization),
-    // then answer from it — ivfTopKIndexed shares cellPlans with
+    // Persisted-index ANN (the lifecycle q45 lacks): build the index
+    // ONCE (training + assignment + quantization) over a one-generation
+    // table, then answer from it — the IVF tier shares cellPlans with
     // ivfTopK, so with the same (nLists, nProbe) this output is
     // hash-identical to q45's (spec-asserted in AnnIndexSpec; the
     // oracle re-verifies every reported value + recall independently).
-    // The in-gate require proves the QUERY phase scans only the
-    // sidecar: at 100 TB the corpus pass happens at index-build time,
-    // never per query.
+    // The in-gate require proves the QUERY phase scans only the index:
+    // at 100 TB the corpus pass happens at index-build time, never per
+    // query.
     "q110_ivf_indexed" -> ((s, dir) => {
-      val tablePath = annTable(s, dir, "q110")
-      AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
-      val out = AnnIndex.ivfTopKIndexed(s, tablePath, "embedding",
+      val tablePath = indexedAnnTable(s, dir, "q110")
+      val out = FactAnnIndex.topKIvf(s, tablePath, "embedding",
         k = 3, nProbe = 10)
       requireSidecarOnly(out)
       out
@@ -160,13 +159,12 @@ object VectorQueries extends QueryPack {
     // The SQL door for indexed ANN (VERDICT r12 Next #4): the same
     // q110 lookup as a TABLE-VALUED function — analysts never leave
     // SQL for retrieval. The builder resolves at analysis time to
-    // ivfTopKIndexed's plan, so the executed query keeps the indexed
-    // contract (in-gate: sidecar-only scans) and is hash-equal to the
+    // topKIvf's plan, so the executed query keeps the indexed
+    // contract (in-gate: index-only scans) and is hash-equal to the
     // operator twin (required in-gate; the derived-invariant oracle
     // re-verifies every value independently).
     "q158_sql_ann_topk" -> ((s, dir) => {
-      val tablePath = annTable(s, dir, "q158")
-      AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
+      val tablePath = indexedAnnTable(s, dir, "q158")
       graft.GraftFunctions.register(s)
       val out = s.sql(
         s"""SELECT query_id, neighbor_id, rank, sim
@@ -178,81 +176,73 @@ object VectorQueries extends QueryPack {
       // the out-vs-twin compare and the bench's final count previously
       // re-ran the same ANN query three times
       val outF = graft.operators.CallSites.overlapped(s)(out.collect())
-      val twin = AnnIndex.ivfTopKIndexed(s, tablePath, "embedding",
+      val twin = FactAnnIndex.topKIvf(s, tablePath, "embedding",
         k = 3, nProbe = 10)
       val twinRows = twin.collect()
       val outRows = scala.concurrent.Await.result(outF,
         graft.operators.Overlap.AwaitTimeout)
       require(outRows.toSet == twinRows.toSet,
         "q158: SQL graft_ann_topk must be hash-equal to the " +
-          "ivfTopKIndexed operator twin")
+          "topKIvf operator twin")
       s.createDataFrame(java.util.Arrays.asList(outRows: _*), out.schema)
     }),
 
-    // SQ8 from the persisted sidecar: quantized codes are READ (the
-    // per-call corpus quantization pass is what the sidecar amortizes),
-    // candidates via the shared sq8CandidateScan — hash-identical to
-    // q80 (spec-asserted), same derived-invariant oracle.
+    // SQ8 from the persisted index: quantized codes are READ (the
+    // per-call corpus quantization pass is what the index amortizes),
+    // and with every one of the 16 cells probed the cell-join pair
+    // universe is the full scan — hash-identical to q80 (spec-asserted),
+    // same derived-invariant oracle.
     "q111_sq8_indexed" -> ((s, dir) => {
-      val tablePath = annTable(s, dir, "q111")
-      AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
-      val out = AnnIndex.sq8TopKIndexed(s, tablePath, "embedding",
-        k = 3, overFetch = 4)
-      requireSidecarOnly(out)
-      out
-    }),
-
-    // PQ from the persisted sidecar: the m-byte codes are READ (the
-    // per-call corpus encode pass is what the sidecar amortizes) —
-    // hash-identical to q122 (shared trainPqCodebooks/pqEncode with
-    // the same sample/seed/params; spec-asserted bit-parity), same
-    // derived-invariant oracle. Since round 11 the public entry IS the
-    // full-probe cell join (VERDICT r10 Next #5): same answers, but
-    // the corpus codes flow through a cell-keyed join that may
-    // broadcast yet never collects — asserted in-gate alongside the
-    // sidecar-only scan check.
-    "q124_pq_indexed" -> ((s, dir) => {
-      val tablePath = annTable(s, dir, "q124")
-      AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
-      val out = AnnIndex.pqTopKIndexed(s, tablePath, "embedding",
-        k = 3, overFetch = 4)
+      val tablePath = indexedAnnTable(s, dir, "q111")
+      val out = FactAnnIndex.topK(s, tablePath, "embedding",
+        k = 3, nProbe = 16, overFetch = 4)
       requireSidecarOnly(out)
       requireCellJoinCandidates(out)
       out
     }),
 
-    // IVF+SQ8 combined from the persisted sidecar — the 100 TB form of
-    // q111: candidates come from a size-adaptive JOIN of self-quantized
-    // query probes against the persisted cell-bucketed codes, so the
-    // corpus side is NEVER collected to the driver (q111's broadcast of
-    // every row's codes is a driver OOM at 10⁹⁺ rows; here the only
-    // driver collect is the n_lists-row centroid table). In-gate:
-    // scans must read only the sidecar AND the candidate stage must be
-    // a join keyed on `cell` (the structural opposite of a collected
-    // broadcast-variable scan, which has no cell join anywhere).
+    // PQ from the persisted index: the m-byte codes are READ (the
+    // per-call corpus encode pass is what the index amortizes) —
+    // hash-identical to q122 (shared trainPqCodebooks/pqEncode with
+    // the same sample/seed/params; spec-asserted bit-parity) at full
+    // probes, same derived-invariant oracle. The corpus codes flow
+    // through a cell-keyed join that may broadcast yet never collects
+    // — asserted in-gate alongside the index-only scan check.
+    "q124_pq_indexed" -> ((s, dir) => {
+      val tablePath = indexedAnnTable(s, dir, "q124")
+      val out = FactAnnIndex.topKPq(s, tablePath, "embedding",
+        k = 3, nProbe = 16, overFetch = 4)
+      requireSidecarOnly(out)
+      requireCellJoinCandidates(out)
+      out
+    }),
+
+    // IVF+SQ8 combined from the persisted index — the 100 TB form of
+    // q111 at restricted probes: candidates come from a size-adaptive
+    // JOIN of self-quantized query probes against the persisted
+    // cell-bucketed codes, so the corpus side is NEVER collected to
+    // the driver (the only driver collect is the n_lists-row centroid
+    // table). In-gate: scans must read only the index AND the
+    // candidate stage must be a join keyed on `cell`.
     "q116_ivf_sq8_indexed" -> ((s, dir) => {
-      val tablePath = annTable(s, dir, "q116")
-      AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
-      val out = AnnIndex.ivfSq8TopKIndexed(s, tablePath, "embedding",
+      val tablePath = indexedAnnTable(s, dir, "q116")
+      val out = FactAnnIndex.topK(s, tablePath, "embedding",
         k = 3, nProbe = 10, overFetch = 4)
       requireSidecarOnly(out)
       requireCellJoinCandidates(out)
       out
     }),
 
-    // IVF+PQ combined from the persisted sidecar — the memory FLOOR of
+    // IVF+PQ combined from the persisted index — the memory FLOOR of
     // the indexed family (the FAISS IVFPQ shape): candidates come from
     // a size-adaptive JOIN of the queries' probes against the
     // persisted cell-bucketed m-byte PQ codes, scored ADC with the
-    // query side exact — so the corpus is NEVER collected to the
-    // driver (q124's broadcast of every row's codes dead-ends at
-    // ~10⁸ rows; here the only driver collects are the centroid and
-    // codebook tables, metadata-scale). Same in-gate plan asserts as
-    // q116: sidecar-only scans + cell-keyed candidate join.
+    // query side exact — the only driver collects are the centroid and
+    // codebook tables, metadata-scale. Same in-gate plan asserts as
+    // q116: index-only scans + cell-keyed candidate join.
     "q131_ivf_pq_indexed" -> ((s, dir) => {
-      val tablePath = annTable(s, dir, "q131")
-      AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
-      val out = AnnIndex.ivfPqTopKIndexed(s, tablePath, "embedding",
+      val tablePath = indexedAnnTable(s, dir, "q131")
+      val out = FactAnnIndex.topKPq(s, tablePath, "embedding",
         k = 3, nProbe = 10, overFetch = 4)
       requireSidecarOnly(out)
       requireCellJoinCandidates(out)
@@ -273,7 +263,6 @@ object VectorQueries extends QueryPack {
     // (`_graft_vdata` never read at query time) + cell-keyed candidate
     // join (no corpus collect).
     "q119_fact_ann_indexed" -> ((s, dir) => {
-      import graft.operators.{FactAnnIndex, FactVersioned}
       val emb = t(s, dir, "embeddings")
       val root = java.nio.file.Files
         .createTempDirectory("graft_q119_").toString + "/emb"
@@ -289,7 +278,7 @@ object VectorQueries extends QueryPack {
       FactAnnIndex.refreshIndex(s, root, "vec_id", "embedding")
       val out = FactAnnIndex.topK(s, root, "embedding", k = 3,
         nProbe = 10, overFetch = 4)
-      requireSidecarOnly(out, FactAnnIndex.DirPrefix)
+      requireSidecarOnly(out)
       requireCellJoinCandidates(out)
       out
     }),
@@ -301,7 +290,6 @@ object VectorQueries extends QueryPack {
     // memory-floor tier with time travel. Same in-gate plan asserts;
     // same derived-invariant oracle at the coarse-candidate floor.
     "q138_fact_ann_pq" -> ((s, dir) => {
-      import graft.operators.{FactAnnIndex, FactVersioned}
       val emb = t(s, dir, "embeddings")
       val root = java.nio.file.Files
         .createTempDirectory("graft_q138_").toString + "/emb"
@@ -317,7 +305,7 @@ object VectorQueries extends QueryPack {
       FactAnnIndex.refreshIndex(s, root, "vec_id", "embedding")
       val out = FactAnnIndex.topKPq(s, root, "embedding", k = 3,
         nProbe = 10, overFetch = 4)
-      requireSidecarOnly(out, FactAnnIndex.DirPrefix)
+      requireSidecarOnly(out)
       requireCellJoinCandidates(out)
       out
     }),
@@ -327,16 +315,15 @@ object VectorQueries extends QueryPack {
     // vectors (here every 5th embedding) against the indexed corpus.
     // Same combined IVF+SQ8 plan as q116 with the probe/re-rank side
     // switched to the batch; the CORPUS is still answered entirely
-    // from the sidecar (asserted: no scan under the indexed table
-    // outside `_graft_ann__`), and candidates still flow through the
+    // from the index (asserted: no scan under the indexed table
+    // outside the index dir), and candidates still flow through the
     // cell-keyed join. Oracle: the q116 derived invariant restricted
     // to the batch's query ids.
     "q120_ann_query_batch" -> ((s, dir) => {
-      val tablePath = annTable(s, dir, "q120")
-      AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
+      val tablePath = indexedAnnTable(s, dir, "q120")
       val queries = t(s, dir, "embeddings")
         .where(col("vec_id") % 5 === 0)
-      val out = AnnIndex.ivfSq8TopKIndexedFor(s, tablePath, "embedding",
+      val out = FactAnnIndex.topKFor(s, tablePath, "embedding",
         queries, "vec_id", "embedding", k = 3, nProbe = 10, overFetch = 4)
       requireCorpusFromSidecar(out, tablePath)
       requireCellJoinCandidates(out)
@@ -346,15 +333,14 @@ object VectorQueries extends QueryPack {
     // The SQL door for the EXTERNAL-batch lookup (q120's production
     // shape through graft_ann_topk_for — VERDICT r13 Next #4, the one
     // TVF that had a spec but no gate): the builder resolves at
-    // analysis time to ivfSq8TopKIndexedFor's plan, so the executed
-    // query keeps q120's whole contract — corpus answered from the
-    // sidecar alone, candidates through the cell-keyed join — and is
-    // required hash-equal to the operator twin in-gate; the q120-class
+    // analysis time to topKFor's plan, so the executed query keeps
+    // q120's whole contract — corpus answered from the index alone,
+    // candidates through the cell-keyed join — and is required
+    // hash-equal to the operator twin in-gate; the q120-class
     // derived-invariant oracle re-verifies every reported value and
     // the recall floor independently.
     "q161_sql_ann_topk_for" -> ((s, dir) => {
-      val tablePath = annTable(s, dir, "q161")
-      AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
+      val tablePath = indexedAnnTable(s, dir, "q161")
       graft.GraftFunctions.register(s)
       val queries = t(s, dir, "embeddings").where(col("vec_id") % 5 === 0)
       queries.createOrReplaceTempView("q161_queries")
@@ -368,14 +354,14 @@ object VectorQueries extends QueryPack {
       // execute once, overlapped with the twin (§2.6) — was 3 full
       // executions (compare ×2 + the bench count)
       val outF = graft.operators.CallSites.overlapped(s)(out.collect())
-      val twin = AnnIndex.ivfSq8TopKIndexedFor(s, tablePath, "embedding",
+      val twin = FactAnnIndex.topKFor(s, tablePath, "embedding",
         queries, "vec_id", "embedding", k = 3, nProbe = 10)
       val twinRows = twin.collect()
       val outRows = scala.concurrent.Await.result(outF,
         graft.operators.Overlap.AwaitTimeout)
       require(outRows.toSet == twinRows.toSet,
         "q161: SQL graft_ann_topk_for must be hash-equal to the " +
-          "ivfSq8TopKIndexedFor operator twin")
+          "topKFor operator twin")
       s.createDataFrame(java.util.Arrays.asList(outRows: _*), out.schema)
     }),
 
@@ -384,13 +370,12 @@ object VectorQueries extends QueryPack {
     // on the candidate stream BEFORE the per-query cut, so every
     // returned slot goes to an allowed row (the "nearest in-domain
     // neighbors" shape curation pipelines use). Corpus still answered
-    // from the sidecar; candidates still flow through the cell join.
+    // from the index; candidates still flow through the cell join.
     "q121_ann_filtered" -> ((s, dir) => {
-      val tablePath = annTable(s, dir, "q121")
-      AnnIndex.writeIndex(s, tablePath, "vec_id", "embedding", nLists = 16)
+      val tablePath = indexedAnnTable(s, dir, "q121")
       val allowed = t(s, dir, "embeddings")
         .where(col("label") < 5).select("vec_id")
-      val out = AnnIndex.ivfSq8TopKIndexedWhere(s, tablePath, "embedding",
+      val out = FactAnnIndex.topKWhere(s, tablePath, "embedding",
         allowed, "vec_id", k = 3, nProbe = 10, overFetch = 8)
       requireCorpusFromSidecar(out, tablePath)
       requireCellJoinCandidates(out)
@@ -413,33 +398,36 @@ object VectorQueries extends QueryPack {
         graft.operators.Clustering.assignToSeeds(
           t(s, dir, "embeddings"), "vec_id", "embedding", k = 16))))
 
-  /** Materialize the embeddings table as a directory (the sidecar
-    * needs a table root it can own) and return its path. Fresh temp
-    * per call — gates must not share index state across runs. */
-  private def annTable(
+  /** Commit the embeddings table as the one generation of an
+    * unpartitioned [[FactVersioned]] table and build its 16-list
+    * [[FactAnnIndex]]; returns the table path. Fresh temp per call —
+    * gates must not share index state across runs. */
+  private def indexedAnnTable(
       s: SparkSession, dir: String, tag: String): String = {
     val path = java.nio.file.Files
       .createTempDirectory(s"graft_${tag}_").toString + "/embeddings"
-    t(s, dir, "embeddings").write.parquet(path)
+    FactVersioned.replacePartitionsBy(s, path, t(s, dir, "embeddings"),
+      Nil, Seq(Nil))
+    FactAnnIndex.writeIndex(s, path, "vec_id", "embedding", nLists = 16)
     path
   }
 
   /** The indexed-ANN contract, asserted in-gate: every file scan in the
-    * query plan reads the `_graft_ann__` sidecar — the base table's
-    * raw vector column is never touched at query time. */
-  private def requireSidecarOnly(
-      out: DataFrame, prefix: String = AnnIndex.DirPrefix): Unit = {
+    * query plan reads the index dir — the table's raw vector column is
+    * never touched at query time. */
+  private def requireSidecarOnly(out: DataFrame): Unit = {
     val scans = out.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.relation.location.rootPaths.map(_.toString)
     }.flatten
-    require(scans.nonEmpty && scans.forall(_.contains(prefix)),
-      s"ANN query phase must scan only the index sidecar, got: $scans")
+    require(scans.nonEmpty &&
+      scans.forall(_.contains(FactAnnIndex.DirPrefix)),
+      s"ANN query phase must scan only the index, got: $scans")
   }
 
   /** q120's contract: the QUERY batch may scan its own source, but
-    * the corpus side must come entirely from the index sidecar — no
-    * scan under the indexed table outside the `_graft_ann__` dir. */
+    * the corpus side must come entirely from the index — no scan under
+    * the indexed table outside the index dir. */
   private def requireCorpusFromSidecar(
       out: DataFrame, tablePath: String): Unit = {
     val scans = out.queryExecution.sparkPlan.collect {
@@ -447,18 +435,18 @@ object VectorQueries extends QueryPack {
         f.relation.location.rootPaths.map(_.toString)
     }.flatten
     val offending = scans.filter(p =>
-      p.contains(tablePath) && !p.contains(AnnIndex.DirPrefix))
-    require(scans.exists(_.contains(AnnIndex.DirPrefix)) &&
+      p.contains(tablePath) && !p.contains(FactAnnIndex.DirPrefix))
+    require(scans.exists(_.contains(FactAnnIndex.DirPrefix)) &&
       offending.isEmpty,
-      s"corpus must be answered from the sidecar alone, got: $scans")
+      s"corpus must be answered from the index alone, got: $scans")
   }
 
   /** q116's no-corpus-collect contract, asserted structurally: the
     * candidate stage must be a JOIN keyed on the IVF `cell` column —
     * size-adaptive (broadcast at KB scale, shuffle at TB scale, the
-    * planner's call), in contrast to the collected-broadcast candidate
-    * scan (sq8TopKIndexed), whose plan contains no cell-keyed join at
-    * all. Together with [[requireSidecarOnly]] this pins the plan shape
+    * planner's call), in contrast to a collected-broadcast candidate
+    * scan (`Similarity.sq8TopK`), whose plan contains no cell-keyed
+    * join at all. Together with [[requireSidecarOnly]] this pins the plan shape
     * whose only driver collect is the n_lists-row centroid table. */
   private def requireCellJoinCandidates(out: DataFrame): Unit = {
     val joins = out.queryExecution.sparkPlan.collect {

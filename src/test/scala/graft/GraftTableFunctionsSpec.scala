@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, FactChangeFeed, FactVersioned, Maintenance, TfIdf}
+import graft.operators.{FactAnnIndex, FactChangeFeed, FactVersioned}
 
 /** [[GraftFunctions.tableBuilders]]: the SQL table-valued functions
   * resolve to EXACTLY their operators' plans — every TVF result is
@@ -20,8 +20,8 @@ class GraftTableFunctionsSpec extends SparkSpec {
   private def tmp(): String =
     Files.createTempDirectory("graft_tvf_").toString
 
-  /** The AnnIndexSpec corpus: deterministic vectors of dim 8 in 3
-    * partitions, clustered around 4 rough directions. */
+  /** The AnnIndexSpec corpus: deterministic vectors of dim 8 with a
+    * partition column p ∈ {0,1,2}, clustered around 4 rough directions. */
   private def corpus(n: Int): DataFrame =
     (1 to n).map { i =>
       val g = i % 4
@@ -33,10 +33,11 @@ class GraftTableFunctionsSpec extends SparkSpec {
     }.toDF("id", "p", "vec")
 
   test("graft_ann_topk_for (external query batch) is hash-equal to " +
-      "ivfSq8TopKIndexedFor") {
+      "FactAnnIndex.topKFor") {
     val path = tmp() + "/t"
-    Maintenance.writePartitioned(corpus(180), path, Seq("p"), Nil)
-    AnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
+    FactVersioned.replacePartitions(spark, path, corpus(180), "p",
+      Seq(0, 1, 2))
+    FactAnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
     corpus(180).where(col("id") % 10 === 0)
       .select(col("id").as("qid"), col("vec").as("qvec"))
       .createOrReplaceTempView("tvf_queries")
@@ -44,10 +45,48 @@ class GraftTableFunctionsSpec extends SparkSpec {
       s"""SELECT * FROM graft_ann_topk_for('$path', 'vec',
          |  'tvf_queries', 'qid', 'qvec', 3, 2)""".stripMargin)
       .as[(Long, Long, Int, Double)].collect().toSet
-    val twin = AnnIndex.ivfSq8TopKIndexedFor(spark, path, "vec",
+    val twin = FactAnnIndex.topKFor(spark, path, "vec",
         spark.table("tvf_queries"), "qid", "qvec", k = 3, nProbe = 2)
       .as[(Long, Long, Int, Double)].collect().toSet
     assert(out == twin && out.nonEmpty)
+  }
+
+  test("the ANN doors accept a catalog reference: an unpartitioned " +
+      "catalog table answers hash-equal to its operator twins") {
+    val root = tmp()
+    spark.conf.set("spark.sql.catalog.graftann",
+      classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftann.root", root)
+    corpus(180).createOrReplaceTempView("tvf_corpus")
+    spark.sql("CREATE TABLE graftann.vecs AS " +
+      "SELECT id, vec FROM tvf_corpus WHERE id <= 120")
+    spark.sql("INSERT INTO graftann.vecs " +
+      "SELECT id, vec FROM tvf_corpus WHERE id > 120")
+    val path = graft.catalog.GraftMaintenance
+      .resolveRef(spark, "graftann.vecs", "test").path
+    assert(FactVersioned.generations(spark, path) == Seq(0L, 1L))
+    FactAnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4)
+
+    val self = spark.sql(
+      "SELECT * FROM graft_ann_topk('graftann.vecs', 'vec', 3, 2)")
+      .as[(Long, Long, Int, Double)].collect().toSet
+    val selfTwin = FactAnnIndex.topKIvf(spark, path, "vec", k = 3,
+        nProbe = 2)
+      .as[(Long, Long, Int, Double)].collect().toSet
+    assert(self == selfTwin)
+    assert(self.map(_._1).size == 180) // every row of both generations
+
+    corpus(180).where(col("id") % 10 === 0)
+      .select(col("id").as("qid"), col("vec").as("qvec"))
+      .createOrReplaceTempView("tvf_cat_queries")
+    val batch = spark.sql(
+      """SELECT * FROM graft_ann_topk_for('graftann.vecs', 'vec',
+        |  'tvf_cat_queries', 'qid', 'qvec', 3, 2)""".stripMargin)
+      .as[(Long, Long, Int, Double)].collect().toSet
+    val batchTwin = FactAnnIndex.topKFor(spark, path, "vec",
+        spark.table("tvf_cat_queries"), "qid", "qvec", k = 3, nProbe = 2)
+      .as[(Long, Long, Int, Double)].collect().toSet
+    assert(batch == batchTwin && batch.map(_._1).size == 18)
   }
 
   test("graft_table_changes accepts a direct PATH argument and " +

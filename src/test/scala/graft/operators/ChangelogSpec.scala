@@ -71,7 +71,8 @@ class ChangelogSpec extends SparkSpec {
     assert(up.head.getAs[String]("s") == "last")
   }
 
-  test("emitDeletes surfaces vanished keys; generationDiff end-to-end") {
+  test("emitDeletes surfaces vanished keys; the change feed window " +
+      "end-to-end") {
     val next = Seq((1L, "a", 10.0), (3L, "C", 31.0), (9L, "z", 90.0))
       .toDF("k", "s", "v") // 2 deleted, 3 updated, 9 inserted, 1 same
     val cs = Changelog.changeSet(current, next, Seq("k"),
@@ -86,7 +87,7 @@ class ChangelogSpec extends SparkSpec {
       .createTempDirectory("graft_gdiff").toString + "/t"
     commitWhole(current, path)
     commitWhole(next, path)
-    val diff = Changelog.generationDiff(spark, path, 0L, 1L, Seq("k"))
+    val diff = FactChangeFeed.window(spark, path, Seq("k"), Some(0L), 1L)
       .collect().map(r => (r.getAs[String]("op"), r.getAs[Long]("k")))
       .toSet
     assert(diff == cs)

@@ -262,6 +262,34 @@ class FactAnnIndexSpec extends SparkSpec {
     assert(resultSet(fannTopK(path, Some(1))) == truth(path, 1))
   }
 
+  test("an UNPARTITIONED table indexes, refreshes and answers: full " +
+      "probes give sq8TopK and pqTopK of the head's content") {
+    val path = tmp() + "/t"
+    val full = corpus(150)
+    FactVersioned.replacePartitionsBy(spark, path, full, Nil, Seq(Nil))
+    FactAnnIndex.writeIndex(spark, path, "id", "vec", nLists = 4,
+      trainCap = 60, pqM = 4, pqKsub = 16)
+    // rewrite rows outside the 60-row training sample (the lowest-hash
+    // ids), so a per-call pqTopK over the head trains the codebooks
+    // the index persisted at gen 0
+    val sample = full.orderBy(xxhash64(col("id")), col("id")).limit(60)
+      .select("id")
+    val updates = corpus(150, shift = 5).join(sample, Seq("id"), "left_anti")
+      .where(col("id") % 4 === 0)
+    FactVersioned.upsertBy(spark, path, updates, Seq("id"), Nil)
+    FactAnnIndex.refreshIndex(spark, path, "id", "vec")
+
+    val sq8 = resultSet(fannTopK(path))
+    assert(sq8 == truth(path, 1))
+    assert(sq8.nonEmpty && sq8 != truth(path, 0))
+    val pq = resultSet(FactAnnIndex.topKPq(spark, path, "vec", k = 3,
+      nProbe = 4, overFetch = 4))
+    assert(pq == resultSet(Similarity.pqTopK(
+      FactVersioned.read(spark, path, Some(1L)), "id", "vec", k = 3,
+      m = 4, ksub = 16, overFetch = 4, trainCap = 60)))
+    assert(pq.nonEmpty)
+  }
+
   test("gcIndex drops whole-dead vgen subtrees only; survivors still " +
       "answer bit-identically") {
     val path = tmp() + "/t"
