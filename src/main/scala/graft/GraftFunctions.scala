@@ -144,10 +144,10 @@ object GraftFunctions {
       es: Seq[Expression], i: Int, fn: String, what: String): Int =
     litLong(es, i, fn, what).toInt
 
-  /** A table argument: `'<catalog>.<table>'` (GraftCatalog conf
-    * resolution — fact tables only for the change feed, any layout for
-    * the retrieval sidecars which live NEXT to plain parquet dirs) or
-    * a direct path (contains '/'). */
+  /** A table argument: `'<catalog>.[<namespace>.]<table>'`
+    * (GraftCatalog conf resolution — fact tables only for the change
+    * feed, any layout for the retrieval sidecars which live NEXT to
+    * plain parquet dirs) or a direct path (contains '/'). */
   private def tablePathArg(
       spark: SparkSession, es: Seq[Expression], i: Int, fn: String): String = {
     val ref = litString(es, i, fn, "table")

@@ -108,49 +108,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private def committed(path: String): Boolean =
     FactVersioned.generations(spark, path).nonEmpty
 
-  /** A namespace is a marker-bearing subdirectory of the root (r15 —
-    * VERDICT r14 missing #5): `CREATE NAMESPACE a` creates `<root>/a`
-    * with a `_graft_namespace` marker, and `graft.a.t` resolves to
-    * `<root>/a/t`. The marker distinguishes a namespace dir from a
-    * table dir (and from foreign data) without probing table layouts. */
-  private val NsMarker = "_graft_namespace"
+  import GraftCatalog.{NsMarker, safeSegment}
 
   private def hadoopFs(p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def nsPath(namespace: Array[String]): Path =
-    new Path((root +: namespace.toSeq).mkString("/"))
-
-  private def safeSegment(s: String): Boolean =
-    s.nonEmpty && !s.contains("/") && s != ".." && s != "." &&
-      !s.startsWith("_") && !s.startsWith(".")
+    GraftCatalog.nsPath(root, namespace)
 
   private def validateSegment(s: String): Unit =
     require(safeSegment(s),
       s"GraftCatalog: invalid namespace/table segment '$s'")
 
-  /** Path of `ident` under the warehouse root. TABLE NAMES are
-    * validated like namespace segments — a name like `..` or one
-    * containing '/' would otherwise resolve (or RENAME TO could name a
-    * path) outside the root; on the resolution path an unsafe name is
-    * simply "no such table". POINTER-AWARE through
-    * [[TablePointers.resolve]], the resolution the maintenance commands
-    * and table functions share: an [[TablePointers.At]] entry redirects the name to its physical dir (the table was
-    * renamed TO this name — the tree never moved); a
-    * [[TablePointers.Renamed]] entry fails loudly with re-target
-    * guidance, so no DDL/DML can reach the NEW table's data through
-    * the OLD name; and a name with no entry whose default dir is
-    * another table's physical home resolves to no table. */
-  private def tablePath(ident: Identifier): String = {
-    if (!safeSegment(ident.name) ||
-        !ident.namespace.forall(safeSegment))
-      throw new NoSuchTableException(ident)
-    if (ident.namespace.nonEmpty && !namespaceExists(ident.namespace))
-      throw new NoSuchTableException(ident)
-    TablePointers.resolve(spark, root,
-      TablePointers.keyOf(ident.namespace, ident.name))
+  /** Path of `ident` under the warehouse root ([[GraftCatalog.tablePath]]). */
+  private def tablePath(ident: Identifier): String =
+    GraftCatalog.tablePath(spark, root, ident.namespace, ident.name)
       .getOrElse(throw new NoSuchTableException(ident))
-  }
 
   /** The pointer entry of `ident`, if any (None for unsafe names). */
   private def pointerEntry(ident: Identifier): Option[TablePointers.Entry] =
@@ -330,10 +303,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     else childNamespaces(namespace).map(n => namespace :+ n).toArray
 
   override def namespaceExists(namespace: Array[String]): Boolean =
-    namespace.isEmpty || {
-      val p = nsPath(namespace)
-      hadoopFs(p).exists(new Path(p, NsMarker))
-    }
+    GraftCatalog.namespaceExists(spark, root, namespace)
 
   /** Namespace properties live in a SIBLING file of the marker
     * ([[NsPropsFile]], sorted `key\tvalue` lines, atomically rewritten
@@ -928,6 +898,51 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 }
 
 object GraftCatalog {
+  /** A namespace is a marker-bearing subdirectory of the root (r15 —
+    * VERDICT r14 missing #5): `CREATE NAMESPACE a` creates `<root>/a`
+    * with a `_graft_namespace` marker, and `graft.a.t` resolves to
+    * `<root>/a/t`. The marker distinguishes a namespace dir from a
+    * table dir (and from foreign data) without probing table layouts. */
+  private[catalog] val NsMarker = "_graft_namespace"
+
+  private[catalog] def safeSegment(s: String): Boolean =
+    s.nonEmpty && !s.contains("/") && s != ".." && s != "." &&
+      !s.startsWith("_") && !s.startsWith(".")
+
+  private def nsPath(root: String, namespace: Array[String]): Path =
+    new Path((root +: namespace.toSeq).mkString("/"))
+
+  /** True when `namespace` exists under the warehouse `root` (the root
+    * namespace always does). */
+  private[catalog] def namespaceExists(
+      spark: SparkSession, root: String, namespace: Array[String]): Boolean =
+    namespace.isEmpty || {
+      val p = nsPath(root, namespace)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(new Path(p, NsMarker))
+    }
+
+  /** Path of table `name` in `namespace` under the warehouse `root`,
+    * the resolution the catalog, the maintenance commands and the table
+    * functions share; None when there is no such table. TABLE NAMES are
+    * validated like namespace segments — a name like `..` or one
+    * containing '/' would otherwise resolve (or RENAME TO could name a
+    * path) outside the root; on the resolution path an unsafe name, or
+    * a namespace that does not exist, is simply "no such table".
+    * POINTER-AWARE through [[TablePointers.resolve]]: an
+    * [[TablePointers.At]] entry redirects the name to its physical dir
+    * (the table was renamed TO this name — the tree never moved); a
+    * [[TablePointers.Renamed]] entry fails loudly with re-target
+    * guidance, so no DDL/DML can reach the NEW table's data through
+    * the OLD name; and a name with no entry whose default dir is
+    * another table's physical home resolves to no table. */
+  private[catalog] def tablePath(spark: SparkSession, root: String,
+      namespace: Array[String], name: String): Option[String] =
+    if (!safeSegment(name) || !namespace.forall(safeSegment)) None
+    else if (!namespaceExists(spark, root, namespace)) None
+    else TablePointers.resolve(spark, root,
+      TablePointers.keyOf(namespace, name))
+
   /** Marker file of a table created but not yet written (the window
     * inside a CTAS between createTable and the data landing, or the
     * husk a crashed CTAS leaves). Empty: only its existence is read. */

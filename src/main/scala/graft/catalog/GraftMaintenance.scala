@@ -16,7 +16,7 @@ import graft.operators.FactVersioned
   * expect from a lakehouse store, routed through the maintenance APIs
   * the operator layer already has (VERDICT r10 "What's missing" #1):
   *
-  *  - `OPTIMIZE <catalog>.<table> [WHERE pcol = lit [AND ...]]
+  *  - `OPTIMIZE <table> [WHERE pcol = lit [AND ...]]
   *    [ZORDER BY (c1, c2, ...)]` →
   *    [[FactVersioned.compactPartitionsBy]] over the head partitions
   *    in scope (every leaf without WHERE — an unpartitioned table's
@@ -26,21 +26,24 @@ import graft.operators.FactVersioned
   *    new generation whose rows are byte-identical, prior generations
   *    untouched until retention (compaction never breaks time
   *    travel).
-  *  - `VACUUM <catalog>.<table> [RETAIN <n> GENERATIONS] [DRY RUN]` →
+  *  - `VACUUM <table> [RETAIN <n> GENERATIONS] [DRY RUN]` →
   *    [[FactVersioned.vacuum]]: expire
   *    generations beyond the window and GC unreferenced data files.
   *    Returns one row per expired generation; `DRY RUN` previews the
   *    set without acting.
-  *  - `DESCRIBE HISTORY <catalog>.<table>` → the commit log, newest
+  *  - `DESCRIBE HISTORY <table>` → the commit log, newest
   *    first: generation, commit instant (the marker's visibility
   *    time), declared touched partitions (the conflict-detection
   *    record; `""` names an unpartitioned table's root) and commit
   *    properties.
-  *  - `RESTORE [TABLE] <catalog>.<table> TO VERSION AS OF n` →
+  *  - `RESTORE [TABLE] <table> TO VERSION AS OF n` →
   *    [[FactVersioned.restore]] (METADATA-ONLY manifest+schema copy,
   *    zero data staged) — roll back as a new, auditable generation.
-  *  - `DESCRIBE DETAIL <catalog>.<table>` → one-row table summary:
+  *  - `DESCRIBE DETAIL <table>` → one-row table summary:
   *    kind, partition columns, generation counts, head footprint.
+  *
+  * `<table>` is `<catalog>.[<namespace>.]<table>`: a [[GraftCatalog]]
+  * name, the table's namespace if it has one, and its name.
   *
   * Spark's grammar has none of these statements, so routing happens at
   * the PARSER seam (the Delta precedent: DeltaSqlParser): a delegating
@@ -162,21 +165,25 @@ object GraftMaintenance {
 
   private[graft] final case class Resolved(path: String, catalogName: String)
 
-  /** [[resolve]] over a dotted `<catalog>.<table>` string — the entry
-    * the SQL table functions ([[graft.GraftFunctions]]) use to accept
-    * catalog-qualified table references. */
+  /** [[resolve]] over a dotted `<catalog>.[<namespace>.]<table>`
+    * string — the entry the SQL table functions
+    * ([[graft.GraftFunctions]]) use to accept catalog-qualified table
+    * references. */
   private[graft] def resolveRef(
       spark: SparkSession, ref: String, stmt: String): Resolved =
     resolve(spark, parts(ref), stmt)
 
-  /** Run-time resolution: `<catalog>.<table>` where the catalog conf
-    * names [[GraftCatalog]] and the table holds a committed generation. */
+  /** Run-time resolution: `<catalog>.[<namespace>.]<table>` where the
+    * catalog conf names [[GraftCatalog]] and the table holds a
+    * committed generation; the table is found the way the catalog
+    * finds it ([[GraftCatalog.tablePath]]). */
   private[catalog] def resolve(
       spark: SparkSession, ps: Seq[String], stmt: String): Resolved = {
-    require(ps.length == 2,
-      s"$stmt: qualify the table as <catalog>.<table> (a GraftCatalog " +
-        s"registered via spark.sql.catalog.<name>); got ${ps.mkString(".")}")
-    val (cat, tbl) = (ps.head, ps(1))
+    require(ps.length >= 2,
+      s"$stmt: qualify the table as <catalog>.[<namespace>.]<table> (a " +
+        "GraftCatalog registered via spark.sql.catalog.<name>); got " +
+        ps.mkString("."))
+    val (cat, ns, tbl) = (ps.head, ps.slice(1, ps.length - 1).toArray, ps.last)
     val cls = spark.conf.getOption(s"spark.sql.catalog.$cat")
     require(cls.contains(classOf[GraftCatalog].getName),
       s"$stmt: '$cat' is not a GraftCatalog (spark.sql.catalog.$cat=" +
@@ -186,11 +193,10 @@ object GraftMaintenance {
         s"$stmt: set spark.sql.catalog.$cat.root"))
     def noTable = new org.apache.spark.sql.catalyst.analysis
       .NoSuchTableException(
-        org.apache.spark.sql.connector.catalog.Identifier
-          .of(Array.empty[String], tbl))
+        org.apache.spark.sql.connector.catalog.Identifier.of(ns, tbl))
     // the catalog's own pointer-aware resolution: a renamed table is
     // reached under its new name, never under its old one
-    val path = TablePointers.resolve(spark, root, tbl)
+    val path = GraftCatalog.tablePath(spark, root, ns, tbl)
       .getOrElse(throw noTable)
     if (FactVersioned.generations(spark, path).isEmpty) throw noTable
     Resolved(path, cat)

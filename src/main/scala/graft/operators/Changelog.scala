@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   * that genuinely distinct all-column-identical rows collapse.
   *
   * Scale: one shuffle join of the (batch-sized) winners against
-  * `current` on the keys — the same shape as the upsert's own
-  * anti-join. For partition-scoped tables, pass the partition-pruned
-  * view of the target (the same pruned read the commit itself uses)
-  * so the join touches only the batch's partitions.
+  * `current` on the keys. For partition-scoped tables, pass the
+  * partition-pruned view of the target (the same pruned read the
+  * commit itself uses) so the join touches only the batch's
+  * partitions.
   */
 object Changelog {
 
@@ -69,9 +69,9 @@ object Changelog {
     val nullInserts =
       if (!dedupNullKeyed) nullInserts0
       else {
-        // same construction as Upsert.upsert(dedupNullKeyed = true):
-        // all-column dedup within the batch, then null-safe anti-join
-        // against current's null-keyed rows
+        // Upsert.upsert(dedupNullKeyed = true)'s rule: all-column
+        // dedup within the batch, then null-safe anti-join against
+        // current's null-keyed rows
         val anyNullKey = keys.map(col(_).isNull).reduce(_ || _)
         val nullCurrent = current.where(coalesce(anyNullKey, lit(false)))
         val dd = nullInserts0.dropDuplicates(cols)

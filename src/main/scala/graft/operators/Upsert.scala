@@ -21,14 +21,25 @@ import org.apache.spark.sql.functions._
   *    arrival-order column;
   *  - NULLs are distinct in unique constraints (ref K3, SURVEY §2.5): rows
   *    with any NULL key never conflict — they pass through as plain
-  *    inserts, and null-keyed target rows are never overwritten (the
-  *    left-anti join naturally keeps them since NULL never equals).
+  *    inserts, and null-keyed target rows are never overwritten.
   *
-  * Scale posture: the anti-join shuffles on the upsert keys only; with the
-  * target bucketed/partitioned by key, Catalyst prunes and AQE handles
-  * skew. No driver-side collection anywhere.
+  * Scale posture: one shuffle. Target and updates are unioned, tagged
+  * with their side, and ONE window partitioned by the keys picks each
+  * key's rows — each input is scanned once, and no side is collected
+  * to the driver or broadcast. Anti-joining the target against a
+  * broadcast of the batch winners would scan the updates three times
+  * (winners, NULL-keyed inserts, the broadcast build) for a saving
+  * that does not exist here: a flat snapshot is rewritten whole, so
+  * shuffling the target costs no more than the write that follows
+  * it. The partition-scoped commit ([[FactVersioned]]'s
+  * `mergeTouched`) rewrites only the touched partitions and keeps its
+  * broadcast anti-join.
   */
 object Upsert {
+
+  private val OrdCol = "__graft_ord"
+  private val SrcCol = "__graft_src"
+  private val RowIdCol = "__graft_row"
 
   /** Upsert `updates` into `target` keyed by `keys`.
     *
@@ -54,22 +65,36 @@ object Upsert {
       dedupNullKeyed: Boolean = false): DataFrame = {
     require(keys.nonEmpty, "upsert requires at least one key column")
     val cols = target.columns.toSeq
-    val anyNullKey = keys.map(col(_).isNull).reduce(_ || _)
-    val (winners, nullInserts0) = batchWinners(updates, keys, orderBy, cols)
-    val nullInserts =
-      if (!dedupNullKeyed) nullInserts0
-      else {
-        // replay-idempotent guests: all-column dedup within the batch,
-        // then null-safe anti-join against rows already in the target
-        val nullTarget = target.where(coalesce(anyNullKey, lit(false)))
-        val dd = nullInserts0.dropDuplicates(cols)
-        val cond = cols.map(c => dd(c) <=> nullTarget(c)).reduce(_ && _)
-        dd.join(nullTarget, cond, "left_anti")
-      }
-    val untouched = target.join(winners, keys, "left_anti")
-    winners
-      .unionByName(nullInserts)
-      .unionByName(untouched)
+    val (ordValue, winnerFirst) = winnerOrder(orderBy)
+    val both = target
+      .select(cols.map(col) :+ lit(null).as(OrdCol) :+ lit(0).as(SrcCol): _*)
+      .unionByName(updates
+        .select(cols.map(col) :+ ordValue.as(OrdCol) :+ lit(1).as(SrcCol): _*))
+    val nullKey = coalesce(keys.map(col(_).isNull).reduce(_ || _), lit(false))
+    // a NULL-keyed row conflicts with nothing: it gets a partition of its
+    // own, or under dedupNullKeyed one per distinct row. The row id is a
+    // column, not a window expression: a nondeterministic partition
+    // expression never matches the exchange below it, so each window
+    // function would shuffle again.
+    val (rows, discriminators) =
+      if (dedupNullKeyed) (both, cols.map(c => when(nullKey, col(c))))
+      else (both.withColumn(RowIdCol,
+        when(nullKey, monotonically_increasing_id())), Seq(col(RowIdCol)))
+    // an update sorts first in a keyed partition (it replaces the target
+    // rows), a target row first in a NULL-keyed one (it suppresses the
+    // update copies of itself)
+    val side = when(nullKey, lit(1) - col(SrcCol)).otherwise(col(SrcCol))
+    val w = Window.partitionBy(keys.map(col) ++ discriminators: _*)
+      .orderBy(side.desc, winnerFirst)
+    // keep the first row, plus every target row of a partition that a
+    // target row leads: duplicate-key target rows with no update survive
+    rows
+      .select(cols.map(col) :+ col(SrcCol) :+
+        row_number().over(w).as("__graft_rn") :+
+        first(col(SrcCol)).over(w).as("__graft_lead"): _*)
+      .where(col("__graft_rn") === 1 ||
+        (col(SrcCol) === 0 && col("__graft_lead") === 0))
+      .select(cols.map(col): _*)
   }
 
   /** Schema-evolving upsert (the `mergeSchema` MERGE story): columns
@@ -149,28 +174,32 @@ object Upsert {
       orderBy: Option[Column],
       cols: Seq[String]): (DataFrame, DataFrame) = {
     val anyNullKey = keys.map(col(_).isNull).reduce(_ || _)
-    // a SortOrder can't be projected as a value — strip it and keep its
-    // direction for the window ordering instead
-    import org.apache.spark.sql.GraftColumnBridge
-    val (ordValue, firstWinsAsc) = orderBy match {
-      case Some(c) => GraftColumnBridge.unwrapSortOrder(c) match {
-        case Some((child, asc)) => (child, asc)
-        case None => (c, false)
-      }
-      case None => (monotonically_increasing_id(), false)
-    }
-    val tagged = updates.withColumn("__graft_ord", ordValue)
+    val (ordValue, winnerFirst) = winnerOrder(orderBy)
+    val tagged = updates.withColumn(OrdCol, ordValue)
     val keyed = tagged.where(!coalesce(anyNullKey, lit(false)))
     val nullKeyed = tagged.where(coalesce(anyNullKey, lit(false)))
 
-    val winnerOrd =
-      if (firstWinsAsc) col("__graft_ord").asc else col("__graft_ord").desc
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(winnerOrd)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(winnerFirst)
     val winners = keyed
       .withColumn("__graft_rn", row_number().over(w))
       .where(col("__graft_rn") === 1)
       .select(cols.map(col): _*)
     (winners, nullKeyed.select(cols.map(col): _*))
+  }
+
+  /** The winner rule of `orderBy`: the value each update is tagged with
+    * (as [[OrdCol]]), and the ordering of that tag under which a key's
+    * winner comes first. A plain column ⇒ largest wins; a sort order
+    * (`.asc`/`.desc`) ⇒ first under it wins; none ⇒ last in arrival
+    * order. A SortOrder cannot be projected as a value, so it is
+    * stripped and its direction kept for the ordering. */
+  private def winnerOrder(orderBy: Option[Column]): (Column, Column) = {
+    import org.apache.spark.sql.GraftColumnBridge
+    val (value, firstWinsAsc) = orderBy match {
+      case Some(c) => GraftColumnBridge.unwrapSortOrder(c).getOrElse((c, false))
+      case None => (monotonically_increasing_id(), false)
+    }
+    (value, if (firstWinsAsc) col(OrdCol).asc else col(OrdCol).desc)
   }
 
   /** Atomic snapshot write: write to `<path>__tmp`, then swap directories.

@@ -162,6 +162,44 @@ class GraftTableFunctionsSpec extends SparkSpec {
       badRef.toLowerCase.contains("catalog"), badRef)
   }
 
+  test("a namespaced catalog table answers graft_table_changes and " +
+      "OPTIMIZE; a bad segment or a missing namespace still fails") {
+    val root = tmp()
+    spark.conf.set("spark.sql.catalog.graftns",
+      classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftns.root", root)
+    val s = graft.catalog.GraftDml.enable(spark)
+    GraftFunctions.register(s)
+    s.sql("CREATE NAMESPACE graftns.raw")
+    s.sql("CREATE TABLE graftns.raw.ev AS SELECT 1L AS k, 10L AS v")
+    s.sql("INSERT INTO graftns.raw.ev VALUES (2L, 20L)")
+    val path = graft.catalog.GraftMaintenance
+      .resolveRef(s, "graftns.raw.ev", "test").path
+    assert(path == s"$root/raw/ev")
+    val changes = s.sql("SELECT op, k, v FROM " +
+        "graft_table_changes('graftns.raw.ev', 'k', 0, 1)")
+      .as[(String, Long, Long)].collect().toSet
+    assert(changes == Set(("insert", 2L, 20L)))
+    s.sql("OPTIMIZE graftns.raw.ev")
+    assert(FactVersioned.generations(s, path) == Seq(0L, 1L, 2L))
+    assert(s.table("graftns.raw.ev").as[(Long, Long)].collect().toSet ==
+      Set((1L, 10L), (2L, 20L)))
+    // a missing namespace and an unsafe segment are no table
+    def noTable(body: => Any): Boolean =
+      Iterator.iterate(intercept[Throwable](body))(_.getCause)
+        .takeWhile(_ != null).exists {
+          case t: org.apache.spark.SparkThrowable =>
+            t.getCondition == "TABLE_OR_VIEW_NOT_FOUND"
+          case _ => false
+        }
+    Seq("graftns.nope.ev", "graftns.`_raw`.ev", "graftns.raw.`..`")
+      .foreach { ref =>
+        assert(noTable(s.sql(s"OPTIMIZE $ref")), ref)
+        assert(noTable(s.sql(
+          s"SELECT * FROM graft_table_changes('$ref', 'k', 0, 1)")), ref)
+      }
+  }
+
   test("TVF scalar arguments constant-fold: arithmetic over literals " +
       "and concatenated strings are accepted") {
     val path = tmp() + "/t"

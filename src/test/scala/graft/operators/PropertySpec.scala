@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -95,6 +96,58 @@ class PropertySpec extends SparkSpec {
         dedupNullKeyed = true)
       assert(once.exceptAll(twice).isEmpty && twice.exceptAll(once).isEmpty,
         s"seed $s")
+    }
+  }
+
+  private val nullableKeyGen: Gen[List[(Option[String], Option[Int], Int)]] =
+    Gen.listOf(for {
+      k1 <- Gen.frequency(4 -> Gen.choose(0, 4).map(i => Some(s"k$i")),
+        1 -> Gen.const(None))
+      k2 <- Gen.frequency(4 -> Gen.choose(0, 2).map(Some(_)),
+        1 -> Gen.const(None))
+      x <- Gen.choose(0, 2) // narrow range forces all-column duplicates
+    } yield (k1, k2, x))
+
+  /** Rows `(k1, k2, x, v)`: the winner-order column `v` is unique among
+    * keyed rows (negative on the target side, so target rows copied
+    * into the updates stay unique there too), and equals `x` on
+    * NULL-keyed rows, so identical NULL-keyed rows occur. */
+  private def ordered(rows: List[(Option[String], Option[Int], Int)],
+      keys: Seq[String], sign: Int) =
+    rows.zipWithIndex.map { case ((k1, k2, x), i) =>
+      val nullKey = k1.isEmpty || (keys.contains("k2") && k2.isEmpty)
+      (k1, k2, x, if (nullKey) x else sign * (i * 10 + x + 1))
+    }
+
+  test("property: the one-window upsert equals the three-branch model " +
+      "as a row multiset") {
+    val orders: Seq[(String, Option[Column])] = Seq("arrival" -> None,
+      "largest" -> Some(col("v")), "asc" -> Some(col("v").asc),
+      "desc" -> Some(col("v").desc))
+    val cases = for {
+      keys <- Seq(Seq("k1"), Seq("k1", "k2"))
+      (ordName, ord) <- orders
+      dedup <- Seq(false, true)
+    } yield (keys, ordName, ord, dedup)
+    cases.zipWithIndex.foreach { case ((keys, ordName, ord, dedup), i) =>
+      val seed = 400L + i
+      val t = ordered(sample(nullableKeyGen, seed), keys, -1)
+      // a third of the target redelivered: keyed rows meet their own
+      // key, NULL-keyed rows meet an identical target row
+      val u = ordered(sample(nullableKeyGen, seed + 50), keys, 1) ++
+        t.zipWithIndex.collect { case (r, j) if j % 3 == 0 => r }
+      // every case also runs with an empty target and empty updates
+      Seq("full" -> (t, u), "empty target" -> (Nil, u),
+          "empty updates" -> (t, Nil)).foreach { case (shape, (tr, ur)) =>
+        val (td, ud) = (tr.toDF("k1", "k2", "x", "v"),
+          ur.toDF("k1", "k2", "x", "v"))
+        def rows(df: DataFrame) =
+          df.collect().map(_.toString).sorted.toSeq
+        val got = rows(Upsert.upsert(td, ud, keys, ord, dedup))
+        val want = rows(UpsertSpec.threeBranch(td, ud, keys, ord, dedup))
+        assert(got == want, s"keys=$keys order=$ordName " +
+          s"dedupNullKeyed=$dedup $shape seed=$seed")
+      }
     }
   }
 

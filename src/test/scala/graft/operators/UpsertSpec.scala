@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -71,6 +72,32 @@ class UpsertSpec extends SparkSpec {
       dedupNullKeyed = true)
     assert(twice.count() === 3)
     assert(once.exceptAll(twice).isEmpty && twice.exceptAll(once).isEmpty)
+  }
+
+  test("the one-window upsert writes with fewer Spark jobs than the " +
+      "three-branch model, to the same rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    Upsert.writeSnapshot(Seq(("m1", null, 1), ("m1", "u1", 2),
+      ("m2", "u2", 3)).toDF("muuid", "uid", "d"), s"$dir/t")
+    val t = Upsert.readSnapshot(spark, s"$dir/t").get
+    val u = Seq(("m1", "u1", 20), ("m1", "u1", 21), ("m3", null, 4),
+      ("m3", "u3", 5)).toDF("muuid", "uid", "d")
+    val keys = Seq("muuid", "uid")
+    // one window over target ∪ updates, whichever way NULL keys go
+    Seq(false, true).foreach { dedup =>
+      val plan = Upsert.upsert(t, u, keys, Some(col("d")), dedup)
+        .queryExecution.optimizedPlan
+      assert(plan.collect { case w: org.apache.spark.sql.catalyst.plans
+        .logical.Window => w }.size == 1, plan)
+    }
+    val fused = jobsOf(Upsert.writeSnapshot(
+      Upsert.upsert(t, u, keys, Some(col("d"))), s"$dir/fused"))
+    val model = jobsOf(Upsert.writeSnapshot(
+      UpsertSpec.threeBranch(t, u, keys, Some(col("d"))), s"$dir/model"))
+    assert(fused < model, s"one-window $fused jobs, three-branch $model")
+    val (a, b) = (spark.read.parquet(s"$dir/fused"),
+      spark.read.parquet(s"$dir/model"))
+    assert(a.count() == 5 && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
   test("recovery write from a __prev-only state commits before cleanup") {
@@ -251,5 +278,34 @@ class UpsertSpec extends SparkSpec {
     assert(FactVersioned.partitionDirName("ts",
         java.time.LocalDateTime.parse("2024-01-03T07:30:00"))
       .contains("2024-01-03 07%3A30%3A00"))
+  }
+}
+
+object UpsertSpec {
+  /** The three-branch upsert [[Upsert.upsert]] replaced, kept as its
+    * reference model: the keyed batch winners, the NULL-keyed inserts
+    * (under `dedupNullKeyed` deduplicated on all columns and anti-joined
+    * null-safely against the target's NULL-keyed rows), and the target
+    * anti-joined against the winners on the keys. */
+  def threeBranch(
+      target: DataFrame,
+      updates: DataFrame,
+      keys: Seq[String],
+      orderBy: Option[Column] = None,
+      dedupNullKeyed: Boolean = false): DataFrame = {
+    val cols = target.columns.toSeq
+    val anyNullKey = keys.map(col(_).isNull).reduce(_ || _)
+    val (winners, nullInserts0) =
+      Upsert.batchWinners(updates, keys, orderBy, cols)
+    val nullInserts =
+      if (!dedupNullKeyed) nullInserts0
+      else {
+        val nullTarget = target.where(coalesce(anyNullKey, lit(false)))
+        val dd = nullInserts0.dropDuplicates(cols)
+        val cond = cols.map(c => dd(c) <=> nullTarget(c)).reduce(_ && _)
+        dd.join(nullTarget, cond, "left_anti")
+      }
+    val untouched = target.join(winners, keys, "left_anti")
+    winners.unionByName(nullInserts).unionByName(untouched)
   }
 }

@@ -112,6 +112,30 @@ class RecordingStreamSpec extends SparkSpec {
     }
   }
 
+  test("a micro-batch scans its webhook file once: numInputRows equals " +
+      "the file's event count, on the first batch and against a staged " +
+      "snapshot") {
+    val root = Files.createTempDirectory("graft_streamscan").toString
+    val in = s"$root/in"; Files.createDirectories(JPaths.get(in))
+    val n = 15
+    def batchFile(name: String, from: Int): Unit =
+      writeEvent(in, name, (from until from + n).map(i => event(s"m$i",
+        s"t$i", file(s"f$i", "audio_only", "M4A"), eventTs = 1000L + i))
+        .mkString("\n"))
+    val q = RecordingStream.start(spark, in, s"$root/staging",
+      s"$root/ckpt")
+    try {
+      batchFile("e1.json", 0)
+      q.processAllAvailable()
+      batchFile("e2.json", n)
+      q.processAllAvailable()
+    } finally q.stop()
+    val batches = q.recentProgress.filter(_.numInputRows > 0)
+    assert(batches.map(_.numInputRows).toSeq == Seq(n.toLong, n.toLong),
+      "each event must be read once per micro-batch")
+    assert(spark.read.parquet(s"$root/staging").count() == 2 * n)
+  }
+
   private def table(path: String) = FactVersioned.read(spark, path)
 
   /** The table's ids, sorted; a NULL id reads as None. */

@@ -23,11 +23,20 @@ The per-operation timeline shows where a change's saving lands: which
 jobs an operation lost, and what its remaining time is spent on. Job
 time summing to more than the busy time means jobs overlapped; busy
 time well under the operation's duration means the driver worked
-alone in between. The tool only reads the trace file.
+alone in between. The tool only reads the trace files.
+
+With `--against OTHER.json` (a trace of the same workload and seed
+from another commit) it prints, instead, one line per operation kind
+and name: its count in each trace, then its median jobs, tasks and
+busy time per operation, each as `OTHER -> TRACE`:
+
+    python3 tools/trace_ops.py change/trace-zoom_etl-3.json \\
+        --against parent/trace-zoom_etl-3.json
 """
 import argparse
 import collections
 import json
+import statistics
 
 
 def load(path):
@@ -63,6 +72,33 @@ def overlap(js):
     return busy, sum(j["end_ms"] - j["start_ms"] for j in js), peak
 
 
+def per_name(ops, jobs):
+    """{(kind, name): [(jobs, tasks, busy ms) per operation]}."""
+    out = collections.defaultdict(list)
+    for o in ops:
+        js = jobs_of(o, jobs)
+        out[(o["kind"], o["name"])].append(
+            (len(js), sum(j["tasks"] for j in js), overlap(js)[0]))
+    return out
+
+
+def compare(ops, jobs, other_ops, other_jobs):
+    """Print each operation name's median jobs, tasks and busy time per
+    operation in the other trace and in this one, side by side."""
+    mine, theirs = per_name(ops, jobs), per_name(other_ops, other_jobs)
+
+    def med(rows, i):
+        return f"{statistics.median(r[i] for r in rows):g}" if rows else "-"
+
+    print(f"{'kind':5s} {'name':24s} {'ops':>9s} {'jobs/op':>12s} "
+          f"{'tasks/op':>12s} {'busy ms/op':>14s}")
+    for kind, name in sorted(set(mine) | set(theirs)):
+        a, b = theirs.get((kind, name), []), mine.get((kind, name), [])
+        cells = [f"{med(a, i)} -> {med(b, i)}" for i in range(3)]
+        print(f"{kind:5s} {name:24s} {f'{len(a)} -> {len(b)}':>9s} "
+              f"{cells[0]:>12s} {cells[1]:>12s} {cells[2]:>14s}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("trace")
@@ -70,11 +106,20 @@ def main():
     ap.add_argument("--name", help="only operations of this name")
     ap.add_argument("--limit", type=int, default=0,
                     help="print at most this many operations (0: all)")
+    ap.add_argument("--against", metavar="OTHER",
+                    help="compare per operation name with this trace")
     a = ap.parse_args()
 
+    def selected(ops):
+        return [o for o in ops if (a.kind is None or o["kind"] == a.kind)
+                and (a.name is None or o["name"] == a.name)]
+
     ops, jobs = load(a.trace)
-    ops = [o for o in ops if (a.kind is None or o["kind"] == a.kind)
-           and (a.name is None or o["name"] == a.name)]
+    ops = selected(ops)
+    if a.against:
+        other_ops, other_jobs = load(a.against)
+        compare(ops, jobs, selected(other_ops), other_jobs)
+        return
     by_kind = collections.defaultdict(list)
     for i, o in enumerate(ops):
         js = jobs_of(o, jobs)
